@@ -40,9 +40,17 @@ object Bench {
     val selected: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
       if (args.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
       else args.toSeq.map(n => n -> SparkEntry.queries(n))
+    // A throwing query keeps its slot in the fixed record format, but the
+    // run exits non-zero once the record is written: never a fast timing.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def time(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try fn(spark, sfDir).count()
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed += name
+      }
       (System.nanoTime() - t0) / 1e9
     }
     // MEMO-HONEST reruns (round 12, verdict finding #1): two operators
@@ -262,5 +270,9 @@ object Bench {
     // the final chunk line comfortably inside the window.
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$loadJson,"queries":{},"nqueries":${results.size},"parts":${chunks.size},"sf":"$sfDir"}""")
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -12,9 +12,9 @@ case class RawProduct(partkey: Long, name: String, brand: String, price: Double)
 /** A paginated record source — the shape of the reference's literal core
   * act (page through an HTTP product API, load each page). An API client is
   * inherently a sequential driver-side stream: page N+1's request depends
-  * on page N's cursor, so the DRIVER walks pages while every page's
-  * processing (validate/dedup/upsert) parallelizes on the cluster
-  * immediately. The keyed upsert downstream makes page REPLAY idempotent,
+  * on page N's cursor, so the DRIVER walks pages. A page is driver-sized
+  * (one response body), and its validate/dedup/upsert plan runs as a
+  * handful of tasks. The keyed upsert downstream makes page REPLAY idempotent,
   * which is the whole crash-recovery contract of incremental consumption:
   * re-fetching an already-loaded page converges to the same table.
   *
@@ -32,10 +32,11 @@ trait PagedSource {
 /** Deterministic paging over the `part` fixture, ordered by partkey —
   * simulates a keyset-paginated API snapshot. Each fetch is a pushed-down
   * partkey-range scan collecting ONE page (bounded by pageSize — the size
-  * of a real HTTP response body); the only whole-dataset state on the
-  * driver is the row count, i.e. cursor metadata. Partkeys are dense
-  * 0..n-1 in every fixture, so key ranges ARE page boundaries — exactly
-  * keyset pagination. */
+  * of a real HTTP response body), sorted on the driver: a Spark `orderBy`
+  * would add a sampling job and a sort shuffle to every fetch. The only
+  * whole-dataset state on the driver is the row count, i.e. cursor
+  * metadata. Partkeys are dense 0..n-1 in every fixture, so key ranges ARE
+  * page boundaries — exactly keyset pagination. */
 class FixturePagedSource(spark: SparkSession, sfDir: String, pageSize: Int) extends PagedSource {
   require(pageSize > 0, "pageSize must be positive")
 
@@ -49,7 +50,6 @@ class FixturePagedSource(spark: SparkSession, sfDir: String, pageSize: Int) exte
         Fixtures
           .table(spark, sfDir, "part")
           .filter(col("p_partkey") >= from && col("p_partkey") < from + pageSize)
-          .orderBy("p_partkey")
           .select(
             col("p_partkey").cast("long"),
             col("p_name").cast("string"),
@@ -57,6 +57,7 @@ class FixturePagedSource(spark: SparkSession, sfDir: String, pageSize: Int) exte
             col("p_retailprice").cast("double"))
           .collect()
           .map(r => RawProduct(r.getLong(0), r.getString(1), r.getString(2), r.getDouble(3)))
+          .sortBy(_.partkey)
           .toSeq)
   }
 }

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.util.Properties
-
 import graft.Fixtures
 import graft.sinks.JdbcSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -94,23 +92,22 @@ object UpcSkuLoad {
       .drop("rn")
   }
 
-  /** Load: idempotent keyed upsert (insert-new / update-changed). */
-  def load(records: DataFrame, url: String, table: String): Unit =
+  /** Load: idempotent keyed upsert (insert-new / update-changed). Returns
+    * the rows loaded, as counted by the sink while it writes them. */
+  def load(records: DataFrame, url: String, table: String): Long =
     JdbcSink.upsert(records, url, table, keyCols = Seq("upc"))
 
   /** The whole reference-shaped run. */
-  def run(spark: SparkSession, sfDir: String, url: String, table: String): Long = {
-    val ready = dedup(validate(extract(spark, sfDir)))
-    load(ready, url, table)
-    ready.count()
-  }
+  def run(spark: SparkSession, sfDir: String, url: String, table: String): Long =
+    load(dedup(validate(extract(spark, sfDir))), url, table)
 
   /** The reference's incremental consumption loop: walk a [[PagedSource]]
     * page by page, running the SAME validate→dedup→upsert per page. The
-    * driver only advances the cursor; each page's work is distributed, and
-    * the keyed upsert makes page replay (crash recovery, overlapping
-    * fetches) idempotent — EtlPipelineSpec proves page-wise consumption
-    * lands the exact table the batch run does.
+    * driver advances the cursor; a page is driver-sized, so its plan runs
+    * as one small write job of a handful of tasks (AQE coalesces the dedup
+    * shuffle), and the keyed upsert makes page replay (crash recovery,
+    * overlapping fetches) idempotent — EtlPipelineSpec proves page-wise
+    * consumption lands the exact table the batch run does.
     *
     * Dedup is PER PAGE: a consistent keyset-paginated snapshot yields each
     * key on exactly one page, so paged ≡ batch. If the upstream snapshot
@@ -126,14 +123,7 @@ object UpcSkuLoad {
     var total = 0L
     var batch = source.fetchPage(page)
     while (batch.isDefined) {
-      // cache: both the upsert and the count action consume `ready`; a
-      // page is small by construction, and without the cache the
-      // validate/dedup window shuffle runs twice per page
-      val ready = dedup(validate(toProducts(spark.createDataset(batch.get).toDF()))).cache()
-      try {
-        load(ready, url, table)
-        total += ready.count()
-      } finally ready.unpersist()
+      total += load(dedup(validate(toProducts(spark.createDataset(batch.get).toDF()))), url, table)
       page += 1
       batch = source.fetchPage(page)
     }

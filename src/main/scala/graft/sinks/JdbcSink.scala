@@ -83,23 +83,28 @@ object JdbcSink {
 
   /** Idempotent upsert: rows whose key tuple exists are updated, others
     * inserted. Runs on the executors via foreachPartition; batches commit
-    * every `batchSize` rows. */
+    * every `batchSize` rows. Returns the rows received (`df.count()`,
+    * repeated keys included), summed in a LongAccumulator inside the write
+    * action: Spark merges an action's accumulator updates once per
+    * successful task, so a retried task is not counted twice. */
   def upsert(
       df: DataFrame,
       url: String,
       table: String,
       keyCols: Seq[String],
       dialect: UpsertDialect = UpdateInsertDialect,
-      batchSize: Int = 500): Unit = {
+      batchSize: Int = 500): Long = {
     val schema = df.schema
     val valCols = schema.fieldNames.filterNot(keyCols.contains).toSeq
+    val written = df.sparkSession.sparkContext.longAccumulator
     df.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
       if (rows.nonEmpty) {
         val conn = DriverManager.getConnection(url)
-        try writePartition(conn, rows, schema, table, keyCols, valCols, batchSize)
+        try written.add(writePartition(conn, rows, schema, table, keyCols, valCols, batchSize))
         finally conn.close()
       }
     }
+    written.value
   }
 
   /** Streaming incremental load — the reference's batch ETL modernized:
@@ -116,7 +121,7 @@ object JdbcSink {
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        upsert(batch.toDF(), url, table, keyCols)
+        upsert(batch.toDF(), url, table, keyCols): Unit
       }
       .start()
 
@@ -300,7 +305,7 @@ object JdbcSink {
       table: String,
       keyCols: Seq[String],
       valCols: Seq[String],
-      batchSize: Int): Unit = {
+      batchSize: Int): Long = {
     conn.setAutoCommit(false)
     val upd = conn.prepareStatement(updateSql(table, keyCols, valCols))
     val ins = conn.prepareStatement(insertSql(table, schema.fieldNames.toSeq))
@@ -319,7 +324,7 @@ object JdbcSink {
     //    (MySQL with rewriteBatchedStatements): the count is unknown, so fall
     //    back to a per-row executeUpdate for that row to learn it.
     try {
-      rows.grouped(batchSize).foreach { rawChunk =>
+      rows.grouped(batchSize).map { rawChunk =>
         val lastByKey = scala.collection.mutable.LinkedHashMap
           .empty[Seq[Any], org.apache.spark.sql.Row]
         // Normalize Array[Byte] key values (BINARY columns) to ArraySeq so
@@ -366,7 +371,8 @@ object JdbcSink {
         }
         if (nIns > 0) ins.executeBatch()
         conn.commit()
-      }
+        rawChunk.size.toLong
+      }.sum
     } finally {
       upd.close()
       ins.close()

@@ -104,6 +104,57 @@ class EtlPipelineSpec extends SparkSuite {
     assert(snapshot(pagedTable) == snapshot(table), "page replay changed the table")
   }
 
+  test("a page runs as a handful of tasks, not one per initial shuffle partition") {
+    import java.util.concurrent.atomic.AtomicLong
+    import graft.pipeline.{FixturePagedSource, PagedSource, RawProduct}
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val shapeTable = "products_page_shape"
+    val c = DriverManager.getConnection(url)
+    try {
+      val st = c.createStatement()
+      try st.execute(s"DROP TABLE $shapeTable")
+      catch { case _: java.sql.SQLException => () }
+      st.execute(
+        s"CREATE TABLE $shapeTable (upc CHAR(12) PRIMARY KEY, name VARCHAR(128), brand VARCHAR(32), price DOUBLE, loaded_at TIMESTAMP)")
+      st.close()
+    } finally c.close()
+
+    // Bench's wide-then-coalesce setting: a page plan that keeps AQE from
+    // coalescing the dedup shuffle runs (and connects from) every one of
+    // these initial partitions
+    val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    val prior = spark.conf.getOption(key)
+    val sc = spark.sparkContext
+    val tasks = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
+    }
+    val fixture = new FixturePagedSource(spark, sf001, pageSize = 37)
+    fixture.fetchPage(0) // the row-count job runs once, before the walk
+    // tasks seen at each fetch: page i's tasks are its fetch plus its load
+    val marks = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val source = new PagedSource {
+      def fetchPage(p: Int): Option[Seq[RawProduct]] = {
+        ListenerBusDrain.drain(sc)
+        marks += tasks.get
+        fixture.fetchPage(p)
+      }
+    }
+    spark.conf.set(key, "256")
+    sc.addSparkListener(listener)
+    val n =
+      try UpcSkuLoad.runPaged(spark, source, url, shapeTable)
+      finally {
+        sc.removeSparkListener(listener)
+        prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      }
+    assert(n == 200, s"expected all 200 parts across pages, got $n")
+    val perPage = marks.zip(marks.tail).map { case (a, b) => b - a }
+    assert(perPage.size == 6, s"expected 6 pages, got ${perPage.size}")
+    assert(perPage.forall(_ < 32), s"tasks per page: $perPage")
+  }
+
   test("adversarial paging: transient failures, permanent abort + resume, duplicate/stale/shrunken pages all converge") {
     import graft.pipeline.{PagedSource, RawProduct, RetryingPagedSource}
     val healthy = new graft.pipeline.FixturePagedSource(spark, sf001, pageSize = 37)

@@ -49,7 +49,7 @@ class JdbcSinkSpec extends SparkSuite {
       (2L, "gadget", 24.99, t0),
       (4L, "doohickey", 5.0, t0)
     ).toDF("upc", "name", "price", "loaded_at")
-    JdbcSink.upsert(delta, url, table, keyCols = Seq("upc"))
+    assert(JdbcSink.upsert(delta, url, table, keyCols = Seq("upc")) == 2)
     val afterFirst = readBack().collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(afterFirst.size == 4)
     assert(afterFirst(2L) == 24.99)
@@ -259,13 +259,17 @@ class JdbcSinkSpec extends SparkSuite {
       (7L, "second", 2.0),
       (8L, "other", 3.0)
     ).toDF("upc", "name", "price").coalesce(1)
-    JdbcSink.upsert(batch, url, dupTable, keyCols = Seq("upc"))
-    val rows = spark.read
+    // the returned count is the rows received, repeated keys included
+    assert(JdbcSink.upsert(batch, url, dupTable, keyCols = Seq("upc")) == 3)
+    def rows() = spark.read
       .jdbc(url, dupTable, new Properties())
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
       .toSet
-    assert(rows == Set((7L, "second", 2.0), (8L, "other", 3.0)), s"got $rows")
+    assert(rows() == Set((7L, "second", 2.0), (8L, "other", 3.0)), s"got ${rows()}")
+    // an empty frame writes nothing and counts 0
+    assert(JdbcSink.upsert(batch.limit(0), url, dupTable, keyCols = Seq("upc")) == 0)
+    assert(rows() == Set((7L, "second", 2.0), (8L, "other", 3.0)))
   }
 
   test("OnDuplicateKeyDialect emits the single-statement MySQL upsert") {
