@@ -39,15 +39,26 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, V2Co
   * reach the PLANNER, where the built-in strategies reject tables that
   * lack `SupportsRowLevelOperations`). Injected planner strategies are
   * consulted BEFORE the built-ins, so this strategy claims exactly those
-  * commands whose target is a [[GraftTable]] and lowers them onto the
-  * engine's own transactional executors — [[SnapshotTable.deleteWhere]] /
-  * [[SnapshotTable.deleteExpr]] / [[SnapshotTable.updateWhere]] /
-  * [[SnapshotTable.updateExpr]] / [[SnapshotTable.mergeInto]] — the same
-  * oracle-gated code path `q_snapshot_dml_sql` proves. Every statement is
-  * ONE atomic manifest commit with the copy-on-write economics those
-  * executors document (exact-bound fast paths engage when the WHERE is a
-  * pure range/equality conjunction; anything else rewrites only the files
-  * its widened bounds cannot prune).
+  * commands whose target is a [[GraftTable]] and lowers them, through the
+  * shared DML router [[SnapshotDml]] that `q_snapshot_dml_sql` also
+  * proves, onto the engine's own transactional executors. The session's
+  * write mode (`spark.graft.dml.mor`) picks the executor family:
+  *  - copy-on-write (default): [[SnapshotTable.deleteWhere]] /
+  *    [[SnapshotTable.updateWhere]] when the WHERE is a pure
+  *    range/equality conjunction (stats-proven all-match files drop with
+  *    no I/O), [[SnapshotTable.deleteExpr]] / [[SnapshotTable.updateExpr]]
+  *    otherwise, [[SnapshotTable.mergeUpsert]] for the canonical upsert
+  *    and [[SnapshotTable.mergeInto]] for every other MERGE — each
+  *    rewrites only the files its bounds or matched keys cannot prune;
+  *  - merge-on-read: [[SnapshotTable.deleteWhereMor]] /
+  *    [[SnapshotTable.updateWhereMor]] for the exact-range DELETE/UPDATE,
+  *    [[SnapshotTable.mergeUpsertMor]] for the canonical upsert and
+  *    [[SnapshotTable.deleteMatchedMor]] for the unconditional
+  *    matched-delete — each writes O(change) (a range or keys mask over
+  *    the candidate files plus any replacement rows, no target file
+  *    rewritten) and reads pay the mask until compaction reconciles;
+  *    every other shape stays copy-on-write.
+  * Every statement is ONE atomic manifest commit.
   *
   * Install via `spark.sql.extensions=graft.GraftExtensions` or at runtime
   * with `GraftSqlBridge.addStrategy(spark, GraftDmlStrategy)`.
@@ -72,14 +83,8 @@ object GraftDmlStrategy extends SparkStrategy {
       writable(g, "DELETE")
       noSubquery(cond, "DELETE")
       val c = unresolve(cond)
-      val sk = SnapshotSql.skeleton(c)
-      GraftDmlExec(
-        s"DELETE FROM ${g.name()}",
-        () =>
-          if (sk.exact && sk.bounds.nonEmpty) {
-            if (morDml(spark)) SnapshotTable.deleteWhereMor(spark, g.root, sk.bounds)
-            else SnapshotTable.deleteWhere(spark, g.root, sk.bounds)
-          } else SnapshotTable.deleteExpr(spark, g.root, asColumn(c), sk.bounds)) :: Nil
+      val stmt = SnapshotDml.Delete(asColumn(c), SnapshotSql.skeleton(c))
+      dmlExec(spark, s"DELETE FROM ${g.name()}", g, stmt) :: Nil
 
     case u: UpdateTable =>
       u.table match {
@@ -96,14 +101,8 @@ object GraftDmlStrategy extends SparkStrategy {
             targetColumn(a.key) -> asColumn(unresolve(a.value))
           }.toMap
           val c = unresolve(cond)
-          val sk = SnapshotSql.skeleton(c)
-          GraftDmlExec(
-            s"UPDATE ${g.name()}",
-            () =>
-              if (sk.exact && sk.bounds.nonEmpty) {
-                if (morDml(spark)) SnapshotTable.updateWhereMor(spark, g.root, sk.bounds, set)
-                else SnapshotTable.updateWhere(spark, g.root, sk.bounds, set)
-              } else SnapshotTable.updateExpr(spark, g.root, asColumn(c), sk.bounds, set)) :: Nil
+          val stmt = SnapshotDml.Update(asColumn(c), SnapshotSql.skeleton(c), set)
+          dmlExec(spark, s"UPDATE ${g.name()}", g, stmt) :: Nil
         case _ => Nil
       }
 
@@ -218,10 +217,8 @@ object GraftDmlStrategy extends SparkStrategy {
       }
     }
 
-    // merge-on-read routes (session conf, mirroring the SQL-text router's
-    // registration flag): the canonical upsert and the unconditional
-    // matched-delete have O(change) MOR executors; every other shape
-    // lowers onto the general COW executor — correct in both modes
+    // the canonical upsert: every target column assigned from its
+    // same-named source column (SET * / INSERT * after analysis)
     def allStar(assigns: Seq[Assignment]): Boolean = {
       val covered = assigns.flatMap { a =>
         (a.key, a.value) match {
@@ -234,9 +231,9 @@ object GraftDmlStrategy extends SparkStrategy {
       covered.length == assigns.length &&
       m.targetTable.output.map(_.name).toSet == covered.toSet
     }
-    // BOTH executors key the source by the TARGET's exact column casing
-    // (the MOR route through physical-mapping lookups; the COW route
-    // through its keyed join, where a target `K` joined to a source `k`
+    // EVERY executor keys the source by the TARGET's exact column casing
+    // (the MOR routes through physical-mapping lookups; the COW routes
+    // through their keyed joins, where a target `K` joined to a source `k`
     // leaves two case-folding-equal output columns and every later `K`
     // reference ambiguous) while keysOf/allStar resolve with the session
     // resolver — so align the source frame to the target's EXACT casing
@@ -251,33 +248,24 @@ object GraftDmlStrategy extends SparkStrategy {
         sourceDf
       else sourceDf.toDF(scala.collection.immutable.ArraySeq.unsafeWrapArray(aligned): _*)
     }
-    val morRoute: Option[() => Unit] =
-      if (!morDml(spark) || nbsActions.nonEmpty) None
-      else
-        (m.matchedActions, m.notMatchedActions) match {
-          case (Seq(UpdateAction(None, u, _)), Seq(InsertAction(None, i)))
-              if allStar(u) && allStar(i) =>
-            Some(() => { SnapshotTable.mergeUpsertMor(spark, g.root, alignedSourceDf, keyCols); () })
-          case (Seq(DeleteAction(None)), Seq()) =>
-            Some(() => { SnapshotTable.deleteMatchedMor(spark, g.root, alignedSourceDf, keyCols); () })
-          case _ => None
-        }
-
-    GraftDmlExec(
+    val canonicalUpsert = nbsActions.isEmpty && ((m.matchedActions, m.notMatchedActions) match {
+      case (Seq(UpdateAction(None, u, _)), Seq(InsertAction(None, i))) => allStar(u) && allStar(i)
+      case _ => false
+    })
+    dmlExec(
+      spark,
       s"MERGE INTO ${g.name()}",
-      morRoute.getOrElse(() =>
-        SnapshotTable.mergeInto(
-          spark,
-          g.root,
-          alignedSourceDf,
-          keyCols,
-          matchedClauses,
-          notMatchedClauses,
-          targetAlias = TAlias,
-          sourceAlias = SAlias,
-          notMatchedBySource = nbsClauses,
-          nmbsPruneBounds = nbsBounds)))
+      g,
+      if (canonicalUpsert) SnapshotDml.Upsert(alignedSourceDf, keyCols, None, None)
+      else
+        SnapshotDml.Merge(
+          alignedSourceDf, keyCols, matchedClauses, notMatchedClauses, TAlias, SAlias, nbsClauses, nbsBounds))
   }
+
+  /** One catalog DML statement as its eager command node, landed by the
+    * shared router ([[SnapshotDml]]) in the session's write mode. */
+  private def dmlExec(spark: SparkSession, label: String, g: GraftTable, stmt: SnapshotDml.Statement): SparkPlan =
+    GraftDmlExec(label, () => { SnapshotDml.run(spark, g.root, morDml(spark), stmt); () })
 
   /** Session-level write-mode switch for catalog DML —
     * `spark.graft.dml.mor=true` routes the shapes with merge-on-read

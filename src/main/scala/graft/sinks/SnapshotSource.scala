@@ -663,9 +663,7 @@ private[sinks] object SnapshotSinkOps {
             SnapshotTable.appendStagedBatchExactlyOnce(spark, root, paths, df.schema, batchId, appId)
           case None => SnapshotTable.appendBatchExactlyOnce(spark, root, df, batchId, appId)
         }
-      case Some(ks) if opts.mor =>
-        SnapshotTable.upsertBatchExactlyOnceMor(spark, root, df, ks, batchId, appId)
-      case Some(ks) => SnapshotTable.upsertBatchExactlyOnce(spark, root, df, ks, batchId, appId)
+      case Some(ks) => SnapshotDml.run(spark, root, opts.mor, SnapshotDml.Upsert(df, ks, Some(batchId), appId))
     }
     compactEvery.foreach { n =>
       if (batchId > 0 && batchId % n == 0)

@@ -375,15 +375,8 @@ object SnapshotSql {
 
       case d: DeleteFromTable =>
         val reg = registrationOf(spark, tableParts(d.table))
-        val sk = skeleton(d.condition)
-        if (reg.morWrites) {
-          // merge-on-read deletes are predicate masks: only the exact
-          // range translation can become one. Anything else falls back to
-          // copy-on-write — correct in both modes, loud in neither.
-          if (sk.exact && sk.bounds.nonEmpty) SnapshotTable.deleteWhereMor(spark, reg.root, sk.bounds)
-          else SnapshotTable.deleteExpr(spark, reg.root, asColumn(d.condition), sk.bounds)
-        } else if (sk.exact && sk.bounds.nonEmpty) SnapshotTable.deleteWhere(spark, reg.root, sk.bounds)
-        else SnapshotTable.deleteExpr(spark, reg.root, asColumn(d.condition), sk.bounds)
+        SnapshotDml.run(
+          spark, reg.root, reg.morWrites, SnapshotDml.Delete(asColumn(d.condition), skeleton(d.condition)))
 
       case u: UpdateTable =>
         val reg = registrationOf(spark, tableParts(u.table))
@@ -395,11 +388,7 @@ object SnapshotSql {
         }.toMap
         val cond = u.condition.getOrElse(
           sys.error("UPDATE without WHERE would rewrite the whole table; use overwrite"))
-        val sk = skeleton(cond)
-        if (reg.morWrites && sk.exact && sk.bounds.nonEmpty)
-          SnapshotTable.updateWhereMor(spark, root, sk.bounds, set)
-        else if (sk.exact && sk.bounds.nonEmpty) SnapshotTable.updateWhere(spark, root, sk.bounds, set)
-        else SnapshotTable.updateExpr(spark, root, asColumn(cond), sk.bounds, set)
+        SnapshotDml.run(spark, root, reg.morWrites, SnapshotDml.Update(asColumn(cond), skeleton(cond), set))
 
       case m: MergeIntoTable =>
         val reg = registrationOf(spark, tableParts(m.targetTable))
@@ -422,15 +411,10 @@ object SnapshotSql {
         val source: DataFrame = org.apache.spark.sql.GraftSqlBridge.ofRows(
           spark,
           substituteRegistered(spark, stripAlias(m.sourceTable)))
-        (m.matchedActions, m.notMatchedActions, m.notMatchedBySourceActions) match {
-          // canonical upsert: the dedicated fast paths (and the MOR O(change) write)
+        val stmt = (m.matchedActions, m.notMatchedActions, m.notMatchedBySourceActions) match {
           case (Seq(UpdateStarAction(None)), Seq(InsertStarAction(None)), Seq()) =>
-            if (reg.morWrites) SnapshotTable.mergeUpsertMor(spark, reg.root, source, keyCols)
-            else SnapshotTable.mergeUpsert(spark, reg.root, source, keyCols)
-          // unconditional matched-delete on a MOR table: a keys mask, zero data I/O
-          case (Seq(DeleteAction(None)), Seq(), Seq()) if reg.morWrites =>
-            SnapshotTable.deleteMatchedMor(spark, reg.root, source, keyCols)
-          // everything else lowers onto the general executor: conditional
+            SnapshotDml.Upsert(source, keyCols, None, None)
+          // everything else is a general clause set: conditional
           // clauses, matched DELETE, explicit SET/INSERT column lists,
           // multiple first-match-wins matched clauses, and WHEN NOT
           // MATCHED BY SOURCE (whose rewrite set prunes through each
@@ -471,18 +455,17 @@ object SnapshotSql {
               case DeleteAction(Some(c)) => skeleton(c).bounds
               case _ => Seq.empty[SnapshotTable.Bound]
             }
-            SnapshotTable.mergeInto(
-              spark,
-              reg.root,
+            SnapshotDml.Merge(
               source,
               keyCols,
               matchedClauses,
               notMatchedClauses,
-              targetAlias = aliasOf(m.targetTable),
-              sourceAlias = aliasOf(m.sourceTable),
-              notMatchedBySource = nbsClauses,
-              nmbsPruneBounds = nbsBounds)
+              aliasOf(m.targetTable),
+              aliasOf(m.sourceTable),
+              nbsClauses,
+              nbsBounds)
         }
+        SnapshotDml.run(spark, reg.root, reg.morWrites, stmt)
 
       // ───────── schema / constraint DDL (metadata-only commits) ─────────
 

@@ -192,10 +192,9 @@ object SnapshotTable {
       id: String = java.util.UUID.randomUUID().toString,
       // exact count of LIVE rows this mask hides, recorded at write time
       // (read through any EARLIER masks, so overlapping masks never
-      // double-count). None = unknown: exact accounting disabled
-      // (spark.graft.mor.exactRowAccounting=false), a pre-field manifest,
-      // or the entry set shrank since (a rewrite satisfied part of the
-      // mask — the remainder's count would be stale).
+      // double-count). None = unknown: a pre-field manifest, or the entry
+      // set shrank since (a rewrite satisfied part of the mask — the
+      // remainder's count would be stale).
       maskedRows: Option[Long] = None)
 
   /** Carry a mask forward with only the `keep` entries; a SHRUNK set
@@ -206,14 +205,6 @@ object SnapshotTable {
     if (kept.size == mk.entries.size) mk
     else mk.copy(entries = kept, maskedRows = None)
   }
-
-  /** Exact merge-on-read row accounting (default ON): each new mask
-    * records the live rows it hides and `addedRows` becomes the exact
-    * net delta, at the cost of one bounded counting read of only the
-    * masked candidate files at write time. Disable for pure-metadata
-    * commits on very wide candidate sets. */
-  private def exactMorAccounting(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.mor.exactRowAccounting").forall(_.toBoolean)
 
   /** Write-time CDC capture (default ON) — see [[Cdc]]. Readers honor
     * whatever each manifest recorded, so mixed histories are fine. */
@@ -853,7 +844,6 @@ object SnapshotTable {
   }
 
   def rebase(spark: SparkSession, root: String, name: String): Int = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit}
     require(splitRef(root)._2.isEmpty, "rebase from the main table handle")
     val f = fs(spark, root)
     val fork = forkOf(f, root, name)
@@ -1025,18 +1015,7 @@ object SnapshotTable {
           case _ if c.action == "compact" => Seq.empty
           case _ => deltaDirs
         }
-        val gained = tip.constraints.toSet -- c.constraints.toSet
-        if (gained.nonEmpty && gainDirs.nonEmpty) {
-          val rows = spark.read.parquet(gainDirs.map(d => new Path(dataRoot(root), d).toString): _*)
-          val logical = mappingOf(merged).foldLeft(rows) {
-            case (d, (log, phys)) =>
-              if (d.columns.contains(phys)) d.withColumn(log, d("`" + phys + "`")) else d
-          }
-          gained.foreach { case (cname, check) =>
-            val bad = logical.filter(!coalesce(expr(check), lit(false))).count()
-            if (bad > 0) throw new ConstraintViolationException(cname, bad)
-          }
-        }
+        reproveChecks(spark, root, gainDirs, merged, tip.constraints.toSet -- c.constraints.toSet)
         c.action match {
           case "append" =>
             publish(
@@ -1061,41 +1040,23 @@ object SnapshotTable {
                 deleteWhereMor(spark, sRoot, decodeMaskBounds(merged, mk.predBounds))
                 ()
               case (None, Some(mk)) =>
-                import org.apache.spark.sql.functions.col
                 // keys-kind (deleteByKeys / MERGE matched-DELETE): the
                 // recorded key-tombstone sidecar IS the delete — re-prune
                 // candidates against the NEW base and re-mask; the sidecar
                 // dir re-references zero-copy (all refs share the data
-                // root), and exact accounting re-counts against the new
-                // base exactly like the mor-merge replay arm
+                // root), and the hidden rows re-count against the new base
+                // exactly like the mor-merge replay arm
                 val keyDf = spark.read.parquet(new Path(dataRoot(root), mk.keyDir.get).toString)
-                val plan = prunePlan(spark, sRoot, tipV, keyEnvelope(keyDf, mk.keyCols))
-                val maskEntries = plan.keep ++ plan.uncoveredDirs
+                val replayMask = keysMask(
+                  spark, sRoot, tip, Some(merged), mk.keyCols, keyEnvelope(keyDf, mk.keyCols), keyDf, mk.keyDir)
                 // zero candidates on the new base AND no epoch marker to
                 // carry → the replay is a pure no-op and publishes nothing.
                 // With a marker to carry the maskless publish below keeps
                 // the exactly-once identity alive; the classifier's no-op
                 // arm (dirs set-equality) accepts that shape on the NEXT
                 // rebase and the (None, None) replay arm re-carries it
-                if (maskEntries.isEmpty && c.batchId.isEmpty) ()
+                if (replayMask.isEmpty && c.batchId.isEmpty) ()
                 else {
-                  val exact = exactMorAccounting(spark)
-                  val deleted =
-                    if (maskEntries.isEmpty || !exact) 0L
-                    else
-                      readEntriesMasked(spark, sRoot, tip, Some(merged), maskEntries)
-                        .select(mk.keyCols.map(k => col("`" + k + "`")): _*)
-                        .join(keyDf, mk.keyCols, "left_semi")
-                        .count()
-                  val replayMask =
-                    if (maskEntries.isEmpty) Seq.empty
-                    else
-                      Seq(Mask(
-                        "keys",
-                        maskEntries,
-                        keyCols = mk.keyCols,
-                        keyDir = mk.keyDir,
-                        maskedRows = if (exact) Some(deleted) else None))
                   publish(
                     spark,
                     sRoot,
@@ -1103,7 +1064,7 @@ object SnapshotTable {
                       tipV + 1,
                       "mor-delete",
                       tip.dirs,
-                      -deleted,
+                      -replayMask.flatMap(_.maskedRows).sum,
                       c.batchId, // exactly-once epoch markers SURVIVE the replay
                       Some(merged.json),
                       tip.files,
@@ -1138,61 +1099,24 @@ object SnapshotTable {
                 }
             }
           case "mor-merge" =>
-            import org.apache.spark.sql.functions.col
             val srcRel = deltaDirs match {
               case Seq(one) => one
               case other => sys.error(s"rebase: mor-merge v${c.version} added ${other.size} dirs, expected 1")
             }
-            newMasks(c, p).find(mk0 => mk0.kind == "keys" && mk0.keyDir.isDefined) match {
-              case None =>
-                // the classifier's pure-insert arm: no sidecar to re-execute
-                // against, and none needed — the commit replaced nothing at
-                // its base, so the replay IS the append of its source dir
-                // (epoch markers survive exactly like the append arm)
-                publish(
-                  spark,
-                  sRoot,
-                  Commit(
-                    tipV + 1,
-                    "mor-merge",
-                    tip.dirs :+ srcRel,
-                    deltaStats.map(_.rows).sum,
-                    c.batchId,
-                    Some(merged.json),
-                    tip.files ++ deltaStats,
-                    constraints = tip.constraints,
-                    dropped = reviveDropped(tip.dropped, merged),
-                    masks = tip.masks,
-                    appId = c.appId))
-                ()
-              case Some(mk) =>
             // candidates re-prune against the NEW base: the same envelope
-            // logic the original merge ran, driven by the recorded sidecar
-            val keyDf = spark.read.parquet(new Path(dataRoot(root), mk.keyDir.get).toString)
-            val plan = prunePlan(spark, sRoot, tipV, keyEnvelope(keyDf, mk.keyCols))
-            val maskEntries = plan.keep ++ plan.uncoveredDirs
-            // the re-executed merge can replace a DIFFERENT number of rows
-            // than it did at fork time (main's post-fork keys match too) —
-            // account against the new base, not the fork (same economics
-            // as mergeUpsertMor's exact path: one key-only semi-join)
-            val srcRows = deltaStats.map(_.rows).sum
-            val exact = exactMorAccounting(spark)
-            val matchedCnt =
-              if (maskEntries.isEmpty || !exact) 0L
-              else
-                readEntriesMasked(spark, sRoot, tip, Some(merged), maskEntries)
-                  .select(mk.keyCols.map(k => col("`" + k + "`")): _*)
-                  .join(keyDf, mk.keyCols, "left_semi")
-                  .count()
+            // logic the original merge ran, driven by the recorded
+            // sidecar. The re-executed merge can replace a DIFFERENT
+            // number of rows than it did at fork time (main's post-fork
+            // keys match too) — account against the new base. No sidecar
+            // is the classifier's pure-insert arm: the commit replaced
+            // nothing at its base, so the replay IS the append of its
+            // source dir (epoch markers survive exactly like the append arm)
             val replayMask =
-              if (maskEntries.isEmpty) Seq.empty
-              else
-                Seq(Mask(
-                  "keys",
-                  maskEntries,
-                  keyCols = mk.keyCols,
-                  keyDir = mk.keyDir,
-                  maskedRows = if (exact) Some(matchedCnt) else None))
+              newMasks(c, p).find(mk0 => mk0.kind == "keys" && mk0.keyDir.isDefined).flatMap { mk =>
+                val keyDf = spark.read.parquet(new Path(dataRoot(root), mk.keyDir.get).toString)
+                keysMask(
+                  spark, sRoot, tip, Some(merged), mk.keyCols, keyEnvelope(keyDf, mk.keyCols), keyDf, mk.keyDir)
+              }
             publish(
               spark,
               sRoot,
@@ -1200,7 +1124,7 @@ object SnapshotTable {
                 tipV + 1,
                 "mor-merge",
                 tip.dirs :+ srcRel,
-                if (exact) srcRows - matchedCnt else srcRows,
+                deltaStats.map(_.rows).sum - replayMask.flatMap(_.maskedRows).sum,
                 c.batchId, // exactly-once epoch markers SURVIVE the replay
                 Some(merged.json),
                 tip.files ++ deltaStats,
@@ -1209,7 +1133,6 @@ object SnapshotTable {
                 masks = tip.masks ++ replayMask,
                 appId = c.appId))
             ()
-            }
           case "delete" | "update" | "merge" =>
             replayCowDelta(spark, root, sRoot, tipV, tip, merged, c, p, c.cdc.get)
           case "compact" =>
@@ -2468,7 +2391,29 @@ object SnapshotTable {
       spark, root, df, "replace",
       carryForward = false, declaredSpec = Some(spec), dropConstraints = true)
 
-  /** Append a batch: new version = previous live dirs + the new one. */
+  /** Re-prove `checks` (name → SQL) over already-written data `dirs`,
+    * read in logical names through `schema`'s column mapping — for
+    * constraints that a racing commit (or, in [[rebase]], the new base)
+    * added after the data was validated. */
+  private def reproveChecks(
+      spark: SparkSession,
+      root: String,
+      dirs: Seq[String],
+      schema: org.apache.spark.sql.types.StructType,
+      checks: Set[(String, String)]): Unit =
+    if (checks.nonEmpty && dirs.nonEmpty) {
+      import org.apache.spark.sql.functions.{coalesce, expr, lit}
+      val rows = spark.read.parquet(dirs.map(d => new Path(dataRoot(root), d).toString): _*)
+      val logical = mappingOf(schema).foldLeft(rows) {
+        case (d, (log, phys)) =>
+          if (d.columns.contains(phys)) d.withColumn(log, d("`" + phys + "`")) else d
+      }
+      checks.foreach { case (name, check) =>
+        val bad = logical.filter(!coalesce(expr(check), lit(false))).count()
+        if (bad > 0) throw new ConstraintViolationException(name, bad)
+      }
+    }
+
   /** Append a batch. Appends COMMUTE, so a lost publish race retries
     * automatically against the new latest version (Delta's conflict rule:
     * append-vs-append is never a real conflict) — the data dir is written
@@ -2481,7 +2426,6 @@ object SnapshotTable {
     * silently drop a concurrent writer's rows — they surface
     * [[ConcurrentCommitException]] for the caller to re-derive. */
   def append(spark: SparkSession, root: String, df: DataFrame): Int = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit}
     var written: Option[(String, Long, Seq[FileStat])] = None
     var enforced: Map[String, String] = Map.empty
     var attempts = 0
@@ -2501,15 +2445,8 @@ object SnapshotTable {
         // a racing commit changed the constraint set: re-validate the dir
         // against every check not already enforced AS THE SAME (name, sql)
         // PAIR — a same-named constraint with new text must re-prove too
-        val dir = spark.read.parquet(new Path(dataRoot(root), written.get._1).toString)
-        val logicalDir = mappingOf(schemaFromJson(schemaEarly)).foldLeft(dir) {
-          case (d, (logical, physical)) =>
-            if (d.columns.contains(physical)) d.withColumn(logical, d("`" + physical + "`")) else d
-        }
-        (checks.toSet -- enforced.toSet).foreach { case (name, check) =>
-          val bad = logicalDir.filter(!coalesce(expr(check), lit(false))).count()
-          if (bad > 0) throw new ConstraintViolationException(name, bad)
-        }
+        reproveChecks(
+          spark, root, Seq(written.get._1), schemaFromJson(schemaEarly), checks.toSet -- enforced.toSet)
         enforced = checks
       }
       val (rel, n, stats) = written.get
@@ -2542,17 +2479,6 @@ object SnapshotTable {
     -1 // unreachable
   }
 
-  /** EXACTLY-ONCE streaming append — the `foreachBatch` sink contract.
-    * The micro-batch id is recorded in the manifest, and the manifest
-    * publish IS the transaction: a replayed epoch (restart, retry) finds
-    * its batchId already committed and becomes a no-op, so the table holds
-    * each epoch's rows exactly once however many times the batch reruns.
-    * A publish race (e.g. two speculative drivers of the SAME epoch) makes
-    * the loser re-check the log: if the winner committed our batchId we
-    * are done; otherwise (a genuine interleaved writer) we retry at the
-    * next version. The orphaned data dir of a lost race is reclaimed by
-    * [[vacuum]] — rows only exist for readers once a manifest references
-    * them, so duplicates are impossible by construction, not by cleanup. */
   /** THE exactly-once epoch identity, shared by every dedup site: a
     * commit matches when the batch number AND the writer identity match —
     * STRICT equality on `appId` (Delta's txn-appId semantics), so two
@@ -2573,6 +2499,17 @@ object SnapshotTable {
       .find(c => c.batchId.contains(batchId) && c.appId == appId)
       .map(_.version)
 
+  /** EXACTLY-ONCE streaming append — the `foreachBatch` sink contract.
+    * The micro-batch id is recorded in the manifest, and the manifest
+    * publish IS the transaction: a replayed epoch (restart, retry) finds
+    * its batchId already committed and becomes a no-op, so the table holds
+    * each epoch's rows exactly once however many times the batch reruns.
+    * A publish race (e.g. two speculative drivers of the SAME epoch) makes
+    * the loser re-check the log: if the winner committed our batchId we
+    * are done; otherwise (a genuine interleaved writer) we retry at the
+    * next version. The orphaned data dir of a lost race is reclaimed by
+    * [[vacuum]] — rows only exist for readers once a manifest references
+    * them, so duplicates are impossible by construction, not by cleanup. */
   def appendBatchExactlyOnce(
       spark: SparkSession,
       root: String,
@@ -2696,18 +2633,7 @@ object SnapshotTable {
           // a constraint raced in since the dir was validated: re-prove the
           // already-written data before claiming the new constraint set
           // (marker-only epochs carry no new data — nothing to re-prove)
-          import org.apache.spark.sql.functions.{coalesce, expr, lit}
-          rel.foreach { r =>
-            val dir = spark.read.parquet(new Path(dataRoot(root), r).toString)
-            val logicalDir = mappingOf(schemaFromJson(schema)).foldLeft(dir) {
-              case (d, (logical, physical)) =>
-                if (d.columns.contains(physical)) d.withColumn(logical, d("`" + physical + "`")) else d
-            }
-            (checksNow.toSet -- enforced.toSet).foreach { case (name, check) =>
-              val bad = logicalDir.filter(!coalesce(expr(check), lit(false))).count()
-              if (bad > 0) throw new ConstraintViolationException(name, bad)
-            }
-          }
+          reproveChecks(spark, root, rel.toSeq, schemaFromJson(schema), checksNow.toSet -- enforced.toSet)
           enforced = checksNow
         }
         try result = publish(
@@ -4034,16 +3960,6 @@ object SnapshotTable {
     val keptMasks = m.masks
       .map(mk => shrinkMask(mk, untouchedSet))
       .filter(_.entries.nonEmpty)
-    // net-delta accounting for wholly-dropped files: a CLEAN file's
-    // recorded rows are its live rows; a MASKED file's physical rows
-    // exceed its live rows, so blindly subtracting the recorded count
-    // would overstate removals in addedRows history. Count the masked
-    // drops' live rows mask-aware — cost ∝ those files, and this is the
-    // copy-on-write path, which already does I/O.
-    val (maskedDropped, cleanDropped) = dropped.partition(f => masked(f.path))
-    val maskedDroppedRows =
-      if (maskedDropped.isEmpty) 0L
-      else readEntriesMasked(spark, root, m, schema, maskedDropped.map(_.path)).count()
     publish(
       spark,
       root,
@@ -4051,7 +3967,7 @@ object SnapshotTable {
         base + 1,
         action,
         untouched.map(_.path) ++ newDirs,
-        delta - cleanDropped.map(_.rows).sum - maskedDroppedRows,
+        delta - droppedLiveRows(spark, root, m, schema, dropped),
         None,
         Some(schemaJson),
         untouched ++ newStats,
@@ -4059,6 +3975,24 @@ object SnapshotTable {
         dropped = m.dropped, // untouched files still carry dropped-column bytes
         masks = keptMasks,
         cdc = cdcRec))
+  }
+
+  /** Live rows of wholly-dropped files, for net-delta accounting: a
+    * CLEAN file's recorded rows are its live rows; a MASKED file's
+    * physical rows exceed its live rows, so blindly subtracting the
+    * recorded count would overstate removals in addedRows history. The
+    * masked drops' live rows count mask-aware — cost ∝ those files. */
+  private def droppedLiveRows(
+      spark: SparkSession,
+      root: String,
+      m: Commit,
+      schema: Option[org.apache.spark.sql.types.StructType],
+      dropped: Seq[FileStat]): Long = {
+    val masked = maskedEntrySet(m)
+    val (maskedDropped, cleanDropped) = dropped.partition(f => masked(f.path))
+    cleanDropped.map(_.rows).sum +
+      (if (maskedDropped.isEmpty) 0L
+       else readEntriesMasked(spark, root, m, schema, maskedDropped.map(_.path)).count())
   }
 
   /** Delete the rows matching `bounds` — Delta-style copy-on-write DML with
@@ -4075,12 +4009,8 @@ object SnapshotTable {
     * manifest protocol; readers pinned at older versions keep the old
     * files until [[vacuum]]. Returns the new version. */
   def deleteWhere(spark: SparkSession, root: String, bounds: Seq[Bound]): Int = {
-    import org.apache.spark.sql.functions.lit
     require(bounds.nonEmpty, "deleteWhere with no bounds would drop the whole table; use overwrite")
-    dmlRewrite(
-      spark, root, bounds, "delete", dropWholly = true,
-      capture = Some(src => src.filter(matchCol(bounds)).withColumn(CdcTypeCol, lit("delete"))))(
-      (df, _) => df.filter(!matchCol(bounds)))
+    deleteRows(spark, root, bounds, matchCol(bounds), dropWholly = true)
   }
 
   /** Update rows matching `bounds`: each column in `set` becomes its new
@@ -4093,27 +4023,9 @@ object SnapshotTable {
       root: String,
       bounds: Seq[Bound],
       set: Map[String, org.apache.spark.sql.Column]): Int = {
-    import org.apache.spark.sql.functions.{col, when}
     require(bounds.nonEmpty, "updateWhere needs a predicate; for all rows use overwrite")
     require(set.nonEmpty, "updateWhere needs at least one SET column")
-    dmlRewrite(
-      spark, root, bounds, "update", dropWholly = false,
-      capture = Some(src => updatePairCapture(src.filter(matchCol(bounds)), set))) { (df, _) =>
-      set.foreach { case (name, _) =>
-        require(df.columns.contains(name), s"updateWhere SET column '$name' is not in the table schema")
-      }
-      val m = matchCol(bounds)
-      // ONE projection: every SET expression evaluates against the OLD
-      // row (SQL UPDATE semantics) — sequential withColumn would feed
-      // later SETs already-updated values, making a column swap silently
-      // wrong and the outcome Map-iteration-order-dependent
-      df.select(df.schema.fields.map { f =>
-        set.get(f.name) match {
-          case Some(expr) => when(m, expr.cast(f.dataType)).otherwise(col("`" + f.name + "`")).as(f.name)
-          case None => col("`" + f.name + "`")
-        }
-      }.toSeq: _*)
-    }
+    updateRows(spark, root, bounds, matchCol(bounds), set)
   }
 
   /** Generalized DELETE behind the SQL router ([[SnapshotSql]]): `cond`
@@ -4129,11 +4041,7 @@ object SnapshotTable {
       cond: org.apache.spark.sql.Column,
       pruneBounds: Seq[Bound]): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    dmlRewrite(
-      spark, root, pruneBounds, "delete", dropWholly = false,
-      capture = Some(src =>
-        src.filter(coalesce(cond, lit(false))).withColumn(CdcTypeCol, lit("delete"))))(
-      (df, _) => df.filter(!coalesce(cond, lit(false))))
+    deleteRows(spark, root, pruneBounds, coalesce(cond, lit(false)), dropWholly = false)
   }
 
   /** Generalized UPDATE twin of [[deleteExpr]] — arbitrary condition,
@@ -4145,24 +4053,88 @@ object SnapshotTable {
       cond: org.apache.spark.sql.Column,
       pruneBounds: Seq[Bound],
       set: Map[String, org.apache.spark.sql.Column]): Int = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+    import org.apache.spark.sql.functions.{coalesce, lit}
     require(set.nonEmpty, "UPDATE needs at least one SET column")
+    updateRows(spark, root, pruneBounds, coalesce(cond, lit(false)), set)
+  }
+
+  /** The copy-on-write DELETE body of [[deleteWhere]] and [[deleteExpr]]:
+    * `matches` is the null-free row predicate; `dropWholly` (exact bounds
+    * only) lets stats-proven all-match files drop with no I/O. */
+  private def deleteRows(
+      spark: SparkSession,
+      root: String,
+      pruneBounds: Seq[Bound],
+      matches: org.apache.spark.sql.Column,
+      dropWholly: Boolean): Int = {
+    import org.apache.spark.sql.functions.lit
+    dmlRewrite(
+      spark, root, pruneBounds, "delete", dropWholly,
+      capture = Some(src => src.filter(matches).withColumn(CdcTypeCol, lit("delete"))))(
+      (df, _) => df.filter(!matches))
+  }
+
+  /** The copy-on-write UPDATE body of [[updateWhere]] and [[updateExpr]]
+    * (`matches` is the null-free row predicate). */
+  private def updateRows(
+      spark: SparkSession,
+      root: String,
+      pruneBounds: Seq[Bound],
+      matches: org.apache.spark.sql.Column,
+      set: Map[String, org.apache.spark.sql.Column]): Int = {
+    import org.apache.spark.sql.functions.{col, when}
     dmlRewrite(
       spark, root, pruneBounds, "update", dropWholly = false,
-      capture = Some(src =>
-        updatePairCapture(src.filter(coalesce(cond, lit(false))), set))) { (df, _) =>
+      capture = Some(src => updatePairCapture(src.filter(matches), set))) { (df, _) =>
       set.foreach { case (name, _) =>
         require(df.columns.contains(name), s"UPDATE SET column '$name' is not in the table schema")
       }
-      val m = coalesce(cond, lit(false))
+      // ONE projection: every SET expression evaluates against the OLD
+      // row (SQL UPDATE semantics) — sequential withColumn would feed
+      // later SETs already-updated values, making a column swap silently
+      // wrong and the outcome Map-iteration-order-dependent
       df.select(df.schema.fields.map { f =>
         set.get(f.name) match {
-          case Some(e) => when(m, e.cast(f.dataType)).otherwise(col("`" + f.name + "`")).as(f.name)
+          case Some(e) => when(matches, e.cast(f.dataType)).otherwise(col("`" + f.name + "`")).as(f.name)
           case None => col("`" + f.name + "`")
         }
       }.toSeq: _*)
     }
   }
+
+  /** Exact touched-file discovery — the Delta MERGE find-touched-files
+    * join shared by [[mergeUpsert]] and [[mergeInto]]: the files of
+    * `candidates` that CONTAIN a key of `srcKeys`, found by a key-only
+    * columnar scan (plus the file name) semi-joined to the source keys.
+    * The scan reads THROUGH pending merge-on-read masks: a masked-out row
+    * must not count as a match (its file may then carry forward and the
+    * masked row stays hidden, instead of being resurrected by a rewrite). */
+  private def touchedFiles(
+      spark: SparkSession,
+      root: String,
+      m: Commit,
+      schema: Option[org.apache.spark.sql.types.StructType],
+      candidates: Seq[String],
+      keyCols: Seq[String],
+      srcKeys: DataFrame): Set[String] =
+    if (candidates.isEmpty) Set.empty
+    else {
+      import org.apache.spark.sql.functions.{col, input_file_name}
+      val probe =
+        if (m.masks.isEmpty)
+          readTablePaths(spark, schema, candidates.map(p => new Path(dataRoot(root), p).toString))
+            .withColumn("__file", input_file_name())
+        else readEntriesMasked(spark, root, m, schema, candidates, withFileName = true)
+      probe
+        .select(keyCols.map(k => col("`" + k + "`")) :+ col("__file"): _*)
+        .join(srcKeys, keyCols, "left_semi")
+        .select("__file")
+        .distinct()
+        .collect()
+        .map(_.getString(0))
+        .flatMap(uri => candidates.find(rel => uri.endsWith(rel)))
+        .toSet
+    }
 
   /** Upsert `source` by `keyCols` — the MERGE core (whenMatched update-all,
     * whenNotMatched insert-all): target rows whose key appears in `source`
@@ -4192,7 +4164,7 @@ object SnapshotTable {
       keyCols: Seq[String],
       batchId: Option[Long] = None,
       appId: Option[String] = None): Int = {
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
+    import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "mergeUpsert needs at least one key column")
     val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
     val m = readManifest(spark, root, base)
@@ -4218,27 +4190,8 @@ object SnapshotTable {
     // touched-file discovery then finds zero matches and only stat-less
     // dirs pay an identity rewrite
     val plan = prunePlan(spark, root, base, if (allKeysNull) Seq.empty else bounds)
-    // stage 2: exact touched-file discovery over the candidates, reading
-    // only the key columns (columnar scan) + the file name — THROUGH any
-    // pending merge-on-read masks (a masked-out row must not count as a
-    // match: its file may then carry forward and the masked row would
-    // survive, correctly, instead of being resurrected by a rewrite)
-    val touched: Set[String] =
-      if (plan.keep.isEmpty) Set.empty
-      else {
-        val probe =
-          (if (m.masks.isEmpty)
-             readAs(plan.keep).withColumn("__file", input_file_name())
-           else readEntriesMasked(spark, root, m, priorSchema, plan.keep, withFileName = true))
-            .select(keyCols.map(k => col("`" + k + "`")) :+ col("__file"): _*)
-        val uris = probe
-          .join(srcKeys, keyCols, "left_semi")
-          .select("__file")
-          .distinct()
-          .collect()
-          .map(_.getString(0))
-        uris.flatMap(uri => plan.keep.find(rel => uri.endsWith(rel))).toSet
-      }
+    // stage 2: exact touched-file discovery over the candidates
+    val touched = touchedFiles(spark, root, m, priorSchema, plan.keep, keyCols, srcKeys)
     val masked = maskedEntrySet(m)
     val untouched = m.files.filterNot(f => touched.contains(f.path))
     val rewritePaths = touched.toSeq.sorted ++ plan.uncoveredDirs
@@ -4309,19 +4262,26 @@ object SnapshotTable {
       source: DataFrame,
       keyCols: Seq[String],
       batchId: Long,
-      appId: Option[String] = None): Int = {
+      appId: Option[String] = None): Int =
+    upsertEpoch(spark, root, batchId, appId)(
+      mergeUpsert(spark, root, source, keyCols, Some(batchId), appId))
+
+  /** The exactly-once retry loop of both keyed epoch upserts: a replayed
+    * epoch returns its committed version; a lost publish race re-checks
+    * the log (our own commit won ⇒ done) and otherwise re-runs `merge`
+    * against the new latest version, capped at 20 attempts (the orphaned
+    * dirs of lost attempts vacuum away). */
+  private def upsertEpoch(spark: SparkSession, root: String, batchId: Long, appId: Option[String])(
+      merge: => Int): Int = {
     def committed(): Option[Int] = epochCommitted(spark, root, batchId, appId)
     committed().getOrElse {
       var result = -1
       var attempts = 0
       while (result < 0) {
-        try result = mergeUpsert(spark, root, source, keyCols, Some(batchId), appId)
+        try result = merge
         catch {
           case e: ConcurrentCommitException =>
             committed().foreach(v => return v) // replayed epoch lost to itself: done
-            // else: an interleaved other writer took the slot; re-derive and
-            // retry (each attempt re-runs the merge, so cap the spin — the
-            // orphaned dirs of lost attempts vacuum away)
             attempts += 1
             if (attempts >= 20) throw e
         }
@@ -4411,7 +4371,7 @@ object SnapshotTable {
       nmbsPruneBounds: Seq[Seq[Bound]] = Seq.empty,
       batchId: Option[Long] = None): Int = {
     import org.apache.spark.sql.Column
-    import org.apache.spark.sql.functions.{coalesce, col, expr, input_file_name, lit, max, min, when}
+    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
     require(keyCols.nonEmpty, "mergeInto needs at least one key column")
     // exactly-once epochs (the appendBatchExactlyOnce contract): a replayed
     // batch finds its id already committed and no-ops — the incremental
@@ -4514,26 +4474,10 @@ object SnapshotTable {
       if (m.masks.isEmpty)
         readTablePaths(spark, priorSchema, paths.map(p => new Path(dataRoot(root), p).toString))
       else readEntriesMasked(spark, root, m, priorSchema, paths)
-    // stage 2: exact touched-file discovery (matched clauses only) — the
-    // key-only columnar probe of the candidates, mask-aware
-    val touched: Set[String] =
-      if (matched.isEmpty || plan.keep.isEmpty || nSrc == 0) Set.empty
-      else {
-        val probe =
-          (if (m.masks.isEmpty)
-             readTablePaths(spark, priorSchema, plan.keep.map(p => new Path(dataRoot(root), p).toString))
-               .withColumn("__file", input_file_name())
-           else readEntriesMasked(spark, root, m, priorSchema, plan.keep, withFileName = true))
-            .select(keyCols.map(q) :+ col("__file"): _*)
-        probe
-          .join(srcKeys, keyCols, "left_semi")
-          .select("__file")
-          .distinct()
-          .collect()
-          .map(_.getString(0))
-          .flatMap(uri => plan.keep.find(rel => uri.endsWith(rel)))
-          .toSet
-      }
+    // stage 2: exact touched-file discovery (matched clauses only)
+    val touched =
+      if (matched.isEmpty || nSrc == 0) Set.empty[String]
+      else touchedFiles(spark, root, m, priorSchema, plan.keep, keyCols, srcKeys)
     // BY SOURCE rewrite set: every file that can possibly hold a row
     // satisfying some clause condition — pruned through each clause's
     // widened range skeleton when one exists, the whole table otherwise
@@ -4834,15 +4778,11 @@ object SnapshotTable {
     * rows are added and no target file is read or rewritten. Same key
     * semantics as [[mergeUpsertMor]] (null keys match nothing); reads
     * pay the anti-join on masked files until [[compact]] reconciles.
-    * With exact accounting (the default), `addedRows` records the
-    * NEGATED count of live rows the new mask hides — one bounded
-    * counting read of only the masked candidates at write time
-    * ([[exactMorAccounting]]); under
-    * `spark.graft.mor.exactRowAccounting=false` it records 0 and the
-    * mask carries no row count (the pure-metadata fallback, same as
-    * [[deleteWhereMor]]'s). */
+    * `addedRows` records the NEGATED count of live rows the new mask
+    * hides — one bounded key-only counting read of only the masked
+    * candidates at write time ([[keysMask]]). */
   def deleteMatchedMor(spark: SparkSession, root: String, source: DataFrame, keyCols: Seq[String]): Int = {
-    import org.apache.spark.sql.functions.{col, max, min}
+    import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "deleteMatchedMor needs at least one key column")
     val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
     val m = readManifest(spark, root, base)
@@ -4854,23 +4794,8 @@ object SnapshotTable {
     val srcKeys = source.select(keyCols.map(k => col("`" + k + "`")): _*).na.drop("any").distinct()
     val bounds = keyEnvelope(srcKeys, keyCols)
     if (bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)) return base // no usable keys
-    val plan = prunePlan(spark, root, base, bounds)
-    val maskEntries = plan.keep ++ plan.uncoveredDirs
-    if (maskEntries.isEmpty) return base // stats prove no file can hold a matched key
-    val keyRel = "data/" + java.util.UUID.randomUUID().toString
-    srcKeys.write.parquet(new Path(dataRoot(root), keyRel).toString)
-    // exact accounting (default): one key-only semi-join over the masked
-    // candidates records the hidden-row count; addedRows = its negation
-    val (deleted, maskRows) =
-      if (!exactMorAccounting(spark)) (0L, None)
-      else {
-        val sidecar = spark.read.parquet(new Path(dataRoot(root), keyRel).toString)
-        val cnt = readEntriesMasked(spark, root, m, Some(schema), maskEntries)
-          .select(keyCols.map(k => col("`" + k + "`")): _*)
-          .join(sidecar, keyCols, "left_semi")
-          .count()
-        (cnt, Some(cnt))
-      }
+    val mask = keysMask(spark, root, m, Some(schema), keyCols, bounds, srcKeys, None)
+    if (mask.isEmpty) return base // stats prove no file can hold a matched key
     publish(
       spark,
       root,
@@ -4878,18 +4803,56 @@ object SnapshotTable {
         base + 1,
         "mor-delete",
         m.dirs,
-        -deleted,
+        -mask.flatMap(_.maskedRows).sum,
         None,
         m.schemaJson,
         m.files,
         constraints = m.constraints,
         dropped = m.dropped,
-        masks = m.masks :+ Mask(
-          "keys",
-          maskEntries,
-          keyCols = keyCols,
-          keyDir = Some(keyRel),
-          maskedRows = maskRows)))
+        masks = m.masks ++ mask))
+  }
+
+  /** The keys-mask step of every key-driven merge-on-read commit
+    * ([[deleteMatchedMor]], [[mergeUpsertMor]], and [[rebase]]'s replay
+    * of both): prune `m`'s files through the key envelope `bounds`; when
+    * a candidate survives, land `keys` — DISTINCT complete key tuples in
+    * logical names — as the key-tombstone sidecar (or re-reference the
+    * recorded `keyDir`, whose frame `keys` then is), and count the live
+    * candidate rows it hides with one key-only semi-join, read through
+    * any earlier masks so overlapping masks never double-count. The
+    * prune runs first, so a commit with no candidate writes nothing.
+    * A key column `schema` lacks is brand new: no row carries it, so the
+    * mask provably hides nothing — exact without a read. */
+  private def keysMask(
+      spark: SparkSession,
+      root: String,
+      m: Commit,
+      schema: Option[org.apache.spark.sql.types.StructType],
+      keyCols: Seq[String],
+      bounds: Seq[Bound],
+      keys: DataFrame,
+      keyDir: Option[String]): Option[Mask] = {
+    import org.apache.spark.sql.functions.col
+    val plan = prunePlanOf(m, bounds)
+    val entries = plan.keep ++ plan.uncoveredDirs
+    if (entries.isEmpty) None
+    else {
+      val (rel, sidecar) = keyDir match {
+        case Some(d) => (d, keys)
+        case None =>
+          val d = "data/" + java.util.UUID.randomUUID().toString
+          keys.write.parquet(new Path(dataRoot(root), d).toString)
+          (d, spark.read.parquet(new Path(dataRoot(root), d).toString))
+      }
+      val hidden =
+        if (!schema.exists(s => keyCols.forall(s.fieldNames.contains))) 0L
+        else
+          readEntriesMasked(spark, root, m, schema, entries)
+            .select(keyCols.map(k => col("`" + k + "`")): _*)
+            .join(sidecar, keyCols, "left_semi")
+            .count()
+      Some(Mask("keys", entries, keyCols = keyCols, keyDir = Some(rel), maskedRows = Some(hidden)))
+    }
   }
 
   // ──────────────── merge-on-read DML (deletion masks) ────────────────
@@ -4938,13 +4901,11 @@ object SnapshotTable {
     * rewrites, relation, CDC) until [[compact]] reconciles. Result
     * algebra is IDENTICAL to [[deleteWhere]] (same [[matchCol]] null
     * semantics); the trade is read amplification on the masked files
-    * instead of write amplification now. EXACT ROW ACCOUNTING (default):
-    * the new mask records the live rows it hides and `addedRows` is the
-    * exact delta, at the cost of one counting read of only the boundary
-    * candidates — set `spark.graft.mor.exactRowAccounting=false` for the
-    * pure-metadata commit (addedRows then records only whole-dropped
-    * physical rows); countWhere stays exact either way because masked
-    * files never metadata-count. */
+    * instead of write amplification now. EXACT ROW ACCOUNTING: the new
+    * mask records the live rows it hides and `addedRows` is the exact
+    * delta, at the cost of one counting read of only the boundary
+    * candidates; countWhere stays exact because masked files never
+    * metadata-count. */
   def deleteWhereMor(spark: SparkSession, root: String, bounds: Seq[Bound]): Int = {
     require(bounds.nonEmpty, "deleteWhereMor with no bounds would drop the whole table; use overwrite")
     val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
@@ -4954,31 +4915,20 @@ object SnapshotTable {
       .getOrElse(sys.error("merge-on-read DML needs a schema-recording manifest"))
     val encoded = encodeMaskBounds(schema, bounds) // loud BEFORE any state change
     val mp = morMaskPlan(m, schema, bounds, encoded, prunePlanOf(m, bounds))
-    // exact accounting (default): the new mask records the live rows it
-    // hides and addedRows becomes the exact delta — one bounded counting
-    // read of only the BOUNDARY candidates (whole-drops stay stat-only,
-    // and a masked whole-drop counts its live rows like dmlRewrite does)
+    // exact accounting: the new mask records the live rows it hides and
+    // addedRows becomes the exact delta — one bounded counting read of
+    // only the BOUNDARY candidates (whole-drops stay stat-only, and a
+    // masked whole-drop counts its live rows like dmlRewrite does)
     val oldIds = m.masks.map(_.id).toSet
-    val (addedRows, masksFinal) =
-      if (!exactMorAccounting(spark)) (-mp.droppedWhole.map(_.rows).sum, mp.masks)
-      else {
-        val newEntries = mp.masks.filterNot(mk => oldIds(mk.id)).flatMap(_.entries)
-        val maskedCount =
-          if (newEntries.isEmpty) 0L
-          else
-            readEntriesMasked(spark, root, m, Some(schema), newEntries)
-              .filter(matchCol(bounds))
-              .count()
-        val maskedSet = maskedEntrySet(m)
-        val (maskedDropped, cleanDropped) = mp.droppedWhole.partition(f => maskedSet(f.path))
-        val droppedLive =
-          cleanDropped.map(_.rows).sum +
-            (if (maskedDropped.isEmpty) 0L
-             else readEntriesMasked(spark, root, m, Some(schema), maskedDropped.map(_.path)).count())
-        (
-          -(droppedLive + maskedCount),
-          mp.masks.map(mk => if (oldIds(mk.id)) mk else mk.copy(maskedRows = Some(maskedCount))))
-      }
+    val newEntries = mp.masks.filterNot(mk => oldIds(mk.id)).flatMap(_.entries)
+    val maskedCount =
+      if (newEntries.isEmpty) 0L
+      else
+        readEntriesMasked(spark, root, m, Some(schema), newEntries)
+          .filter(matchCol(bounds))
+          .count()
+    val addedRows = -(droppedLiveRows(spark, root, m, Some(schema), mp.droppedWhole) + maskedCount)
+    val masksFinal = mp.masks.map(mk => if (oldIds(mk.id)) mk else mk.copy(maskedRows = Some(maskedCount)))
     publish(
       spark,
       root,
@@ -5040,17 +4990,8 @@ object SnapshotTable {
     // mask hides exactly those minus the whole-dropped files' live rows —
     // free exactness (only a masked whole-drop needs a counting read)
     val oldIds = m.masks.map(_.id).toSet
-    val masksFinal =
-      if (!exactMorAccounting(spark)) mp.masks
-      else {
-        val maskedSet = maskedEntrySet(m)
-        val (maskedDropped, cleanDropped) = mp.droppedWhole.partition(f => maskedSet(f.path))
-        val droppedLive =
-          cleanDropped.map(_.rows).sum +
-            (if (maskedDropped.isEmpty) 0L
-             else readEntriesMasked(spark, root, m, Some(schema), maskedDropped.map(_.path)).count())
-        mp.masks.map(mk => if (oldIds(mk.id)) mk else mk.copy(maskedRows = Some(n - droppedLive)))
-      }
+    val droppedLive = droppedLiveRows(spark, root, m, Some(schema), mp.droppedWhole)
+    val masksFinal = mp.masks.map(mk => if (oldIds(mk.id)) mk else mk.copy(maskedRows = Some(n - droppedLive)))
     publish(
       spark,
       root,
@@ -5087,7 +5028,7 @@ object SnapshotTable {
       keyCols: Seq[String],
       batchId: Option[Long] = None,
       appId: Option[String] = None): Int = {
-    import org.apache.spark.sql.functions.{col, max, min}
+    import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "mergeUpsertMor needs at least one key column")
     val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
     val m = readManifest(spark, root, base)
@@ -5099,44 +5040,17 @@ object SnapshotTable {
     val srcSchema = org.apache.spark.sql.types.StructType(
       schemaFromJson(evolved).fields.filter(f => source.columns.contains(f.name)))
     val srcDf = readTablePaths(spark, Some(srcSchema), Seq(new Path(dataRoot(root), srcRel).toString))
-    // envelope prune: the only target-side work, and it is zero-I/O
+    // envelope prune: the only target-side work, and it is zero-I/O;
+    // all-null keys match nothing — a pure insert. The matched-row count
+    // is one key-only semi-join over the masked candidates (columnar key
+    // read, no rewrite): addedRows = inserts − replaced
     val bounds = keyEnvelope(srcDf, keyCols)
-    val allKeysNull = bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)
-    val newMask: Seq[Mask] =
-      if (allKeysNull) Seq.empty // all-null keys match nothing: a pure insert
-      else {
-        // key-tombstone sidecar: DISTINCT complete key tuples, logical
-        // names (independent of the table's physical column mapping)
-        val keyRel = "data/" + java.util.UUID.randomUUID().toString
-        srcDf
-          .select(keyCols.map(k => col("`" + k + "`")): _*)
-          .na.drop("any")
-          .distinct()
-          .write
-          .parquet(new Path(dataRoot(root), keyRel).toString)
-        val plan = prunePlan(spark, root, base, bounds)
-        val maskEntries = plan.keep ++ plan.uncoveredDirs
-        if (maskEntries.isEmpty) Seq.empty
-        else Seq(Mask("keys", maskEntries, keyCols = keyCols, keyDir = Some(keyRel)))
-      }
-    // exact accounting (default): the matched-row count is one key-only
-    // semi-join over the masked candidates (columnar key read, no
-    // rewrite) — the mask records it and addedRows = inserts − replaced
-    val priorSchema = m.schemaJson.map(schemaFromJson)
-    val (addedRows, newMaskFinal) =
-      if (newMask.isEmpty || !exactMorAccounting(spark)) (nSrc, newMask)
-      else if (!priorSchema.exists(s => keyCols.forall(s.fieldNames.contains)))
-        // a BRAND-NEW key column: no target row carries it, so the mask
-        // provably hides nothing — exact without any read
-        (nSrc, newMask.map(_.copy(maskedRows = Some(0L))))
-      else {
-        val sidecar = spark.read.parquet(new Path(dataRoot(root), newMask.head.keyDir.get).toString)
-        val matchedCnt = readEntriesMasked(spark, root, m, priorSchema, newMask.head.entries)
-          .select(keyCols.map(k => col("`" + k + "`")): _*)
-          .join(sidecar, keyCols, "left_semi")
-          .count()
-        (nSrc - matchedCnt, newMask.map(_.copy(maskedRows = Some(matchedCnt))))
-      }
+    val newMask =
+      if (bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)) None
+      else
+        keysMask(
+          spark, root, m, m.schemaJson.map(schemaFromJson), keyCols, bounds,
+          srcDf.select(keyCols.map(k => col("`" + k + "`")): _*).na.drop("any").distinct(), None)
     publish(
       spark,
       root,
@@ -5144,13 +5058,13 @@ object SnapshotTable {
         base + 1,
         "mor-merge",
         m.dirs :+ srcRel,
-        addedRows,
+        nSrc - newMask.flatMap(_.maskedRows).sum,
         batchId,
         Some(evolved),
         m.files ++ srcStats,
         constraints = m.constraints,
         dropped = reviveDropped(m.dropped, schemaFromJson(evolved)),
-        masks = m.masks ++ newMaskFinal,
+        masks = m.masks ++ newMask,
         appId = appId))
   }
 
@@ -5167,23 +5081,9 @@ object SnapshotTable {
       source: DataFrame,
       keyCols: Seq[String],
       batchId: Long,
-      appId: Option[String] = None): Int = {
-    def committed(): Option[Int] = epochCommitted(spark, root, batchId, appId)
-    committed().getOrElse {
-      var result = -1
-      var attempts = 0
-      while (result < 0) {
-        try result = mergeUpsertMor(spark, root, source, keyCols, Some(batchId), appId)
-        catch {
-          case e: ConcurrentCommitException =>
-            committed().foreach(v => return v) // replayed epoch lost to itself: done
-            attempts += 1
-            if (attempts >= 20) throw e
-        }
-      }
-      result
-    }
-  }
+      appId: Option[String] = None): Int =
+    upsertEpoch(spark, root, batchId, appId)(
+      mergeUpsertMor(spark, root, source, keyCols, Some(batchId), appId))
 
   /** `foreachBatch` adapter for streaming merge-on-read upsert:
     * `stream.writeStream.foreachBatch(SnapshotTable.streamUpsertMor(root, keys)).start()`. */

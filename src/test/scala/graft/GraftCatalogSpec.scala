@@ -561,42 +561,72 @@ class GraftCatalogSpec extends SparkSuite {
   }
 
   test("spark.graft.dml.mor routes catalog DML onto merge-on-read O(change) commits") {
+    import graft.sinks.SnapshotSql
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gtest.mor")
-    val root = wh + "/mor/t"
-    SnapshotTable.create(spark, root, clustered(1000, 8)) // v1
-    def action(v: Int): String = SnapshotTable.readManifest(spark, root, v).action
-    spark.conf.set("spark.graft.dml.mor", "true")
-    try {
-      // exact-bound DELETE → a metadata-only mor-delete commit
-      spark.sql("DELETE FROM gtest.mor.t WHERE k BETWEEN 100 AND 199")
-      assert(action(2) == "mor-delete", action(2))
-      assert(spark.sql("SELECT count(*) AS n FROM gtest.mor.t").head.getLong(0) == 900)
-      // exact-bound UPDATE → mor-update (updated rows re-land, originals masked)
-      spark.sql("UPDATE gtest.mor.t SET s = 'u' WHERE k BETWEEN 200 AND 209")
-      assert(action(3) == "mor-update", action(3))
-      assert(spark.sql("SELECT count(*) AS n FROM gtest.mor.t WHERE s = 'u'").head.getLong(0) == 10)
-      // canonical upsert (SET * / INSERT *) → mor-merge, O(change) write
-      spark.sql(
-        "MERGE INTO gtest.mor.t AS t USING " +
-          "(SELECT id + 950 AS k, concat('m', id) AS s FROM range(100)) AS s ON t.k = s.k " +
-          "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
-      assert(action(4) == "mor-merge", action(4))
-      assert(spark.sql("SELECT count(*) AS n FROM gtest.mor.t").head.getLong(0) == 950)
-      assert(spark.sql("SELECT count(*) AS n FROM gtest.mor.t WHERE s LIKE 'm%'").head.getLong(0) == 100)
-      // unconditional matched DELETE → deleteMatchedMor (a keys mask)
-      spark.sql(
-        "MERGE INTO gtest.mor.t AS t USING " +
-          "(SELECT id AS k FROM range(50)) AS s ON t.k = s.k WHEN MATCHED THEN DELETE")
-      assert(action(5) == "mor-delete", action(5))
-      assert(spark.sql("SELECT count(*) AS n FROM gtest.mor.t WHERE k < 50").head.getLong(0) == 0)
-      // a general conditional shape still lowers onto the COW executor
-      spark.sql("MERGE INTO gtest.mor.t AS t USING (SELECT id + 300 AS k FROM range(5)) AS s " +
+    // the five statement shapes: exact-bound DELETE and UPDATE, the
+    // canonical upsert (SET * / INSERT *), the unconditional matched
+    // DELETE, and a general conditional MERGE
+    def statements(t: String): Seq[String] = Seq(
+      s"DELETE FROM $t WHERE k BETWEEN 100 AND 199",
+      s"UPDATE $t SET s = 'u' WHERE k BETWEEN 200 AND 209",
+      s"MERGE INTO $t AS t USING " +
+        "(SELECT id + 950 AS k, concat('m', id) AS s FROM range(100)) AS s ON t.k = s.k " +
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+      s"MERGE INTO $t AS t USING " +
+        "(SELECT id AS k FROM range(50)) AS s ON t.k = s.k WHEN MATCHED THEN DELETE",
+      s"MERGE INTO $t AS t USING (SELECT id + 300 AS k FROM range(5)) AS s " +
         "ON t.k = s.k WHEN MATCHED AND t.k = 302 THEN DELETE")
-      assert(action(6) == "merge", action(6))
-    } finally spark.conf.unset("spark.graft.dml.mor")
-    // with the conf off the same statement shapes stay copy-on-write
-    spark.sql("DELETE FROM gtest.mor.t WHERE k BETWEEN 400 AND 409")
-    assert(action(7) == "delete", action(7))
+    def actions(root: String): Seq[String] = SnapshotTable.history(spark, root).map(_.action).tail
+    def rows(root: String): Seq[(Long, String)] =
+      SnapshotTable.read(spark, root).orderBy("k").as[(Long, String)].collect().toSeq
+    // each mode lands the statements on both DML surfaces — catalog
+    // identifiers under the session conf, SQL text on a registration with
+    // the same write mode — and both must commit the same actions, version
+    // by version, and the same rows
+    def land(mor: Boolean): (String, Seq[(Long, String)]) = {
+      val tag = if (mor) "on" else "off"
+      val catRoot = s"$wh/mor/t_$tag"
+      val sqlRoot = s"$wh/mor/sql_$tag"
+      SnapshotTable.create(spark, catRoot, clustered(1000, 8)) // v1
+      SnapshotTable.create(spark, sqlRoot, clustered(1000, 8))
+      SnapshotSql.register(spark, s"mor_sql_$tag", sqlRoot, morWrites = mor)
+      spark.conf.set("spark.graft.dml.mor", mor.toString)
+      try statements(s"gtest.mor.t_$tag").foreach(spark.sql)
+      finally spark.conf.unset("spark.graft.dml.mor")
+      statements(s"mor_sql_$tag").foreach(SnapshotSql.execute(spark, _))
+      val expected =
+        if (mor) Seq("mor-delete", "mor-update", "mor-merge", "mor-delete", "merge")
+        else Seq("delete", "update", "merge", "merge", "merge")
+      assert(actions(catRoot) == expected, actions(catRoot))
+      assert(actions(sqlRoot) == expected, actions(sqlRoot))
+      val landed = rows(catRoot)
+      assert(rows(sqlRoot) == landed, s"SQL text and catalog DML must land the same rows ($tag)")
+      (catRoot, landed)
+    }
+    val (morRoot, morRows) = land(mor = true)
+    val (_, cowRows) = land(mor = false)
+    assert(morRows == cowRows, "merge-on-read and copy-on-write must land the same rows")
+    assert(morRows.size == 899 && morRows.count(_._2 == "u") == 10 &&
+      morRows.count(_._2.startsWith("m")) == 100 && !morRows.exists(r => r._1 < 50 || r._1 == 302))
+
+    // a keyed merge-on-read sink epoch takes the same router
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ms = MemoryStream[(Long, String)]
+    val q = ms.toDF().toDF("k", "s")
+      .writeStream
+      .format("snapshot-table")
+      .option("path", morRoot)
+      .option("upsertKeys", "k")
+      .option("morWrites", "true")
+      .option("checkpointLocation", Files.createTempDirectory("graft-mor-sink-ck").toString)
+      .outputMode("update")
+      .start()
+    try { ms.addData((500L, "e"), (2000L, "e")); q.processAllAvailable() }
+    finally q.stop()
+    val epoch = SnapshotTable.history(spark, morRoot).last
+    assert(epoch.action == "mor-merge" && epoch.batchId.contains(0L), (epoch.action, epoch.batchId))
+    assert(rows(morRoot) == (morRows.filterNot(_._1 == 500L) ++ Seq(500L -> "e", 2000L -> "e")).sortBy(_._1))
   }
 
   test("MOR merge aligns source casing to the target schema: ON t.K = s.k UPDATE SET * lands identically in both modes") {

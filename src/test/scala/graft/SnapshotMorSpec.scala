@@ -78,15 +78,6 @@ class SnapshotMorSpec extends SparkSuite {
     val masksNow = lastCommit().masks
     if (masksNow.exists(_.maskedRows.isEmpty)) assert(liveRowsCol().isNullAt(0))
     else assert(liveRowsCol().getLong(0) == liveCount())
-
-    // the opt-out restores the pure-metadata commit (no counting read)
-    spark.conf.set("spark.graft.mor.exactRowAccounting", "false")
-    try {
-      SnapshotTable.deleteWhereMor(spark, root, Seq(Bound("k", Some(300L), Some(309L)))) // v7
-      val mk = lastCommit().masks.filterNot(m => masksNow.map(_.id).contains(m.id))
-      assert(mk.nonEmpty && mk.forall(_.maskedRows.isEmpty))
-      assert(liveRowsCol().isNullAt(0))
-    } finally spark.conf.unset("spark.graft.mor.exactRowAccounting")
   }
 
   test("mor-delete: zero data I/O, result identical to copy-on-write delete") {
