@@ -35,20 +35,22 @@ trait PagedSource {
   * of a real HTTP response body), sorted on the driver: a Spark `orderBy`
   * would add a sampling job and a sort shuffle to every fetch. The only
   * whole-dataset state on the driver is the row count, i.e. cursor
-  * metadata. Partkeys are dense 0..n-1 in every fixture, so key ranges ARE
-  * page boundaries — exactly keyset pagination. */
+  * metadata. The count and every fetch read one `part` relation, built
+  * once (its schema and file listing are not re-inferred per fetch): one
+  * snapshot for the whole walk. Partkeys are dense 0..n-1 in every
+  * fixture, so key ranges ARE page boundaries — exactly keyset pagination. */
 class FixturePagedSource(spark: SparkSession, sfDir: String, pageSize: Int) extends PagedSource {
   require(pageSize > 0, "pageSize must be positive")
 
-  private lazy val nRows: Long = Fixtures.table(spark, sfDir, "part").count()
+  private lazy val part = Fixtures.table(spark, sfDir, "part")
+  private lazy val nRows: Long = part.count()
 
   override def fetchPage(page: Int): Option[Seq[RawProduct]] = {
     val from = page.toLong * pageSize
     if (page < 0 || from >= nRows) None
     else
       Some(
-        Fixtures
-          .table(spark, sfDir, "part")
+        part
           .filter(col("p_partkey") >= from && col("p_partkey") < from + pageSize)
           .select(
             col("p_partkey").cast("long"),

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.Fixtures
+import graft.functions.UpcCheckDigit
 import graft.sinks.JdbcSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,16 +15,18 @@ import org.apache.spark.sql.functions._
   * re-running is a no-op, changed rows update in place.
   */
 object UpcSkuLoad {
-  /** Raw (partkey, name, brand, price) rows → UPC product records. Check
-    * digit via pure column arithmetic (codegen-friendly; the UDF variant
-    * lives in ops.Scalars). Shared by the batch extract and the paginated
-    * path, so both synthesize identity identically. */
+  /** Raw (partkey, name, brand, price) rows → UPC product records: the
+    * partkey zero-padded to the 11-digit body, then the check digit from
+    * the shared [[UpcCheckDigit]] kernel (the UDF variant lives in
+    * ops.Scalars). A partkey outside [0, 10^11) has no 11-digit body and
+    * gets a null `upc` — quarantined as `bad_length` downstream — instead
+    * of a truncated body that collides with another part's UPC. Shared by
+    * the batch extract and the paginated path, so both synthesize identity
+    * identically. */
   def toProducts(raw: DataFrame): DataFrame = {
-    val body = lpad(col("partkey").cast("string"), 11, "0")
-    val weighted = (1 to 11)
-      .map(i => substring(body, i, 1).cast("int") * lit(if (i % 2 == 1) 3 else 1))
-      .reduce(_ + _)
-    val cd = (lit(10) - weighted % 10) % 10
+    val pk = col("partkey")
+    val body = when(pk >= 0 && pk < 100000000000L, lpad(pk.cast("string"), 11, "0"))
+    val cd = (lit(10) - UpcCheckDigit.weightedSumCol(body, 11) % 10) % 10
     raw.select(
       concat(body, cd.cast("string")).as("upc"),
       col("name"),
@@ -52,31 +55,19 @@ object UpcSkuLoad {
   /** Split records into (valid, quarantined): every rejected row lands in
     * the second frame carrying its FIRST failing check as `reject_reason`
     * (fixed evaluation order, so reasons are deterministic). The null
-    * traps matter: a non-digit character makes the weighted sum NULL and a
-    * bare `sum % 10 =!= 0` predicate would be NULL too — neither valid nor
-    * flagged — so every reason clause is written null-catching. Single
-    * pass, pure column expressions; the split is two filters over the same
-    * tagged plan (Spark shares the scan). */
+    * traps matter: the [[UpcCheckDigit]] kernel returns NULL for a
+    * non-digit character (a malformed UPC is data here, not an exception)
+    * and a bare `sum % 10 =!= 0` predicate would be NULL too — neither
+    * valid nor flagged — so every reason clause is written null-catching.
+    * Single pass, pure column expressions; the split is two filters over
+    * the same tagged plan (Spark shares the scan). */
   def validateWithQuarantine(records: DataFrame): (DataFrame, DataFrame) = {
-    // try_cast, not cast: under ANSI mode (Spark 4 default) a non-digit
-    // character would THROW out of the whole job — the quarantine path
-    // exists precisely to absorb malformed input as data, not exceptions
-    val weighted = (1 to 12)
-      .map(i => expr(s"try_cast(substring(upc, $i, 1) AS int)") * lit(if (i % 2 == 1) 3 else 1))
-      .reduce(_ + _)
-    // The 12-term sum is projected ONCE as a named column, not inlined into
-    // the `when` clauses: inlined twice it doubled the expression tree and
-    // pushed the downstream validate→dedup→agg stage past the JVM's 64 KB
-    // method limit, silently dropping the whole stage out of codegen
-    // (CollapseProject keeps this split — the alias is non-cheap and
-    // referenced twice, so Catalyst won't re-inline it).
-    val withW = records.withColumn("__cd_weighted", weighted)
-    val w = col("__cd_weighted")
+    val w = UpcCheckDigit.weightedSumCol(col("upc"), 12)
     val reason = when(col("upc").isNull || length(col("upc")) =!= 12, "bad_length")
       .when(w.isNull || w % 10 =!= 0, "bad_check_digit")
       .when(col("price").isNull || col("price") <= 0, "bad_price")
       .when(length(trim(coalesce(col("name"), lit("")))) === 0, "empty_name")
-    val tagged = withW.withColumn("reject_reason", reason).drop("__cd_weighted")
+    val tagged = records.withColumn("reject_reason", reason)
     (
       tagged.filter(col("reject_reason").isNull).drop("reject_reason"),
       tagged.filter(col("reject_reason").isNotNull))

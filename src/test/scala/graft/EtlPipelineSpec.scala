@@ -275,10 +275,22 @@ class EtlPipelineSpec extends SparkSuite {
       ("036000291452", "free stuff", "B", 0.0),       // bad_price (valid UPC, price 0)
       ("036000291452", "   ", "B", 9.99)              // empty_name (blank after trim)
     ).toDF("upc", "name", "brand", "price").withColumn("loaded_at", current_timestamp())
-    val (valid, quarantined) = UpcSkuLoad.validateWithQuarantine(good.unionByName(bad))
+    // partkeys through identity synthesis: an 11-digit key is a valid body;
+    // a 12-digit key has none (lpad would truncate it onto the 11-digit
+    // key's UPC) and a negative one neither (its '-' is no digit) — both
+    // get a null upc instead of a colliding UPC or a job-killing cast
+    val partkeys = UpcSkuLoad.toProducts(Seq(
+      (12345678901L, "eleven-digit partkey", "B", 1.0),
+      (123456789012L, "twelve-digit partkey", "B", 1.0),
+      (-7L, "negative partkey", "B", 1.0)
+    ).toDF("partkey", "name", "brand", "price"))
+    val (valid, quarantined) =
+      UpcSkuLoad.validateWithQuarantine(good.unionByName(bad).unionByName(partkeys))
     // accounting: nothing vanishes
-    assert(valid.count() + quarantined.count() == good.count() + 5)
-    assert(valid.count() == good.count(), "a planted bad row leaked into the valid set")
+    assert(valid.count() + quarantined.count() == good.count() + 8)
+    assert(valid.count() == good.count() + 1, "a planted bad row leaked into the valid set")
+    assert(valid.filter(col("name") === "eleven-digit partkey").select("upc").as[String].collect().toSeq ==
+      Seq("123456789012"))
     val reasons = quarantined
       .select("name", "reject_reason")
       .collect()
@@ -289,7 +301,9 @@ class EtlPipelineSpec extends SparkSuite {
       "wrong digit" -> "bad_check_digit",
       "non-digit" -> "bad_check_digit",
       "free stuff" -> "bad_price",
-      "   " -> "empty_name"), s"got $reasons")
+      "   " -> "empty_name",
+      "twelve-digit partkey" -> "bad_length",
+      "negative partkey" -> "bad_length"), s"got $reasons")
     // the quarantine frame is loadable like any other (side-table pattern)
     val qTable = "products_quarantine"
     val c = DriverManager.getConnection(url)
@@ -297,19 +311,72 @@ class EtlPipelineSpec extends SparkSuite {
       val st = c.createStatement()
       try st.execute(s"DROP TABLE $qTable")
       catch { case _: java.sql.SQLException => () }
+      // upc is CLOB: Spark's Derby dialect binds a null string as a CLOB
+      // null, which a VARCHAR column rejects, and out-of-range partkeys
+      // quarantine with a null upc
       st.execute(
-        s"CREATE TABLE $qTable (upc VARCHAR(32), name VARCHAR(128), brand VARCHAR(32), price DOUBLE, loaded_at TIMESTAMP, reject_reason VARCHAR(32))")
+        s"CREATE TABLE $qTable (upc CLOB, name VARCHAR(128), brand VARCHAR(32), price DOUBLE, loaded_at TIMESTAMP, reject_reason VARCHAR(32))")
       st.close()
     } finally c.close()
     quarantined.write.mode("append").jdbc(url, qTable, new java.util.Properties())
-    assert(spark.read.jdbc(url, qTable, new java.util.Properties()).count() == 5)
+    assert(spark.read.jdbc(url, qTable, new java.util.Properties()).count() == 7)
+  }
+
+  test("check-digit kernel ≡ the try_cast digit-sum formula, interpreted and codegen'd") {
+    import spark.implicits._
+    import graft.functions.UpcCheckDigit
+    val upc = "036000291452"
+    val nonDigits = Seq(" ", "+", "-", "\uFF11", "\u00E9", "\u20AC", "\uD83D\uDE00") // full-width 1; 2-, 3- and 4-byte chars
+    val corpus: Seq[String] =
+      Seq(upc, upc.take(11), upc.take(5), "", upc + "9", upc + "\u00E9", null) ++
+        (0 until 12).flatMap(i => nonDigits.map(c => upc.take(i) + c + upc.drop(i + 1)))
+    val frame = corpus.toDF("s").repartition(2) // not a LocalRelation: no driver-side folding
+    def tryCastSum(n: Int) =
+      (1 to n)
+        .map(i => expr(s"try_cast(substring(s, $i, 1) AS int)") * lit(if (i % 2 == 1) 3 else 1))
+        .reduce(_ + _)
+    val cols = Seq(
+      tryCastSum(11), UpcCheckDigit.weightedSumCol(col("s"), 11),
+      tryCastSum(12), UpcCheckDigit.weightedSumCol(col("s"), 12))
+    // whole-stage codegen off, so the projection factory mode decides
+    // between the interpreted and the generated evaluator
+    val confs = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val prior = confs.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      for (mode <- Seq("NO_CODEGEN", "CODEGEN_ONLY")) {
+        spark.conf.set("spark.sql.codegen.factoryMode", mode)
+        val rows = frame.select(col("s") +: cols: _*).collect()
+        assert(rows.length == corpus.size)
+        def opt(r: org.apache.spark.sql.Row, i: Int) = if (r.isNullAt(i)) None else Some(r.getInt(i))
+        for (r <- rows) {
+          assert(opt(r, 1) == opt(r, 2), s"$mode n=11 on ${r.getString(0)}")
+          assert(opt(r, 3) == opt(r, 4), s"$mode n=12 on ${r.getString(0)}")
+        }
+        val byInput = rows.map(r => Option(r.getString(0)) -> opt(r, 4)).toMap
+        assert(byInput(Some(upc)) == Some(60) && byInput(Some(upc + "9")) == Some(60), s"$mode: $byInput")
+        assert(byInput(Some(upc.take(11))).isEmpty && byInput(None).isEmpty, s"$mode: $byInput")
+        assert(rows.count(r => opt(r, 4).isEmpty) == corpus.size - 3, s"$mode: $byInput") // all but the three 12-digit prefixes
+      }
+    } finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("the batch load's optimized plan has no oversized expression") {
+    // the inlined 12-term try_cast sum, substituted into the pushed-down
+    // validate filter, made a 3,658-node condition whose whole-stage Java
+    // took ~0.4 s to generate on every execution
+    val plan = UpcSkuLoad.dedup(UpcSkuLoad.validate(UpcSkuLoad.extract(spark, sf001))).queryExecution.optimizedPlan
+    val sizes = plan.collect { case node => node.expressions.map(_.collect { case e => e }.size) }.flatten
+    assert(sizes.nonEmpty && sizes.max <= 500, s"largest expression: ${sizes.max} nodes")
   }
 
   test("validate→dedup→count stays inside whole-stage codegen (no 64KB interpreter fallback)") {
-    // With fallback disabled a codegen compile failure (the historical mode:
-    // the twice-inlined 12-term check-digit sum pushed hashAgg past the JVM
-    // 64 KB method limit) THROWS instead of silently running interpreted —
-    // so a green pass here proves the hot path actually compiles.
+    // With fallback disabled a codegen compile failure THROWS instead of
+    // silently running interpreted — so a green pass here proves the hot
+    // path (check-digit kernel in the pushed-down validate filter, dedup,
+    // aggregate) actually compiles. Historically the inlined 12-term
+    // check-digit sum pushed this stage past the JVM 64 KB method limit;
+    // the plan-shape guard above keeps the expression small.
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
       val (valid, quarantined) = UpcSkuLoad.validateWithQuarantine(UpcSkuLoad.extract(spark, sf001))
