@@ -1,29 +1,26 @@
 package graft
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.json4s.{JDouble, JInt, JObject, JString}
+import org.json4s.jackson.JsonMethods
 object Bench {
+  /** Per-query seconds of a prior bench record, or None when it is not
+    * comparable: taken on another data dir, or (`cpus` given) at another
+    * core count. Compact and pretty-printed records read alike. */
+  def priors(record: String, sfDir: String, cpus: Option[String]): Option[Map[String, Double]] =
+    JsonMethods.parseOpt(record).flatMap { rec =>
+      val same = (rec \ "sf") == JString(sfDir) && cpus.forall(c => (rec \ "cpus").values.toString == c)
+      (rec \ "queries") match {
+        case JObject(qs) if same =>
+          Some(qs.collect { case (n, JDouble(t)) => n -> t; case (n, JInt(t)) => n -> t.toDouble }.toMap)
+        case _ => None
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // wide-then-coalesce (see Verify.scala): prevents per-task hash-agg
-      // OOM on 100M-row shuffles at large SF, free at small SF
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // static conf; no-op unless reliable checkpointing is enabled below
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CKPT_DIR=<dir> switches every iterative operator to
-    // reliable (disk) checkpoints — the at-scale mode Checkpoints.scala
-    // documents: memory-resident localCheckpoint frames are the binding
-    // constraint for the graph family at ≥100× the bench SF in one JVM.
-    sys.env.get("SPARK_GRAFT_CKPT_DIR").foreach { dir =>
-      spark.conf.set(graft.ops.Checkpoints.ReliableKey, "true")
-      spark.sparkContext.setCheckpointDir(dir)
-    }
+    val cpus = LocalSession.cpus
+    val spark = LocalSession()
     // Untimed warmup: the first job in a cold JVM pays 3-5 s of classloading
     // and codegen that would otherwise land on an arbitrary query and poison
     // cross-round per-query comparison. One small scan+agg+join absorbs it.
@@ -40,10 +37,25 @@ object Bench {
     val selected: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
       if (args.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
       else args.toSeq.map(n => n -> SparkEntry.queries(n))
+    // A targeted run is the profiling mode: it lists every Spark job on
+    // stderr (query, job id, wall ms, tasks, call site) so per-commit
+    // protocol costs are attributable line by line. Stdout is unchanged.
+    if (args.nonEmpty) spark.sparkContext.addSparkListener(new SparkListener {
+      private val starts = scala.collection.concurrent.TrieMap.empty[Int, SparkListenerJobStart]
+      override def onJobStart(js: SparkListenerJobStart): Unit = starts.put(js.jobId, js)
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        starts.remove(je.jobId).foreach { js =>
+          val query = Option(js.properties).map(_.getProperty("spark.job.description")).orNull
+          val site = js.stageInfos.lastOption.map(_.name).getOrElse("?")
+          System.err.println(
+            f"[job] $query ${je.jobId}%5d ${je.time - js.time}%7d ms  tasks=${js.stageInfos.map(_.numTasks).sum}%-5d $site")
+        }
+    })
     // A throwing query keeps its slot in the fixed record format, but the
     // run exits non-zero once the record is written: never a fast timing.
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def time(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      spark.sparkContext.setJobDescription(name)
       val t0 = System.nanoTime()
       try fn(spark, sfDir).count()
       catch {
@@ -53,17 +65,16 @@ object Bench {
       }
       (System.nanoTime() - t0) / 1e9
     }
-    // MEMO-HONEST reruns (round 12, verdict finding #1): two operators
-    // memoize expensive sub-builds process-wide (BPE learned merges, the
-    // checkpointed co-purchase edge frame). A rerun that hits a memo
-    // measures a lookup, not the query, so the outlier adjudication could
-    // hide a real regression in the memoized stage. Every RE-measurement
-    // below clears both memos first — rerun numbers are true warm
-    // recomputes (JIT/codegen warm, data structures cold).
+    // MEMO-HONEST reruns (round 12, verdict finding #1): three operators
+    // memoize expensive fixture builds process-wide (ops.FixtureMemo: BPE
+    // learned merges, the checkpointed co-purchase edge frame, the
+    // snapshot DML cycles). A rerun that hits a memo measures a lookup,
+    // not the query, so the outlier adjudication could hide a real
+    // regression in the memoized stage. Every RE-measurement below clears
+    // the memos first — rerun numbers are true warm recomputes (JIT/codegen
+    // warm, data structures cold).
     def timeMemoHonest(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      graft.ops.BpeTokenizer.clearMemo()
-      graft.ops.Graph.clearMemo()
-      graft.ops.SnapshotCycle.clearMemo()
+      graft.ops.FixtureMemo.clearAll()
       time(name, fn)
     }
     // Host-contention telemetry (round 8): three rounds running, the
@@ -88,75 +99,30 @@ object Bench {
     // (with a "cpus" field) for any reader that expects it, but is only
     // trusted as a prior when its "cpus" matches this run's.
     val recordFile = s"BENCH_LAST_RUN_c$cpus.json"
-    def parsePriors(path: String, requireCpus: Boolean): Option[Map[String, Double]] =
-      try {
-        val txt = new String(
-          java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val qIdx = txt.indexOf("\"queries\":{")
-        val sameSf = // records from another SF are not comparable
-          "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(txt).exists(_.group(1) == sfDir)
-        val sameCpus = !requireCpus ||
-          "\"cpus\":\"?([0-9]+)\"?".r.findFirstMatchIn(txt).exists(_.group(1) == cpus)
-        if (qIdx < 0 || !sameSf || !sameCpus) None
-        else {
-          val body = txt.substring(qIdx + 11, txt.indexOf('}', qIdx))
-          Some(
-            "\"([^\"]+)\":([0-9.]+)".r
-              .findAllMatchIn(body)
-              .map(m => m.group(1) -> m.group(2).toDouble)
-              .toMap)
-        }
-      } catch { case _: Throwable => None }
+    def readPriors(path: String, requireCpus: Option[String]): Option[Map[String, Double]] =
+      scala.util.Try(java.nio.file.Files.readString(java.nio.file.Paths.get(path))).toOption
+        .flatMap(priors(_, sfDir, requireCpus))
     val prior: Map[String, Double] =
-      parsePriors(recordFile, requireCpus = false)
-        .orElse(parsePriors("BENCH_LAST_RUN.json", requireCpus = true))
+      readPriors(recordFile, None)
+        .orElse(readPriors("BENCH_LAST_RUN.json", Some(cpus)))
         .getOrElse(Map.empty)
-    // MEMO-HIT labeling (round-12 verdict finding #2 / advice #3): in the
-    // alphabetical first-run sweep, queries that READ a memo an earlier
-    // query filled (BPE merges, the co-purchase edge frame) report only
-    // their own marginal cost — intended production sharing, but the
-    // capture must say so or cross-round readers misread those entries as
-    // standalone costs (and rerun_outliers, which are memo-COLD, as
-    // regressions). A query is recorded as a memo hit when the relevant
-    // memo is non-empty just before it runs.
+    // MEMO labels (round-12 verdict finding #2 / advice #3): in the
+    // alphabetical first-run sweep, a query that READS a memo an earlier
+    // query filled reports only its own marginal cost (`memo_hit`), and one
+    // that BUILDS a memo pays the shared fixture for its family
+    // (`memo_paid`) — intended production sharing, but the capture must
+    // say so or cross-round readers misread those entries as standalone
+    // costs (and rerun_outliers, which are memo-COLD, as regressions). The
+    // memos count their own hits and builds; a query is labeled by how
+    // those counts moved while it ran.
     val memoHits = scala.collection.mutable.ArrayBuffer.empty[String]
-    // ...and the complement: a memo USER that runs while its memo is COLD
-    // is the query PAYING the shared fixture build this sweep (first of
-    // its family alphabetically) — label it so its entry reads as
-    // "family fixture + own work", not as a slow query
     val memoPaid = scala.collection.mutable.ArrayBuffer.empty[String]
-    val memoUsers: Map[String, () => Boolean] = {
-      val graphWarm = () => graft.ops.Graph.memoNonEmpty
-      val bpeWarm = () => graft.ops.BpeTokenizer.memoNonEmpty
-      // per-KEY warmth: the SQL/catalog cycle variants pay their own
-      // builds under other memo keys and must not label this family
-      val cycleWarm = () => graft.ops.SnapshotCycle.rootWarm(spark, sfDir)
-      Map(
-        "q_graph_triangles" -> graphWarm,
-        "q_graph_pagerank" -> graphWarm,
-        "q_graph_degree_dist" -> graphWarm,
-        "q_graph_linkpred" -> graphWarm,
-        "q_bpe_train" -> bpeWarm,
-        "q_bpe_vocab" -> bpeWarm,
-        "q_snapshot_dml" -> cycleWarm,
-        "q_snapshot_cdc" -> cycleWarm,
-        "q_snapshot_sql" -> cycleWarm,
-        "q_mv_refresh" -> cycleWarm,
-        // the SQL-text / catalog cycle variants pay their OWN fixture
-        // builds (separate memo keys) — label them as payers too, so
-        // their sweep entries read as "fixture + work", never slow queries
-        "q_snapshot_dml_sql" -> (() => graft.ops.SnapshotCycle.sqlWarm(spark, sfDir)),
-        "q_catalog_dml" -> (() => graft.ops.SnapshotCycle.catalogWarm(spark, sfDir)),
-        // the 7-commit COW-rebase workflow pays its own memo key; warm
-        // reruns then measure the aggregate-read kernel, not the fixture
-        "q_snapshot_rebase_cow" -> (() => graft.ops.SnapshotCycle.rebaseCowWarm(spark, sfDir)),
-        // the two-drain catalog streaming round trip likewise
-        "q_stream_catalog_sink" -> (() => graft.ops.SnapshotCycle.streamSinkWarm(spark, sfDir)))
-    }
     val results: Seq[(String, Double)] = selected.map { case (name, fn) =>
-      memoUsers.get(name).foreach(warm => if (warm()) memoHits += name else memoPaid += name)
-      name -> time(name, fn)
+      val (hits0, builds0) = graft.ops.FixtureMemo.counts
+      val t = time(name, fn)
+      val (hits1, builds1) = graft.ops.FixtureMemo.counts
+      if (builds1 > builds0) memoPaid += name else if (hits1 > hits0) memoHits += name
+      name -> t
     }
     val loadEnd = osBean.getSystemLoadAverage
     // The 67-query set of the v1 BASELINE.md record (2026-08-12). The

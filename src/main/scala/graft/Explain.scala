@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: prints the formatted physical plan of selected
   * queries so pushdown / join strategy / top-k fusion can be inspected
   * (`sbt "runMain graft.Explain [query ...]"`). Not part of the driver
@@ -54,14 +52,7 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession
-      .builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val names = if (args.nonEmpty) args.toSeq else defaultAudit
     // SPARK_GRAFT_PLANS_DIR=<dir>[:<suffix>] additionally writes each plan
     // to <dir>/<query><suffix>.txt — the optimization rounds' before/after

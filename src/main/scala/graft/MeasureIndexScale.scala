@@ -92,14 +92,7 @@ object MeasureIndexScale {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("dedup")
     val n = if (args.length > 1) args(1).toLong else 500000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val root = s"target/scale/$mode-$n"
     val fs = new java.io.File(root)
     if (fs.exists()) { // fresh study per run: scratch tier, no carry-over

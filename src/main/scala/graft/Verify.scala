@@ -1,35 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.json4s.jackson.Serialization
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Extra args (dev
   * loop only) restrict the dump to the named queries. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Production shuffle sizing: start shuffles WIDE and let AQE coalesce
-      // back to core-count parallelism when the data is small
-      // (parallelismFirst=true is the default). A flat width equal to the
-      // core count gives 100M-row aggregations ~3M-entry hash maps per
-      // task — measured AGGREGATE_OUT_OF_MEMORY at 100× the bench SF —
-      // while the wide initial width costs nothing at small SF because the
-      // coalescer collapses it.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // see Bench.scala: reliable-checkpoint switch for large-SF runs
-    sys.env.get("SPARK_GRAFT_CKPT_DIR").foreach { dir =>
-      spark.conf.set(graft.ops.Checkpoints.ReliableKey, "true")
-      spark.sparkContext.setCheckpointDir(dir)
-    }
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -38,21 +16,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(
+      Paths.get(s"$outDir/oracle_sql.json"),
+      Serialization.write(SparkEntry.oracleSql)(org.json4s.DefaultFormats))
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{concat, lit, lpad, when}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
@@ -10,9 +11,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * the first `n` characters of a string. A UPC-12 is valid when the sum
   * over all 12 digits is ≡ 0 (mod 10); the check digit of an 11-digit body
   * is `(10 - sum % 10) % 10`. One implementation serves identity synthesis
-  * (n = 11) and validation (n = 12) in `UpcSkuLoad`.
+  * (n = 11) and validation (n = 12) in `UpcSkuLoad` and `q_upc_checkdigit`.
   */
 object UpcCheckDigit {
+
+  /** UPC-12 identity of an integral key: the key zero-padded to the
+    * 11-digit body, then its check digit. A key outside [0, 10^11) has no
+    * 11-digit body and yields null. */
+  def upcCol(key: Column): Column = {
+    val body = when(key >= 0 && key < 100000000000L, lpad(key.cast("string"), 11, "0"))
+    concat(body, ((lit(10) - weightedSumCol(body, 11) % 10) % 10).cast("string"))
+  }
 
   /** Native codegen'd form of [[weightedSum]] over a string column. */
   def weightedSumCol(s: Column, n: Int): Column =

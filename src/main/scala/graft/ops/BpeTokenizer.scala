@@ -1,7 +1,5 @@
 package graft.ops
 
-import scala.collection.concurrent.TrieMap
-
 import graft.Fixtures
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -56,7 +54,7 @@ object BpeTokenizer {
     * (the lesson of the Graph.edgeMemo advisory): a second query (or a
     * second session) reuses the learned merges without re-running the
     * driver loop. */
-  private val mergeMemo = TrieMap.empty[String, Vector[Merge]]
+  private val mergeMemo = new FixtureMemo[String, Vector[Merge]](_ => ())
 
   /** Forget memoized merges so the next call retrains from the corpus.
     * Bench calls this before every warm RE-RUN measurement: a rerun that
@@ -64,9 +62,6 @@ object BpeTokenizer {
     * round-10 outlier-adjudication numbers were silently optimistic for
     * this query (round-11 verdict finding #1). */
   def clearMemo(): Unit = mergeMemo.clear()
-
-  /** True when learned merges are memoized — Bench's `memo_hit` label. */
-  def memoNonEmpty: Boolean = mergeMemo.nonEmpty
 
   /** Word-type frequency table: ONE corpus pass — the only corpus-sized
     * job in the whole trainer. */
@@ -263,7 +258,7 @@ object BpeTokenizer {
     * q_bpe_train oracle (which replays the DISTRIBUTED algorithm in
     * DuckDB) hash-matching against this is the equivalence proof. */
   def learnMerges(s: SparkSession, dir: String): Vector[Merge] =
-    mergeMemo.getOrElseUpdate(dir, trainLocal(wordFreqs(s, dir), Merges))
+    mergeMemo(dir)(trainLocal(wordFreqs(s, dir), Merges))
 
   /** Symbol sequences of a (word, f) frame after applying a merge list —
     * lazy chained replaces, no extra action. Column out: (seq, f). */

@@ -175,7 +175,7 @@ object ExtraText {
     // retry determinism, and sorting by a 200-element string-array column
     // is a hidden multi-second cost. TRUNCATED because exchange reuse does
     // NOT reliably share this shuffle across the near-dup kernels' many
-    // self-join/verify branches under AQE (r22 ProfileJobs: the corpus
+    // self-join/verify branches under AQE (r22 per-job profile: the corpus
     // scan+shingle re-ran once per branch, 6+ concurrent copies) — one
     // materialization serves every branch of whichever query consumes it.
     Checkpoints.truncate(

@@ -1,46 +1,22 @@
 package graft.ops
 
 import graft.Fixtures
+import graft.functions.UpcCheckDigit
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** SURVEY.md §2.G — scalar function surface: string / regex / date / math /
-  * array / generator / JSON / map, plus the domain UDF (GS1 check digit).
+  * array / generator / JSON / map, plus the domain check digit (GS1 UPC-A,
+  * the shared `UpcCheckDigit` kernel).
   *
-  * Everything except the UDFs stays inside whole-stage codegen (built-in
-  * Catalyst expressions). Oracle parity notes: DuckDB's length/year/len
-  * return BIGINT where Spark returns INT (cast on the oracle side);
+  * No UDFs: built-in Catalyst expressions plus the kernel's codegen
+  * expression. Oracle parity notes: DuckDB's length/year/len return
+  * BIGINT where Spark returns INT (cast on the oracle side);
   * regexp_replace needs the 'g' flag in DuckDB to match Spark's replace-all;
   * libm-dependent functions (ln) are compared via floor(x*1e6+0.5) scaling.
   */
 object Scalars {
-  /** GS1/UPC-A check digit over an 11-digit body: odd positions (1-indexed)
-    * weigh 3, even weigh 1, cd = (10 - sum mod 10) mod 10. The reference's
-    * domain object is the UPC code itself; partkeys synthesize the body. */
-  private val upcSynth = udf { (key: Long) =>
-    val s = f"$key%011d"
-    var sum = 0
-    var i = 0
-    while (i < 11) {
-      val d = s.charAt(i) - '0'
-      sum += (if (i % 2 == 0) 3 * d else d) // i is 0-based → even i = odd position
-      i += 1
-    }
-    s + ((10 - sum % 10) % 10).toString
-  }
-
-  private val upcValid = udf { (upc: String) =>
-    var sum = 0
-    var i = 0
-    while (i < 12) {
-      val d = upc.charAt(i) - '0'
-      sum += (if (i % 2 == 0) 3 * d else d)
-      i += 1
-    }
-    sum % 10 == 0
-  }
-
   private val jsonKSchema = StructType(Seq(StructField("k", IntegerType)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -120,18 +96,21 @@ object Scalars {
           signum(col("p_retailprice") - 1000).cast("int").as("sgn"))
         .orderBy("p_partkey")
     },
-    // Thematic UDF: synthesize UPC-12 from partkey, validate, and validate a
+    // The reference's domain object: synthesize UPC-12 from partkey with the
+    // check-digit kernel UpcSkuLoad uses, validate it, and validate a
     // corrupted copy (last digit bumped) to prove the check actually checks.
     "q_upc_checkdigit" -> { (s, dir) =>
+      // a string that is not 12 digits is not a valid UPC (never null)
+      def valid(upc: Column): Column = coalesce(UpcCheckDigit.weightedSumCol(upc, 12) % 10 === 0, lit(false))
       Fixtures
         .table(s, dir, "part")
-        .withColumn("upc12", upcSynth(col("p_partkey")))
+        .withColumn("upc12", UpcCheckDigit.upcCol(col("p_partkey")))
         .select(
           col("p_partkey"),
           col("upc12"),
           substring(col("upc12"), 12, 1).cast("int").as("cd"),
-          upcValid(col("upc12")).as("valid_ok"),
-          upcValid(
+          valid(col("upc12")).as("valid_ok"),
+          valid(
             concat(
               substring(col("upc12"), 1, 11),
               ((substring(col("upc12"), 12, 1).cast("int") + 1) % 10).cast("string")))

@@ -3,7 +3,6 @@ package graft.ops
 import graft.Fixtures
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.collection.concurrent.TrieMap
 
 /** SURVEY.md §2.A — source-side operators.
   *
@@ -906,23 +905,7 @@ object SnapshotCycle {
   import graft.sinks.{SnapshotSql, SnapshotTable}
   import graft.sinks.SnapshotTable.Bound
 
-  private val memo = TrieMap.empty[(SparkSession, String), String]
-
-  def memoNonEmpty: Boolean = memo.nonEmpty
-
-  /** Whether THE PROGRAMMATIC cycle (the one `root()` builds — the memo
-    * key q_snapshot_{dml,cdc,sql}/q_mv_refresh share) is warm. The
-    * map-level [[memoNonEmpty]] went stale as a label signal once the
-    * SQL/catalog variants added their own keys: q_catalog_dml building
-    * ITS cycle must not mark the root family as memo hits. */
-  def rootWarm(s: SparkSession, dir: String): Boolean = memo.contains((s, dir))
-
-  /** Per-variant warmth for the SQL-text / catalog / rebase-cow cycles
-    * (their own memo keys — each pays its own fixture build). */
-  def sqlWarm(s: SparkSession, dir: String): Boolean = memo.contains((s, dir + "#sql"))
-  def catalogWarm(s: SparkSession, dir: String): Boolean = memo.contains((s, dir + "#cat"))
-  def rebaseCowWarm(s: SparkSession, dir: String): Boolean = memo.contains((s, dir + "#rbc"))
-  def streamSinkWarm(s: SparkSession, dir: String): Boolean = memo.contains((s, dir + "#ssink"))
+  private val memo = new FixtureMemo[(SparkSession, String), String](_ => ())
 
   /** Forget built cycles: the next query rebuilds from the fixture (the
     * on-disk root is deleted and recreated by the build). */
@@ -953,24 +936,23 @@ object SnapshotCycle {
   }
 
   def root(s: SparkSession, dir: String): String =
-    memo.getOrElseUpdate(
-      (s, dir), {
-        val root = "/tmp/graft-snapcycle/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val o = ordersOf(s, dir)
-        createClustered(s, root, o)
-        SnapshotTable.deleteWhere(s, root, Seq(Bound("d", Some("1995-01-01"), Some("1995-12-31")))) // v2
-        SnapshotTable.updateWhere(
-          s,
-          root,
-          Seq(Bound("d", Some("1997-01-01"), Some("1997-12-31"))),
-          Map("price_c" -> (col("price_c") + lit(500L)))) // v3
-        SnapshotTable.mergeUpsert(
-          s,
-          root,
-          o.filter(col("k") % 7 === 0).withColumn("price_c", col("price_c") * 2),
-          Seq("k")) // v4
-        root
-      })
+    memo((s, dir)) {
+      val root = "/tmp/graft-snapcycle/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val o = ordersOf(s, dir)
+      createClustered(s, root, o)
+      SnapshotTable.deleteWhere(s, root, Seq(Bound("d", Some("1995-01-01"), Some("1995-12-31")))) // v2
+      SnapshotTable.updateWhere(
+        s,
+        root,
+        Seq(Bound("d", Some("1997-01-01"), Some("1997-12-31"))),
+        Map("price_c" -> (col("price_c") + lit(500L)))) // v3
+      SnapshotTable.mergeUpsert(
+        s,
+        root,
+        o.filter(col("k") % 7 === 0).withColumn("price_c", col("price_c") * 2),
+        Seq("k")) // v4
+      root
+    }
 
   /** The 7-commit COW-rebase workflow behind `q_snapshot_rebase_cow`,
     * memoized under its own key: create main (even keys) → fork `cow` →
@@ -979,29 +961,28 @@ object SnapshotCycle {
     * makes the bench row's warm reruns measure the final aggregate read,
     * with the one-time fixture labeled `memo_paid` in the sweep. */
   def rebaseCowRoot(s: SparkSession, dir: String): String =
-    memo.getOrElseUpdate(
-      (s, dir + "#rbc"), {
-        val root = "/tmp/graft-snaprbc/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val p = new org.apache.hadoop.fs.Path(root)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-        val o = ordersOf(s, dir)
-        SnapshotTable.create(s, root, o.filter(col("k") % 2 === 0)) // main v1: even keys
-        val cow = SnapshotTable.createBranch(s, root, "cow") // forks at v1
-        SnapshotTable.updateWhere(
-          s, cow, Seq(Bound("d", Some("1996-01-01"), Some("1996-12-31"))),
-          Map("price_c" -> (col("price_c") + 77))) // branch v2 (COW update, captured)
-        SnapshotTable.deleteWhere(
-          s, cow, Seq(Bound("d", Some("1995-01-01"), Some("1995-12-31")))) // branch v3 (COW delete)
-        SnapshotTable.mergeUpsert(
-          s, cow,
-          o.filter(col("k") % 20 === 0).withColumn("price_c", col("price_c") * 3),
-          Seq("k")) // branch v4 (COW merge: k%20 replaced at 3×, deleted 1995 k%20 re-insert)
-        // main diverges with an append that touches NO replayed pre-image
-        SnapshotTable.append(s, root, o.filter(col("k") % 2 === 1)) // main v2
-        SnapshotTable.rebase(s, root, "cow") // replay v2..v4 via captured deltas
-        SnapshotTable.fastForward(s, root, "cow") // publish: main → v5
-        root
-      })
+    memo((s, dir + "#rbc")) {
+      val root = "/tmp/graft-snaprbc/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val p = new org.apache.hadoop.fs.Path(root)
+      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val o = ordersOf(s, dir)
+      SnapshotTable.create(s, root, o.filter(col("k") % 2 === 0)) // main v1: even keys
+      val cow = SnapshotTable.createBranch(s, root, "cow") // forks at v1
+      SnapshotTable.updateWhere(
+        s, cow, Seq(Bound("d", Some("1996-01-01"), Some("1996-12-31"))),
+        Map("price_c" -> (col("price_c") + 77))) // branch v2 (COW update, captured)
+      SnapshotTable.deleteWhere(
+        s, cow, Seq(Bound("d", Some("1995-01-01"), Some("1995-12-31")))) // branch v3 (COW delete)
+      SnapshotTable.mergeUpsert(
+        s, cow,
+        o.filter(col("k") % 20 === 0).withColumn("price_c", col("price_c") * 3),
+        Seq("k")) // branch v4 (COW merge: k%20 replaced at 3×, deleted 1995 k%20 re-insert)
+      // main diverges with an append that touches NO replayed pre-image
+      SnapshotTable.append(s, root, o.filter(col("k") % 2 === 1)) // main v2
+      SnapshotTable.rebase(s, root, "cow") // replay v2..v4 via captured deltas
+      SnapshotTable.fastForward(s, root, "cow") // publish: main → v5
+      root
+    }
 
   /** The catalog streaming round trip behind `q_stream_catalog_sink`,
     * memoized under its own key: a catalog source table (even orders
@@ -1010,35 +991,34 @@ object SnapshotCycle {
     * second drain on the SAME checkpoint ships exactly that increment.
     * Returns the DESTINATION table root. */
   def streamSinkRoot(s: SparkSession, dir: String): String =
-    memo.getOrElseUpdate(
-      (s, dir + "#ssink"), {
-        import org.apache.spark.sql.streaming.Trigger
-        val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val wh = "/tmp/graft-streamsink/" + safe
-        val p = new org.apache.hadoop.fs.Path(wh)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-        val cat = "gssink_" + safe // per-dir name: catalog instances cache their warehouse
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sinks.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-        val o = ordersOf(s, dir)
-        SnapshotTable.create(s, wh + "/ns/src", o.filter(col("k") % 2 === 0)) // v1: evens
-        val ckpt = wh + "/ckpt"
-        def drain(): Unit = {
-          val q = s.readStream
-            .table(s"$cat.ns.src")
-            .filter(year(col("d")) === 1996)
-            .withColumn("price_c", col("price_c") + 5)
-            .writeStream
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .toTable(s"$cat.ns.dst")
-          q.awaitTermination()
-        }
-        drain() // snapshot epoch(s)
-        SnapshotTable.append(s, wh + "/ns/src", o.filter(col("k") % 2 === 1)) // v2: odds
-        drain() // incremental epoch: exactly the appended commit
-        wh + "/ns/dst"
-      })
+    memo((s, dir + "#ssink")) {
+      import org.apache.spark.sql.streaming.Trigger
+      val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val wh = "/tmp/graft-streamsink/" + safe
+      val p = new org.apache.hadoop.fs.Path(wh)
+      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val cat = "gssink_" + safe // per-dir name: catalog instances cache their warehouse
+      s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sinks.GraftCatalog].getName)
+      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val o = ordersOf(s, dir)
+      SnapshotTable.create(s, wh + "/ns/src", o.filter(col("k") % 2 === 0)) // v1: evens
+      val ckpt = wh + "/ckpt"
+      def drain(): Unit = {
+        val q = s.readStream
+          .table(s"$cat.ns.src")
+          .filter(year(col("d")) === 1996)
+          .withColumn("price_c", col("price_c") + 5)
+          .writeStream
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .toTable(s"$cat.ns.dst")
+        q.awaitTermination()
+      }
+      drain() // snapshot epoch(s)
+      SnapshotTable.append(s, wh + "/ns/src", o.filter(col("k") % 2 === 1)) // v2: odds
+      drain() // incremental epoch: exactly the appended commit
+      wh + "/ns/dst"
+    }
 
   /** The SAME 4-commit algebra driven entirely through SQL TEXT (the
     * [[SnapshotSql]] router): proves DELETE FROM / UPDATE / MERGE INTO
@@ -1046,30 +1026,29 @@ object SnapshotCycle {
     * same oracle. Separate root + memo key — the SQL path must pay its
     * own full cycle, not read the programmatic one's result. */
   def sqlRoot(s: SparkSession, dir: String): String =
-    memo.getOrElseUpdate(
-      (s, dir + "#sql"), {
-        val root = "/tmp/graft-snapcyclesql/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val o = ordersOf(s, dir)
-        createClustered(s, root, o)
-        val table = "snap_dml_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-        SnapshotSql.register(s, table, root)
-        SnapshotSql.execute(
-          s,
-          s"DELETE FROM $table WHERE d BETWEEN DATE'1995-01-01' AND DATE'1995-12-31'") // v2
-        SnapshotSql.execute(
-          s,
-          s"UPDATE $table SET price_c = price_c + 500 " +
-            "WHERE d BETWEEN DATE'1997-01-01' AND DATE'1997-12-31'") // v3
-        val srcView = table + "_src"
-        o.filter(col("k") % 7 === 0)
-          .withColumn("price_c", col("price_c") * 2)
-          .createOrReplaceTempView(srcView)
-        SnapshotSql.execute(
-          s,
-          s"MERGE INTO $table AS t USING $srcView AS s ON t.k = s.k " +
-            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *") // v4
-        root
-      })
+    memo((s, dir + "#sql")) {
+      val root = "/tmp/graft-snapcyclesql/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val o = ordersOf(s, dir)
+      createClustered(s, root, o)
+      val table = "snap_dml_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      SnapshotSql.register(s, table, root)
+      SnapshotSql.execute(
+        s,
+        s"DELETE FROM $table WHERE d BETWEEN DATE'1995-01-01' AND DATE'1995-12-31'") // v2
+      SnapshotSql.execute(
+        s,
+        s"UPDATE $table SET price_c = price_c + 500 " +
+          "WHERE d BETWEEN DATE'1997-01-01' AND DATE'1997-12-31'") // v3
+      val srcView = table + "_src"
+      o.filter(col("k") % 7 === 0)
+        .withColumn("price_c", col("price_c") * 2)
+        .createOrReplaceTempView(srcView)
+      SnapshotSql.execute(
+        s,
+        s"MERGE INTO $table AS t USING $srcView AS s ON t.k = s.k " +
+          "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *") // v4
+      root
+    }
 
   /** The SAME 4-commit algebra a third way: through CATALOG identifiers
     * (`<catalog>.c.orders`) — Spark's own analyzer resolves the target via
@@ -1079,29 +1058,28 @@ object SnapshotCycle {
     * plain `spark.sql` DML against `graft.ns.t` is hash-identical to the
     * programmatic API. Separate root + memo key — pays its own cycle. */
   def catalogRoot(s: SparkSession, dir: String): String =
-    memo.getOrElseUpdate(
-      (s, dir + "#cat"), {
-        val wh = "/tmp/graft-snapcyclecat/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val root = wh + "/c/orders"
-        val o = ordersOf(s, dir)
-        createClustered(s, root, o)
-        val cat = "gdmlcat_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sinks.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-        org.apache.spark.sql.GraftSqlBridge.addStrategy(s, graft.sinks.GraftDmlStrategy)
-        s.sql(
-          s"DELETE FROM $cat.c.orders " +
-            "WHERE d BETWEEN DATE'1995-01-01' AND DATE'1995-12-31'") // v2
-        s.sql(
-          s"UPDATE $cat.c.orders SET price_c = price_c + 500 " +
-            "WHERE d BETWEEN DATE'1997-01-01' AND DATE'1997-12-31'") // v3
-        val srcView = cat + "_src"
-        o.filter(col("k") % 7 === 0)
-          .withColumn("price_c", col("price_c") * 2)
-          .createOrReplaceTempView(srcView)
-        s.sql(
-          s"MERGE INTO $cat.c.orders AS t USING $srcView AS s ON t.k = s.k " +
-            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *") // v4
-        root
-      })
+    memo((s, dir + "#cat")) {
+      val wh = "/tmp/graft-snapcyclecat/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val root = wh + "/c/orders"
+      val o = ordersOf(s, dir)
+      createClustered(s, root, o)
+      val cat = "gdmlcat_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sinks.GraftCatalog].getName)
+      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      org.apache.spark.sql.GraftSqlBridge.addStrategy(s, graft.sinks.GraftDmlStrategy)
+      s.sql(
+        s"DELETE FROM $cat.c.orders " +
+          "WHERE d BETWEEN DATE'1995-01-01' AND DATE'1995-12-31'") // v2
+      s.sql(
+        s"UPDATE $cat.c.orders SET price_c = price_c + 500 " +
+          "WHERE d BETWEEN DATE'1997-01-01' AND DATE'1997-12-31'") // v3
+      val srcView = cat + "_src"
+      o.filter(col("k") % 7 === 0)
+        .withColumn("price_c", col("price_c") * 2)
+        .createOrReplaceTempView(srcView)
+      s.sql(
+        s"MERGE INTO $cat.c.orders AS t USING $srcView AS s ON t.k = s.k " +
+          "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *") // v4
+      root
+    }
 }

@@ -17,23 +17,19 @@ import org.apache.spark.sql.functions._
 object UpcSkuLoad {
   /** Raw (partkey, name, brand, price) rows → UPC product records: the
     * partkey zero-padded to the 11-digit body, then the check digit from
-    * the shared [[UpcCheckDigit]] kernel (the UDF variant lives in
-    * ops.Scalars). A partkey outside [0, 10^11) has no 11-digit body and
-    * gets a null `upc` — quarantined as `bad_length` downstream — instead
-    * of a truncated body that collides with another part's UPC. Shared by
-    * the batch extract and the paginated path, so both synthesize identity
-    * identically. */
-  def toProducts(raw: DataFrame): DataFrame = {
-    val pk = col("partkey")
-    val body = when(pk >= 0 && pk < 100000000000L, lpad(pk.cast("string"), 11, "0"))
-    val cd = (lit(10) - UpcCheckDigit.weightedSumCol(body, 11) % 10) % 10
+    * the shared [[UpcCheckDigit]] kernel (`UpcCheckDigit.upcCol`, which
+    * q_upc_checkdigit uses too). A partkey outside [0, 10^11) has no
+    * 11-digit body and gets a null `upc` — quarantined as `bad_length`
+    * downstream — instead of a truncated body that collides with another
+    * part's UPC. Shared by the batch extract and the paginated path, so
+    * both synthesize identity identically. */
+  def toProducts(raw: DataFrame): DataFrame =
     raw.select(
-      concat(body, cd.cast("string")).as("upc"),
+      UpcCheckDigit.upcCol(col("partkey")).as("upc"),
       col("name"),
       col("brand"),
       col("price"),
       current_timestamp().as("loaded_at"))
-  }
 
   /** Extract: parts → UPC product records. */
   def extract(spark: SparkSession, sfDir: String): DataFrame =

@@ -1316,9 +1316,7 @@ object SnapshotTable {
 
     val dropRows: Option[DataFrame] =
       if (contentDrops.isEmpty) None
-      else if (p.masks.isEmpty)
-        Some(readTablePaths(spark, Some(merged), contentDrops.map(e => new Path(dataRoot(root), e).toString)))
-      else Some(readEntriesMasked(spark, root, p, Some(merged), contentDrops))
+      else Some(readEntries(spark, root, p, Some(merged), contentDrops))
     val d0: Option[DataFrame] =
       (side.map(typed(_, "delete")).toSeq ++ dropRows.toSeq).reduceOption(_ unionByName _).map(_.persist())
     val iSide: Option[DataFrame] = side.map(typed(_, "insert"))
@@ -1372,9 +1370,7 @@ object SnapshotTable {
           plan.uncoveredDirs.filterNot(dropSet)
       val src: Option[DataFrame] =
         if (candPaths.isEmpty) None
-        else if (tip.masks.isEmpty)
-          Some(readTablePaths(spark, Some(merged), candPaths.map(pp => new Path(dataRoot(root), pp).toString)))
-        else Some(readEntriesMasked(spark, sRoot, tip, Some(merged), candPaths))
+        else Some(readEntries(spark, sRoot, tip, Some(merged), candPaths))
       // candidate row count: when every candidate is a clean stat-covered
       // file, the manifest already knows it — zero I/O (r22; the count()
       // job re-read every candidate file the rewrite was about to read
@@ -2698,7 +2694,7 @@ object SnapshotTable {
       readTablePaths(spark, m.schemaJson.map(schemaFromJson), paths)
     } else
       // merge-on-read: apply the pending deletion masks at scan time
-      readEntriesMasked(spark, root, m, m.schemaJson.map(schemaFromJson), fileEntries(m))
+      readEntries(spark, root, m, m.schemaJson.map(schemaFromJson), fileEntries(m))
   }
 
   /** ROLL BACK the table to the content of committed version `toVersion`
@@ -2914,13 +2910,15 @@ object SnapshotTable {
     }
   }
 
-  /** Read live `entries` of manifest `m` with every applicable mask
-    * applied — the merge-on-read read kernel. Entries group by their mask
-    * set: unmasked entries scan in ONE plan, each masked group pays
-    * exactly its own masks. `withFileName` adds a `__file` column captured
-    * AT THE SCAN (before any mask join) for callers needing file
-    * attribution (the merge probe). */
-  private[graft] def readEntriesMasked(
+  /** Read live `entries` of manifest `m` — the one live-entry read. With
+    * no pending mask it is the plain [[readTablePaths]] scan of the
+    * entries, in order (`schema = None` merges footer schemas). Otherwise
+    * every applicable mask is applied — the merge-on-read read kernel:
+    * entries group by their mask set, unmasked entries scan in ONE plan,
+    * each masked group pays exactly its own masks. `withFileName` adds a
+    * `__file` column captured AT THE SCAN (before any mask join) for
+    * callers needing file attribution (the merge probe). */
+  private[graft] def readEntries(
       spark: SparkSession,
       root: String,
       m: Commit,
@@ -2928,6 +2926,11 @@ object SnapshotTable {
       entries: Seq[String],
       withFileName: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.input_file_name
+    def scan(es: Seq[String]): DataFrame = {
+      val base = readTablePaths(spark, schema, es.map(p => new Path(dataRoot(root), p).toString))
+      if (withFileName) base.withColumn("__file", input_file_name()) else base
+    }
+    if (m.masks.isEmpty) return scan(entries)
     val s = schema.getOrElse(sys.error("merge-on-read tables always record a schema"))
     if (entries.isEmpty) {
       val base = org.apache.spark.sql.types.StructType(
@@ -2942,12 +2945,8 @@ object SnapshotTable {
       .groupBy(e => maskSets.zipWithIndex.collect { case (s, i) if s(e) => i })
       .toSeq
       .sortBy(_._1.mkString(",")) // deterministic union order
-    val parts = groups.map { case (idxs, es) =>
-      val base = readTablePaths(spark, Some(s), es.map(p => new Path(dataRoot(root), p).toString))
-      val withF = if (withFileName) base.withColumn("__file", input_file_name()) else base
-      applyMasks(spark, root, s, idxs.map(m.masks), withF)
-    }
-    parts.reduce(_ unionByName _)
+    groups.map { case (idxs, es) => applyMasks(spark, root, s, idxs.map(m.masks), scan(es)) }
+      .reduce(_ unionByName _)
   }
 
   /** The masked-entry set of a manifest (files whose physical rows are a
@@ -3411,9 +3410,7 @@ object SnapshotTable {
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           schema.getOrElse(sys.error("empty prune result on a pre-schema manifest")))
-      else if (m.masks.isEmpty)
-        readTablePaths(spark, schema, keepEntries.map(p => new Path(dataRoot(root), p).toString))
-      else readEntriesMasked(spark, root, m, schema, keepEntries)
+      else readEntries(spark, root, m, schema, keepEntries)
     applyBounds(base, bounds)
   }
 
@@ -3551,13 +3548,10 @@ object SnapshotTable {
     * ([[checkpointPreferred]]): below it the checkpoint's fixed job
     * overhead loses to the JSON parse, so a small explicitly-checkpointed
     * table keeps the fast path. Result is identical by construction
-    * (same deadness kernel, same serde); disable with
-    * `spark.graft.checkpoint.autoRead=false`. */
+    * (same deadness kernel, same serde). */
   def readWhere(spark: SparkSession, root: String, bounds: Seq[Bound]): DataFrame = {
     val v = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
-    val autoRead =
-      spark.conf.getOption("spark.graft.checkpoint.autoRead").forall(_.toBoolean)
-    if (autoRead && latestCheckpoint(spark, root).contains(v) && checkpointPreferred(spark, root, v))
+    if (latestCheckpoint(spark, root).contains(v) && checkpointPreferred(spark, root, v))
       readWhereCheckpointedAt(spark, root, v, bounds)
     else readVersionWhere(spark, root, v, bounds)
   }
@@ -3626,11 +3620,7 @@ object SnapshotTable {
       if (plan.scanPaths.isEmpty) 0L
       else {
         val schema = m.schemaJson.map(schemaFromJson)
-        val df =
-          if (m.masks.isEmpty)
-            readTablePaths(spark, schema, plan.scanPaths.map(p => new Path(dataRoot(root), p).toString))
-          else readEntriesMasked(spark, root, m, schema, plan.scanPaths)
-        applyBounds(df, bounds).count()
+        applyBounds(readEntries(spark, root, m, schema, plan.scanPaths), bounds).count()
       }
     plan.metaRows + scanned
   }
@@ -3739,10 +3729,7 @@ object SnapshotTable {
     // size unknown means carry, the same conservatism the planner applies
     val (small, big) = m.files.partition(f => f.bytes >= 0 && f.bytes < smallBytes)
     if (small.size < minFiles) return base
-    val src =
-      if (m.masks.isEmpty)
-        readTablePaths(spark, schema, small.map(f => new Path(dataRoot(root), f.path).toString))
-      else readEntriesMasked(spark, root, m, schema, small.map(_.path))
+    val src = readEntries(spark, root, m, schema, small.map(_.path))
     val nOut = math.max(1, math.ceil(small.map(_.bytes).sum / targetBytes.toDouble).toInt)
     val (rel, n, stats) = writeData(
       spark, root, src.repartition(nOut), m.constraints, schema.map(mappingOf).getOrElse(Map.empty))
@@ -3933,10 +3920,7 @@ object SnapshotTable {
         // rewrites read THROUGH pending masks — a copy-on-write pass over
         // a merge-on-read table must not resurrect masked rows (the
         // rewritten files' masks are thereby satisfied and cleared below)
-        val src =
-          if (m.masks.isEmpty)
-            readTablePaths(spark, schema, scanPaths.map(p => new Path(dataRoot(root), p).toString))
-          else readEntriesMasked(spark, root, m, schema, scanPaths)
+        val src = readEntries(spark, root, m, schema, scanPaths)
         val before =
           if (plan.uncoveredDirs.isEmpty && !rewrite.exists(f => masked(f.path)))
             rewrite.map(_.rows).sum
@@ -3992,7 +3976,7 @@ object SnapshotTable {
     val (maskedDropped, cleanDropped) = dropped.partition(f => masked(f.path))
     cleanDropped.map(_.rows).sum +
       (if (maskedDropped.isEmpty) 0L
-       else readEntriesMasked(spark, root, m, schema, maskedDropped.map(_.path)).count())
+       else readEntries(spark, root, m, schema, maskedDropped.map(_.path)).count())
   }
 
   /** Delete the rows matching `bounds` — Delta-style copy-on-write DML with
@@ -4119,13 +4103,8 @@ object SnapshotTable {
       srcKeys: DataFrame): Set[String] =
     if (candidates.isEmpty) Set.empty
     else {
-      import org.apache.spark.sql.functions.{col, input_file_name}
-      val probe =
-        if (m.masks.isEmpty)
-          readTablePaths(spark, schema, candidates.map(p => new Path(dataRoot(root), p).toString))
-            .withColumn("__file", input_file_name())
-        else readEntriesMasked(spark, root, m, schema, candidates, withFileName = true)
-      probe
+      import org.apache.spark.sql.functions.col
+      readEntries(spark, root, m, schema, candidates, withFileName = true)
         .select(keyCols.map(k => col("`" + k + "`")) :+ col("__file"): _*)
         .join(srcKeys, keyCols, "left_semi")
         .select("__file")
@@ -4179,8 +4158,6 @@ object SnapshotTable {
       schemaFromJson(evolved).fields.filter(f => source.columns.contains(f.name)))
     val srcDf = readTablePaths(spark, Some(srcSchema), Seq(new Path(dataRoot(root), srcRel).toString))
     val srcKeys = srcDf.select(keyCols.map(k => col("`" + k + "`")): _*)
-    def readAs(paths: Seq[String]): DataFrame =
-      readTablePaths(spark, priorSchema, paths.map(p => new Path(dataRoot(root), p).toString))
     // stage 1: envelope prune (zero I/O; min/max ignore null keys)
     val bounds = keyEnvelope(srcDf, keyCols)
     val allKeysNull = bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)
@@ -4206,9 +4183,7 @@ object SnapshotTable {
     val (survDirs, survStats, replaced) =
       if (rewritePaths.isEmpty) (Seq.empty[String], Seq.empty[FileStat], 0L)
       else {
-        val tgt =
-          if (m.masks.isEmpty) readAs(rewritePaths)
-          else readEntriesMasked(spark, root, m, priorSchema, rewritePaths)
+        val tgt = readEntries(spark, root, m, priorSchema, rewritePaths)
         val before =
           if (plan.uncoveredDirs.isEmpty && !touched.exists(masked))
             m.files.filter(f => touched.contains(f.path)).map(_.rows).sum
@@ -4470,10 +4445,7 @@ object SnapshotTable {
     val allKeysNull = bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)
     val plan = prunePlan(spark, root, base, if (allKeysNull) Seq.empty else bounds)
     val candidates = plan.keep ++ plan.uncoveredDirs
-    def readAs(paths: Seq[String]): DataFrame =
-      if (m.masks.isEmpty)
-        readTablePaths(spark, priorSchema, paths.map(p => new Path(dataRoot(root), p).toString))
-      else readEntriesMasked(spark, root, m, priorSchema, paths)
+    def readAs(paths: Seq[String]): DataFrame = readEntries(spark, root, m, priorSchema, paths)
     // stage 2: exact touched-file discovery (matched clauses only)
     val touched =
       if (matched.isEmpty || nSrc == 0) Set.empty[String]
@@ -4685,10 +4657,7 @@ object SnapshotTable {
           if (candidates.isEmpty)
             srcKeys.limit(0)
           else
-            (if (m.masks.isEmpty)
-               readTablePaths(spark, priorSchema, candidates.map(p => new Path(dataRoot(root), p).toString))
-             else readEntriesMasked(spark, root, m, priorSchema, candidates))
-              .select(keyCols.map(q): _*)
+            readEntries(spark, root, m, priorSchema, candidates).select(keyCols.map(q): _*)
         val unmatched = srcNorm.alias(sourceAlias).join(tgtKeys, keyCols, "left_anti")
         // INSERT clauses see the SOURCE only — bare refs qualify there
         val applied = firstApplicable(
@@ -4847,7 +4816,7 @@ object SnapshotTable {
       val hidden =
         if (!schema.exists(s => keyCols.forall(s.fieldNames.contains))) 0L
         else
-          readEntriesMasked(spark, root, m, schema, entries)
+          readEntries(spark, root, m, schema, entries)
             .select(keyCols.map(k => col("`" + k + "`")): _*)
             .join(sidecar, keyCols, "left_semi")
             .count()
@@ -4924,7 +4893,7 @@ object SnapshotTable {
     val maskedCount =
       if (newEntries.isEmpty) 0L
       else
-        readEntriesMasked(spark, root, m, Some(schema), newEntries)
+        readEntries(spark, root, m, Some(schema), newEntries)
           .filter(matchCol(bounds))
           .count()
     val addedRows = -(droppedLiveRows(spark, root, m, Some(schema), mp.droppedWhole) + maskedCount)
@@ -5131,9 +5100,7 @@ object SnapshotTable {
     // merge-on-read history.
     def readPaths(mf: Commit, paths: Seq[String]): Option[DataFrame] =
       if (paths.isEmpty) None
-      else if (mf.masks.isEmpty)
-        Some(readTablePaths(spark, schema, paths.map(p => new Path(dataRoot(root), p).toString)))
-      else Some(readEntriesMasked(spark, root, mf, schema, paths))
+      else Some(readEntries(spark, root, mf, schema, paths))
     def tag(df: DataFrame, tpe: String, v: Int): DataFrame =
       df.withColumn("_change_type", lit(tpe)).withColumn("_commit_version", lit(v))
     val steps = ((fromV + 1) to toV).flatMap { v =>
@@ -5212,7 +5179,7 @@ object SnapshotTable {
         val prevIds = prevM.masks.map(maskId).toSet
         val maskSteps = cur.masks.filterNot(mk => prevIds(maskId(mk))).map { mk =>
           val s = schema.getOrElse(sys.error("merge-on-read CDC needs a recorded schema"))
-          val base = readEntriesMasked(spark, root, prevM, schema, mk.entries)
+          val base = readEntries(spark, root, prevM, schema, mk.entries)
           val matchedRows = mk.kind match {
             case "pred" => base.filter(matchCol(decodeMaskBounds(s, mk.predBounds)))
             case "keys" =>

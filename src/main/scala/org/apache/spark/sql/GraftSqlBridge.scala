@@ -46,24 +46,4 @@ object GraftSqlBridge {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental
     if (!exp.extraStrategies.exists(_ eq s)) exp.extraStrategies = exp.extraStrategies :+ s
   }
-
-  /** Build a sibling session on the same SparkContext with the given
-    * extensions applied — for testing the SparkSessionExtensions path
-    * (builder.getOrCreate would return the existing session and never run
-    * the extension hook). */
-  def newSessionWithExtensions(
-      spark: SparkSession,
-      f: SparkSessionExtensions => Unit): SparkSession = {
-    // builder().getOrCreate() returns the default session when one exists,
-    // skipping the extension hook — clear it first so a fresh session is
-    // built on the existing SparkContext, then restore the prior default.
-    val prior = classic.SparkSession.getDefaultSession
-    classic.SparkSession.clearDefaultSession()
-    classic.SparkSession.clearActiveSession()
-    try classic.SparkSession.builder().withExtensions(f).getOrCreate()
-    finally prior.foreach { p =>
-      classic.SparkSession.setDefaultSession(p)
-      classic.SparkSession.setActiveSession(p)
-    }
-  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.BpeTokenizer
+import graft.ops.{BpeTokenizer, FixtureMemo}
 import graft.ops.BpeTokenizer.Merge
 import org.apache.spark.sql.DataFrame
 
@@ -110,5 +110,18 @@ class BpeTokenizerSpec extends SparkSuite {
     assert(a eq b, "second call must hit the dir-keyed memo")
     assert(a.size == BpeTokenizer.Merges)
     assert(a.forall(m => m.freq > 0 && m.left.nonEmpty && m.right.nonEmpty))
+  }
+
+  test("the fixture memo counts a build, then a hit, then a build after clearMemo") {
+    def run(q: String): Unit = BpeTokenizer.queries(q)(spark, sf001).count()
+    BpeTokenizer.clearMemo()
+    val (h0, b0) = FixtureMemo.counts
+    run("q_bpe_train")
+    assert(FixtureMemo.counts == ((h0, b0 + 1)), "the first query builds the merges")
+    run("q_bpe_vocab")
+    assert(FixtureMemo.counts == ((h0 + 1, b0 + 1)), "a repeat reads them from the memo")
+    BpeTokenizer.clearMemo()
+    run("q_bpe_train")
+    assert(FixtureMemo.counts == ((h0 + 1, b0 + 2)), "after clearMemo the next query builds again")
   }
 }

@@ -276,7 +276,7 @@ class CapabilitiesSpec extends SparkSuite {
   }
 
   test("cap_extensions: a session built with GraftExtensions has the function and strategy installed") {
-    val s2 = org.apache.spark.sql.GraftSqlBridge.newSessionWithExtensions(spark, new GraftExtensions()(_))
+    val s2 = SparkSuite.sessionWithExtensions(new GraftExtensions()(_))
     // function registry: graft_cosine resolves in spark.sql
     val cos = s2
       .sql("SELECT graft_cosine(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class OptimizerRuleSpec extends SparkSuite {
 
   private lazy val extSession =
-    org.apache.spark.sql.GraftSqlBridge.newSessionWithExtensions(spark, new GraftExtensions()(_))
+    SparkSuite.sessionWithExtensions(new GraftExtensions()(_))
 
   private def fuzzy(s: org.apache.spark.sql.SparkSession) =
     Fixtures

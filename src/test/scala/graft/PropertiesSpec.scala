@@ -1,8 +1,10 @@
 package graft
 
+import graft.functions.UpcCheckDigit
 import graft.ops.{SimKernel, WeightedAvg}
 import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Property-style invariants (SURVEY.md §5.3 item 3) with seeded generators:
   * check-digit round trip, cosine kernel bounds/symmetry, UDAF merge
@@ -12,14 +14,13 @@ class PropertiesSpec extends SparkSuite {
   private val rnd = new scala.util.Random(42)
 
   test("UPC check digit: validate ∘ synthesize holds; corruption detected") {
-    // mirror of the Scalars UDFs at the Scala level
+    // the check-digit kernel behind UpcSkuLoad and q_upc_checkdigit
+    def sum(s: String, n: Int): Int = UpcCheckDigit.weightedSum(UTF8String.fromString(s), n)
     def synth(key: Long): String = {
       val s = f"$key%011d"
-      val sum = s.zipWithIndex.map { case (ch, i) => (if (i % 2 == 0) 3 else 1) * (ch - '0') }.sum
-      s + ((10 - sum % 10) % 10).toString
+      s + ((10 - sum(s, 11) % 10) % 10).toString
     }
-    def valid(upc: String): Boolean =
-      upc.zipWithIndex.map { case (ch, i) => (if (i % 2 == 0) 3 else 1) * (ch - '0') }.sum % 10 == 0
+    def valid(upc: String): Boolean = sum(upc, 12) % 10 == 0
     (1 to 2000).foreach { _ =>
       val key = math.abs(rnd.nextLong()) % 100000000000L
       val upc = synth(key)
