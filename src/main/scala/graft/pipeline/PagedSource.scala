@@ -13,8 +13,9 @@ case class RawProduct(partkey: Long, name: String, brand: String, price: Double)
   * act (page through an HTTP product API, load each page). An API client is
   * inherently a sequential driver-side stream: page N+1's request depends
   * on page N's cursor, so the DRIVER walks pages. A page is driver-sized
-  * (one response body), and its validate/dedup/upsert plan runs as a
-  * handful of tasks. The keyed upsert downstream makes page REPLAY idempotent,
+  * (one response body), so the driver also validates, dedups and upserts
+  * it, with no Spark job (`UpcSkuLoad.runPaged`). The keyed upsert
+  * downstream makes page REPLAY idempotent,
   * which is the whole crash-recovery contract of incremental consumption:
   * re-fetching an already-loaded page converges to the same table.
   *
@@ -33,7 +34,8 @@ trait PagedSource {
   * simulates a keyset-paginated API snapshot. Each fetch is a pushed-down
   * partkey-range scan collecting ONE page (bounded by pageSize — the size
   * of a real HTTP response body), sorted on the driver: a Spark `orderBy`
-  * would add a sampling job and a sort shuffle to every fetch. The only
+  * would add a sampling job and a sort shuffle to every fetch. That scan
+  * is the only Spark job of a `runPaged` page. The only
   * whole-dataset state on the driver is the row count, i.e. cursor
   * metadata. The count and every fetch read one `part` relation, built
   * once (its schema and file listing are not re-inferred per fetch): one
@@ -67,7 +69,9 @@ class FixturePagedSource(spark: SparkSession, sfDir: String, pageSize: Int) exte
 /** Bounded retry with exponential backoff around a flaky [[PagedSource]] —
   * the failure-mode surface real API loaders actually debug. A transient
   * fetch error (network drop, 5xx, rate-limit) is retried up to
-  * `maxRetries` times with backoff doubling from `backoffMs`; a fetch that
+  * `maxRetries` times with backoff doubling from `backoffMs`; an interrupt
+  * is cancellation, rethrown at once with the thread's interrupt flag
+  * restored; a fetch that
   * keeps failing propagates, leaving the walk resumable (pages already
   * loaded are safe to replay — the keyed upsert downstream is idempotent,
   * which is what makes at-least-once fetching correct end-to-end).
@@ -86,7 +90,12 @@ class RetryingPagedSource(
   private def attempt(page: Int, tried: Int): Option[Seq[RawProduct]] = {
     val r =
       try Right(inner.fetchPage(page))
-      catch { case e: Exception => Left(e) }
+      catch {
+        case e: InterruptedException => // cancellation, not a fault: no retry
+          Thread.currentThread().interrupt()
+          throw e
+        case e: Exception => Left(e)
+      }
     r match {
       case Right(v) => v
       case Left(e) =>

@@ -1,10 +1,21 @@
 package graft.pipeline
 
+import java.time.Instant
+
+import scala.collection.mutable
+
 import graft.Fixtures
 import graft.functions.UpcCheckDigit
 import graft.sinks.JdbcSink
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, CurrentTimestampLike, Expression, IsNull, JoinedRow, Predicate, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's end-to-end behavior as one composed pipeline:
   * extract product records → synthesize/validate UPC-12 identity → dedup →
@@ -58,15 +69,21 @@ object UpcSkuLoad {
     * Single pass, pure column expressions; the split is two filters over
     * the same tagged plan (Spark shares the scan). */
   def validateWithQuarantine(records: DataFrame): (DataFrame, DataFrame) = {
-    val w = UpcCheckDigit.weightedSumCol(col("upc"), 12)
-    val reason = when(col("upc").isNull || length(col("upc")) =!= 12, "bad_length")
-      .when(w.isNull || w % 10 =!= 0, "bad_check_digit")
-      .when(col("price").isNull || col("price") <= 0, "bad_price")
-      .when(length(trim(coalesce(col("name"), lit("")))) === 0, "empty_name")
-    val tagged = records.withColumn("reject_reason", reason)
+    val tagged = records.withColumn("reject_reason", rejectReason)
     (
       tagged.filter(col("reject_reason").isNull).drop("reject_reason"),
       tagged.filter(col("reject_reason").isNotNull))
+  }
+
+  /** The rules of [[validateWithQuarantine]], written once for the batch
+    * plan and the compiled page pipeline: a record's first failing check,
+    * or null when it passes. */
+  private def rejectReason: Column = {
+    val w = UpcCheckDigit.weightedSumCol(col("upc"), 12)
+    when(col("upc").isNull || length(col("upc")) =!= 12, "bad_length")
+      .when(w.isNull || w % 10 =!= 0, "bad_check_digit")
+      .when(col("price").isNull || col("price") <= 0, "bad_price")
+      .when(length(trim(coalesce(col("name"), lit("")))) === 0, "empty_name")
   }
 
   /** One representative per UPC (deterministic: lowest name sorts first). */
@@ -90,11 +107,14 @@ object UpcSkuLoad {
 
   /** The reference's incremental consumption loop: walk a [[PagedSource]]
     * page by page, running the SAME validate→dedup→upsert per page. The
-    * driver advances the cursor; a page is driver-sized, so its plan runs
-    * as one small write job of a handful of tasks (AQE coalesces the dedup
-    * shuffle), and the keyed upsert makes page replay (crash recovery,
-    * overlapping fetches) idempotent — EtlPipelineSpec proves page-wise
-    * consumption lands the exact table the batch run does.
+    * driver advances the cursor and, a page being driver-sized, evaluates
+    * it too: [[PagePipeline]] is compiled once per walk from the batch
+    * path's own columns, and each page's survivors are upserted on one JDBC
+    * connection, so a page runs no Spark job beyond its fetch. The keyed
+    * upsert makes page replay (crash recovery, overlapping fetches)
+    * idempotent — EtlPipelineSpec proves page-wise consumption lands the
+    * exact table the batch run does, and that a page lands what the
+    * per-page Spark plan `load(dedup(validate(toProducts(page))))` would.
     *
     * Dedup is PER PAGE: a consistent keyset-paginated snapshot yields each
     * key on exactly one page, so paged ≡ batch. If the upstream snapshot
@@ -105,15 +125,62 @@ object UpcSkuLoad {
     * representative. Returns rows UPSERTED (a drifted key counts once per
     * page it appeared on), not distinct keys. */
   def runPaged(spark: SparkSession, source: PagedSource, url: String, table: String): Long = {
-    import spark.implicits._
+    val pipeline = new PagePipeline(spark)
     var page = 0
     var total = 0L
     var batch = source.fetchPage(page)
     while (batch.isDefined) {
-      total += load(dedup(validate(toProducts(spark.createDataset(batch.get).toDF()))), url, table)
+      total += JdbcSink.writePartition(
+        url, pipeline(batch.get).iterator, pipeline.schema, table, Seq("upc"), JdbcSink.BatchSize)
       page += 1
       batch = source.fetchPage(page)
     }
     total
+  }
+
+  /** [[toProducts]], [[validate]] and [[dedup]] for one driver-side page,
+    * with no Spark plan per page. The columns of `toProducts` and
+    * [[rejectReason]] are resolved against the [[RawProduct]] schema and
+    * bound once into a projection and a predicate; `current_timestamp()`
+    * becomes an input slot that each page fills once, so `loaded_at` is one
+    * timestamp per page, as in a per-page plan. A page's rows are projected,
+    * those with a null `reject_reason` kept, and per UPC the lowest `name`
+    * survives, compared as `UTF8String` bytes: the order of `dedup`'s window
+    * sort, which differs from Java `String` order beyond the BMP. */
+  private final class PagePipeline(spark: SparkSession) {
+    private val encoder = ExpressionEncoder[RawProduct]()
+    private val toRow = encoder.createSerializer()
+    private val products = toProducts(spark.createDataset(Seq.empty[RawProduct])(encoder).toDF())
+    val schema: StructType = products.schema
+    private val toScala = CatalystTypeConverters.createToScalaConverter(schema)
+    private val upc = schema.fieldIndex("upc")
+    private val name = schema.fieldIndex("name")
+
+    private def resolved(df: DataFrame): (Seq[Expression], Seq[Attribute]) =
+      df.queryExecution.analyzed match { case Project(cols, child) => (cols, child.output) }
+    private val now = AttributeReference("now", TimestampType, nullable = false)()
+    private val project = {
+      val (cols, raw) = resolved(products)
+      UnsafeProjection.create(cols.map(_.transform { case _: CurrentTimestampLike => now }), raw :+ now)
+    }
+    private val accepted = {
+      val (Seq(Alias(reason, _)), productCols) = resolved(products.select(rejectReason))
+      Predicate.create(IsNull(reason), productCols)
+    }
+
+    def apply(page: Seq[RawProduct]): Seq[Row] = {
+      val input = new JoinedRow(null, InternalRow(DateTimeUtils.instantToMicros(Instant.now())))
+      val kept = mutable.LinkedHashMap.empty[UTF8String, InternalRow]
+      for (r <- page) {
+        val row = project(input.withLeft(toRow(r)))
+        // accepted rows have a non-null name (the empty_name check)
+        if (accepted.eval(row) &&
+            kept.get(row.getUTF8String(upc)).forall(k => row.getUTF8String(name).binaryCompare(k.getUTF8String(name)) < 0)) {
+          val copy = row.copy() // the projection reuses its output row
+          kept(copy.getUTF8String(upc)) = copy
+        }
+      }
+      kept.valuesIterator.map(toScala(_).asInstanceOf[Row]).toSeq
+    }
   }
 }

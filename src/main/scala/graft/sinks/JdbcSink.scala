@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.sql.{Connection, DriverManager, PreparedStatement}
+import java.sql.DriverManager
 import java.util.Properties
 
 import org.apache.spark.sql.DataFrame
@@ -81,6 +81,9 @@ object JdbcSink {
     (colDefs ++ pk).mkString(s"CREATE TABLE $table (", ", ", ")")
   }
 
+  /** Rows per committed chunk of an upsert or a staging write. */
+  private[graft] val BatchSize = 500
+
   /** Idempotent upsert: rows whose key tuple exists are updated, others
     * inserted. Runs on the executors via foreachPartition; batches commit
     * every `batchSize` rows. Returns the rows received (`df.count()`,
@@ -93,16 +96,11 @@ object JdbcSink {
       table: String,
       keyCols: Seq[String],
       dialect: UpsertDialect = UpdateInsertDialect,
-      batchSize: Int = 500): Long = {
+      batchSize: Int = BatchSize): Long = {
     val schema = df.schema
-    val valCols = schema.fieldNames.filterNot(keyCols.contains).toSeq
     val written = df.sparkSession.sparkContext.longAccumulator
     df.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      if (rows.nonEmpty) {
-        val conn = DriverManager.getConnection(url)
-        try written.add(writePartition(conn, rows, schema, table, keyCols, valCols, batchSize))
-        finally conn.close()
-      }
+      written.add(writePartition(url, rows, schema, table, keyCols, batchSize))
     }
     written.value
   }
@@ -219,7 +217,7 @@ object JdbcSink {
       batchId: Long,
       url: String,
       stagingTable: String,
-      batchSize: Int = 500): Unit = {
+      batchSize: Int = BatchSize): Unit = {
     val cols = batch.schema.fieldNames.toSeq
     batch.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
       stagePartition(
@@ -298,84 +296,99 @@ object JdbcSink {
       }
       .start()
 
-  private def writePartition(
-      conn: Connection,
+  /** One slice's upsert on its own connection, in chunks of `batchSize`
+    * rows, each committed; returns the rows written. No rows, no
+    * connection. A failing chunk is rolled back and its error rethrown:
+    * closing the connection mid-transaction would throw instead of it.
+    * Called per partition by [[upsert]] and per page by
+    * `UpcSkuLoad.runPaged`. */
+  private[graft] def writePartition(
+      url: String,
       rows: Iterator[org.apache.spark.sql.Row],
       schema: StructType,
       table: String,
       keyCols: Seq[String],
-      valCols: Seq[String],
       batchSize: Int): Long = {
-    conn.setAutoCommit(false)
-    val upd = conn.prepareStatement(updateSql(table, keyCols, valCols))
-    val ins = conn.prepareStatement(insertSql(table, schema.fieldNames.toSeq))
-    // Batched two-wave protocol: one executeBatch() of UPDATEs per chunk,
-    // then one executeBatch() of INSERTs for the keys the update wave
-    // missed (update count 0). Statement round-trips per partition are
-    // O(rows/batchSize), not O(rows) — the difference between embedded
-    // Derby (where per-row was tolerable) and a networked RDBMS.
-    //
-    // Two hazards the naive two-wave misses:
-    //  - Repeated keys WITHIN a chunk (normal in streamUpsert micro-batches):
-    //    all UPDATEs run before any INSERT, so two new rows with one key both
-    //    see count 0 and both INSERT → PK violation. Dedupe the chunk by key,
-    //    last occurrence wins — same final state the per-row interleave gave.
-    //  - Drivers may return Statement.SUCCESS_NO_INFO (-2) from executeBatch
-    //    (MySQL with rewriteBatchedStatements): the count is unknown, so fall
-    //    back to a per-row executeUpdate for that row to learn it.
+    if (!rows.hasNext) return 0L
+    val conn = DriverManager.getConnection(url)
     try {
-      rows.grouped(batchSize).map { rawChunk =>
-        val lastByKey = scala.collection.mutable.LinkedHashMap
-          .empty[Seq[Any], org.apache.spark.sql.Row]
-        // Normalize Array[Byte] key values (BINARY columns) to ArraySeq so
-        // the Seq[Any] dedup key compares by content, not array reference —
-        // otherwise duplicate binary keys slip past dedup and double-INSERT.
-        def keyOf(r: org.apache.spark.sql.Row): Seq[Any] = keyCols.map { c =>
-          r.getAs[Any](c) match {
-            case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
-            case other          => other
-          }
-        }
-        rawChunk.foreach(r => lastByKey(keyOf(r)) = r)
-        val chunk = lastByKey.values.toSeq
-        chunk.foreach { row =>
-          valCols.zipWithIndex.foreach { case (c, i) =>
-            upd.setObject(i + 1, row.getAs[AnyRef](c))
-          }
-          keyCols.zipWithIndex.foreach { case (c, i) =>
-            upd.setObject(valCols.length + i + 1, row.getAs[AnyRef](c))
-          }
-          upd.addBatch()
-        }
-        val updated = upd.executeBatch()
-        var nIns = 0
-        chunk.iterator.zip(updated.iterator).foreach { case (row, batchCount) =>
-          val n =
-            if (batchCount != java.sql.Statement.SUCCESS_NO_INFO) batchCount
-            else { // unknown count: re-run this one row alone for a real count
-              valCols.zipWithIndex.foreach { case (c, i) =>
-                upd.setObject(i + 1, row.getAs[AnyRef](c))
-              }
-              keyCols.zipWithIndex.foreach { case (c, i) =>
-                upd.setObject(valCols.length + i + 1, row.getAs[AnyRef](c))
-              }
-              upd.executeUpdate()
+      conn.setAutoCommit(false)
+      val valCols = schema.fieldNames.filterNot(keyCols.contains).toSeq
+      val upd = conn.prepareStatement(updateSql(table, keyCols, valCols))
+      val ins = conn.prepareStatement(insertSql(table, schema.fieldNames.toSeq))
+      // Batched two-wave protocol: one executeBatch() of UPDATEs per chunk,
+      // then one executeBatch() of INSERTs for the keys the update wave
+      // missed (update count 0). Statement round-trips per partition are
+      // O(rows/batchSize), not O(rows) — the difference between embedded
+      // Derby (where per-row was tolerable) and a networked RDBMS.
+      //
+      // Two hazards the naive two-wave misses:
+      //  - Repeated keys WITHIN a chunk (normal in streamUpsert micro-batches):
+      //    all UPDATEs run before any INSERT, so two new rows with one key both
+      //    see count 0 and both INSERT → PK violation. Dedupe the chunk by key,
+      //    last occurrence wins — same final state the per-row interleave gave.
+      //  - Drivers may return Statement.SUCCESS_NO_INFO (-2) from executeBatch
+      //    (MySQL with rewriteBatchedStatements): the count is unknown, so fall
+      //    back to a per-row executeUpdate for that row to learn it.
+      try {
+        rows.grouped(batchSize).map { rawChunk =>
+          val lastByKey = scala.collection.mutable.LinkedHashMap
+            .empty[Seq[Any], org.apache.spark.sql.Row]
+          // Normalize Array[Byte] key values (BINARY columns) to ArraySeq so
+          // the Seq[Any] dedup key compares by content, not array reference —
+          // otherwise duplicate binary keys slip past dedup and double-INSERT.
+          def keyOf(r: org.apache.spark.sql.Row): Seq[Any] = keyCols.map { c =>
+            r.getAs[Any](c) match {
+              case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
+              case other          => other
             }
-          if (n == 0) {
-            schema.fieldNames.zipWithIndex.foreach { case (c, i) =>
-              ins.setObject(i + 1, row.getAs[AnyRef](c))
-            }
-            ins.addBatch()
-            nIns += 1
           }
-        }
-        if (nIns > 0) ins.executeBatch()
-        conn.commit()
-        rawChunk.size.toLong
-      }.sum
-    } finally {
-      upd.close()
-      ins.close()
-    }
+          rawChunk.foreach(r => lastByKey(keyOf(r)) = r)
+          val chunk = lastByKey.values.toSeq
+          chunk.foreach { row =>
+            valCols.zipWithIndex.foreach { case (c, i) =>
+              upd.setObject(i + 1, row.getAs[AnyRef](c))
+            }
+            keyCols.zipWithIndex.foreach { case (c, i) =>
+              upd.setObject(valCols.length + i + 1, row.getAs[AnyRef](c))
+            }
+            upd.addBatch()
+          }
+          val updated = upd.executeBatch()
+          var nIns = 0
+          chunk.iterator.zip(updated.iterator).foreach { case (row, batchCount) =>
+            val n =
+              if (batchCount != java.sql.Statement.SUCCESS_NO_INFO) batchCount
+              else { // unknown count: re-run this one row alone for a real count
+                valCols.zipWithIndex.foreach { case (c, i) =>
+                  upd.setObject(i + 1, row.getAs[AnyRef](c))
+                }
+                keyCols.zipWithIndex.foreach { case (c, i) =>
+                  upd.setObject(valCols.length + i + 1, row.getAs[AnyRef](c))
+                }
+                upd.executeUpdate()
+              }
+            if (n == 0) {
+              schema.fieldNames.zipWithIndex.foreach { case (c, i) =>
+                ins.setObject(i + 1, row.getAs[AnyRef](c))
+              }
+              ins.addBatch()
+              nIns += 1
+            }
+          }
+          if (nIns > 0) ins.executeBatch()
+          conn.commit()
+          rawChunk.size.toLong
+        }.sum
+      } catch {
+        case t: Throwable =>
+          try conn.rollback()
+          catch { case _: java.sql.SQLException => () }
+          throw t
+      } finally {
+        upd.close()
+        ins.close()
+      }
+    } finally conn.close()
   }
 }

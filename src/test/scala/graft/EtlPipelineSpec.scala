@@ -132,13 +132,17 @@ class EtlPipelineSpec extends SparkSuite {
     }
     val fixture = new FixturePagedSource(spark, sf001, pageSize = 37)
     fixture.fetchPage(0) // the row-count job runs once, before the walk
-    // tasks seen at each fetch: page i's tasks are its fetch plus its load
-    val marks = scala.collection.mutable.ArrayBuffer.empty[Long]
+    // tasks seen when each fetch starts and when it returns: page i's
+    // tasks are its fetch plus its load
+    val marks, returns = scala.collection.mutable.ArrayBuffer.empty[Long]
     val source = new PagedSource {
       def fetchPage(p: Int): Option[Seq[RawProduct]] = {
         ListenerBusDrain.drain(sc)
         marks += tasks.get
-        fixture.fetchPage(p)
+        val page = fixture.fetchPage(p)
+        ListenerBusDrain.drain(sc)
+        returns += tasks.get
+        page
       }
     }
     spark.conf.set(key, "256")
@@ -153,6 +157,91 @@ class EtlPipelineSpec extends SparkSuite {
     val perPage = marks.zip(marks.tail).map { case (a, b) => b - a }
     assert(perPage.size == 6, s"expected 6 pages, got ${perPage.size}")
     assert(perPage.forall(_ < 32), s"tasks per page: $perPage")
+    // the load runs on the driver: no task between a fetch and the next
+    val loads = returns.zip(marks.tail).map { case (a, b) => b - a }
+    assert(loads.forall(_ == 0), s"tasks per page load: $loads")
+  }
+
+  test("a page evaluated on the driver lands what the per-page Spark plan lands") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    import graft.pipeline.{PagedSource, RawProduct}
+    import spark.implicits._
+    // price is text: NaN passes the `price <= 0` check (Spark orders NaN
+    // above every number) and Derby's DOUBLE cannot hold it
+    def freshTable(t: String): Unit = {
+      val c = DriverManager.getConnection(url)
+      try {
+        val st = c.createStatement()
+        try st.execute(s"DROP TABLE $t")
+        catch { case _: java.sql.SQLException => () }
+        st.execute(
+          s"CREATE TABLE $t (upc CHAR(12) PRIMARY KEY, name VARCHAR(128), brand VARCHAR(32), price VARCHAR(32), loaded_at TIMESTAMP)")
+        st.close()
+      } finally c.close()
+    }
+    def rows(t: String): Seq[(String, String, String, String, java.sql.Timestamp)] = {
+      val c = DriverManager.getConnection(url)
+      try {
+        val rs = c.createStatement().executeQuery(s"SELECT upc, name, brand, price, loaded_at FROM $t")
+        Iterator.continually(rs).takeWhile(_.next())
+          .map(r => (r.getString(1), r.getString(2), r.getString(3), r.getString(4), r.getTimestamp(5)))
+          .toList
+      } finally c.close()
+    }
+    val partkey = Gen.frequency(
+      8 -> Gen.choose(0L, 5L), // repeats within and across pages
+      1 -> Gen.oneOf(99999999999L, 100000000000L, 123456789012L, Long.MaxValue, -1L, -7L, Long.MinValue))
+    // U+FF21 sorts after U+1F600 in UTF-16 (the latter is a surrogate
+    // pair) but before it in UTF-8 bytes, the order of Spark's sort
+    val name = Gen.frequency(
+      3 -> Gen.oneOf("\uFF21", "\uD83D\uDE00", "x\uFF21", "x\uD83D\uDE00"),
+      1 -> Gen.oneOf(null, "", "   ", "a", " \u00E9 "))
+    val brand = Gen.oneOf(null, "B", "Brand#13")
+    val price = Gen.frequency(1 -> Gen.oneOf(0.0, -0.0, -2.5, Double.NaN), 3 -> Gen.choose(0.01, 100.0))
+    val row = for (k <- partkey; n <- name; b <- brand; p <- price) yield RawProduct(k, n, b, p)
+    // dedup keeps an arbitrary one of two rows tied on (upc, name): no ties
+    val page = Gen.choose(0, 12).flatMap(Gen.listOfN(_, row)).map(_.distinctBy(r => (r.partkey, r.name)))
+    val walk = Gen.choose(1, 4).flatMap(Gen.listOfN(_, page))
+    val prop = Prop.forAllNoShrink(walk) { pages =>
+      freshTable("prop_driver")
+      freshTable("prop_plan")
+      val n = UpcSkuLoad.runPaged(spark, new PagedSource {
+        def fetchPage(p: Int): Option[Seq[RawProduct]] = pages.lift(p)
+      }, url, "prop_driver")
+      val lastPage = scala.collection.mutable.Map.empty[String, Int]
+      val m = pages.zipWithIndex.map { case (p, i) =>
+        val survivors = UpcSkuLoad.dedup(UpcSkuLoad.validate(UpcSkuLoad.toProducts(spark.createDataset(p).toDF())))
+        survivors.select("upc").as[String].collect().foreach(lastPage(_) = i)
+        UpcSkuLoad.load(survivors, url, "prop_plan")
+      }.sum
+      val got = rows("prop_driver")
+      assert(n == m, s"rows upserted: driver $n, plan $m")
+      assert(got.map(r => r.copy(_5 = null)).toSet == rows("prop_plan").map(r => r.copy(_5 = null)).toSet)
+      val stamps = got.groupBy(r => lastPage(r._1)).map { case (i, rs) => i -> rs.map(_._5).distinct }
+      assert(stamps.values.forall(_.size == 1), s"loaded_at per page: $stamps")
+      val ordered = stamps.toSeq.sortBy(_._1).map(_._2.head)
+      assert(ordered.zip(ordered.drop(1)).forall { case (a, b) => a.before(b) }, s"loaded_at per page: $stamps")
+      true
+    }
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(25).withInitialSeed(Seed(6L)), prop)
+    assert(result.passed, result.status)
+  }
+
+  test("an interrupted fetch is rethrown at once, not retried") {
+    import graft.pipeline.{PagedSource, RawProduct, RetryingPagedSource}
+    var attempts = 0
+    val cancelled = new PagedSource {
+      def fetchPage(p: Int): Option[Seq[RawProduct]] = {
+        attempts += 1
+        throw new InterruptedException("cancelled")
+      }
+    }
+    val slept = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val src = new RetryingPagedSource(cancelled, maxRetries = 3, backoffMs = 100L, sleep = slept += _)
+    intercept[InterruptedException](src.fetchPage(0))
+    assert(Thread.interrupted(), "interrupt flag not restored") // and cleared for the next test
+    assert(slept.isEmpty && attempts == 1, s"slept $slept over $attempts fetch attempts")
   }
 
   test("adversarial paging: transient failures, permanent abort + resume, duplicate/stale/shrunken pages all converge") {

@@ -241,6 +241,31 @@ class JdbcSinkSpec extends SparkSuite {
     assert(stagedRows().isEmpty, "staging not drained after publish")
   }
 
+  test("a failed upsert chunk rolls back and surfaces its own error") {
+    import spark.implicits._
+    val narrow = "products_narrow"
+    withConn { c =>
+      val st = c.createStatement()
+      try st.execute(s"DROP TABLE $narrow")
+      catch { case _: java.sql.SQLException => () }
+      st.execute(s"CREATE TABLE $narrow (upc BIGINT PRIMARY KEY, brand VARCHAR(4), price DOUBLE)")
+      st.execute(s"INSERT INTO $narrow VALUES (1, 'ab', 1.0)")
+      st.close()
+    }
+    // one chunk: key 1's update succeeds, then key 2's insert overflows
+    // `brand`, so the chunk's transaction holds work when it fails
+    val delta = Seq((1L, "ab", 2.0), (2L, "too wide", 3.0)).toDF("upc", "brand", "price").coalesce(1)
+    val e = intercept[Exception](JdbcSink.upsert(delta, url, narrow, keyCols = Seq("upc")))
+    val states = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collect { case s: java.sql.SQLException => s.getSQLState }.toList
+    assert(states.contains("22001") && !states.contains("25001"), s"SQLStates: $states")
+    val rows = withConn { c =>
+      val rs = c.createStatement().executeQuery(s"SELECT upc, brand, price FROM $narrow")
+      Iterator.continually(rs).takeWhile(_.next()).map(r => (r.getLong(1), r.getString(2), r.getDouble(3))).toList
+    }
+    assert(rows == List((1L, "ab", 1.0)), "the failed chunk's update was not rolled back")
+  }
+
   test("upsert tolerates repeated keys within one micro-batch chunk (last wins)") {
     import spark.implicits._
     val dupTable = "dup_products"
