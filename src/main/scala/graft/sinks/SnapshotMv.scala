@@ -94,9 +94,7 @@ object SnapshotMv {
     require(dup.isEmpty, s"duplicate column roles in the view definition: ${dup.mkString(", ")}")
     (outNames ++ mins ++ maxs).foreach(c =>
       require(!c.startsWith("__"), s"column '$c' collides with the view's internal (`__`) namespace"))
-    val latest = SnapshotTable
-      .latestVersion(spark, baseRoot)
-      .getOrElse(sys.error(s"no snapshot table at $baseRoot"))
+    val latest = SnapshotTable.latestOrFail(spark, baseRoot)
     asOfVersion.foreach(v =>
       require(
         v >= 1 && v <= latest,
@@ -296,19 +294,11 @@ object SnapshotMv {
   private def carrySync(spark: SparkSession, mvRoot: String, syncedV: Int): Int = {
     var attempts = 0
     while (true) {
-      val v = SnapshotTable.latestVersion(spark, mvRoot).get
-      val m = SnapshotTable.readManifest(spark, mvRoot, v)
-      if (m.batchId.contains(syncedV.toLong)) return v // replay no-op
+      val base = SnapshotTable.openBase(spark, mvRoot)
+      if (base.m.batchId.contains(syncedV.toLong)) return base.version // replay no-op
       try
-        return SnapshotTable.publish(
-          spark,
-          mvRoot,
-          m.copy(
-            version = v + 1,
-            action = "mv-sync",
-            addedRows = 0L,
-            batchId = Some(syncedV.toLong),
-            cdc = None)) // capture describes ONE commit's delta — never inherited
+        return SnapshotTable.publish(spark, mvRoot, base.commit(
+          "mv-sync", base.m.dirs, Nil, Nil, 0L, Nil, base.m.schemaJson, Some(syncedV.toLong), None, None))
       catch {
         case e: SnapshotTable.ConcurrentCommitException =>
           attempts += 1

@@ -74,9 +74,7 @@ final class SnapshotSource(
   // the stream serves the schema recorded when it started; later evolved
   // files read by-name (missing columns null), like readVersion
   private val tableSchema: StructType = {
-    val v = SnapshotTable
-      .latestVersion(spark, root)
-      .getOrElse(sys.error(s"no snapshot table at $root"))
+    val v = SnapshotTable.latestOrFail(spark, root)
     SnapshotTable
       .readManifest(spark, root, v)
       .schemaJson
@@ -737,9 +735,7 @@ private[sinks] object SnapshotReadOptions {
       spark: SparkSession,
       r: String,
       parameters: Map[String, String]): Int = {
-    val latest = SnapshotTable
-      .latestVersion(spark, r)
-      .getOrElse(sys.error(s"no snapshot table at $r"))
+    val latest = SnapshotTable.latestOrFail(spark, r)
     // tags pin MAIN versions: resolving one against a branch handle's
     // private log would silently read branch content at the tagged
     // NUMBER (the branch's v3 is not main's v3) — refused. versionAsOf/
@@ -828,7 +824,7 @@ final class SnapshotSourceProvider
       parameters: Map[String, String]): (String, StructType) = {
     val r = root(parameters)
     val spark = ctx.sparkSession
-    val v = SnapshotTable.latestVersion(spark, r).getOrElse(sys.error(s"no snapshot table at $r"))
+    val v = SnapshotTable.latestOrFail(spark, r)
     val s = SnapshotTable
       .readManifest(spark, r, v)
       .schemaJson

@@ -551,9 +551,7 @@ object SnapshotSql {
 
       case d: DropConstraint =>
         val reg = registrationOf(spark, tableParts(d.table))
-        val v = SnapshotTable
-          .latestVersion(spark, reg.root)
-          .getOrElse(sys.error(s"no snapshot table at ${reg.root}"))
+        val v = SnapshotTable.latestOrFail(spark, reg.root)
         val constraints = SnapshotTable.readManifest(spark, reg.root, v).constraints
         val resolver = spark.sessionState.conf.resolver
         constraints.keys.find(resolver(_, d.name)) match {
@@ -672,9 +670,7 @@ object SnapshotSql {
             // metadata read, never the full relation construction (which
             // for a MOR-masked table would build the whole mask-group
             // union plan just to be discarded)
-            val v = SnapshotTable
-              .latestVersion(spark, reg.root)
-              .getOrElse(sys.error(s"no snapshot table at ${reg.root}"))
+            val v = SnapshotTable.latestOrFail(spark, reg.root)
             val target = SnapshotTable
               .readManifest(spark, reg.root, v)
               .schemaJson
@@ -755,9 +751,7 @@ object SnapshotSql {
     * session's resolver (case-insensitive unless spark.sql.caseSensitive),
     * against the manifest's recorded schema — no relation construction. */
   private def resolveColumn(spark: SparkSession, root: String, name: String): Option[String] = {
-    val v = SnapshotTable
-      .latestVersion(spark, root)
-      .getOrElse(sys.error(s"no snapshot table at $root"))
+    val v = SnapshotTable.latestOrFail(spark, root)
     val resolver = spark.sessionState.conf.resolver
     SnapshotTable
       .readManifest(spark, root, v)
@@ -806,9 +800,7 @@ object SnapshotSql {
     case DescribeDetailRe(name) =>
       import spark.implicits._
       val reg = maintenanceReg(spark, name)
-      val v = SnapshotTable
-        .latestVersion(spark, reg.root)
-        .getOrElse(sys.error(s"no snapshot table at ${reg.root}"))
+      val v = SnapshotTable.latestOrFail(spark, reg.root)
       val m = SnapshotTable.readManifest(spark, reg.root, v)
       Seq(
         (

@@ -384,7 +384,7 @@ object SnapshotTable {
     require(splitRef(root)._2.isEmpty, "create branches from the main table handle")
     requireRefName(name)
     val f = fs(spark, root)
-    val latest = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
+    val latest = latestOrFail(spark, root)
     val fork = asOf.getOrElse(latest)
     require(
       versions(spark, root).contains(fork),
@@ -477,7 +477,7 @@ object SnapshotTable {
     require(splitRef(root)._2.isEmpty, "tags name MAIN versions; create them from the main handle")
     requireRefName(name)
     val f = fs(spark, root)
-    val latest = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
+    val latest = latestOrFail(spark, root)
     val v = asOf.getOrElse(latest)
     require(
       versions(spark, root).contains(v),
@@ -550,7 +550,7 @@ object SnapshotTable {
     val fork = forkOf(f, root, name)
     val bRoot = branchRef(root, name)
     val bLatest = latestVersion(spark, bRoot).getOrElse(fork)
-    val mLatest = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
+    val mLatest = latestOrFail(spark, root)
     require(
       mLatest <= bLatest,
       s"main (v$mLatest) advanced past branch '$name' (v$bLatest); fast-forward impossible")
@@ -612,7 +612,7 @@ object SnapshotTable {
     val fork = forkOf(f, root, name)
     val bRoot = branchRef(root, name)
     val bLatest = latestVersion(spark, bRoot).getOrElse(fork)
-    val mLatest = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
+    val mLatest = latestOrFail(spark, root)
     if (bLatest == fork) return mLatest // nothing staged
     val bCommits = (fork + 1 to bLatest).map(readManifest(spark, bRoot, _))
     val nonAppend = bCommits.filterNot(_.action == "append").map(c => s"v${c.version}=${c.action}")
@@ -649,19 +649,20 @@ object SnapshotTable {
     // resurrect the deleted rows
     var scannedTo = mLatest
     while (true) {
-      val base = latestVersion(spark, root).get
-      ((scannedTo + 1) to base).foreach { v =>
-        val c = readManifest(spark, root, v)
+      val base = openBase(spark, root)
+      val m = base.m
+      // the base itself was just parsed: only the versions between re-read
+      val since = ((scannedTo + 1) until base.version).map(readManifest(spark, root, _)) :+ m
+      since.foreach { c =>
         if (deltaDirs.exists(c.dirs.contains)) {
           require(
             deltaDirs.forall(c.dirs.contains),
-            s"main v$v references PART of branch '$name''s delta — refusing a partial re-pick")
-          return base // a racer completed the pick; ours is a no-op
+            s"main v${c.version} references PART of branch '$name''s delta — refusing a partial re-pick")
+          return base.version // a racer completed the pick; ours is a no-op
         }
       }
-      scannedTo = base
-      val m = readManifest(spark, root, base)
-      val merged = (m.schemaJson.map(schemaFromJson), deltaSchema) match {
+      scannedTo = base.version
+      val merged = (base.schema, deltaSchema) match {
         case (Some(a), Some(b)) => mergeSchemas(a, b)
         case (a, b) => a.orElse(b).getOrElse(sys.error("cherry-pick needs a schema-recording manifest"))
       }
@@ -677,21 +678,10 @@ object SnapshotTable {
         }
         enforced = m.constraints
       }
+      // CDC computes the file-set diff → exactly the delta's rows as inserts
       try
-        return publish(
-          spark,
-          root,
-          Commit(
-            base + 1,
-            "cherrypick", // CDC computes the file-set diff → exactly the delta's rows as inserts
-            m.dirs ++ deltaDirs,
-            deltaRows,
-            None,
-            Some(merged.json),
-            m.files ++ deltaStats,
-            constraints = m.constraints,
-            dropped = reviveDropped(m.dropped, merged),
-            masks = m.masks))
+        return publish(spark, root, base.commit(
+          "cherrypick", m.dirs, deltaDirs, deltaStats, deltaRows, Nil, Some(merged.json), None, None, None))
       catch {
         case e: ConcurrentCommitException =>
           attempts += 1
@@ -849,7 +839,7 @@ object SnapshotTable {
     val fork = forkOf(f, root, name)
     val bRoot = branchRef(root, name)
     val bLatest = latestVersion(spark, bRoot).getOrElse(fork)
-    val mLatest = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
+    val mLatest = latestOrFail(spark, root)
     if (mLatest == fork) return bLatest // already based on main's tip
     val locals = ((fork + 1) to bLatest).map(readManifest(spark, bRoot, _))
     val preds = readManifest(spark, bRoot, fork) +: locals.dropRight(1)
@@ -943,9 +933,9 @@ object SnapshotTable {
     var swapStarted = false
     try {
       locals.zip(preds).foreach { case (c, p) =>
-        val tipV = latestVersion(spark, sRoot).getOrElse(mLatest)
-        val tip = readManifest(spark, sRoot, tipV)
-        val tipSchema = tip.schemaJson.map(schemaFromJson)
+        val tipBase = openBase(spark, sRoot)
+        val tip = tipBase.m
+        val tipSchema = tipBase.schema
         val merged = (tipSchema, c.schemaJson.map(schemaFromJson)) match {
           // a monotone widen IS a type conflict to mergeSchemas by design;
           // the schema arm re-applies the delta as DDL instead of merging
@@ -1017,22 +1007,11 @@ object SnapshotTable {
         }
         reproveChecks(spark, root, gainDirs, merged, tip.constraints.toSet -- c.constraints.toSet)
         c.action match {
+          // exactly-once epoch markers (batchId, appId) SURVIVE every replay
           case "append" =>
-            publish(
-              spark,
-              sRoot,
-              Commit(
-                tipV + 1,
-                "append",
-                tip.dirs ++ deltaDirs,
-                c.addedRows,
-                c.batchId, // exactly-once epoch markers SURVIVE the replay
-                Some(merged.json),
-                tip.files ++ deltaStats,
-                constraints = tip.constraints,
-                dropped = reviveDropped(tip.dropped, merged),
-                masks = tip.masks,
-                appId = c.appId))
+            publish(spark, sRoot, tipBase.commit(
+              "append", tip.dirs, deltaDirs, deltaStats, c.addedRows, Nil, Some(merged.json),
+              c.batchId, c.appId, None))
           case "mor-delete" =>
             (newMasks(c, p).find(_.kind == "pred"),
               newMasks(c, p).find(mk0 => mk0.kind == "keys" && mk0.keyDir.isDefined)) match {
@@ -1047,56 +1026,26 @@ object SnapshotTable {
                 // root), and the hidden rows re-count against the new base
                 // exactly like the mor-merge replay arm
                 val keyDf = spark.read.parquet(new Path(dataRoot(root), mk.keyDir.get).toString)
-                val replayMask = keysMask(
-                  spark, sRoot, tip, Some(merged), mk.keyCols, keyEnvelope(keyDf, mk.keyCols), keyDf, mk.keyDir)
+                val replayMask =
+                  keysMask(tipBase, Some(merged), mk.keyCols, keyEnvelope(keyDf, mk.keyCols), keyDf, mk.keyDir)
                 // zero candidates on the new base AND no epoch marker to
                 // carry → the replay is a pure no-op and publishes nothing.
                 // With a marker to carry the maskless publish below keeps
                 // the exactly-once identity alive; the classifier's no-op
                 // arm (dirs set-equality) accepts that shape on the NEXT
                 // rebase and the (None, None) replay arm re-carries it
-                if (replayMask.isEmpty && c.batchId.isEmpty) ()
-                else {
-                  publish(
-                    spark,
-                    sRoot,
-                    Commit(
-                      tipV + 1,
-                      "mor-delete",
-                      tip.dirs,
-                      -replayMask.flatMap(_.maskedRows).sum,
-                      c.batchId, // exactly-once epoch markers SURVIVE the replay
-                      Some(merged.json),
-                      tip.files,
-                      constraints = tip.constraints,
-                      dropped = reviveDropped(tip.dropped, merged),
-                      masks = tip.masks ++ replayMask,
-                      appId = c.appId))
-                  ()
-                }
+                if (replayMask.nonEmpty || c.batchId.isDefined)
+                  publish(spark, sRoot, tipBase.commit(
+                    "mor-delete", tip.dirs, Nil, Nil, -replayMask.flatMap(_.maskedRows).sum,
+                    replayMask.toSeq, Some(merged.json), c.batchId, c.appId, None))
               case (None, None) =>
                 // the classifier's no-op arm: nothing to re-execute — but
                 // an exactly-once epoch marker must SURVIVE onto the
                 // rebased chain (dropping it would let the epoch re-land),
                 // so a batchId-carrying no-op re-publishes as a marker
-                if (c.batchId.isDefined) {
-                  publish(
-                    spark,
-                    sRoot,
-                    Commit(
-                      tipV + 1,
-                      "mor-delete",
-                      tip.dirs,
-                      0L,
-                      c.batchId,
-                      Some(merged.json),
-                      tip.files,
-                      constraints = tip.constraints,
-                      dropped = reviveDropped(tip.dropped, merged),
-                      masks = tip.masks,
-                      appId = c.appId))
-                  ()
-                }
+                if (c.batchId.isDefined)
+                  publish(spark, sRoot, tipBase.commit(
+                    "mor-delete", tip.dirs, Nil, Nil, 0L, Nil, Some(merged.json), c.batchId, c.appId, None))
             }
           case "mor-merge" =>
             val srcRel = deltaDirs match {
@@ -1114,27 +1063,14 @@ object SnapshotTable {
             val replayMask =
               newMasks(c, p).find(mk0 => mk0.kind == "keys" && mk0.keyDir.isDefined).flatMap { mk =>
                 val keyDf = spark.read.parquet(new Path(dataRoot(root), mk.keyDir.get).toString)
-                keysMask(
-                  spark, sRoot, tip, Some(merged), mk.keyCols, keyEnvelope(keyDf, mk.keyCols), keyDf, mk.keyDir)
+                keysMask(tipBase, Some(merged), mk.keyCols, keyEnvelope(keyDf, mk.keyCols), keyDf, mk.keyDir)
               }
-            publish(
-              spark,
-              sRoot,
-              Commit(
-                tipV + 1,
-                "mor-merge",
-                tip.dirs :+ srcRel,
-                deltaStats.map(_.rows).sum - replayMask.flatMap(_.maskedRows).sum,
-                c.batchId, // exactly-once epoch markers SURVIVE the replay
-                Some(merged.json),
-                tip.files ++ deltaStats,
-                constraints = tip.constraints,
-                dropped = reviveDropped(tip.dropped, merged),
-                masks = tip.masks ++ replayMask,
-                appId = c.appId))
-            ()
+            publish(spark, sRoot, tipBase.commit(
+              "mor-merge", tip.dirs, Seq(srcRel), deltaStats,
+              deltaStats.map(_.rows).sum - replayMask.flatMap(_.maskedRows).sum, replayMask.toSeq,
+              Some(merged.json), c.batchId, c.appId, None))
           case "delete" | "update" | "merge" =>
-            replayCowDelta(spark, root, sRoot, tipV, tip, merged, c, p, c.cdc.get)
+            replayCowDelta(root, tipBase, merged, c, p, c.cdc.get)
           case "compact" =>
             () // data-identical: the replay skips it (see the classifier)
           case "schema" =>
@@ -1165,24 +1101,12 @@ object SnapshotTable {
           case "overwrite" =>
             // replace the staged tip with the commit's own content — its
             // recorded dirs/files/schema ARE the table after this commit
-            // (overwrite clears masks and dropped; constraints main gained
-            // since the fork were already re-proven over deltaDirs above)
-            publish(
-              spark,
-              sRoot,
-              Commit(
-                tipV + 1,
-                "overwrite",
-                c.dirs,
-                c.addedRows,
-                c.batchId,
-                c.schemaJson.orElse(Some(merged.json)),
-                c.files,
-                constraints = tip.constraints,
-                dropped = c.dropped,
-                masks = c.masks,
-                appId = c.appId))
-            ()
+            // (it kept nothing, so no mask or dropped ledger carries;
+            // constraints main gained since the fork were already
+            // re-proven over deltaDirs above)
+            publish(spark, sRoot, tipBase.commit(
+              "overwrite", Nil, c.dirs, c.files, c.addedRows, c.masks,
+              c.schemaJson.orElse(Some(merged.json)), c.batchId, c.appId, None))
           case other => sys.error(s"unreachable: $other passed the replayability gate")
         }
       }
@@ -1248,16 +1172,14 @@ object SnapshotTable {
     * original sidecar re-references when it IS the replay's delta, a new
     * one is written when fork-time whole-drops had to content-apply. */
   private def replayCowDelta(
-      spark: SparkSession,
       root: String,
-      sRoot: String,
-      tipV: Int,
-      tip: Commit,
+      tipBase: Base,
       merged: org.apache.spark.sql.types.StructType,
       c: Commit,
       p: Commit,
       cc: Cdc): Int = {
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
+    val Base(spark, sRoot, _, tip) = tipBase
     val f = fs(spark, root)
     val mapping = mappingOf(merged)
     val withType = cdcTagged(merged, withVersion = false)
@@ -1358,7 +1280,7 @@ object SnapshotTable {
       }
       // no delete delta → nothing scans; uncovered dirs carry VERBATIM
       val plan = d match {
-        case Some(_) => prunePlan(spark, sRoot, tipV, bounds)
+        case Some(_) => prunePlanOf(tip, bounds)
         case None => PrunePlan(Seq.empty, tip.files.map(_.path), Seq.empty)
       }
       val carryUncovered = if (d.isEmpty) tipUncovered else Seq.empty[String]
@@ -1417,15 +1339,6 @@ object SnapshotTable {
         val insStats = c.files.filter(fst =>
           cc.insEntries.contains(dataDirOf(fst.path)) || cc.insEntries.contains(fst.path))
         val dropRowsCnt = dropNow.map(e => tipStatsByEntry(e).map(_.rows).sum).sum
-        // masks keep their entries for everything this commit carries
-        // VERBATIM: untouched covered files AND carried uncovered DIRS —
-        // a mask entry naming a carried dir must survive (dropping it
-        // would resurrect the dir's masked rows; same rule as
-        // [[compactSmall]]'s untouched set)
-        val untouchedSet = untouched.map(_.path).toSet ++ carryUncovered
-        val keptMasks = tip.masks
-          .map(mk => shrinkMask(mk, untouchedSet))
-          .filter(_.entries.nonEmpty)
         // the replayed commit's own exact CDC record (see Scaladoc)
         val cdcRec =
           if (!cdcOnWrite(spark)) None
@@ -1436,22 +1349,12 @@ object SnapshotTable {
             val all = (delTag.toSeq ++ insTag.toSeq).reduce(_ unionByName _)
             Some(Cdc(candPaths, Some(writeCdcSidecar(spark, sRoot, all, mapping)), cc.insEntries))
           }
-        publish(
-          spark,
-          sRoot,
-          Commit(
-            tipV + 1,
-            c.action,
-            untouched.map(_.path) ++ carryUncovered ++ newDirs ++ cc.insEntries,
-            written - candRows - dropRowsCnt + insStats.map(_.rows).sum,
-            c.batchId, // exactly-once epoch markers SURVIVE the replay
-            Some(merged.json),
-            untouched ++ newStats ++ insStats,
-            constraints = tip.constraints,
-            dropped = reviveDropped(tip.dropped, merged),
-            masks = keptMasks,
-            cdc = cdcRec,
-            appId = c.appId))
+        // masks keep their entries for everything this commit carries
+        // VERBATIM: untouched covered files AND carried uncovered DIRS
+        publish(spark, sRoot, tipBase.commit(
+          c.action, untouched.map(_.path) ++ carryUncovered, newDirs ++ cc.insEntries, newStats ++ insStats,
+          written - candRows - dropRowsCnt + insStats.map(_.rows).sum, Nil, Some(merged.json),
+          c.batchId, c.appId, cdcRec))
       } finally srcCached.foreach(_.unpersist())
     } finally d0.foreach(_.unpersist())
   }
@@ -2142,25 +2045,15 @@ object SnapshotTable {
         writeCheckpoint(spark, root, c)
     } catch { case scala.util.control.NonFatal(_) => () } // next interval retries
 
-  /** Table schema for a commit of `df` on top of version `base`: carried
-    * commits (append) evolve the prior recorded schema via [[mergeSchemas]];
-    * replacing commits (create/overwrite/compact) take `df`'s schema. A
-    * prior manifest without a recorded schema contributes nothing (the
-    * pre-schema files still read via the mergeSchema fallback). */
+  /** Table schema for a commit of `dfSchema` over the `prior` recorded
+    * schema: carried commits (append, merge) evolve it via
+    * [[mergeSchemas]]; replacing commits (create/overwrite) pass None and
+    * take `dfSchema`. A prior manifest without a recorded schema
+    * contributes nothing (the pre-schema files still read via the
+    * mergeSchema fallback). */
   private def evolvedSchema(
-      spark: SparkSession,
-      root: String,
-      base: Option[Int],
-      df: DataFrame,
-      carryForward: Boolean): String =
-    evolvedSchemaOf(spark, root, base, df.schema, carryForward)
-
-  private def evolvedSchemaOf(
-      spark: SparkSession,
-      root: String,
-      base: Option[Int],
-      dfSchema: org.apache.spark.sql.types.StructType,
-      carryForward: Boolean): String = {
+      prior: Option[org.apache.spark.sql.types.StructType],
+      dfSchema: org.apache.spark.sql.types.StructType): String = {
     // a write's DATA never implicitly declares a cluster spec: field
     // metadata riding in from the query (e.g. SELECT * over a clustered
     // source into an overwrite/create of another table) is stripped here
@@ -2175,10 +2068,6 @@ object SnapshotTable {
         f.copy(metadata = b.build())
       }
     })
-    val prior =
-      if (carryForward)
-        base.flatMap(readManifest(spark, root, _).schemaJson).map(schemaFromJson)
-      else None
     prior.fold(org.apache.spark.sql.types.StructType(next.map(_.copy(nullable = true))))(
       mergeSchemas(_, next)).json
   }
@@ -2290,30 +2179,117 @@ object SnapshotTable {
     }
   }
 
+  // ─────────────── the base of a write, and the one commit builder ───────────────
+
+  /** The latest version of an existing table (loud when there is none). */
+  private[graft] def latestOrFail(spark: SparkSession, root: String): Int =
+    latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
+
+  /** The version before the first commit: no entries, no schema. */
+  private val EmptyVersion = Commit(0, "none", Seq.empty, 0L)
+
+  /** The version a write commits over, read ONCE: one `latestVersion`
+    * listing and one manifest parse serve the executor's planning, its
+    * reads and its publish. [[commit]] is the one place a new [[Commit]]
+    * is built — the executor states which base entries it KEEPS and what
+    * it ADDS, and everything else the new version holds derives from
+    * that: the shape of Delta's log, where each commit reads one snapshot
+    * and publishes remove/add actions against it. */
+  private[sinks] final case class Base(spark: SparkSession, root: String, version: Int, m: Commit) {
+    lazy val schema: Option[org.apache.spark.sql.types.StructType] = m.schemaJson.map(schemaFromJson)
+
+    /** logical → physical column names of the base schema. */
+    def mapping: Map[String, String] = schema.map(mappingOf).getOrElse(Map.empty)
+
+    /** The live rows of base `entries`, through any pending masks. */
+    def read(entries: Seq[String]): DataFrame = readEntries(spark, root, m, schema, entries)
+
+    /** Live rows of base `entries`, whose [[read]] frame is `rows` (a
+      * caller about to scan them passes the frame it already built, so
+      * its files are listed once): their recorded stats when every entry
+      * is a clean (unmasked) stat-covered file, else `rows` counted. */
+    def liveRows(entries: Seq[String], rows: => DataFrame): Long = {
+      val recorded = m.files.map(f => f.path -> f.rows).toMap
+      val masked = maskedEntrySet(m)
+      if (entries.forall(e => recorded.contains(e) && !masked(e))) entries.map(recorded).sum
+      else rows.count()
+    }
+
+    /** Live rows of wholly-dropped base files: a clean file's recorded rows
+      * are its live rows; a masked file's exceed them, so only the masked
+      * drops pay a count. */
+    def droppedRows(dropped: Seq[FileStat]): Long = {
+      val (hidden, clean) = dropped.map(_.path).partition(maskedEntrySet(m))
+      liveRows(clean, read(clean)) + liveRows(hidden, read(hidden))
+    }
+
+    /** Version `version + 1`: the `kept` base entries (dir- or
+      * file-granular, as the executor lists them) plus the `added` ones.
+      * A base file stat or mask entry survives iff it, or its data dir, is
+      * kept; a shrunk mask forgets its row count, an emptied one drops,
+      * and `newMasks` append. Constraints carry. The dropped-column ledger
+      * carries, revival-checked against `schemaJson`, while any base entry
+      * is kept — with none kept no live file holds the dropped bytes, so
+      * it clears. `ts` stamps at publish; `batchId`, `appId` and `cdc`
+      * describe this commit alone and are never inherited. */
+    def commit(
+        action: String,
+        kept: Seq[String],
+        added: Seq[String],
+        addedStats: Seq[FileStat],
+        addedRows: Long,
+        newMasks: Seq[Mask],
+        schemaJson: Option[String],
+        batchId: Option[Long],
+        appId: Option[String],
+        cdc: Option[Cdc]): Commit = {
+      val keptSet = kept.toSet
+      def survives(e: String): Boolean = keptSet(e) || keptSet(dataDirOf(e))
+      Commit(
+        version + 1,
+        action,
+        kept ++ added,
+        addedRows,
+        batchId,
+        schemaJson,
+        m.files.filter(f => survives(f.path)) ++ addedStats,
+        constraints = m.constraints,
+        dropped =
+          if (kept.isEmpty) Map.empty
+          else schemaJson.fold(m.dropped)(j => reviveDropped(m.dropped, schemaFromJson(j))),
+        masks = m.masks.map(shrinkMask(_, survives)).filter(_.entries.nonEmpty) ++ newMasks,
+        cdc = cdc,
+        appId = appId)
+    }
+  }
+
+  /** The base of a write to an existing table. */
+  private[sinks] def openBase(spark: SparkSession, root: String): Base = {
+    val v = latestOrFail(spark, root)
+    Base(spark, root, v, readManifest(spark, root, v))
+  }
+
+  /** The base of a write that may create the table ([[EmptyVersion]]). */
+  private def openBaseOrEmpty(spark: SparkSession, root: String): Base =
+    latestVersion(spark, root).fold(Base(spark, root, 0, EmptyVersion))(v =>
+      Base(spark, root, v, readManifest(spark, root, v)))
+
+  /** Replace the table with `df` (create, overwrite, REPLACE TABLE): the
+    * commit keeps no base entry. */
   private def commit(
       spark: SparkSession,
       root: String,
       df: DataFrame,
       action: String,
-      carryForward: Boolean,
       declaredSpec: Option[Seq[(String, String)]] = None,
       dropConstraints: Boolean = false): Int = {
-    val base = latestVersion(spark, root)
-    // ONE base-manifest read serves constraints, the spec carry, and the
-    // carry-forward lists — a full parse is O(files) on big tables, so
-    // re-reading per consumer would double the driver-side planning cost
-    // of every replacing commit
-    val baseManifest = base.map(readManifest(spark, root, _))
-    val priorManifest = if (carryForward) baseManifest else None
-    val prior = priorManifest.map(_.dirs).getOrElse(Nil)
-    val priorFiles = priorManifest.map(_.files).getOrElse(Nil)
+    // ONE base-manifest read serves constraints and the spec carry
+    val base0 = openBaseOrEmpty(spark, root)
     // constraints are TABLE properties: they survive even replacing
     // commits (overwrite/compact), unlike the carried dirs/files — except
     // REPLACE TABLE, which re-declares the table from scratch
-    val checks =
-      if (dropConstraints) Map.empty[String, String]
-      else baseManifest.map(_.constraints).getOrElse(Map.empty)
-    val schema0 = evolvedSchema(spark, root, base, df, carryForward)
+    val base = if (dropConstraints) base0.copy(m = base0.m.copy(constraints = Map.empty)) else base0
+    val schema0 = evolvedSchema(None, df.schema)
     // the cluster spec is a TABLE property like constraints: replacing
     // commits (overwrite) re-apply the prior spec by name onto the new
     // schema — INSERT OVERWRITE must not silently un-cluster a table —
@@ -2322,39 +2298,20 @@ object SnapshotTable {
       case Some(spec) =>
         if (spec.isEmpty) schema0 else withClusterSpec(schemaFromJson(schema0), spec).json
       case None =>
-        baseManifest.flatMap(_.schemaJson).fold(schema0) { pj =>
-          val pspec = clusterSpecOf(schemaFromJson(pj))
+        base.schema.fold(schema0) { prior =>
+          val pspec = clusterSpecOf(prior)
           if (pspec.isEmpty) schema0 else withClusterSpec(schemaFromJson(schema0), pspec).json
         }
     }
-    // replacing commits rewrite every live file: dropped-column bytes are
-    // gone, the revival ledger resets; carried commits check + carry it
-    val dropped =
-      if (carryForward)
-        reviveDropped(priorManifest.map(_.dropped).getOrElse(Map.empty), schemaFromJson(schema))
-      else Map.empty[String, String]
     val (rel, n, stats) =
-      writeData(spark, root, clusterFor(df, schema), checks, mappingOf(schemaFromJson(schema)))
-    publish(
-      spark,
-      root,
-      Commit(
-        base.getOrElse(0) + 1,
-        action,
-        prior :+ rel,
-        n,
-        None,
-        Some(schema),
-        priorFiles ++ stats,
-        constraints = checks,
-        dropped = dropped,
-        masks = priorManifest.map(_.masks).getOrElse(Seq.empty)))
+      writeData(spark, root, clusterFor(df, schema), base.m.constraints, mappingOf(schemaFromJson(schema)))
+    publish(spark, root, base.commit(action, Nil, Seq(rel), stats, n, Nil, Some(schema), None, None, None))
   }
 
   /** Create the table with an initial snapshot (version 1). */
   def create(spark: SparkSession, root: String, df: DataFrame): Int = {
     require(latestVersion(spark, root).isEmpty, s"table at $root already exists")
-    commit(spark, root, df, "create", carryForward = false)
+    commit(spark, root, df, "create")
   }
 
   /** [[create]] with a DECLARED cluster spec (CREATE ... PARTITIONED BY):
@@ -2367,7 +2324,7 @@ object SnapshotTable {
       df: DataFrame,
       spec: Seq[(String, String)]): Int = {
     require(latestVersion(spark, root).isEmpty, s"table at $root already exists")
-    commit(spark, root, df, "create", carryForward = false, declaredSpec = Some(spec))
+    commit(spark, root, df, "create", declaredSpec = Some(spec))
   }
 
   /** `REPLACE TABLE [AS SELECT]` — re-declare the table in ONE atomic
@@ -2383,9 +2340,7 @@ object SnapshotTable {
       root: String,
       df: DataFrame,
       spec: Seq[(String, String)]): Int =
-    commit(
-      spark, root, df, "replace",
-      carryForward = false, declaredSpec = Some(spec), dropConstraints = true)
+    commit(spark, root, df, "replace", declaredSpec = Some(spec), dropConstraints = true)
 
   /** Re-prove `checks` (name → SQL) over already-written data `dirs`,
     * read in logical names through `schema`'s column mapping — for
@@ -2426,46 +2381,26 @@ object SnapshotTable {
     var enforced: Map[String, String] = Map.empty
     var attempts = 0
     while (true) {
-      val base = latestVersion(spark, root)
-      val priorManifest = base.map(readManifest(spark, root, _))
-      val checks = priorManifest.map(_.constraints).getOrElse(Map.empty)
+      val base = openBaseOrEmpty(spark, root)
+      val checks = base.m.constraints
       // evolve FIRST: the merge guards (type changes, physical-name
       // collisions) must fire before any bytes are written
-      val schemaEarly = evolvedSchema(spark, root, base, df, carryForward = true)
+      val schema = evolvedSchema(base.schema, df.schema)
       if (written.isEmpty) {
         written = Some(
-          writeData(
-            spark, root, clusterFor(df, schemaEarly), checks, mappingOf(schemaFromJson(schemaEarly))))
+          writeData(spark, root, clusterFor(df, schema), checks, mappingOf(schemaFromJson(schema))))
         enforced = checks
       } else if (checks != enforced) {
         // a racing commit changed the constraint set: re-validate the dir
         // against every check not already enforced AS THE SAME (name, sql)
         // PAIR — a same-named constraint with new text must re-prove too
-        reproveChecks(
-          spark, root, Seq(written.get._1), schemaFromJson(schemaEarly), checks.toSet -- enforced.toSet)
+        reproveChecks(spark, root, Seq(written.get._1), schemaFromJson(schema), checks.toSet -- enforced.toSet)
         enforced = checks
       }
       val (rel, n, stats) = written.get
-      val prior = priorManifest.map(_.dirs).getOrElse(Nil)
-      val priorFiles = priorManifest.map(_.files).getOrElse(Nil)
-      val schema = schemaEarly
-      val dropped =
-        reviveDropped(priorManifest.map(_.dropped).getOrElse(Map.empty), schemaFromJson(schema))
       try
-        return publish(
-          spark,
-          root,
-          Commit(
-            base.getOrElse(0) + 1,
-            "append",
-            prior :+ rel,
-            n,
-            None,
-            Some(schema),
-            priorFiles ++ stats,
-            constraints = checks,
-            dropped = dropped,
-            masks = priorManifest.map(_.masks).getOrElse(Seq.empty)))
+        return publish(spark, root, base.commit(
+          "append", base.m.dirs, Seq(rel), stats, n, Nil, Some(schema), None, None, None))
       catch {
         case e: ConcurrentCommitException =>
           attempts += 1
@@ -2514,16 +2449,13 @@ object SnapshotTable {
       appId: Option[String] = None): Int = {
     def committed(): Option[Int] = epochCommitted(spark, root, batchId, appId)
     committed().getOrElse {
-      val latest0 = latestVersion(spark, root)
-      val manifest0 = latest0.map(readManifest(spark, root, _))
-      val checks0 = manifest0.map(_.constraints).getOrElse(Map.empty)
-      val schemaJson0 = manifest0.flatMap(_.schemaJson)
-      val mapping0 = schemaJson0.map(j => mappingOf(schemaFromJson(j))).getOrElse(Map.empty)
+      val base0 = openBaseOrEmpty(spark, root)
+      val checks0 = base0.m.constraints
       // epoch appends honor the table's declared clustering exactly like
       // batch append (clusterFor) — without this, a long-running stream
       // into a PARTITIONED BY table silently degrades its file pruning
-      val clustered = schemaJson0.map(clusterFor(df, _)).getOrElse(df)
-      val (rel, n, stats) = writeData(spark, root, clustered, checks0, mapping0)
+      val clustered = base0.m.schemaJson.map(clusterFor(df, _)).getOrElse(df)
+      val (rel, n, stats) = writeData(spark, root, clustered, checks0, base0.mapping)
       publishEpochAppend(spark, root, Some(rel), n, stats, df.schema, checks0, batchId, appId, committed)
     }
   }
@@ -2552,22 +2484,18 @@ object SnapshotTable {
       appId: Option[String] = None): Int = {
     def committed(): Option[Int] = epochCommitted(spark, root, batchId, appId)
     committed().getOrElse {
-      val latest0 = latestVersion(spark, root)
-      val manifest0 = latest0.map(readManifest(spark, root, _))
-      val checks0 = manifest0.map(_.constraints).getOrElse(Map.empty)
-      val schemaJson0 = manifest0.flatMap(_.schemaJson)
-      val mapping0 = schemaJson0.map(j => mappingOf(schemaFromJson(j))).getOrElse(Map.empty)
-      val clusterCols0 = schemaJson0.map(j => clusterColsOf(schemaFromJson(j))).getOrElse(Seq.empty)
+      val base0 = openBaseOrEmpty(spark, root)
+      val checks0 = base0.m.constraints
+      val mapping0 = base0.mapping
+      val clusterCols0 = base0.schema.map(clusterColsOf).getOrElse(Seq.empty)
       // EMPTY epoch on an existing table with no schema delta (the trailing
       // batch every AvailableNow drain ships): the epoch needs only its
       // exactly-once (appId, batchId) marker — publishing it with the prior
       // dirs verbatim skips the rows=0 seed-dir write + stats scan the
       // DataFrame path pays. Schema-evolving or table-creating empty epochs
       // still fall through (the seed write is what establishes them).
-      if (staged.isEmpty && manifest0.isDefined &&
-        schemaJson0.exists(j =>
-          schemaFromJson(j) == schemaFromJson(
-            evolvedSchemaOf(spark, root, latest0, schema, carryForward = true)))) {
+      if (staged.isEmpty &&
+        base0.schema.exists(prior => prior == schemaFromJson(evolvedSchema(Some(prior), schema)))) {
         return publishEpochAppend(
           spark, root, rel = None, n = 0L, stats = Seq.empty, dfSchema = schema,
           checks0 = checks0, batchId = batchId, appId = appId, committed = committed)
@@ -2619,12 +2547,9 @@ object SnapshotTable {
       var enforced = checks0
       var attempts = 0
       while (result < 0) {
-        val base = latestVersion(spark, root)
-        val priorManifest = base.map(readManifest(spark, root, _))
-        val prior = priorManifest.map(_.dirs).getOrElse(Nil)
-        val priorFiles = priorManifest.map(_.files).getOrElse(Nil)
-        val schema = evolvedSchemaOf(spark, root, base, dfSchema, carryForward = true)
-        val checksNow = priorManifest.map(_.constraints).getOrElse(checks0)
+        val base = openBaseOrEmpty(spark, root)
+        val schema = evolvedSchema(base.schema, dfSchema)
+        val checksNow = base.m.constraints
         if (checksNow != enforced) {
           // a constraint raced in since the dir was validated: re-prove the
           // already-written data before claiming the new constraint set
@@ -2632,23 +2557,8 @@ object SnapshotTable {
           reproveChecks(spark, root, rel.toSeq, schemaFromJson(schema), checksNow.toSet -- enforced.toSet)
           enforced = checksNow
         }
-        try result = publish(
-          spark,
-          root,
-          Commit(
-            base.getOrElse(0) + 1,
-            "append",
-            prior ++ rel.toSeq,
-            n,
-            Some(batchId),
-            Some(schema),
-            priorFiles ++ stats,
-            constraints = checksNow,
-            dropped = reviveDropped(
-              priorManifest.map(_.dropped).getOrElse(Map.empty),
-              schemaFromJson(schema)),
-            masks = priorManifest.map(_.masks).getOrElse(Seq.empty),
-            appId = appId))
+        try result = publish(spark, root, base.commit(
+          "append", base.m.dirs, rel.toSeq, stats, n, Nil, Some(schema), Some(batchId), appId, None))
         catch {
           case e: ConcurrentCommitException =>
             committed().foreach(v => return v) // replayed epoch lost the race: done
@@ -2681,21 +2591,23 @@ object SnapshotTable {
 
   /** Replace the table contents atomically. */
   def overwrite(spark: SparkSession, root: String, df: DataFrame): Int =
-    commit(spark, root, df, "overwrite", carryForward = false)
+    commit(spark, root, df, "overwrite")
 
   /** Read a specific committed snapshot (time travel) with exactly the
     * schema recorded at that version: columns a later commit added do not
     * exist here, columns some older files lack read as null. Pre-schema
     * manifests (no recorded schema) fall back to footer mergeSchema. */
-  def readVersion(spark: SparkSession, root: String, v: Int): DataFrame = {
-    val m = readManifest(spark, root, v)
+  def readVersion(spark: SparkSession, root: String, v: Int): DataFrame =
+    readOf(spark, root, readManifest(spark, root, v))
+
+  /** [[readVersion]] of an already-parsed manifest. */
+  private def readOf(spark: SparkSession, root: String, m: Commit): DataFrame =
     if (m.masks.isEmpty) {
       val paths = m.dirs.map(d => new Path(dataRoot(root), d).toString)
       readTablePaths(spark, m.schemaJson.map(schemaFromJson), paths)
     } else
       // merge-on-read: apply the pending deletion masks at scan time
       readEntries(spark, root, m, m.schemaJson.map(schemaFromJson), fileEntries(m))
-  }
 
   /** ROLL BACK the table to the content of committed version `toVersion`
     * — as a NEW commit (Delta's RESTORE): the restore manifest re-lists
@@ -2719,21 +2631,15 @@ object SnapshotTable {
     * stream whose initial snapshot post-dates the restore target — for
     * exact deltas, consume `readChangeFeed`. */
   def restore(spark: SparkSession, root: String, toVersion: Int): Int = {
-    val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
-    if (toVersion == base) return base // already there: no commit
+    val cur = openBase(spark, root)
+    if (toVersion == cur.version) return cur.version // already there: no commit
     val target = readManifest(spark, root, toVersion) // loud if vacuumed
-    val cur = readManifest(spark, root, base)
     def physRows(m: Commit) = m.files.map(_.rows).sum
-    publish(
-      spark,
-      root,
-      target.copy(
-        version = base + 1,
-        action = "restore",
-        addedRows = physRows(target) - physRows(cur),
-        batchId = None,
-        ts = 0L,
-        cdc = None)) // capture describes ONE commit's delta — never inherited
+    // the restore commits over the TARGET's content, keeping all of it
+    val base = cur.copy(m = target)
+    publish(spark, root, base.commit(
+      "restore", target.dirs, Nil, Nil, physRows(target) - physRows(cur.m), Nil, target.schemaJson,
+      None, None, None))
   }
 
   /** The version visible at wall-clock `tsMillis` — the latest commit
@@ -2754,10 +2660,7 @@ object SnapshotTable {
 
   /** Read the latest snapshot. */
   def read(spark: SparkSession, root: String): DataFrame =
-    readVersion(
-      spark,
-      root,
-      latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root")))
+    readVersion(spark, root, latestOrFail(spark, root))
 
   /** An inclusive range predicate on one column for manifest-level data
     * skipping: `lower <= col <= upper`, either side open. Values: numbers
@@ -3173,7 +3076,7 @@ object SnapshotTable {
     * run by maintenance (e.g. every N commits, beside [[vacuum]]).
     * Overwrite-idempotent; readers pick it up via [[latestCheckpoint]]. */
   def checkpoint(spark: SparkSession, root: String): Int = {
-    val v = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
+    val v = latestOrFail(spark, root)
     writeCheckpoint(spark, root, readManifest(spark, root, v))
     v
   }
@@ -3238,15 +3141,11 @@ object SnapshotTable {
   /** The measured ~10⁵-file crossover (SCALING.md round-14 table): below
     * it the checkpoint's fixed Spark-job overhead loses to the driver
     * JSON parse, so auto-select stays on the JSON path even when a
-    * current checkpoint exists. Tunable via
-    * `spark.graft.checkpoint.autoReadMinFiles`. */
-  private[graft] def checkpointPreferred(spark: SparkSession, root: String, v: Int): Boolean = {
-    val minFiles = spark.conf
-      .getOption("spark.graft.checkpoint.autoReadMinFiles")
-      .map(_.toLong)
-      .getOrElse(100000L)
-    checkpointFileCount(fs(spark, root), root, v).forall(_ >= minFiles)
-  }
+    * current checkpoint exists. */
+  private val CheckpointReadMinFiles = 100000L
+
+  private[graft] def checkpointPreferred(spark: SparkSession, root: String, v: Int): Boolean =
+    checkpointFileCount(fs(spark, root), root, v).forall(_ >= CheckpointReadMinFiles)
 
   /** Latest version with a COMPLETE materialized checkpoint (its parquet
     * dir carries `_SUCCESS` — written LAST by [[publishDerivedDir]], so
@@ -3359,7 +3258,7 @@ object SnapshotTable {
     * the mask kernel reads only the surviving masked entries. Result ≡
     * [[readWhere]] on any table. */
   def readWhereCheckpointed(spark: SparkSession, root: String, bounds: Seq[Bound]): DataFrame = {
-    val v = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
+    val v = latestOrFail(spark, root)
     require(
       latestCheckpoint(spark, root).contains(v),
       s"no checkpoint at version $v; run SnapshotTable.checkpoint(spark, root) after committing")
@@ -3533,10 +3432,7 @@ object SnapshotTable {
 
   /** Latest-version Catalyst-integrated relation — see [[relationVersion]]. */
   def relation(spark: SparkSession, root: String): DataFrame =
-    relationVersion(
-      spark,
-      root,
-      latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root")))
+    relationVersion(spark, root, latestOrFail(spark, root))
 
   /** Latest-snapshot read with data skipping — see [[readVersionWhere]].
     * When a COMPLETE checkpoint exists at exactly the latest version
@@ -3550,7 +3446,7 @@ object SnapshotTable {
     * table keeps the fast path. Result is identical by construction
     * (same deadness kernel, same serde). */
   def readWhere(spark: SparkSession, root: String, bounds: Seq[Bound]): DataFrame = {
-    val v = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
+    val v = latestOrFail(spark, root)
     if (latestCheckpoint(spark, root).contains(v) && checkpointPreferred(spark, root, v))
       readWhereCheckpointedAt(spark, root, v, bounds)
     else readVersionWhere(spark, root, v, bounds)
@@ -3590,10 +3486,12 @@ object SnapshotTable {
     }
   }
 
-  private[graft] def countPlan(spark: SparkSession, root: String, v: Int, bounds: Seq[Bound]): CountPlan = {
-    val m = readManifest(spark, root, v)
+  private[graft] def countPlan(spark: SparkSession, root: String, v: Int, bounds: Seq[Bound]): CountPlan =
+    countPlanOf(readManifest(spark, root, v), bounds)
+
+  private def countPlanOf(m: Commit, bounds: Seq[Bound]): CountPlan = {
     val schema = m.schemaJson.map(schemaFromJson)
-    val plan = prunePlan(spark, root, v, bounds)
+    val plan = prunePlanOf(m, bounds)
     val keep = m.files.filter(f => plan.keep.contains(f.path))
     // a MASKED file's recorded row count exceeds its live rows: it can
     // never contribute a metadata-only count — route it to the scan side
@@ -3613,9 +3511,8 @@ object SnapshotTable {
     * every file lands in exactly one of {skipped: proven 0 matches,
     * whole: proven all-match, scan: counted physically}. */
   def countWhere(spark: SparkSession, root: String, bounds: Seq[Bound]): Long = {
-    val v = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
-    val m = readManifest(spark, root, v)
-    val plan = countPlan(spark, root, v, bounds)
+    val m = readManifest(spark, root, latestOrFail(spark, root))
+    val plan = countPlanOf(m, bounds)
     val scanned =
       if (plan.scanPaths.isEmpty) 0L
       else {
@@ -3634,25 +3531,29 @@ object SnapshotTable {
     * rather than lost rows. */
   def compact(spark: SparkSession, root: String, keyCol: String, nFiles: Int): Int = {
     import org.apache.spark.sql.functions.col
-    val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
-    val cur = readVersion(spark, root, base)
-    val baseManifest = readManifest(spark, root, base)
-    val carriedMapping =
-      baseManifest.schemaJson.map(j => mappingOf(schemaFromJson(j))).getOrElse(Map.empty)
-    val (rel, n, stats) = writeData(
-      spark,
-      root,
-      cur.repartitionByRange(nFiles, col(keyCol)).sortWithinPartitions(keyCol),
-      physicalOf = carriedMapping)
-    // a compact is data-identical, so it CARRIES the current schema rather
-    // than re-deriving it from the rewritten files. Range-clustering on
-    // keyCol is also what makes the per-file stats SELECTIVE: disjoint key
-    // ranges per file turn a key predicate into near-perfect file skipping.
-    val schema = baseManifest.schemaJson
-      .getOrElse(org.apache.spark.sql.types.StructType(cur.schema.map(_.copy(nullable = true))).json)
-    publish(spark, root, Commit(base + 1, "compact", Seq(rel), n, None, Some(schema), stats,
-      constraints = baseManifest.constraints))
+    val base = openBase(spark, root)
+    // Range-clustering on keyCol is what makes the per-file stats
+    // SELECTIVE: disjoint key ranges per file turn a key predicate into
+    // near-perfect file skipping.
+    val cur = readOf(spark, root, base.m)
+    rewriteAll(base, cur.repartitionByRange(nFiles, col(keyCol)).sortWithinPartitions(keyCol))
   }
+
+  /** Publish the full compaction `df` of `base`'s rows: it keeps no base
+    * entry (masks and the dropped-column ledger clear) and, being
+    * data-identical, CARRIES the current schema rather than re-deriving it
+    * from the rewritten files, with a net row delta of 0. */
+  private def rewriteAll(base: Base, df: DataFrame): Int = {
+    val (rel, _, stats) = writeData(base.spark, base.root, df, physicalOf = base.mapping)
+    publish(base.spark, base.root, base.commit(
+      "compact", Nil, Seq(rel), stats, 0L, Nil, Some(schemaJsonOf(base, df)), None, None, None))
+  }
+
+  /** The base's recorded schema, or — on a pre-schema manifest — the
+    * nullable schema of its rows as read (`df`). */
+  private def schemaJsonOf(base: Base, df: => DataFrame): String =
+    base.m.schemaJson.getOrElse(
+      org.apache.spark.sql.types.StructType(df.schema.map(_.copy(nullable = true))).json)
 
   /** PARTIAL compaction — `OPTIMIZE ... WHERE`: re-cluster ONLY the files
     * whose stats intersect `bounds` (plus stat-less dirs, conservatively),
@@ -3721,46 +3622,23 @@ object SnapshotTable {
     require(smallBytes > 0 && targetBytes >= smallBytes,
       "need 0 < smallBytes <= targetBytes (a 'small' file must fit its target)")
     require(minFiles >= 2, "compacting fewer than 2 files cannot shrink the file count")
-    val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
-    val m = readManifest(spark, root, base)
-    val schema = m.schemaJson.map(schemaFromJson)
+    val base = openBase(spark, root)
+    val m = base.m
     val uncovered = prunePlanOf(m, Seq.empty).uncoveredDirs
     // unsized entries (bytes < 0, pre-size manifests) are NOT small —
     // size unknown means carry, the same conservatism the planner applies
     val (small, big) = m.files.partition(f => f.bytes >= 0 && f.bytes < smallBytes)
-    if (small.size < minFiles) return base
-    val src = readEntries(spark, root, m, schema, small.map(_.path))
+    if (small.size < minFiles) return base.version
+    val src = base.read(small.map(_.path))
     val nOut = math.max(1, math.ceil(small.map(_.bytes).sum / targetBytes.toDouble).toInt)
-    val (rel, n, stats) = writeData(
-      spark, root, src.repartition(nOut), m.constraints, schema.map(mappingOf).getOrElse(Map.empty))
-    // masks survive on untouched files AND on stat-less dirs (neither was
-    // rewritten — dropping a dir entry's mask would resurrect its rows);
-    // the rewritten small files' masks are satisfied and cleared
-    val untouchedSet = big.map(_.path).toSet ++ uncovered.toSet
-    val keptMasks = m.masks
-      .map(mk => shrinkMask(mk, untouchedSet))
-      .filter(_.entries.nonEmpty)
-    val schemaJson = m.schemaJson.getOrElse(
-      org.apache.spark.sql.types
-        .StructType(readVersion(spark, root, base).schema.map(_.copy(nullable = true)))
-        .json)
-    publish(
-      spark,
-      root,
-      Commit(
-        base + 1,
-        "compact",
-        (big.map(_.path) ++ uncovered) ++ (if (n > 0) Seq(rel) else Nil),
-        // data-identical on live rows BY CONSTRUCTION (the write is the
-        // mask-aware read of the packed files) — the net delta is zero;
-        // computing it would cost a full second scan of the small files
-        0L,
-        None,
-        Some(schemaJson),
-        big ++ stats,
-        constraints = m.constraints,
-        dropped = m.dropped,
-        masks = keptMasks))
+    val (rel, n, stats) = writeData(spark, root, src.repartition(nOut), m.constraints, base.mapping)
+    // untouched files AND stat-less dirs keep their masks (neither was
+    // rewritten); the rewritten small files' masks are satisfied. The net
+    // delta is zero BY CONSTRUCTION (the write is the mask-aware read of
+    // the packed files) — computing it would cost a second scan.
+    publish(spark, root, base.commit(
+      "compact", big.map(_.path) ++ uncovered, if (n > 0) Seq(rel) else Nil, stats, 0L, Nil,
+      Some(schemaJsonOf(base, readOf(spark, root, m))), None, None, None))
   }
 
   /** Multi-column clustering compaction — the OPTIMIZE ZORDER core. A
@@ -3797,8 +3675,8 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.{col, conv, datediff, encode, hex, lit, rpad, substring, to_date, udf, unix_micros}
     import org.apache.spark.sql.types._
     require(cols.nonEmpty && cols.size <= 8, s"z-order over 1..8 columns, got ${cols.size}")
-    val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
-    val cur = readVersion(spark, root, base)
+    val base = openBase(spark, root)
+    val cur = readOf(spark, root, base.m)
     val bits = math.min(8, 63 / cols.size)
     val nCuts = (1 << bits) - 1
     def axis(name: String): org.apache.spark.sql.Column = {
@@ -3855,13 +3733,7 @@ object SnapshotTable {
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop(axisNames :+ "__z": _*)
-    val zManifest = readManifest(spark, root, base)
-    val zMapping = zManifest.schemaJson.map(j => mappingOf(schemaFromJson(j))).getOrElse(Map.empty)
-    val (rel, n, stats) = writeData(spark, root, clustered, physicalOf = zMapping)
-    val schema = zManifest.schemaJson
-      .getOrElse(org.apache.spark.sql.types.StructType(cur.schema.map(_.copy(nullable = true))).json)
-    publish(spark, root, Commit(base + 1, "compact", Seq(rel), n, None, Some(schema), stats,
-      constraints = zManifest.constraints))
+    rewriteAll(base, clustered)
   }
 
   // ──────────────────── row-level DML (copy-on-write) ────────────────────
@@ -3886,10 +3758,10 @@ object SnapshotTable {
       // data-identical
       capture: Option[DataFrame => DataFrame] = None)(
       transform: (DataFrame, Seq[FileStat]) => DataFrame): Int = {
-    val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
-    val m = readManifest(spark, root, base)
-    val schema = m.schemaJson.map(schemaFromJson)
-    val plan = prunePlan(spark, root, base, bounds)
+    val base = openBase(spark, root)
+    val m = base.m
+    val schema = base.schema
+    val plan = prunePlanOf(m, bounds)
     val skippedSet = plan.skipped.toSet
     val keepSet = plan.keep.toSet
     val untouched = m.files.filter(f => skippedSet.contains(f.path))
@@ -3904,8 +3776,7 @@ object SnapshotTable {
     // a no-op, not an empty version bump — decided HERE, on the same plan
     // the rewrite uses (no separate pre-check, no TOCTOU window)
     if (skipIfNoWork && rewrite.isEmpty && dropped.isEmpty && plan.uncoveredDirs.isEmpty)
-      return base
-    val masked = maskedEntrySet(m)
+      return base.version
     val scanPaths = rewrite.map(_.path) ++ plan.uncoveredDirs
     // write-time CDC ([[Cdc]]): with capture on, the commit records the
     // delta of exactly the files it scans; wholly-dropped files stay
@@ -3920,63 +3791,20 @@ object SnapshotTable {
         // rewrites read THROUGH pending masks — a copy-on-write pass over
         // a merge-on-read table must not resurrect masked rows (the
         // rewritten files' masks are thereby satisfied and cleared below)
-        val src = readEntries(spark, root, m, schema, scanPaths)
-        val before =
-          if (plan.uncoveredDirs.isEmpty && !rewrite.exists(f => masked(f.path)))
-            rewrite.map(_.rows).sum
-          else src.count()
-        cdcRec = cdcRec.map(_.copy(chDir = Some(writeCdcSidecar(
-          spark, root, capture.get(src), schema.map(mappingOf).getOrElse(Map.empty)))))
-        val (rel, n, stats) = writeData(
-          spark, root, transform(src, rewrite), m.constraints, schema.map(mappingOf).getOrElse(Map.empty))
+        val src = base.read(scanPaths)
+        val before = base.liveRows(scanPaths, src)
+        cdcRec = cdcRec.map(_.copy(chDir = Some(writeCdcSidecar(spark, root, capture.get(src), base.mapping))))
+        val (rel, n, stats) = writeData(spark, root, transform(src, rewrite), m.constraints, base.mapping)
         // an all-rows-deleted rewrite leaves no dir (the empty orphan vacuums away)
         if (n == 0) (Seq.empty[String], Seq.empty[FileStat], -before)
         else (Seq(rel), stats, n - before)
       }
-    val schemaJson = m.schemaJson.getOrElse(
-      org.apache.spark.sql.types
-        .StructType(readVersion(spark, root, base).schema.map(_.copy(nullable = true)))
-        .json)
     // masks survive only on the carried-forward files; rewritten/dropped
     // entries leave their masks (satisfied), emptied masks disappear and
     // their sidecars become vacuumable
-    val untouchedSet = untouched.map(_.path).toSet
-    val keptMasks = m.masks
-      .map(mk => shrinkMask(mk, untouchedSet))
-      .filter(_.entries.nonEmpty)
-    publish(
-      spark,
-      root,
-      Commit(
-        base + 1,
-        action,
-        untouched.map(_.path) ++ newDirs,
-        delta - droppedLiveRows(spark, root, m, schema, dropped),
-        None,
-        Some(schemaJson),
-        untouched ++ newStats,
-        constraints = m.constraints,
-        dropped = m.dropped, // untouched files still carry dropped-column bytes
-        masks = keptMasks,
-        cdc = cdcRec))
-  }
-
-  /** Live rows of wholly-dropped files, for net-delta accounting: a
-    * CLEAN file's recorded rows are its live rows; a MASKED file's
-    * physical rows exceed its live rows, so blindly subtracting the
-    * recorded count would overstate removals in addedRows history. The
-    * masked drops' live rows count mask-aware — cost ∝ those files. */
-  private def droppedLiveRows(
-      spark: SparkSession,
-      root: String,
-      m: Commit,
-      schema: Option[org.apache.spark.sql.types.StructType],
-      dropped: Seq[FileStat]): Long = {
-    val masked = maskedEntrySet(m)
-    val (maskedDropped, cleanDropped) = dropped.partition(f => masked(f.path))
-    cleanDropped.map(_.rows).sum +
-      (if (maskedDropped.isEmpty) 0L
-       else readEntries(spark, root, m, schema, maskedDropped.map(_.path)).count())
+    publish(spark, root, base.commit(
+      action, untouched.map(_.path), newDirs, newStats, delta - base.droppedRows(dropped), Nil,
+      Some(schemaJsonOf(base, readOf(spark, root, m))), None, None, cdcRec))
   }
 
   /** Delete the rows matching `bounds` — Delta-style copy-on-write DML with
@@ -4145,13 +3973,13 @@ object SnapshotTable {
       appId: Option[String] = None): Int = {
     import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "mergeUpsert needs at least one key column")
-    val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
-    val m = readManifest(spark, root, base)
-    val priorSchema = m.schemaJson.map(schemaFromJson)
-    val evolved = evolvedSchema(spark, root, Some(base), source, carryForward = true)
+    val base = openBase(spark, root)
+    val m = base.m
+    val priorSchema = base.schema
+    val evolved = evolvedSchema(priorSchema, source.schema)
     val evolvedMapping = mappingOf(schemaFromJson(evolved))
     val (srcRel, nSrc, srcStats) = writeData(spark, root, source, m.constraints, evolvedMapping)
-    if (nSrc == 0) return base // empty upsert: no-op; the orphan dir vacuums away
+    if (nSrc == 0) return base.version // empty upsert: no-op; the orphan dir vacuums away
     // read the written source back in LOGICAL names (the dir carries only
     // the source's own columns; restrict the projection to those)
     val srcSchema = org.apache.spark.sql.types.StructType(
@@ -4166,10 +3994,9 @@ object SnapshotTable {
     // from the manifest): run the real prune with no bounds — the
     // touched-file discovery then finds zero matches and only stat-less
     // dirs pay an identity rewrite
-    val plan = prunePlan(spark, root, base, if (allKeysNull) Seq.empty else bounds)
+    val plan = prunePlanOf(m, if (allKeysNull) Seq.empty else bounds)
     // stage 2: exact touched-file discovery over the candidates
     val touched = touchedFiles(spark, root, m, priorSchema, plan.keep, keyCols, srcKeys)
-    val masked = maskedEntrySet(m)
     val untouched = m.files.filterNot(f => touched.contains(f.path))
     val rewritePaths = touched.toSeq.sorted ++ plan.uncoveredDirs
     // write-time CDC ([[Cdc]]): the source dir IS the commit's insert set
@@ -4183,42 +4010,22 @@ object SnapshotTable {
     val (survDirs, survStats, replaced) =
       if (rewritePaths.isEmpty) (Seq.empty[String], Seq.empty[FileStat], 0L)
       else {
-        val tgt = readEntries(spark, root, m, priorSchema, rewritePaths)
-        val before =
-          if (plan.uncoveredDirs.isEmpty && !touched.exists(masked))
-            m.files.filter(f => touched.contains(f.path)).map(_.rows).sum
-          else tgt.count()
+        val tgt = base.read(rewritePaths)
+        val before = base.liveRows(rewritePaths, tgt)
         cdcRec = cdcRec.map(_.copy(chDir = Some(writeCdcSidecar(
           spark, root,
           tgt.join(srcKeys, keyCols, "left_semi")
             .withColumn(CdcTypeCol, org.apache.spark.sql.functions.lit("delete")),
-          priorSchema.map(mappingOf).getOrElse(Map.empty)))))
+          base.mapping))))
         val survivors = tgt.join(srcKeys, keyCols, "left_anti")
         val (rel, n, stats) = writeData(spark, root, survivors, m.constraints, evolvedMapping)
         if (n == 0) (Seq.empty[String], Seq.empty[FileStat], before)
         else (Seq(rel), stats, before - n)
       }
     // masks carry on untouched files only; rewritten entries leave theirs
-    val untouchedSet = untouched.map(_.path).toSet
-    val keptMasks = m.masks
-      .map(mk => shrinkMask(mk, untouchedSet))
-      .filter(_.entries.nonEmpty)
-    publish(
-      spark,
-      root,
-      Commit(
-        base + 1,
-        "merge",
-        (untouched.map(_.path) ++ survDirs) :+ srcRel,
-        nSrc - replaced,
-        batchId,
-        Some(evolved),
-        untouched ++ survStats ++ srcStats,
-        constraints = m.constraints,
-        dropped = reviveDropped(m.dropped, schemaFromJson(evolved)),
-        masks = keptMasks,
-        cdc = cdcRec,
-        appId = appId))
+    publish(spark, root, base.commit(
+      "merge", untouched.map(_.path), survDirs :+ srcRel, survStats ++ srcStats, nSrc - replaced, Nil,
+      Some(evolved), batchId, appId, cdcRec))
   }
 
   /** EXACTLY-ONCE streaming UPSERT — the `foreachBatch` CDC-apply
@@ -4393,10 +4200,10 @@ object SnapshotTable {
         }
       }
     }
-    val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
-    val m = readManifest(spark, root, base)
-    val priorSchema = m.schemaJson.map(schemaFromJson)
-    val evolved = evolvedSchema(spark, root, Some(base), source, carryForward = true)
+    val base = openBase(spark, root)
+    val m = base.m
+    val priorSchema = base.schema
+    val evolved = evolvedSchema(priorSchema, source.schema)
     val evolvedStruct = schemaFromJson(evolved)
     val evolvedMapping = mappingOf(evolvedStruct)
     keyCols.foreach(k =>
@@ -4427,7 +4234,7 @@ object SnapshotTable {
     val (srcRel, nSrc, _) = writeData(spark, root, source, Map.empty, evolvedMapping)
     // an empty source matches and inserts nothing — but with BY SOURCE
     // clauses every target row is unmatched, so the merge must still run
-    if (nSrc == 0 && notMatchedBySource.isEmpty) return base
+    if (nSrc == 0 && notMatchedBySource.isEmpty) return base.version
     val srcStored = readTablePaths(
       spark,
       Some(org.apache.spark.sql.types.StructType(
@@ -4443,9 +4250,8 @@ object SnapshotTable {
     // stage 1: zero-I/O envelope prune on the source's key ranges
     val bounds = keyEnvelope(srcNorm, keyCols)
     val allKeysNull = bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)
-    val plan = prunePlan(spark, root, base, if (allKeysNull) Seq.empty else bounds)
+    val plan = prunePlanOf(m, if (allKeysNull) Seq.empty else bounds)
     val candidates = plan.keep ++ plan.uncoveredDirs
-    def readAs(paths: Seq[String]): DataFrame = readEntries(spark, root, m, priorSchema, paths)
     // stage 2: exact touched-file discovery (matched clauses only)
     val touched =
       if (matched.isEmpty || nSrc == 0) Set.empty[String]
@@ -4588,7 +4394,7 @@ object SnapshotTable {
     val survivorsOpt: Option[DataFrame] =
       if (rewritePaths.isEmpty) None
       else {
-        val tAl = padTo(readAs(rewritePaths)).alias(targetAlias)
+        val tAl = padTo(base.read(rewritePaths)).alias(targetAlias)
         val sAl = srcNorm.withColumn(matchedTag, lit(true)).alias(sourceAlias)
         val joinCond = keyCols
           .map(k => col(s"$targetAlias.`$k`") === col(s"$sourceAlias.`$k`"))
@@ -4657,7 +4463,7 @@ object SnapshotTable {
           if (candidates.isEmpty)
             srcKeys.limit(0)
           else
-            readEntries(spark, root, m, priorSchema, candidates).select(keyCols.map(q): _*)
+            base.read(candidates).select(keyCols.map(q): _*)
         val unmatched = srcNorm.alias(sourceAlias).join(tgtKeys, keyCols, "left_anti")
         // INSERT clauses see the SOURCE only — bare refs qualify there
         val applied = firstApplicable(
@@ -4679,16 +4485,11 @@ object SnapshotTable {
         Some(unmatched.filter(anyApplies).select(outCols.toSeq: _*))
       }
     val pieces = survivorsOpt.toSeq ++ insertsOpt.toSeq
-    if (pieces.isEmpty) return base // no rewrite, no insert clause output: no-op
+    if (pieces.isEmpty) return base.version // no rewrite, no insert clause output: no-op
     val outDf = pieces.reduce(_ unionByName _)
-    val masked = maskedEntrySet(m)
-    val before =
-      if (rewritePaths.isEmpty) 0L
-      else if (plan.uncoveredDirs.isEmpty && !rewriteSet.exists(masked))
-        m.files.filter(f => rewriteSet.contains(f.path)).map(_.rows).sum
-      else readAs(rewritePaths).count()
+    val before = base.liveRows(rewritePaths, base.read(rewritePaths))
     val (rel, n, stats) = writeData(spark, root, outDf, m.constraints, evolvedMapping)
-    if (rewritePaths.isEmpty && n == 0) return base // nothing matched a clause: no-op
+    if (rewritePaths.isEmpty && n == 0) return base.version // nothing matched a clause: no-op
     // write-time CDC ([[Cdc]]): an insert-only merge's new dir is PURE
     // inserts (referenced, not copied); a rewriting merge captures its
     // per-clause delta in ONE sidecar — fired deletes as pre-images,
@@ -4707,37 +4508,15 @@ object SnapshotTable {
           tagged.reduceOption(_ unionByName _).map(writeCdcSidecar(spark, root, _, evolvedMapping)),
           Seq.empty))
       }
-    val untouched =
-      if (rewritePaths.isEmpty) m.files else m.files.filterNot(f => rewriteSet.contains(f.path))
-    val untouchedSet = untouched.map(_.path).toSet
-    // no rewrite (insert-only merge): every mask carries VERBATIM —
-    // untouchedSet holds only stat-covered file paths, so filtering
-    // through it would silently drop mask entries that reference
-    // stat-less DIR entries and resurrect their deleted rows. With a
-    // rewrite, uncovered dirs are in the rewrite set, so dropping their
-    // (satisfied) mask entries is exactly right.
-    val keptMasks =
-      if (rewritePaths.isEmpty) m.masks
-      else
-        m.masks
-          .map(mk => shrinkMask(mk, untouchedSet))
-          .filter(_.entries.nonEmpty)
-    val carriedUncovered = if (rewritePaths.isEmpty) plan.uncoveredDirs else Seq.empty
-    publish(
-      spark,
-      root,
-      Commit(
-        base + 1,
-        "merge",
-        (untouched.map(_.path) ++ carriedUncovered) ++ (if (n > 0) Seq(rel) else Nil),
-        n - before,
-        batchId,
-        Some(evolved),
-        untouched ++ stats,
-        constraints = m.constraints,
-        dropped = reviveDropped(m.dropped, evolvedStruct),
-        masks = keptMasks,
-        cdc = cdcRec))
+    // no rewrite (insert-only merge): every entry — stat-less dirs too —
+    // carries with its masks; a rewrite covers the uncovered dirs, whose
+    // (satisfied) mask entries then drop
+    val kept =
+      if (rewritePaths.isEmpty) m.files.map(_.path) ++ plan.uncoveredDirs
+      else m.files.map(_.path).filterNot(rewriteSet)
+    publish(spark, root, base.commit(
+      "merge", kept, if (n > 0) Seq(rel) else Nil, stats, n - before, Nil, Some(evolved),
+      batchId, None, cdcRec))
   }
 
   /** Merge-on-read MATCHED-DELETE — `WHEN MATCHED THEN DELETE` with zero
@@ -4753,37 +4532,28 @@ object SnapshotTable {
   def deleteMatchedMor(spark: SparkSession, root: String, source: DataFrame, keyCols: Seq[String]): Int = {
     import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "deleteMatchedMor needs at least one key column")
-    val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
-    val m = readManifest(spark, root, base)
-    val schema = m.schemaJson
-      .map(schemaFromJson)
-      .getOrElse(sys.error("merge-on-read DML needs a schema-recording manifest"))
+    val base = openBase(spark, root)
+    val schema = morSchema(base)
     keyCols.foreach(k =>
       require(schema.fieldNames.contains(k), s"no key column '$k' in table schema"))
     val srcKeys = source.select(keyCols.map(k => col("`" + k + "`")): _*).na.drop("any").distinct()
     val bounds = keyEnvelope(srcKeys, keyCols)
-    if (bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)) return base // no usable keys
-    val mask = keysMask(spark, root, m, Some(schema), keyCols, bounds, srcKeys, None)
-    if (mask.isEmpty) return base // stats prove no file can hold a matched key
-    publish(
-      spark,
-      root,
-      Commit(
-        base + 1,
-        "mor-delete",
-        m.dirs,
-        -mask.flatMap(_.maskedRows).sum,
-        None,
-        m.schemaJson,
-        m.files,
-        constraints = m.constraints,
-        dropped = m.dropped,
-        masks = m.masks ++ mask))
+    if (bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)) return base.version // no usable keys
+    val mask = keysMask(base, Some(schema), keyCols, bounds, srcKeys, None)
+    if (mask.isEmpty) return base.version // stats prove no file can hold a matched key
+    publish(spark, root, base.commit(
+      "mor-delete", base.m.dirs, Nil, Nil, -mask.flatMap(_.maskedRows).sum, mask.toSeq, base.m.schemaJson,
+      None, None, None))
   }
+
+  /** The recorded schema merge-on-read DML needs (loud on a pre-schema
+    * manifest: masks are typed through it). */
+  private def morSchema(base: Base): org.apache.spark.sql.types.StructType =
+    base.schema.getOrElse(sys.error("merge-on-read DML needs a schema-recording manifest"))
 
   /** The keys-mask step of every key-driven merge-on-read commit
     * ([[deleteMatchedMor]], [[mergeUpsertMor]], and [[rebase]]'s replay
-    * of both): prune `m`'s files through the key envelope `bounds`; when
+    * of both): prune the base's files through the key envelope `bounds`; when
     * a candidate survives, land `keys` — DISTINCT complete key tuples in
     * logical names — as the key-tombstone sidecar (or re-reference the
     * recorded `keyDir`, whose frame `keys` then is), and count the live
@@ -4793,15 +4563,14 @@ object SnapshotTable {
     * A key column `schema` lacks is brand new: no row carries it, so the
     * mask provably hides nothing — exact without a read. */
   private def keysMask(
-      spark: SparkSession,
-      root: String,
-      m: Commit,
+      base: Base,
       schema: Option[org.apache.spark.sql.types.StructType],
       keyCols: Seq[String],
       bounds: Seq[Bound],
       keys: DataFrame,
       keyDir: Option[String]): Option[Mask] = {
     import org.apache.spark.sql.functions.col
+    val Base(spark, root, _, m) = base
     val plan = prunePlanOf(m, bounds)
     val entries = plan.keep ++ plan.uncoveredDirs
     if (entries.isEmpty) None
@@ -4829,19 +4598,14 @@ object SnapshotTable {
   /** The shared pred-mask bookkeeping of [[deleteWhereMor]] and
     * [[updateWhereMor]]: stats-proven all-match candidates DROP (their
     * live rows are entirely removed/rewritten), boundary candidates and
-    * stat-less dirs gain the new pred mask, provably-unmatched files
-    * carry untouched, and existing masks shed their dropped entries. */
-  private final case class MorPlan(
-      droppedWhole: Seq[FileStat],
-      survivors: Seq[FileStat],
-      uncovered: Seq[String],
-      masks: Seq[Mask])
+    * stat-less dirs gain the new pred mask (`maskEntries`, possibly
+    * none), and every other entry — listed file by file — is kept. */
+  private final case class MorPlan(droppedWhole: Seq[FileStat], kept: Seq[String], maskEntries: Seq[String])
 
   private def morMaskPlan(
       m: Commit,
       schema: org.apache.spark.sql.types.StructType,
       bounds: Seq[Bound],
-      encoded: Seq[MaskBound],
       plan: PrunePlan): MorPlan = {
     val keepSet = plan.keep.toSet
     val candidates = m.files.filter(f => keepSet(f.path))
@@ -4849,15 +4613,10 @@ object SnapshotTable {
     // files (live rows ⊆ physical rows): still droppable with zero I/O
     val (droppedWhole, toMask) = candidates.partition(whollyMatches(Some(schema), bounds))
     val droppedSet = droppedWhole.map(_.path).toSet
-    val survivors = m.files.filterNot(f => droppedSet(f.path))
-    val maskEntries = toMask.map(_.path) ++ plan.uncoveredDirs
-    val keptMasks = m.masks
-      .map(mk => shrinkMask(mk, e => !droppedSet(e)))
-      .filter(_.entries.nonEmpty)
-    val newMasks =
-      if (maskEntries.nonEmpty) keptMasks :+ Mask("pred", maskEntries, predBounds = encoded)
-      else keptMasks
-    MorPlan(droppedWhole, survivors, plan.uncoveredDirs, newMasks)
+    MorPlan(
+      droppedWhole,
+      m.files.map(_.path).filterNot(droppedSet) ++ plan.uncoveredDirs,
+      toMask.map(_.path) ++ plan.uncoveredDirs)
   }
 
   /** Merge-on-read DELETE — the scattered/DV economics copy-on-write
@@ -4877,41 +4636,23 @@ object SnapshotTable {
     * metadata-count. */
   def deleteWhereMor(spark: SparkSession, root: String, bounds: Seq[Bound]): Int = {
     require(bounds.nonEmpty, "deleteWhereMor with no bounds would drop the whole table; use overwrite")
-    val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
-    val m = readManifest(spark, root, base)
-    val schema = m.schemaJson
-      .map(schemaFromJson)
-      .getOrElse(sys.error("merge-on-read DML needs a schema-recording manifest"))
+    val base = openBase(spark, root)
+    val m = base.m
+    val schema = morSchema(base)
     val encoded = encodeMaskBounds(schema, bounds) // loud BEFORE any state change
-    val mp = morMaskPlan(m, schema, bounds, encoded, prunePlanOf(m, bounds))
+    val mp = morMaskPlan(m, schema, bounds, prunePlanOf(m, bounds))
     // exact accounting: the new mask records the live rows it hides and
     // addedRows becomes the exact delta — one bounded counting read of
     // only the BOUNDARY candidates (whole-drops stay stat-only, and a
     // masked whole-drop counts its live rows like dmlRewrite does)
-    val oldIds = m.masks.map(_.id).toSet
-    val newEntries = mp.masks.filterNot(mk => oldIds(mk.id)).flatMap(_.entries)
     val maskedCount =
-      if (newEntries.isEmpty) 0L
-      else
-        readEntries(spark, root, m, Some(schema), newEntries)
-          .filter(matchCol(bounds))
-          .count()
-    val addedRows = -(droppedLiveRows(spark, root, m, Some(schema), mp.droppedWhole) + maskedCount)
-    val masksFinal = mp.masks.map(mk => if (oldIds(mk.id)) mk else mk.copy(maskedRows = Some(maskedCount)))
-    publish(
-      spark,
-      root,
-      Commit(
-        base + 1,
-        "mor-delete",
-        mp.survivors.map(_.path) ++ mp.uncovered,
-        addedRows,
-        None,
-        m.schemaJson,
-        mp.survivors,
-        constraints = m.constraints,
-        dropped = m.dropped,
-        masks = masksFinal))
+      if (mp.maskEntries.isEmpty) 0L
+      else base.read(mp.maskEntries).filter(matchCol(bounds)).count()
+    val mask = mp.maskEntries.headOption.map(_ =>
+      Mask("pred", mp.maskEntries, predBounds = encoded, maskedRows = Some(maskedCount)))
+    publish(spark, root, base.commit(
+      "mor-delete", mp.kept, Nil, Nil, -(base.droppedRows(mp.droppedWhole) + maskedCount),
+      mask.toSeq, m.schemaJson, None, None, None))
   }
 
   /** Merge-on-read UPDATE — write cost ∝ MATCHED rows, zero file
@@ -4933,11 +4674,9 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.col
     require(bounds.nonEmpty, "updateWhereMor needs a predicate; for all rows use overwrite")
     require(set.nonEmpty, "updateWhereMor needs at least one SET column")
-    val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
-    val m = readManifest(spark, root, base)
-    val schema = m.schemaJson
-      .map(schemaFromJson)
-      .getOrElse(sys.error("merge-on-read DML needs a schema-recording manifest"))
+    val base = openBase(spark, root)
+    val m = base.m
+    val schema = morSchema(base)
     val encoded = encodeMaskBounds(schema, bounds) // loud BEFORE any state change
     set.keys.foreach { name =>
       require(schema.fieldNames.contains(name), s"updateWhereMor SET column '$name' is not in the table schema")
@@ -4953,28 +4692,17 @@ object SnapshotTable {
       }
     }.toSeq: _*)
     val (rel, n, stats) = writeData(spark, root, updated, m.constraints, mappingOf(schema))
-    if (n == 0) return base // nothing matched: no-op (the empty orphan dir vacuums away)
-    val mp = morMaskPlan(m, schema, bounds, encoded, plan)
+    if (n == 0) return base.version // nothing matched: no-op (the empty orphan dir vacuums away)
+    val mp = morMaskPlan(m, schema, bounds, plan)
     // the writer already counted the matched rows (it wrote them): the new
     // mask hides exactly those minus the whole-dropped files' live rows —
     // free exactness (only a masked whole-drop needs a counting read)
-    val oldIds = m.masks.map(_.id).toSet
-    val droppedLive = droppedLiveRows(spark, root, m, Some(schema), mp.droppedWhole)
-    val masksFinal = mp.masks.map(mk => if (oldIds(mk.id)) mk else mk.copy(maskedRows = Some(n - droppedLive)))
-    publish(
-      spark,
-      root,
-      Commit(
-        base + 1,
-        "mor-update",
-        (mp.survivors.map(_.path) ++ mp.uncovered) :+ rel,
-        0L, // an update is row-neutral
-        None,
-        m.schemaJson,
-        mp.survivors ++ stats,
-        constraints = m.constraints,
-        dropped = m.dropped,
-        masks = masksFinal))
+    val hidden = n - base.droppedRows(mp.droppedWhole)
+    val mask = mp.maskEntries.headOption.map(_ =>
+      Mask("pred", mp.maskEntries, predBounds = encoded, maskedRows = Some(hidden)))
+    // an update is row-neutral
+    publish(spark, root, base.commit(
+      "mor-update", mp.kept, Seq(rel), stats, 0L, mask.toSeq, m.schemaJson, None, None, None))
   }
 
   /** Merge-on-read MERGE — the SCATTERED-KEY upsert whose copy-on-write
@@ -4999,13 +4727,11 @@ object SnapshotTable {
       appId: Option[String] = None): Int = {
     import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "mergeUpsertMor needs at least one key column")
-    val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
-    val m = readManifest(spark, root, base)
-    require(m.schemaJson.isDefined, "merge-on-read DML needs a schema-recording manifest")
-    val evolved = evolvedSchema(spark, root, Some(base), source, carryForward = true)
+    val base = openBase(spark, root)
+    val evolved = evolvedSchema(Some(morSchema(base)), source.schema)
     val evolvedMapping = mappingOf(schemaFromJson(evolved))
-    val (srcRel, nSrc, srcStats) = writeData(spark, root, source, m.constraints, evolvedMapping)
-    if (nSrc == 0) return base // empty upsert: no-op; the orphan dir vacuums away
+    val (srcRel, nSrc, srcStats) = writeData(spark, root, source, base.m.constraints, evolvedMapping)
+    if (nSrc == 0) return base.version // empty upsert: no-op; the orphan dir vacuums away
     val srcSchema = org.apache.spark.sql.types.StructType(
       schemaFromJson(evolved).fields.filter(f => source.columns.contains(f.name)))
     val srcDf = readTablePaths(spark, Some(srcSchema), Seq(new Path(dataRoot(root), srcRel).toString))
@@ -5018,23 +4744,11 @@ object SnapshotTable {
       if (bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)) None
       else
         keysMask(
-          spark, root, m, m.schemaJson.map(schemaFromJson), keyCols, bounds,
+          base, base.schema, keyCols, bounds,
           srcDf.select(keyCols.map(k => col("`" + k + "`")): _*).na.drop("any").distinct(), None)
-    publish(
-      spark,
-      root,
-      Commit(
-        base + 1,
-        "mor-merge",
-        m.dirs :+ srcRel,
-        nSrc - newMask.flatMap(_.maskedRows).sum,
-        batchId,
-        Some(evolved),
-        m.files ++ srcStats,
-        constraints = m.constraints,
-        dropped = reviveDropped(m.dropped, schemaFromJson(evolved)),
-        masks = m.masks ++ newMask,
-        appId = appId))
+    publish(spark, root, base.commit(
+      "mor-merge", base.m.dirs, Seq(srcRel), srcStats, nSrc - newMask.flatMap(_.maskedRows).sum,
+      newMask.toSeq, Some(evolved), batchId, appId, None))
   }
 
   /** EXACTLY-ONCE streaming MERGE-ON-READ upsert — [[upsertBatchExactlyOnce]]'s
@@ -5053,15 +4767,6 @@ object SnapshotTable {
       appId: Option[String] = None): Int =
     upsertEpoch(spark, root, batchId, appId)(
       mergeUpsertMor(spark, root, source, keyCols, Some(batchId), appId))
-
-  /** `foreachBatch` adapter for streaming merge-on-read upsert:
-    * `stream.writeStream.foreachBatch(SnapshotTable.streamUpsertMor(root, keys)).start()`. */
-  def streamUpsertMor(root: String, keyCols: Seq[String]): (DataFrame, Long) => Unit =
-    (batch, id) => {
-      upsertBatchExactlyOnceMor(
-        batch.sparkSession, root, batch, keyCols, id, streamingQueryId(batch.sparkSession))
-      ()
-    }
 
   // ─────────────────── change-data-capture between versions ───────────────────
 
@@ -5127,7 +4832,7 @@ object SnapshotTable {
         // fromV = 0: version 1 diffs against the empty table — the
         // creation surfaces as inserts (Delta CDF's startingVersion=0)
         val prevM =
-          if (v == 1) Commit(0, "none", Seq.empty, 0L)
+          if (v == 1) EmptyVersion
           else readManifest(spark, root, v - 1)
         val prevEntries = fileEntries(prevM)
         val curEntries = fileEntries(cur)
@@ -5610,8 +5315,8 @@ object SnapshotTable {
     * [[renameColumn]], [[dropColumn]]) delegate here. */
   def alterSchema(spark: SparkSession, root: String, changes: Seq[SchemaChange]): Int = {
     require(changes.nonEmpty, "alterSchema needs at least one change")
-    val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
-    val m = readManifest(spark, root, base)
+    val base = openBase(spark, root)
+    val m = base.m
     val resolver = spark.sessionState.conf.resolver
     var schema = m.schemaJson
       .map(schemaFromJson)
@@ -5707,19 +5412,9 @@ object SnapshotTable {
         schema = org.apache.spark.sql.types.StructType(schema.fields.filterNot(_.name == name))
         dropped = dropped + (physName(field) -> field.dataType.json)
     }
-    publish(
-      spark,
-      root,
-      m.copy(
-        version = base + 1,
-        action = "schema",
-        addedRows = 0L,
-        batchId = None,
-        ts = 0L,
-        schemaJson = Some(schema.json),
-        dropped = dropped,
-        files = files,
-        cdc = None)) // capture describes ONE commit's delta — never inherited
+    // the DDL rewrote the base's stats and ledger; every entry is kept
+    publish(spark, root, base.copy(m = m.copy(files = files, dropped = dropped)).commit(
+      "schema", m.dirs, Nil, Nil, 0L, Nil, Some(schema.json), None, None, None))
   }
 
   /** METADATA-ONLY column add — no data rewrite, at any file count: the
@@ -5766,41 +5461,24 @@ object SnapshotTable {
     * table properties: they survive overwrite and compaction. */
   def addCheck(spark: SparkSession, root: String, name: String, checkSql: String): Int = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit}
-    val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
-    val m = readManifest(spark, root, base)
-    require(!m.constraints.contains(name), s"constraint '$name' already exists")
-    val bad = readVersion(spark, root, base).filter(!coalesce(expr(checkSql), lit(false))).count()
+    val base = openBase(spark, root)
+    require(!base.m.constraints.contains(name), s"constraint '$name' already exists")
+    val bad = readOf(spark, root, base.m).filter(!coalesce(expr(checkSql), lit(false))).count()
     if (bad > 0) throw new ConstraintViolationException(name, bad)
-    publish(
-      spark,
-      root,
-      m.copy(
-        version = base + 1,
-        action = "constraint",
-        addedRows = 0L,
-        batchId = None,
-        ts = 0L,
-        constraints = m.constraints + (name -> checkSql),
-        cdc = None))
+    publishConstraints(base, base.m.constraints + (name -> checkSql))
   }
 
   /** Drop a CHECK constraint by name. */
   def dropCheck(spark: SparkSession, root: String, name: String): Int = {
-    val base = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
-    val m = readManifest(spark, root, base)
-    require(m.constraints.contains(name), s"no constraint '$name' on this table")
-    publish(
-      spark,
-      root,
-      m.copy(
-        version = base + 1,
-        action = "constraint",
-        addedRows = 0L,
-        batchId = None,
-        ts = 0L,
-        constraints = m.constraints - name,
-        cdc = None))
+    val base = openBase(spark, root)
+    require(base.m.constraints.contains(name), s"no constraint '$name' on this table")
+    publishConstraints(base, base.m.constraints - name)
   }
+
+  /** A metadata-only commit of `base`'s table under a new constraint set. */
+  private def publishConstraints(base: Base, constraints: Map[String, String]): Int =
+    publish(base.spark, base.root, base.copy(m = base.m.copy(constraints = constraints)).commit(
+      "constraint", base.m.dirs, Nil, Nil, 0L, Nil, base.m.schemaJson, None, None, None))
 
   /** The commit log as a model-sized DataFrame — the DESCRIBE HISTORY
     * surface: one row per version with action, publish time, net row

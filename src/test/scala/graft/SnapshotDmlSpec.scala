@@ -424,6 +424,9 @@ class SnapshotDmlSpec extends SparkSuite {
     assert(rows.map(_.getString(1)).toSeq == Seq("create", "compact", "delete"))
     assert(rows.forall(r => !r.isNullAt(2)), "publish timestamps recorded")
     assert(rows.last.getLong(5) == 875, s"total_rows after delete: ${rows.last}")
+    // row_delta is each commit's exact net delta: a data-identical
+    // compact adds 0, so the deltas sum to the live total
+    assert(rows.map(_.getLong(3)).sum == 875, s"row_delta per version: ${rows.map(_.getLong(3)).toSeq}")
     assert(rows.last.getLong(6) > 0, "byte footprint recorded")
   }
 

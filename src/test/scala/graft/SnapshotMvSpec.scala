@@ -315,4 +315,17 @@ class SnapshotMvSpec extends SparkSuite {
     SnapshotMv.refresh(spark, mv)
     assert(mvRows(mv) == recompute(SnapshotTable.read(spark, base)))
   }
+
+  test("an mv-sync commit records its own publish time, not its base's") {
+    val base = freshRoot(); val mv = freshRoot() + "/mv"
+    SnapshotTable.create(spark, base, fixture(0, 200))
+    SnapshotMv.create(spark, base, mv, keys = Seq("grp"), sums = Seq("price_c"))
+    SnapshotTable.compact(spark, base, "k", 2) // data-identical: the refresh delta is empty
+    Thread.sleep(5)
+    val clock = System.currentTimeMillis()
+    SnapshotMv.refresh(spark, mv)
+    val sync = SnapshotTable.history(spark, mv).last
+    assert(sync.action == "mv-sync")
+    assert(sync.ts >= clock, s"mv-sync published at ${sync.ts}, before the refresh started at $clock")
+  }
 }

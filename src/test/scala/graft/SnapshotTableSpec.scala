@@ -760,18 +760,13 @@ class SnapshotTableSpec extends SparkSuite {
     // checkpoint's fixed Spark-job overhead loses below the crossover)
     assert(!SnapshotTable.checkpointPreferred(spark, root, v))
     assert(SnapshotTable.readWhere(spark, root, bounds).count() == 121)
-    // lowering the threshold flips the SAME table onto the checkpointed
-    // plan, result-identical
-    spark.conf.set("spark.graft.checkpoint.autoReadMinFiles", "1")
-    try {
-      assert(SnapshotTable.checkpointPreferred(spark, root, v))
-      assert(SnapshotTable.readWhere(spark, root, bounds).count() == 121)
-    } finally spark.conf.unset("spark.graft.checkpoint.autoReadMinFiles")
     // a LEGACY checkpoint (no _meta sidecar) keeps the pre-crossover
-    // prefer-checkpoint behavior — never a silent downgrade of old tables
+    // prefer-checkpoint behavior — never a silent downgrade of old tables —
+    // and readWhere then plans the SAME table through it, result-identical
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(root, "_manifests", f"ckpt_v$v%08d", "_meta.json"))
     assert(SnapshotTable.checkpointPreferred(spark, root, v))
+    assert(SnapshotTable.readWhere(spark, root, bounds).count() == 121)
   }
 
   test("auto-checkpoint: every Nth commit past minFiles, plans select it with no explicit call") {
