@@ -25,9 +25,11 @@ import org.apache.spark.sql.types.StructType
   *   1. Each task writes its partition of the epoch to a private staged
   *      parquet file under `<root>/_streamStaging/<queryId>/epoch=<id>/`
   *      via the codegen'd parquet [[OutputWriter]] (the same writer batch
-  *      plans use) and reports the file path + row count in its commit
-  *      message. The queryId namespace keeps CONCURRENT streaming queries
-  *      into the same table from touching each other's staged epochs
+  *      plans use), folds the file's stats as it writes the rows (the
+  *      same [[WriteStats]] fold as every batch commit) and reports the
+  *      file path and its stats in its commit message. The queryId
+  *      namespace keeps CONCURRENT streaming queries into the same table
+  *      from touching each other's staged epochs
   *      (their epoch counters both start at 0), and the same id rides the
   *      commit as the txn appId — the STRICT (appId, batchId) exactly-once
   *      identity every write surface shares
@@ -35,8 +37,9 @@ import org.apache.spark.sql.types.StructType
   *      attempts abort
   *      their own file; a file only exists for the commit once its task's
   *      message arrives.
-  *   2. `commit(epochId, messages)` re-frames exactly the reported files
-  *      as a DataFrame and lands it through the SAME exactly-once epoch
+  *   2. `commit(epochId, messages)` adopts exactly the reported files
+  *      with their stats (or re-frames them as a DataFrame when landing
+  *      must transform rows) through the SAME exactly-once epoch
   *      operators the path-based V1 sink uses
   *      ([[SnapshotSinkOps.landBatch]] —
   *      [[SnapshotTable.appendBatchExactlyOnce]], or the keyed
@@ -50,10 +53,13 @@ import org.apache.spark.sql.types.StructType
   *      age-gated [[SnapshotTable.vacuum]] reclaims abandoned epochs
   *      (a restarted query re-stages its replayed epoch from scratch).
   *
-  * The stage hop costs one extra write of the micro-batch (bounded by
-  * admission control, not table size) and buys the transactional path
-  * everything it already proves: stats + blooms, range clustering,
-  * CHECK constraints, schema evolution, and exactly-once replay. Complete
+  * A plain append adopts the staged files by rename, so the epoch's bytes
+  * are written once; a keyed, clustered or renamed-column landing re-frames
+  * them, paying one extra write of the micro-batch (bounded by admission
+  * control, not table size). Either way the transactional path proves
+  * everything it proves for batch writes: stats + blooms, range
+  * clustering, CHECK constraints, schema evolution, and exactly-once
+  * replay. Complete
   * mode is refused, as on the path sink — a snapshot table's full-rewrite
   * analogue is `overwrite`, not a streaming epoch. Schema evolution: an
   * epoch that adds columns EVOLVES the table exactly like batch append
@@ -96,22 +102,24 @@ private[sinks] final class GraftStreamingWrite(
       owf,
       new SerializableHadoopConf(job.getConfiguration),
       schema,
+      WriteStats.Spec(spark, schema, Map.empty, Map.empty),
       stagingRoot.toString,
       runToken)
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val staged = messages.collect { case m: GraftStagedFile if m.rows > 0 => m.path }
+    val staged = messages.collect { case GraftStagedFile(f) if f.rows > 0 => f }
     val df =
       if (staged.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(staged.toIndexedSeq: _*)
+      else spark.read.schema(schema).parquet(staged.toIndexedSeq.map(_.path): _*)
     // the exactly-once contract does the rest: a replayed epoch finds its
     // (queryId, batchId) pair in the manifest and lands nothing — the
     // recorded appId keeps a SECOND query's identical epoch number from
     // deduping against ours (Delta's txn appId semantics). The staged
-    // paths ride along so the plain-append route can ADOPT the epoch's
-    // files by rename instead of writing every byte a second time.
+    // files and their stats ride along so the plain-append route can ADOPT
+    // the epoch's files by rename instead of writing every byte a second
+    // time.
     SnapshotSinkOps.landBatch(
       spark, root, df, epochId, opts, appId = Some(queryId), staged = Some(staged.toIndexedSeq))
     dropEpochDir(epochId)
@@ -142,13 +150,15 @@ private[sinks] final class GraftStreamingWrite(
 /** Executor side: one staged parquet file per (partition, attempt), named
   * by task identity PLUS the per-run token so neither speculative attempts
   * nor a post-crash replay run collide; the commit message reports the
-  * finished file (commit() re-frames only reported files, so crashed-run
-  * debris in the same epoch dir is never read, and the post-publish
-  * dropEpochDir removes it with the dir). Zero-row writers stage nothing. */
+  * finished file and its folded stats (commit() lands only reported
+  * files, so crashed-run debris in the same epoch dir is never read, and
+  * the post-publish dropEpochDir removes it with the dir). Zero-row
+  * writers stage nothing. */
 private[sinks] final class GraftStreamingWriterFactory(
     owf: OutputWriterFactory,
     conf: SerializableHadoopConf,
     schema: StructType,
+    stats: WriteStats.Spec,
     stagingRoot: String,
     runToken: String)
     extends StreamingDataWriterFactory {
@@ -157,7 +167,7 @@ private[sinks] final class GraftStreamingWriterFactory(
     new DataWriter[InternalRow] {
       private var writer: OutputWriter = _
       private var path: String = _
-      private var rows = 0L
+      private var fold: WriteStats.Spec#Binding#FileFold = _
 
       private def open(): Unit = {
         val ctx = new TaskAttemptContextImpl(
@@ -167,18 +177,23 @@ private[sinks] final class GraftStreamingWriterFactory(
           new Path(stagingRoot, s"epoch=$epochId"),
           s"part-$partitionId-$taskId-$runToken${owf.getFileExtension(ctx)}").toString
         writer = owf.newInstance(path, schema, ctx)
+        fold = stats.bind().newFile()
       }
 
       override def write(row: InternalRow): Unit = {
         if (writer == null) open()
         writer.write(row)
-        rows += 1
+        fold.add(row)
       }
 
-      override def commit(): WriterCommitMessage = {
-        if (writer != null) writer.close()
-        GraftStagedFile(if (path == null) "" else path, rows)
-      }
+      override def commit(): WriterCommitMessage =
+        if (writer == null) GraftStagedFile(SnapshotTable.FileStat("", 0L, Map.empty, Map.empty))
+        else {
+          writer.close()
+          val p = new Path(path)
+          val staged = fold.result(p.getName, WriteStats.fileBytes(p, conf.value)).stat
+          GraftStagedFile(staged.copy(path = path))
+        }
 
       override def abort(): Unit =
         if (writer != null) {
@@ -198,7 +213,9 @@ private[sinks] final class GraftStreamingWriterFactory(
     }
 }
 
-private[sinks] final case class GraftStagedFile(path: String, rows: Long)
+/** One staged file's stats; `file.path` is the staged file's absolute
+  * path (empty when the task staged nothing). */
+private[sinks] final case class GraftStagedFile(file: SnapshotTable.FileStat)
     extends WriterCommitMessage
 
 /** Hadoop `Configuration` is not `java.io.Serializable`; this is the

@@ -649,16 +649,16 @@ private[sinks] object SnapshotSinkOps {
       batchId: Long,
       opts: SnapshotSinkOptions,
       appId: Option[String] = None,
-      // executor-staged parquet files of this epoch (DSv2 catalog sink):
-      // the plain-append route then ADOPTS them by rename instead of
+      // executor-staged parquet files of this epoch with their stats (DSv2
+      // catalog sink): the plain-append route then ADOPTS them by rename instead of
       // re-writing every byte — see appendStagedBatchExactlyOnce
-      staged: Option[Seq[String]] = None): Unit = {
+      staged: Option[Seq[SnapshotTable.FileStat]] = None): Unit = {
     import opts.{compactEvery, compactTargetBytes}
     opts.upsertKeys match {
       case None =>
         staged match {
-          case Some(paths) =>
-            SnapshotTable.appendStagedBatchExactlyOnce(spark, root, paths, df.schema, batchId, appId)
+          case Some(files) =>
+            SnapshotTable.appendStagedBatchExactlyOnce(spark, root, files, df.schema, batchId, appId)
           case None => SnapshotTable.appendBatchExactlyOnce(spark, root, df, batchId, appId)
         }
       case Some(ks) => SnapshotDml.run(spark, root, opts.mor, SnapshotDml.Upsert(df, ks, Some(batchId), appId))

@@ -225,6 +225,66 @@ object SnapshotTable {
       Bound(k, Option(kb.getAs[Any]("__lo_" + k)), Option(kb.getAs[Any]("__hi_" + k))))
   }
 
+  /** The key envelope of a merge source the commit has just written, from
+    * the stats its write recorded (`stats`, keyed by PHYSICAL name) instead
+    * of an aggregate job over the written dir: per key, the least file
+    * min and the greatest file max over the files holding a non-null key
+    * (strings in UTF-8 byte order, as the aggregate orders them), as the
+    * same JVM values that aggregate collects. No such file → that key's
+    * bound is (None, None). None when some file with a non-null key has no
+    * complete [min, max] pair (a string past the stat cap, a NaN) or a key
+    * type records none — the caller then runs [[keyEnvelope]]. */
+  private[graft] def statsEnvelope(
+      schema: org.apache.spark.sql.types.StructType,
+      physicalOf: Map[String, String],
+      stats: Seq[FileStat],
+      keyCols: Seq[String]): Option[Seq[Bound]] = {
+    import org.apache.spark.sql.types._
+    def bound(k: String): Option[Bound] = schema.fields.find(_.name == k).map(_.dataType).flatMap { dt =>
+      val p = physicalOf.getOrElse(k, k)
+      val held = stats.filter(f => f.rows > 0 && f.nonNull.get(p).forall(_ > 0))
+      if (!WriteStats.statable(dt) || held.exists(f => !f.min.contains(p) || !f.max.contains(p))) None
+      else {
+        def less(a: JValue, b: JValue): Boolean = (a, b) match {
+          case (JString(x), JString(y)) if dt == StringType =>
+            org.apache.spark.unsafe.types.UTF8String.fromString(x)
+              .binaryCompare(org.apache.spark.unsafe.types.UTF8String.fromString(y)) < 0
+          case _ => (normJ(dt, a), normJ(dt, b)) match {
+              case (Some(x), Some(y)) => lt(x, y)
+              case _ => false
+            }
+        }
+        def num(j: JValue): BigDecimal = jNum(j).get
+        def value(j: JValue): Any = dt match {
+          case StringType => j.asInstanceOf[JString].s
+          case DateType => java.sql.Date.valueOf(j.asInstanceOf[JString].s)
+          case ByteType => num(j).toByte
+          case ShortType => num(j).toShort
+          case IntegerType => num(j).toInt
+          case LongType => num(j).toLong
+          case FloatType => num(j).toFloat
+          case DoubleType => num(j).toDouble
+          case _: DecimalType => num(j).bigDecimal
+          case BooleanType => num(j) == 1
+          case TimestampType =>
+            val us = num(j).toLong
+            val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
+            t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
+            t
+          case TimestampNTZType =>
+            val us = num(j).toLong
+            java.time.LocalDateTime.ofEpochSecond(
+              Math.floorDiv(us, 1000000L), (Math.floorMod(us, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
+        }
+        val lo = held.map(_.min(p)).reduceOption((a, b) => if (less(b, a)) b else a)
+        val hi = held.map(_.max(p)).reduceOption((a, b) => if (less(a, b)) b else a)
+        Some(Bound(k, lo.map(value), hi.map(value)))
+      }
+    }
+    val bounds = keyCols.map(bound)
+    if (bounds.forall(_.isDefined)) Some(bounds.flatten) else None
+  }
+
   /** Table schema of `next` committed over `prior`: same-named columns
     * must keep their type (loud failure beats silent corruption — parquet
     * would happily coexist an int and a string column of the same name
@@ -633,7 +693,7 @@ object SnapshotTable {
     val deltaSchema = tip.schemaJson.map(schemaFromJson)
     // idempotence: a main commit already referencing the delta is a
     // completed pick (crashed caller re-running) — never publish twice
-    history(spark, root).find(c => deltaDirs.exists(c.dirs.contains)).foreach { prior =>
+    historyLite(spark, root).find(c => deltaDirs.exists(c.dirs.contains)).foreach { prior =>
       require(
         deltaDirs.forall(prior.dirs.contains),
         s"main v${prior.version} references PART of branch '$name''s delta — " +
@@ -1250,7 +1310,7 @@ object SnapshotTable {
       // (formerly d.isEmpty + d.count()) and the per-column envelope for
       // the candidate prune (columns with any null pre-image are excluded —
       // null-safe equality matches rows stats never see).
-      val statCols = merged.fields.filter(fd => statable(fd.dataType)).map(_.name).toSeq
+      val statCols = merged.fields.filter(fd => WriteStats.statable(fd.dataType)).map(_.name).toSeq
       val (dCount: Long, bounds: Seq[Bound]) = d0 match {
         case None => (0L, Seq.empty[Bound])
         case Some(dd) =>
@@ -1313,7 +1373,7 @@ object SnapshotTable {
         // the insert leg's row count rides the written total (below):
         // written = kept + iSide rows, so the conflict check needs no
         // kept.count() job of its own — the rewrite's own writeData pass
-        // (whose stats scan counts rows anyway) supplies it.
+        // (whose write stats count rows anyway) supplies it.
         val iCount = iSide.map(_.count()).getOrElse(0L)
         val out = (kept.toSeq ++ iSide.toSeq).reduceOption(_ unionByName _)
         val (newDirs, newStats, written, writtenRel) = out match {
@@ -1461,10 +1521,14 @@ object SnapshotTable {
     * retry briefly (the winner's write+close is milliseconds away) before
     * concluding the manifest is genuinely unreadable. Observed for real:
     * the concurrent-append stress spec hit the empty-read without this. */
-  private[graft] def readManifest(spark: SparkSession, root: String, v: Int): Commit = {
+  private[graft] def readManifest(spark: SparkSession, root: String, v: Int): Commit =
+    untorn(v)(readManifestOnce(spark, root, v))
+
+  /** `read` of manifest `v`, retried while its publish may be in flight. */
+  private def untorn(v: Int)(read: => Commit): Commit = {
     var attempt = 0
     while (true) {
-      try return readManifestOnce(spark, root, v)
+      try return read
       catch {
         case e: Exception if !e.isInstanceOf[java.io.FileNotFoundException] =>
           attempt += 1
@@ -1587,43 +1651,11 @@ object SnapshotTable {
   def history(spark: SparkSession, root: String): Seq[Commit] =
     versions(spark, root).map(readManifest(spark, root, _))
 
-  // ── per-file Bloom filters: the EQUALITY-skipping index min/max can't be ──
-  // Range stats prune ranges; they are blind to point lookups on scattered
-  // or unclustered values, on strings past the 64-char stat cap, and on any
-  // column the clustering key doesn't order. Each file therefore also
-  // carries a small per-column Bloom filter (m=4096 bits, k=4 via double
-  // hashing murmur3+xxhash64), built inside the SAME post-write stats
-  // aggregation (4 `collect_set(pmod(...))` expressions per column — each
-  // set is ≤4096 small ints, manifest-metadata-sized) and consulted by
-  // [[prunePlan]] whenever a [[Bound]] is an EQUALITY (lower == upper): a
-  // probe position with an unset bit proves the value absent from the file.
-  // False positives only cost a read; false negatives are impossible, so
-  // skipping stays exact. ~2k distinct values per file per column before
-  // saturation (fpp ≈ (1-e^{-kn/m})^k); a saturated bloom prunes nothing
-  // and is merely dead weight — the production note for 128MB files is a
-  // larger m in a sidecar, the JSON manifest keeps the index self-contained
-  // here.
-  private val BloomBits = 4096
-  private val BloomK = 4
-
-  /** Column types we bloom: equality-meaningful, hash-stable. */
-  private def bloomable(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case StringType | ByteType | ShortType | IntegerType | LongType | DateType => true
-      case _ => false
-    }
-  }
-
-  /** The k probe positions of one value, write side (Column) — MUST stay
-    * arithmetic-identical to [[probePositions]]. h2 is forced odd so the
-    * double-hash stride never collapses; all operands stay small, ANSI-safe. */
-  private def bloomPosCols(c: org.apache.spark.sql.Column): Seq[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.{hash, lit, pmod, when, xxhash64}
-    val h1 = pmod(hash(c).cast("long"), lit(BloomBits.toLong))
-    val h2 = pmod(xxhash64(c), lit(BloomBits.toLong)) * 2 + 1
-    (0 until BloomK).map(i => when(c.isNotNull, pmod(h1 + lit(i.toLong) * h2, lit(BloomBits.toLong)).cast("int")))
-  }
+  /** The commit log without the per-file stats ([[readManifestLite]]),
+    * oldest first and read lazily: a search that stops at a match parses
+    * only the manifests before it, and none of their `files` arrays. */
+  private def historyLite(spark: SparkSession, root: String): Iterator[Commit] =
+    versions(spark, root).iterator.map(readManifestLite(spark, root, _))
 
   /** The k probe positions of one literal, read side — evaluates the same
     * murmur3(seed 42) / xxhash64(seed 42) Spark uses for `hash()` on the
@@ -1647,16 +1679,8 @@ object SnapshotTable {
       val lit = Literal.create(typed, dt)
       val h1raw = new Murmur3Hash(Seq(lit)).eval(null).asInstanceOf[Int].toLong
       val h2raw = new XxHash64(Seq(lit)).eval(null).asInstanceOf[Long]
-      val h1 = java.lang.Math.floorMod(h1raw, BloomBits.toLong)
-      val h2 = java.lang.Math.floorMod(h2raw, BloomBits.toLong) * 2 + 1
-      (0 until BloomK).map(i => java.lang.Math.floorMod(h1 + i.toLong * h2, BloomBits.toLong).toInt)
+      (0 until WriteStats.BloomK).map(WriteStats.bloomPosition(h1raw, h2raw, _))
     }
-  }
-
-  private def bloomEncode(bits: scala.collection.BitSet): String = {
-    val bytes = new Array[Byte](BloomBits / 8)
-    bits.foreach(b => bytes(b >> 3) = (bytes(b >> 3) | (1 << (b & 7))).toByte)
-    java.util.Base64.getEncoder.encodeToString(bytes)
   }
 
   private def bloomHas(b64: String, pos: Int): Boolean = {
@@ -1664,68 +1688,23 @@ object SnapshotTable {
     (bytes(pos >> 3) & (1 << (pos & 7))) != 0
   }
 
-  /** Orderable atomic types we record min/max for. */
-  private def statable(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
-          StringType | DateType | TimestampType | TimestampNTZType | BooleanType =>
-        true
-      case _: DecimalType => true
-      case _ => false
-    }
-  }
-
-  /** Encode one collected min/max cell as manifest JSON. None = no stat
-    * (null, non-finite double, overlong string) — always safe to omit. */
-  private def statJson(dt: org.apache.spark.sql.types.DataType, v: Any): Option[JValue] = {
-    import org.apache.spark.sql.types._
-    if (v == null) None
-    else
-      dt match {
-        case ByteType | ShortType | IntegerType | LongType =>
-          Some(JLong(v.asInstanceOf[Number].longValue()))
-        case FloatType | DoubleType =>
-          val d = v.asInstanceOf[Number].doubleValue()
-          if (java.lang.Double.isFinite(d)) Some(JDouble(d)) else None
-        case _: DecimalType => Some(JDecimal(BigDecimal(v.asInstanceOf[java.math.BigDecimal])))
-        case StringType =>
-          val s = v.asInstanceOf[String]
-          if (s.length <= 64) Some(JString(s)) else None
-        case DateType => Some(JString(v.toString)) // ISO yyyy-MM-dd: lexicographic = chronological
-        case TimestampType =>
-          val t = v.asInstanceOf[java.sql.Timestamp]
-          // floorDiv, not truncating /: getTime rounds toward zero, but
-          // getNanos is always in [0,1e9) — for pre-1970 timestamps the
-          // truncating form maps -0.5s to +500000µs and the manifest
-          // min/max stops being monotone, so pruning could skip live rows
-          Some(JLong(Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000)) // exact epoch micros
-        case TimestampNTZType =>
-          val t = v.asInstanceOf[java.time.LocalDateTime]
-          Some(JLong(t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000))
-        case BooleanType => Some(JLong(if (v.asInstanceOf[Boolean]) 1L else 0L))
-        case _ => None
-      }
-  }
-
-  /** Write `df` to a fresh data dir and return (relative dir, row count,
-    * per-file stats). The post-write validation scan the commit protocol
-    * already paid for the row count now ALSO yields the skipping index:
-    * one `groupBy(input_file_name())` agg computes count + min/max of every
-    * orderable column per file — zero extra passes, and the collected rows
-    * are file-count-sized (manifest metadata, same order as `dirs`). */
   final class ConstraintViolationException(val name: String, val violations: Long)
       extends RuntimeException(
         s"CHECK constraint '$name' violated by $violations row(s); nothing was committed")
 
-  /** Enforcement rides the SAME post-write validation aggregation as the
-    * stats: each CHECK contributes one conditional count per file — zero
-    * extra passes. A violation aborts BEFORE publish (the orphaned dir is
-    * reclaimed by [[vacuum]]), so constraint failures can never tear the
-    * table: rows either all satisfy every CHECK or none land. Null CHECK
-    * results count as violations (a CHECK must prove itself), matching
-    * the SQL-standard `CHECK` on an unknown being Delta's strict reading
-    * for data-quality gates. */
+  /** Write `df` to a fresh data dir and return (relative dir, row count,
+    * per-file stats). The writer folds each file's stats as it writes the
+    * rows ([[WriteStats]]): row count, min/max and non-null count of every
+    * orderable column, a bloom per equality column, the byte length, and
+    * each CHECK's violation count — no second pass over the written files.
+    * A zero-row file (partition 0 of an empty write) records rows = 0, so
+    * its dir reads as covered and the scan paths skip it unread.
+    *
+    * A CHECK violation aborts BEFORE publish and deletes the dir, so
+    * constraint failures can never tear the table: rows either all satisfy
+    * every CHECK or none land. Null CHECK results count as violations (a
+    * CHECK must prove itself), matching the SQL-standard `CHECK` on an
+    * unknown being Delta's strict reading for data-quality gates. */
   private def writeData(
       spark: SparkSession,
       root: String,
@@ -1734,144 +1713,22 @@ object SnapshotTable {
       physicalOf: Map[String, String] = Map.empty): (String, Long, Seq[FileStat]) = {
     val rel = "data/" + java.util.UUID.randomUUID().toString
     val abs = new Path(dataRoot(root), rel).toString
-    // constraints are authored in LOGICAL names: enforce before the
-    // physical rename; renamed columns then write under their immutable
-    // physical parquet names so every file of the table stays uniform
+    // renamed columns write under their immutable physical parquet names
+    // so every file of the table stays uniform; constraints, authored in
+    // LOGICAL names, bind to the same positions
     val physDf = physicalOf.foldLeft(df) { case (d, (logical, physical)) =>
       if (d.columns.contains(logical)) d.withColumnRenamed(logical, physical) else d
     }
-    physDf.write.parquet(abs)
-    val (n, stats) = scanStats(
-      spark,
-      root,
-      rel,
-      org.apache.spark.sql.types.StructType(physDf.schema.fields.map(_.copy(nullable = true))),
-      constraints,
-      physicalOf)
-    (rel, n, stats)
-  }
-
-  /** The post-write validation/stats scan over an ALREADY-WRITTEN data dir
-    * (`rel`, physical column names, `physSchema`): one
-    * `groupBy(input_file_name())` aggregation yields row counts, min/max,
-    * non-null counts, per-file blooms, and every CHECK constraint's
-    * violation count — zero extra passes. Shared by [[writeData]] (which
-    * wrote the dir a moment ago) and the streaming sink's staged-rename
-    * fast path (whose files the EXECUTORS wrote — renaming them here saves
-    * the second full write of every micro-batch). A constraint violation
-    * deletes the dir and aborts pre-publish, exactly as before. */
-  private def scanStats(
-      spark: SparkSession,
-      root: String,
-      rel: String,
-      physSchema: org.apache.spark.sql.types.StructType,
-      constraints: Map[String, String],
-      physicalOf: Map[String, String]): (Long, Seq[FileStat]) = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
-    val abs = new Path(dataRoot(root), rel).toString
-    // explicit schema (the frame just written): skips the footer-inference
-    // job spark.read.parquet would otherwise run before the stats scan —
-    // one fewer Spark job on EVERY commit of the protocol
-    val written = spark.read
-      .schema(physSchema)
-      .parquet(abs)
-    import org.apache.spark.sql.functions.bitmap_construct_agg
-    val statFields = written.schema.fields.filter(f => statable(f.dataType)).toSeq
-    val bloomFields = written.schema.fields.filter(f => bloomable(f.dataType)).toSeq
-    def q(n: String) = col("`" + n + "`")
-    // CHECK constraints are authored in LOGICAL names; the written frame
-    // carries physical ones. Alias the logical names alongside so the
-    // stats (physical) and the constraint sums (logical) run in the SAME
-    // single aggregation pass.
-    val aggInput = physicalOf.foldLeft(written) { case (d, (logical, physical)) =>
-      if (d.columns.contains(physical)) d.withColumn(logical, q(physical)) else d
-    }
-    val aggs = count(lit(1)).as("__rows") +:
-      (statFields.flatMap(f =>
-        Seq(
-          min(q(f.name)).as("__min_" + f.name),
-          max(q(f.name)).as("__max_" + f.name),
-          count(q(f.name)).as("__nn_" + f.name))) ++ // non-null count: min/max ignore nulls, so containment proofs need it
-        // fixed-size bitmap aggregation (one 4 KiB (32768-bit) buffer per probe, bit
-        // layout bytes[pos/8] |= 1 << (pos%8) — verified identical to
-        // [[bloomEncode]]): replaces collect_set's per-row hash-set insert
-        // with a single bit set, the dominant per-row cost of this scan
-        bloomFields.flatMap(f =>
-          bloomPosCols(q(f.name)).zipWithIndex.map { case (pc, i) =>
-            bitmap_construct_agg(pc.cast("long")).as(s"__bl${i}_" + f.name)
-          }) ++
-        constraints.toSeq.sortBy(_._1).zipWithIndex.map { case ((_, check), i) =>
-          import org.apache.spark.sql.functions.{coalesce, expr, sum, when}
-          sum(when(!coalesce(expr(check), lit(false)), 1L).otherwise(0L)).as(s"__ck$i")
-        })
-    val perFile = aggInput
-      .groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .toSeq
-    constraints.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((name, _), i) =>
-      val bad = perFile.map(_.getAs[Long](s"__ck$i")).sum
+    val written = WriteStats.writeParquet(physDf, abs, WriteStats.Spec(spark, physDf.schema, constraints, physicalOf))
+    constraints.keys.toSeq.sorted.zipWithIndex.foreach { case (name, i) =>
+      val bad = written.map(_.violations(i)).sum
       if (bad > 0) {
         fs(spark, root).delete(new Path(abs), true) // abort pre-publish: no orphan lingers
         throw new ConstraintViolationException(name, bad)
       }
     }
-    val stats = perFile.map { r =>
-      val uri = r.getAs[String]("__file")
-      val idx = uri.indexOf(rel)
-      val path = if (idx >= 0) uri.substring(idx) else rel + "/" + uri.substring(uri.lastIndexOf('/') + 1)
-      val mins = statFields.flatMap { f =>
-        val mi = statJson(f.dataType, r.getAs[Any]("__min_" + f.name))
-        val ma = statJson(f.dataType, r.getAs[Any]("__max_" + f.name))
-        // record only complete [min,max] pairs — a one-sided bound can't prune safely here
-        if (mi.isDefined && ma.isDefined) Some(f.name -> mi.get) else None
-      }.toMap
-      val maxs = statFields.flatMap { f =>
-        val mi = statJson(f.dataType, r.getAs[Any]("__min_" + f.name))
-        val ma = statJson(f.dataType, r.getAs[Any]("__max_" + f.name))
-        if (mi.isDefined && ma.isDefined) Some(f.name -> ma.get) else None
-      }.toMap
-      val nns = statFields.map(f => f.name -> r.getAs[Long]("__nn_" + f.name)).toMap
-      val blooms = bloomFields.map { f =>
-        // OR the k probe bitmaps' first m/8 bytes (positions < m, so the
-        // 4 KiB (32768-bit) agg buffers are zero past byte 511) — byte-identical to
-        // the former bloomEncode(BitSet(positions)) string
-        val bytes = new Array[Byte](BloomBits / 8)
-        (0 until BloomK).foreach { i =>
-          val b = r.getAs[Array[Byte]](s"__bl${i}_" + f.name)
-          if (b != null) {
-            var j = 0
-            val n = math.min(bytes.length, b.length)
-            while (j < n) { bytes(j) = (bytes(j) | b(j)).toByte; j += 1 }
-          }
-        }
-        f.name -> java.util.Base64.getEncoder.encodeToString(bytes)
-      }.toMap
-      FileStat(path, r.getAs[Long]("__rows"), mins, maxs, nns, blooms)
-    }
-    // one local listing records byte sizes: the Catalyst read path
-    // ([[SnapshotFileIndex]]) builds plan-time FileStatus rows from the
-    // manifest alone — no per-file namenode probes at 100-TB file counts
-    val sizes = fs(spark, root)
-      .listStatus(new Path(abs))
-      .map(s => rel + "/" + s.getPath.getName -> s.getLen)
-      .toMap
-    val sized = stats.map(st => st.copy(bytes = sizes.getOrElse(st.path, -1L)))
-    // ZERO-ROW part files (an empty CREATE's schema seed, an empty shuffle
-    // partition) produce no input_file_name group, so without an entry
-    // here their dir would read as uncovered — unprunable forever. Record
-    // them as rows=0 FileStats: the scan paths drop rows=0 files
-    // unconditionally, so an empty file costs zero I/O at any later read.
-    val statted = sized.map(_.path).toSet
-    val empties = sizes.keysIterator
-      .filterNot(statted)
-      .filter { p =>
-        val n = p.substring(p.lastIndexOf('/') + 1)
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-      .map(p => FileStat(p, 0L, Map.empty, Map.empty, bytes = sizes(p)))
-      .toSeq
-    (sized.map(_.rows).sum, sized ++ empties)
+    val stats = written.map(w => w.stat.copy(path = rel + "/" + w.stat.path))
+    (rel, stats.map(_.rows).sum, stats)
   }
 
   /** Write a change-capture sidecar ([[Cdc]]): `df` (LOGICAL names) lands
@@ -2345,7 +2202,9 @@ object SnapshotTable {
   /** Re-prove `checks` (name → SQL) over already-written data `dirs`,
     * read in logical names through `schema`'s column mapping — for
     * constraints that a racing commit (or, in [[rebase]], the new base)
-    * added after the data was validated. */
+    * added after the data was validated, and for an adopted streaming
+    * epoch. One aggregate job counts every CHECK's violations, over the
+    * files read with the known schema (no footer inference). */
   private def reproveChecks(
       spark: SparkSession,
       root: String,
@@ -2353,15 +2212,14 @@ object SnapshotTable {
       schema: org.apache.spark.sql.types.StructType,
       checks: Set[(String, String)]): Unit =
     if (checks.nonEmpty && dirs.nonEmpty) {
-      import org.apache.spark.sql.functions.{coalesce, expr, lit}
-      val rows = spark.read.parquet(dirs.map(d => new Path(dataRoot(root), d).toString): _*)
-      val logical = mappingOf(schema).foldLeft(rows) {
-        case (d, (log, phys)) =>
-          if (d.columns.contains(phys)) d.withColumn(log, d("`" + phys + "`")) else d
-      }
-      checks.foreach { case (name, check) =>
-        val bad = logical.filter(!coalesce(expr(check), lit(false))).count()
-        if (bad > 0) throw new ConstraintViolationException(name, bad)
+      import org.apache.spark.sql.functions.{coalesce, count, expr, lit, when}
+      val ordered = checks.toSeq.sortBy(_._1)
+      val counts = ordered.map { case (_, check) => count(when(!coalesce(expr(check), lit(false)), 1)) }
+      val bad = readTablePaths(spark, Some(schema), dirs.map(d => new Path(dataRoot(root), d).toString))
+        .agg(counts.head, counts.tail: _*)
+        .head()
+      ordered.zipWithIndex.foreach { case ((name, _), i) =>
+        if (bad.getLong(i) > 0) throw new ConstraintViolationException(name, bad.getLong(i))
       }
     }
 
@@ -2426,7 +2284,7 @@ object SnapshotTable {
       root: String,
       batchId: Long,
       appId: Option[String]): Option[Int] =
-    history(spark, root)
+    historyLite(spark, root)
       .find(c => c.batchId.contains(batchId) && c.appId == appId)
       .map(_.version)
 
@@ -2462,15 +2320,19 @@ object SnapshotTable {
 
   /** EXACTLY-ONCE streaming append of EXECUTOR-STAGED parquet files — the
     * DSv2 catalog sink's fast path: the micro-batch's bytes were already
-    * written once by the epoch's tasks ([[GraftStreamingWrite]]), so the
+    * written once by the epoch's tasks ([[GraftStreamingWrite]]), each
+    * task folding its file's stats as it wrote ([[WriteStats]]), so the
     * files RENAME into a fresh table data dir (one metadata op per file on
-    * any rename-capable filesystem) and only the commit protocol's
-    * validation/stats scan reads them — saving the second full write of
-    * every micro-batch the land-as-DataFrame path paid. Falls back to
+    * any rename-capable filesystem) and their stats come with them —
+    * saving the second full write of every micro-batch the
+    * land-as-DataFrame path paid. `staged` holds one stat per staged file,
+    * its `path` the staged file's absolute path. Falls back to
     * [[appendBatchExactlyOnce]] whenever landing must transform rows:
     * a declared cluster spec (epoch data must sort into it), a
     * logical→physical column mapping (files must carry physical names),
-    * or an empty epoch (the schema-seed write). Crash safety is unchanged:
+    * or an empty epoch (the schema-seed write). A table with CHECKs
+    * re-proves them over the adopted dir ([[reproveChecks]]); a violation
+    * deletes it before publish. Crash safety is unchanged:
     * a crash after the rename orphans one unreferenced data dir (vacuum
     * reclaims it) and the restarted query re-stages its epoch from
     * scratch; a replayed epoch short-circuits on its (appId, batchId)
@@ -2478,7 +2340,7 @@ object SnapshotTable {
   def appendStagedBatchExactlyOnce(
       spark: SparkSession,
       root: String,
-      staged: Seq[String],
+      staged: Seq[FileStat],
       schema: org.apache.spark.sql.types.StructType,
       batchId: Long,
       appId: Option[String] = None): Int = {
@@ -2491,9 +2353,9 @@ object SnapshotTable {
       // EMPTY epoch on an existing table with no schema delta (the trailing
       // batch every AvailableNow drain ships): the epoch needs only its
       // exactly-once (appId, batchId) marker — publishing it with the prior
-      // dirs verbatim skips the rows=0 seed-dir write + stats scan the
-      // DataFrame path pays. Schema-evolving or table-creating empty epochs
-      // still fall through (the seed write is what establishes them).
+      // dirs verbatim skips the rows=0 seed-dir write the DataFrame path
+      // pays. Schema-evolving or table-creating empty epochs still fall
+      // through (the seed write is what establishes them).
       if (staged.isEmpty &&
         base0.schema.exists(prior => prior == schemaFromJson(evolvedSchema(Some(prior), schema)))) {
         return publishEpochAppend(
@@ -2504,25 +2366,25 @@ object SnapshotTable {
         val df =
           if (staged.isEmpty)
             spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          else spark.read.schema(schema).parquet(staged: _*)
+          else spark.read.schema(schema).parquet(staged.map(_.path): _*)
         appendBatchExactlyOnce(spark, root, df, batchId, appId)
       } else {
         val f = fs(spark, root)
         val rel = "data/" + java.util.UUID.randomUUID().toString
         val dir = new Path(dataRoot(root), rel)
         f.mkdirs(dir)
-        staged.foreach { s =>
-          val sp = new Path(s)
-          require(f.rename(sp, new Path(dir, sp.getName)), s"failed to adopt staged file $s into $rel")
+        val stats = staged.map { s =>
+          val sp = new Path(s.path)
+          require(f.rename(sp, new Path(dir, sp.getName)), s"failed to adopt staged file ${s.path} into $rel")
+          s.copy(path = rel + "/" + sp.getName)
         }
-        val (n, stats) = scanStats(
-          spark,
-          root,
-          rel,
-          org.apache.spark.sql.types.StructType(schema.fields.map(_.copy(nullable = true))),
-          checks0,
-          Map.empty)
-        publishEpochAppend(spark, root, Some(rel), n, stats, schema, checks0, batchId, appId, committed)
+        try reproveChecks(spark, root, Seq(rel), schema, checks0.toSet)
+        catch {
+          case e: ConstraintViolationException =>
+            f.delete(dir, true) // abort pre-publish: no orphan lingers
+            throw e
+        }
+        publishEpochAppend(spark, root, Some(rel), stats.map(_.rows).sum, stats, schema, checks0, batchId, appId, committed)
       }
     }
   }
@@ -3168,7 +3030,10 @@ object SnapshotTable {
     * `skipChildren()`s over "files" — O(metadata) driver heap at any file
     * count. Everything else (dirs, schema, constraints, masks, dropped)
     * parses exactly as [[readManifest]] does. */
-  private[graft] def readManifestLite(spark: SparkSession, root: String, v: Int): Commit = {
+  private[graft] def readManifestLite(spark: SparkSession, root: String, v: Int): Commit =
+    untorn(v)(readManifestLiteOnce(spark, root, v))
+
+  private def readManifestLiteOnce(spark: SparkSession, root: String, v: Int): Commit = {
     val f = fs(spark, root)
     val in = f.open(manifestPath(f, root, v))
     val slim =
@@ -3323,7 +3188,7 @@ object SnapshotTable {
       v: Any): Option[Seq[Int]] = probePositions(dt, v)
   private[graft] def bloomBit(b64: String, pos: Int): Boolean = bloomHas(b64, pos)
   private[graft] def encodeBloom(positions: Seq[Int]): String =
-    bloomEncode(scala.collection.immutable.BitSet(positions: _*))
+    WriteStats.bloomEncode(scala.collection.immutable.BitSet(positions: _*))
 
   /** The snapshot table as a CATALYST-INTEGRATED relation: a
     * `HadoopFsRelation` whose [[SnapshotFileIndex]] is the manifest, so
@@ -3987,7 +3852,7 @@ object SnapshotTable {
     val srcDf = readTablePaths(spark, Some(srcSchema), Seq(new Path(dataRoot(root), srcRel).toString))
     val srcKeys = srcDf.select(keyCols.map(k => col("`" + k + "`")): _*)
     // stage 1: envelope prune (zero I/O; min/max ignore null keys)
-    val bounds = keyEnvelope(srcDf, keyCols)
+    val bounds = statsEnvelope(srcSchema, evolvedMapping, srcStats, keyCols).getOrElse(keyEnvelope(srcDf, keyCols))
     val allKeysNull = bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)
     // all-null source keys match nothing, but pre-stats dirs must still be
     // CARRIED (an invented empty uncovered set would silently drop them
@@ -4739,7 +4604,7 @@ object SnapshotTable {
     // all-null keys match nothing — a pure insert. The matched-row count
     // is one key-only semi-join over the masked candidates (columnar key
     // read, no rewrite): addedRows = inserts − replaced
-    val bounds = keyEnvelope(srcDf, keyCols)
+    val bounds = statsEnvelope(srcSchema, evolvedMapping, srcStats, keyCols).getOrElse(keyEnvelope(srcDf, keyCols))
     val newMask =
       if (bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)) None
       else
@@ -5455,15 +5320,18 @@ object SnapshotTable {
     * validated first — one scan, constraint-add is refused if any row
     * violates (the Delta ALTER TABLE ADD CONSTRAINT contract) — then every
     * future data-adding commit (create/append/overwrite, exactly-once
-    * epochs, UPDATE rewrites, MERGE sources) enforces it inside the
-    * post-write stats aggregation at zero extra passes; violations abort
+    * epochs, UPDATE rewrites, MERGE sources) enforces it in the writer's
+    * per-file stats fold at zero extra passes; violations abort
     * pre-publish, so a bad batch can never tear the table. Constraints are
     * table properties: they survive overwrite and compaction. */
   def addCheck(spark: SparkSession, root: String, name: String, checkSql: String): Int = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit}
     val base = openBase(spark, root)
     require(!base.m.constraints.contains(name), s"constraint '$name' already exists")
-    val bad = readOf(spark, root, base.m).filter(!coalesce(expr(checkSql), lit(false))).count()
+    val rows = readOf(spark, root, base.m)
+    // every later write binds the CHECK into its stats fold: refuse one it cannot evaluate
+    WriteStats.Spec(spark, rows.schema, Map(name -> checkSql), Map.empty)
+    val bad = rows.filter(!coalesce(expr(checkSql), lit(false))).count()
     if (bad > 0) throw new ConstraintViolationException(name, bad)
     publishConstraints(base, base.m.constraints + (name -> checkSql))
   }

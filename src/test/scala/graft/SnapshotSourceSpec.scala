@@ -696,6 +696,17 @@ class SnapshotSourceSpec extends SparkSuite {
     assert(SnapshotTable.history(spark, root).flatMap(_.appId).sorted == Seq("qX", "qY"))
   }
 
+  test("a replayed epoch is still a no-op after 30 more commits and returns its original version") {
+    val root = freshRoot() + "/t"
+    val vAppend = SnapshotTable.appendBatchExactlyOnce(spark, root, batch(1L -> "a"), 5L, Some("q"))
+    val vUpsert = SnapshotTable.upsertBatchExactlyOnce(spark, root, batch(1L -> "b"), Seq("k"), 6L, Some("q"))
+    (1 to 30).foreach(i => SnapshotTable.append(spark, root, batch(100L + i -> s"x$i")))
+    assert(SnapshotTable.appendBatchExactlyOnce(spark, root, batch(1L -> "a"), 5L, Some("q")) == vAppend)
+    assert(SnapshotTable.upsertBatchExactlyOnce(spark, root, batch(1L -> "b"), Seq("k"), 6L, Some("q")) == vUpsert)
+    assert(SnapshotTable.latestVersion(spark, root).get == vUpsert + 30, "the replays publish nothing")
+    assert(SnapshotTable.read(spark, root).filter("k = 1").as[(Long, String)].collect().toSeq == Seq(1L -> "b"))
+  }
+
   test("TWO independent queries into one catalog table: colliding epoch numbers never dedupe across queries") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext

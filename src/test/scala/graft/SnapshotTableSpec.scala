@@ -494,11 +494,11 @@ class SnapshotTableSpec extends SparkSuite {
   }
 
   test("bitmap-aggregated blooms are byte-identical to the position-set encoding") {
-    // r21 optimization: the post-write stats scan builds blooms with
-    // bitmap_construct_agg instead of collect_set. This pins the published
-    // string: for every file, the manifest bloom must equal encodeBloom of
-    // the probe positions of exactly the file's non-null values — the same
-    // bytes the collect_set path produced.
+    // The writer folds each file's blooms as a bitset. This pins the
+    // published string: for every file, the manifest bloom must equal
+    // encodeBloom of the probe positions of exactly the file's non-null
+    // values — the same bytes the earlier collect_set and
+    // bitmap_construct_agg aggregates produced.
     import org.apache.spark.sql.types.{LongType, StringType}
     val root = freshRoot()
     SnapshotTable.create(
