@@ -294,9 +294,9 @@ object Sources {
     // gates the update, the unconditional DELETE catches the rest), and
     // unmatched source rows insert only under their own condition with
     // an explicit VALUES list. Routed through Spark's parser onto
-    // SnapshotTable.mergeInto, which keeps mergeUpsert's economics (the
-    // envelope prune + key-only touched-file probe bound the rewrite to
-    // files that actually contain a matched key). The oracle replays the
+    // SnapshotTable.mergeInto, the executor the canonical upsert runs on
+    // too (the envelope prune + key-only touched-file probe bound the
+    // rewrite to files that actually contain a matched key). The oracle replays the
     // clause algebra directly on the fixture — the hash-match proves the
     // executor's first-match-wins/insert-condition semantics end-to-end.
     "q_snapshot_merge_cond" -> { (s, dir) =>

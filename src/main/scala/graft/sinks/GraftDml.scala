@@ -47,8 +47,7 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, V2Co
   *    [[SnapshotTable.updateWhere]] when the WHERE is a pure
   *    range/equality conjunction (stats-proven all-match files drop with
   *    no I/O), [[SnapshotTable.deleteExpr]] / [[SnapshotTable.updateExpr]]
-  *    otherwise, [[SnapshotTable.mergeUpsert]] for the canonical upsert
-  *    and [[SnapshotTable.mergeInto]] for every other MERGE — each
+  *    otherwise, and [[SnapshotTable.mergeInto]] for every MERGE — each
   *    rewrites only the files its bounds or matched keys cannot prune;
   *  - merge-on-read: [[SnapshotTable.deleteWhereMor]] /
   *    [[SnapshotTable.updateWhereMor]] for the exact-range DELETE/UPDATE,
@@ -163,17 +162,34 @@ object GraftDmlStrategy extends SparkStrategy {
     def setMap(assigns: Seq[Assignment]): Map[String, String] =
       assigns.map(a => targetColumn(a.key) -> qual(a.value).sql).toMap
 
+    // every target column assigned from its same-named source column
+    // (SET * / INSERT * after analysis) lowers to the star form, so the
+    // canonical upsert reaches the router as its clause set
+    def allStar(assigns: Seq[Assignment]): Boolean = {
+      val covered = assigns.flatMap { a =>
+        (a.key, a.value) match {
+          case (k: AttributeReference, v: AttributeReference)
+              if targetSet.contains(k) && sourceSet.contains(v) && resolver(k.name, v.name) =>
+            Some(k.name)
+          case _ => None
+        }
+      }
+      covered.length == assigns.length &&
+      m.targetTable.output.map(_.name).toSet == covered.toSet
+    }
+    def setOrStar(assigns: Seq[Assignment]): Option[Map[String, String]] =
+      if (allStar(assigns)) None else Some(setMap(assigns))
     val matchedClauses: Seq[SnapshotTable.MergeClause] = m.matchedActions.map {
       case UpdateAction(c, assigns, _) =>
         require(assigns.nonEmpty, "MERGE UPDATE with no assignments")
-        SnapshotTable.MatchedUpdate(c.map(qual(_).sql), Some(setMap(assigns)))
+        SnapshotTable.MatchedUpdate(c.map(qual(_).sql), setOrStar(assigns))
       case DeleteAction(c) => SnapshotTable.MatchedDelete(c.map(qual(_).sql))
       case other => sys.error(s"unsupported MERGE matched action: ${other.getClass.getSimpleName}")
     }
     val notMatchedClauses: Seq[SnapshotTable.NotMatchedInsert] = m.notMatchedActions.map {
       case InsertAction(c, assigns) =>
         require(assigns.nonEmpty, "MERGE INSERT with no assignments")
-        SnapshotTable.NotMatchedInsert(c.map(qual(_).sql), Some(setMap(assigns)))
+        SnapshotTable.NotMatchedInsert(c.map(qual(_).sql), setOrStar(assigns))
       case other => sys.error(s"unsupported MERGE not-matched action: ${other.getClass.getSimpleName}")
     }
     val nbsActions = m.notMatchedBySourceActions
@@ -217,20 +233,6 @@ object GraftDmlStrategy extends SparkStrategy {
       }
     }
 
-    // the canonical upsert: every target column assigned from its
-    // same-named source column (SET * / INSERT * after analysis)
-    def allStar(assigns: Seq[Assignment]): Boolean = {
-      val covered = assigns.flatMap { a =>
-        (a.key, a.value) match {
-          case (k: AttributeReference, v: AttributeReference)
-              if targetSet.contains(k) && sourceSet.contains(v) && resolver(k.name, v.name) =>
-            Some(k.name)
-          case _ => None
-        }
-      }
-      covered.length == assigns.length &&
-      m.targetTable.output.map(_.name).toSet == covered.toSet
-    }
     // EVERY executor keys the source by the TARGET's exact column casing
     // (the MOR routes through physical-mapping lookups; the COW routes
     // through their keyed joins, where a target `K` joined to a source `k`
@@ -248,18 +250,12 @@ object GraftDmlStrategy extends SparkStrategy {
         sourceDf
       else sourceDf.toDF(scala.collection.immutable.ArraySeq.unsafeWrapArray(aligned): _*)
     }
-    val canonicalUpsert = nbsActions.isEmpty && ((m.matchedActions, m.notMatchedActions) match {
-      case (Seq(UpdateAction(None, u, _)), Seq(InsertAction(None, i))) => allStar(u) && allStar(i)
-      case _ => false
-    })
     dmlExec(
       spark,
       s"MERGE INTO ${g.name()}",
       g,
-      if (canonicalUpsert) SnapshotDml.Upsert(alignedSourceDf, keyCols, None, None)
-      else
-        SnapshotDml.Merge(
-          alignedSourceDf, keyCols, matchedClauses, notMatchedClauses, TAlias, SAlias, nbsClauses, nbsBounds))
+      SnapshotDml.Merge(
+        alignedSourceDf, keyCols, matchedClauses, notMatchedClauses, TAlias, SAlias, nbsClauses, nbsBounds))
   }
 
   /** One catalog DML statement as its eager command node, landed by the

@@ -22,26 +22,22 @@ private[sinks] object SnapshotDml {
   final case class Update(cond: Column, skeleton: SnapshotSql.Skeleton, set: Map[String, Column])
       extends Statement
 
-  /** The canonical keyed upsert (update-all / insert-all); a `batchId`
+  /** A MERGE, as [[SnapshotTable.mergeInto]]'s clause set; a `batchId`
     * makes it an exactly-once streaming epoch of writer `appId`. */
-  final case class Upsert(
-      source: DataFrame,
-      keyCols: Seq[String],
-      batchId: Option[Long],
-      appId: Option[String])
-      extends Statement
-
-  /** Any other MERGE, as [[SnapshotTable.mergeInto]]'s clause set. */
   final case class Merge(
       source: DataFrame,
       keyCols: Seq[String],
       matched: Seq[MergeClause],
       notMatched: Seq[NotMatchedInsert],
-      targetAlias: String,
-      sourceAlias: String,
-      notMatchedBySource: Seq[MergeClause],
-      nmbsPruneBounds: Seq[Seq[Bound]])
-      extends Statement
+      targetAlias: String = "t",
+      sourceAlias: String = "s",
+      notMatchedBySource: Seq[MergeClause] = Seq.empty,
+      nmbsPruneBounds: Seq[Seq[Bound]] = Seq.empty,
+      batchId: Option[Long] = None,
+      appId: Option[String] = None)
+      extends Statement {
+    def upsert: Boolean = SnapshotTable.isUpsert(matched, notMatched, notMatchedBySource)
+  }
 
   /** Land `stmt` on the table at `root` as one commit, merge-on-read when
     * `mor` and the shape has a merge-on-read executor, copy-on-write
@@ -57,14 +53,15 @@ private[sinks] object SnapshotDml {
       if (mor) SnapshotTable.updateWhereMor(spark, root, sk.bounds, set)
       else SnapshotTable.updateWhere(spark, root, sk.bounds, set)
     case Update(cond, sk, set) => SnapshotTable.updateExpr(spark, root, cond, sk.bounds, set)
-    case Upsert(source, keyCols, None, _) =>
-      if (mor) SnapshotTable.mergeUpsertMor(spark, root, source, keyCols)
-      else SnapshotTable.mergeUpsert(spark, root, source, keyCols)
-    case Upsert(source, keyCols, Some(batchId), appId) =>
-      if (mor) SnapshotTable.upsertBatchExactlyOnceMor(spark, root, source, keyCols, batchId, appId)
-      else SnapshotTable.upsertBatchExactlyOnce(spark, root, source, keyCols, batchId, appId)
+    // the canonical upsert: a keys mask plus the source dir
+    case mg: Merge if mor && mg.upsert =>
+      mg.batchId.fold(SnapshotTable.mergeUpsertMor(spark, root, mg.source, mg.keyCols))(
+        SnapshotTable.upsertBatchExactlyOnceMor(spark, root, mg.source, mg.keyCols, _, mg.appId))
+    // an epoch upsert re-runs on a lost publish race
+    case mg: Merge if mg.upsert && mg.batchId.nonEmpty =>
+      SnapshotTable.upsertBatchExactlyOnce(spark, root, mg.source, mg.keyCols, mg.batchId.get, mg.appId)
     // unconditional matched-delete: a keys mask, zero data I/O
-    case Merge(source, keyCols, Seq(MatchedDelete(None)), Seq(), _, _, Seq(), _) if mor =>
+    case Merge(source, keyCols, Seq(MatchedDelete(None)), Seq(), _, _, Seq(), _, None, _) if mor =>
       SnapshotTable.deleteMatchedMor(spark, root, source, keyCols)
     case mg: Merge =>
       SnapshotTable.mergeInto(
@@ -74,9 +71,11 @@ private[sinks] object SnapshotDml {
         mg.keyCols,
         mg.matched,
         mg.notMatched,
-        targetAlias = mg.targetAlias,
-        sourceAlias = mg.sourceAlias,
-        notMatchedBySource = mg.notMatchedBySource,
-        nmbsPruneBounds = mg.nmbsPruneBounds)
+        mg.targetAlias,
+        mg.sourceAlias,
+        mg.notMatchedBySource,
+        mg.nmbsPruneBounds,
+        mg.batchId,
+        mg.appId)
   }
 }

@@ -661,7 +661,9 @@ private[sinks] object SnapshotSinkOps {
             SnapshotTable.appendStagedBatchExactlyOnce(spark, root, files, df.schema, batchId, appId)
           case None => SnapshotTable.appendBatchExactlyOnce(spark, root, df, batchId, appId)
         }
-      case Some(ks) => SnapshotDml.run(spark, root, opts.mor, SnapshotDml.Upsert(df, ks, Some(batchId), appId))
+      case Some(ks) =>
+        SnapshotDml.run(spark, root, opts.mor, SnapshotDml.Merge(
+          df, ks, SnapshotTable.UpsertMatched, SnapshotTable.UpsertNotMatched, batchId = Some(batchId), appId = appId))
     }
     compactEvery.foreach { n =>
       if (batchId > 0 && batchId % n == 0)

@@ -16,8 +16,9 @@ import scala.collection.concurrent.TrieMap
   * `DeleteFromTable`/`UpdateTable`/`MergeIntoTable` logical plans — the
   * same trees a DataSource-v2 table would receive — and this object
   * pattern-matches them onto [[SnapshotTable.deleteWhere]]/
-  * [[SnapshotTable.updateWhere]]/[[SnapshotTable.mergeUpsert]]. Every
-  * translation preserves semantics exactly:
+  * [[SnapshotTable.updateWhere]]/[[SnapshotTable.mergeInto]], through the
+  * shared DML router [[SnapshotDml]]. Every translation preserves
+  * semantics exactly:
   *
   *  - range/equality conjunctions (`BETWEEN`, `>=`, `<=`, `=`, `AND`)
   *    become [[SnapshotTable.Bound]]s verbatim — the same manifest-stat
@@ -28,14 +29,14 @@ import scala.collection.concurrent.TrieMap
   *    extra file, never drop a live one) prune the file set, the TRUE
   *    predicate filters rows, and the whole-file fast-drop is disabled
   *    (only the exact translation may prove "every row matches");
-  *  - `MERGE` routes the canonical upsert (`WHEN MATCHED THEN UPDATE
-  *    SET *` + `WHEN NOT MATCHED THEN INSERT *`, ON a conjunction of
-  *    same-named key equalities) onto the dedicated fast paths (incl.
-  *    the MOR O(change) write); every other shape — conditional
+  *  - `MERGE` (ON a conjunction of same-named key equalities) lowers
+  *    onto a [[SnapshotTable.mergeInto]] clause set — conditional
   *    clauses, matched DELETE, explicit SET/INSERT lists, multiple
-  *    first-match-wins clauses, WHEN NOT MATCHED BY SOURCE — lowers
-  *    onto the general [[SnapshotTable.mergeInto]] executor; only
-  *    genuinely untranslatable actions are refused loudly.
+  *    first-match-wins clauses, WHEN NOT MATCHED BY SOURCE; the
+  *    canonical upsert (`WHEN MATCHED THEN UPDATE SET *` + `WHEN NOT
+  *    MATCHED THEN INSERT *`) is one such set, which the router lands as
+  *    a keys mask in merge-on-read mode; only genuinely untranslatable
+  *    actions are refused loudly.
   *
   * Targets must be [[register]]ed (name → table root): DML against
   * anything else is refused — this router must never silently "delete"
@@ -411,61 +412,59 @@ object SnapshotSql {
         val source: DataFrame = org.apache.spark.sql.GraftSqlBridge.ofRows(
           spark,
           substituteRegistered(spark, stripAlias(m.sourceTable)))
-        val stmt = (m.matchedActions, m.notMatchedActions, m.notMatchedBySourceActions) match {
-          case (Seq(UpdateStarAction(None)), Seq(InsertStarAction(None)), Seq()) =>
-            SnapshotDml.Upsert(source, keyCols, None, None)
-          // everything else is a general clause set: conditional
-          // clauses, matched DELETE, explicit SET/INSERT column lists,
-          // multiple first-match-wins matched clauses, and WHEN NOT
-          // MATCHED BY SOURCE (whose rewrite set prunes through each
-          // clause condition's widened range skeleton — or honestly
-          // rewrites the table when no skeleton exists). Conditions and
-          // values travel as SQL text (the parsed expressions' .sql) and
-          // resolve against the statement's own aliases.
-          case (ma, na, nbs) =>
-            val matchedClauses: Seq[SnapshotTable.MergeClause] = ma.map {
-              case UpdateStarAction(c) => SnapshotTable.MatchedUpdate(c.map(_.sql), None)
-              case UpdateAction(c, _, true) => SnapshotTable.MatchedUpdate(c.map(_.sql), None)
-              case UpdateAction(c, assigns, false) =>
-                SnapshotTable.MatchedUpdate(c.map(_.sql), Some(setMapOf(assigns, "SET")))
-              case DeleteAction(c) => SnapshotTable.MatchedDelete(c.map(_.sql))
-              case other =>
-                sys.error(s"unsupported MERGE matched action: ${other.getClass.getSimpleName}")
-            }
-            val notMatchedClauses = na.map {
-              case InsertStarAction(c) => SnapshotTable.NotMatchedInsert(c.map(_.sql), None)
-              case InsertAction(c, assigns) =>
-                SnapshotTable.NotMatchedInsert(c.map(_.sql), Some(setMapOf(assigns, "INSERT")))
-              case other =>
-                sys.error(s"unsupported MERGE not-matched action: ${other.getClass.getSimpleName}")
-            }
-            val nbsClauses: Seq[SnapshotTable.MergeClause] = nbs.map {
-              case UpdateAction(c, assigns, false) =>
-                SnapshotTable.MatchedUpdate(c.map(_.sql), Some(setMapOf(assigns, "SET")))
-              case DeleteAction(c) => SnapshotTable.MatchedDelete(c.map(_.sql))
-              case other =>
-                sys.error(s"unsupported MERGE not-matched-by-source action: ${other.getClass.getSimpleName}")
-            }
-            // each BY SOURCE clause's widened range skeleton, for rewrite
-            // pruning only (widening keeps a superset of the files a
-            // condition can touch — always safe; an empty skeleton makes
-            // the executor fall back to the full-table rewrite)
-            val nbsBounds = nbs.map {
-              case UpdateAction(Some(c), _, _) => skeleton(c).bounds
-              case DeleteAction(Some(c)) => skeleton(c).bounds
-              case _ => Seq.empty[SnapshotTable.Bound]
-            }
-            SnapshotDml.Merge(
-              source,
-              keyCols,
-              matchedClauses,
-              notMatchedClauses,
-              aliasOf(m.targetTable),
-              aliasOf(m.sourceTable),
-              nbsClauses,
-              nbsBounds)
+        // every MERGE is a clause set — the canonical upsert, conditional
+        // clauses, matched DELETE, explicit SET/INSERT column lists,
+        // multiple first-match-wins matched clauses, and WHEN NOT
+        // MATCHED BY SOURCE (whose rewrite set prunes through each
+        // clause condition's widened range skeleton — or honestly
+        // rewrites the table when no skeleton exists). Conditions and
+        // values travel as SQL text (the parsed expressions' .sql) and
+        // resolve against the statement's own aliases.
+        val matchedClauses: Seq[SnapshotTable.MergeClause] = m.matchedActions.map {
+          case UpdateStarAction(c) => SnapshotTable.MatchedUpdate(c.map(_.sql), None)
+          case UpdateAction(c, _, true) => SnapshotTable.MatchedUpdate(c.map(_.sql), None)
+          case UpdateAction(c, assigns, false) =>
+            SnapshotTable.MatchedUpdate(c.map(_.sql), Some(setMapOf(assigns, "SET")))
+          case DeleteAction(c) => SnapshotTable.MatchedDelete(c.map(_.sql))
+          case other =>
+            sys.error(s"unsupported MERGE matched action: ${other.getClass.getSimpleName}")
         }
-        SnapshotDml.run(spark, reg.root, reg.morWrites, stmt)
+        val notMatchedClauses = m.notMatchedActions.map {
+          case InsertStarAction(c) => SnapshotTable.NotMatchedInsert(c.map(_.sql), None)
+          case InsertAction(c, assigns) =>
+            SnapshotTable.NotMatchedInsert(c.map(_.sql), Some(setMapOf(assigns, "INSERT")))
+          case other =>
+            sys.error(s"unsupported MERGE not-matched action: ${other.getClass.getSimpleName}")
+        }
+        val nbsClauses: Seq[SnapshotTable.MergeClause] = m.notMatchedBySourceActions.map {
+          case UpdateAction(c, assigns, false) =>
+            SnapshotTable.MatchedUpdate(c.map(_.sql), Some(setMapOf(assigns, "SET")))
+          case DeleteAction(c) => SnapshotTable.MatchedDelete(c.map(_.sql))
+          case other =>
+            sys.error(s"unsupported MERGE not-matched-by-source action: ${other.getClass.getSimpleName}")
+        }
+        // each BY SOURCE clause's widened range skeleton, for rewrite
+        // pruning only (widening keeps a superset of the files a
+        // condition can touch — always safe; an empty skeleton makes
+        // the executor fall back to the full-table rewrite)
+        val nbsBounds = m.notMatchedBySourceActions.map {
+          case UpdateAction(Some(c), _, _) => skeleton(c).bounds
+          case DeleteAction(Some(c)) => skeleton(c).bounds
+          case _ => Seq.empty[SnapshotTable.Bound]
+        }
+        SnapshotDml.run(
+          spark,
+          reg.root,
+          reg.morWrites,
+          SnapshotDml.Merge(
+            source,
+            keyCols,
+            matchedClauses,
+            notMatchedClauses,
+            aliasOf(m.targetTable),
+            aliasOf(m.sourceTable),
+            nbsClauses,
+            nbsBounds))
 
       // ───────── schema / constraint DDL (metadata-only commits) ─────────
 

@@ -213,9 +213,9 @@ object SnapshotTable {
 
   /** The key ENVELOPE of `df` — per-key min/max collapsed to prune
     * [[Bound]]s (one tiny agg job; all-None bounds mean every value of
-    * that key was null, which matches nothing). Shared by every
-    * key-driven candidate prune: merge, merge-on-read, matched-delete,
-    * and rebase's merge replay. */
+    * that key was null, which matches nothing). The fallback of
+    * [[writeSource]] when the write's stats lack a key's range, and
+    * rebase's replay of a recorded key sidecar. */
   private def keyEnvelope(df: DataFrame, keyCols: Seq[String]): Seq[Bound] = {
     import org.apache.spark.sql.functions.{col, max, min}
     val aggs = keyCols.flatMap(k =>
@@ -231,16 +231,18 @@ object SnapshotTable {
     * min and the greatest file max over the files holding a non-null key
     * (strings in UTF-8 byte order, as the aggregate orders them), as the
     * same JVM values that aggregate collects. No such file → that key's
-    * bound is (None, None). None when some file with a non-null key has no
-    * complete [min, max] pair (a string past the stat cap, a NaN) or a key
-    * type records none — the caller then runs [[keyEnvelope]]. */
+    * bound is (None, None), as is a key `schema` lacks (no file carries
+    * it). None when some file with a non-null key has no complete
+    * [min, max] pair (a string past the stat cap, a NaN) or a key type
+    * records none — the caller then runs [[keyEnvelope]]. */
   private[graft] def statsEnvelope(
       schema: org.apache.spark.sql.types.StructType,
       physicalOf: Map[String, String],
       stats: Seq[FileStat],
       keyCols: Seq[String]): Option[Seq[Bound]] = {
     import org.apache.spark.sql.types._
-    def bound(k: String): Option[Bound] = schema.fields.find(_.name == k).map(_.dataType).flatMap { dt =>
+    def bound(k: String): Option[Bound] = schema.fields.find(_.name == k).map(_.dataType).fold(
+      Option(Bound(k, None, None))) { dt =>
       val p = physicalOf.getOrElse(k, k)
       val held = stats.filter(f => f.rows > 0 && f.nonNull.get(p).forall(_ > 0))
       if (!WriteStats.statable(dt) || held.exists(f => !f.min.contains(p) || !f.max.contains(p))) None
@@ -666,7 +668,6 @@ object SnapshotTable {
     * commit deleted requires an explicit re-append, never a re-pick.
     * The branch survives (drop it when done). */
   def cherryPick(spark: SparkSession, root: String, name: String): Int = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit}
     require(splitRef(root)._2.isEmpty, "cherry-pick from the main table handle")
     val f = fs(spark, root)
     val fork = forkOf(f, root, name)
@@ -726,18 +727,8 @@ object SnapshotTable {
         case (Some(a), Some(b)) => mergeSchemas(a, b)
         case (a, b) => a.orElse(b).getOrElse(sys.error("cherry-pick needs a schema-recording manifest"))
       }
-      if ((m.constraints.toSet -- enforced.toSet).nonEmpty) {
-        val dir = spark.read.parquet(deltaDirs.map(d => new Path(dataRoot(root), d).toString): _*)
-        val logicalDir = mappingOf(merged).foldLeft(dir) {
-          case (d, (logical, physical)) =>
-            if (d.columns.contains(physical)) d.withColumn(logical, d("`" + physical + "`")) else d
-        }
-        (m.constraints.toSet -- enforced.toSet).foreach { case (cname, check) =>
-          val bad = logicalDir.filter(!coalesce(expr(check), lit(false))).count()
-          if (bad > 0) throw new ConstraintViolationException(cname, bad)
-        }
-        enforced = m.constraints
-      }
+      reproveChecks(spark, root, deltaDirs, merged, m.constraints.toSet -- enforced.toSet)
+      enforced = m.constraints
       // CDC computes the file-set diff → exactly the delta's rows as inserts
       try
         return publish(spark, root, base.commit(
@@ -2226,46 +2217,20 @@ object SnapshotTable {
   /** Append a batch. Appends COMMUTE, so a lost publish race retries
     * automatically against the new latest version (Delta's conflict rule:
     * append-vs-append is never a real conflict) — the data dir is written
-    * once, only the manifest attempt repeats. If a racing commit changed
-    * the constraint set, the already-written dir is re-validated against
-    * the new checks before the retry publishes (enforcement can never be
-    * skipped by racing it). Replacing/rewriting actions
-    * (overwrite/compact/DML/merge) deliberately do NOT blind-retry: their
-    * output was derived from the base version they read, so a retry could
-    * silently drop a concurrent writer's rows — they surface
-    * [[ConcurrentCommitException]] for the caller to re-derive. */
+    * once, only the manifest attempt repeats ([[publishAppend]]).
+    * Replacing/rewriting actions (overwrite/compact/DML/merge)
+    * deliberately do NOT blind-retry: their output was derived from the
+    * base version they read, so a retry could silently drop a concurrent
+    * writer's rows — they surface [[ConcurrentCommitException]] for the
+    * caller to re-derive. */
   def append(spark: SparkSession, root: String, df: DataFrame): Int = {
-    var written: Option[(String, Long, Seq[FileStat])] = None
-    var enforced: Map[String, String] = Map.empty
-    var attempts = 0
-    while (true) {
-      val base = openBaseOrEmpty(spark, root)
-      val checks = base.m.constraints
-      // evolve FIRST: the merge guards (type changes, physical-name
-      // collisions) must fire before any bytes are written
-      val schema = evolvedSchema(base.schema, df.schema)
-      if (written.isEmpty) {
-        written = Some(
-          writeData(spark, root, clusterFor(df, schema), checks, mappingOf(schemaFromJson(schema))))
-        enforced = checks
-      } else if (checks != enforced) {
-        // a racing commit changed the constraint set: re-validate the dir
-        // against every check not already enforced AS THE SAME (name, sql)
-        // PAIR — a same-named constraint with new text must re-prove too
-        reproveChecks(spark, root, Seq(written.get._1), schemaFromJson(schema), checks.toSet -- enforced.toSet)
-        enforced = checks
-      }
-      val (rel, n, stats) = written.get
-      try
-        return publish(spark, root, base.commit(
-          "append", base.m.dirs, Seq(rel), stats, n, Nil, Some(schema), None, None, None))
-      catch {
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts >= 50) throw e // livelock guard; the dir vacuums away
-      }
-    }
-    -1 // unreachable
+    val base = openBaseOrEmpty(spark, root)
+    // evolve FIRST: the merge guards (type changes, physical-name
+    // collisions) must fire before any bytes are written
+    val schema = evolvedSchema(base.schema, df.schema)
+    val (rel, n, stats) =
+      writeData(spark, root, clusterFor(df, schema), base.m.constraints, mappingOf(schemaFromJson(schema)))
+    publishAppend(base, Some(rel), n, stats, df.schema, None, None)
   }
 
   /** THE exactly-once epoch identity, shared by every dedup site: a
@@ -2305,16 +2270,14 @@ object SnapshotTable {
       df: DataFrame,
       batchId: Long,
       appId: Option[String] = None): Int = {
-    def committed(): Option[Int] = epochCommitted(spark, root, batchId, appId)
-    committed().getOrElse {
-      val base0 = openBaseOrEmpty(spark, root)
-      val checks0 = base0.m.constraints
+    epochCommitted(spark, root, batchId, appId).getOrElse {
+      val base = openBaseOrEmpty(spark, root)
       // epoch appends honor the table's declared clustering exactly like
       // batch append (clusterFor) — without this, a long-running stream
       // into a PARTITIONED BY table silently degrades its file pruning
-      val clustered = base0.m.schemaJson.map(clusterFor(df, _)).getOrElse(df)
-      val (rel, n, stats) = writeData(spark, root, clustered, checks0, base0.mapping)
-      publishEpochAppend(spark, root, Some(rel), n, stats, df.schema, checks0, batchId, appId, committed)
+      val clustered = base.m.schemaJson.map(clusterFor(df, _)).getOrElse(df)
+      val (rel, n, stats) = writeData(spark, root, clustered, base.m.constraints, base.mapping)
+      publishAppend(base, Some(rel), n, stats, df.schema, Some(batchId), appId)
     }
   }
 
@@ -2344,10 +2307,8 @@ object SnapshotTable {
       schema: org.apache.spark.sql.types.StructType,
       batchId: Long,
       appId: Option[String] = None): Int = {
-    def committed(): Option[Int] = epochCommitted(spark, root, batchId, appId)
-    committed().getOrElse {
+    epochCommitted(spark, root, batchId, appId).getOrElse {
       val base0 = openBaseOrEmpty(spark, root)
-      val checks0 = base0.m.constraints
       val mapping0 = base0.mapping
       val clusterCols0 = base0.schema.map(clusterColsOf).getOrElse(Seq.empty)
       // EMPTY epoch on an existing table with no schema delta (the trailing
@@ -2358,9 +2319,7 @@ object SnapshotTable {
       // through (the seed write is what establishes them).
       if (staged.isEmpty &&
         base0.schema.exists(prior => prior == schemaFromJson(evolvedSchema(Some(prior), schema)))) {
-        return publishEpochAppend(
-          spark, root, rel = None, n = 0L, stats = Seq.empty, dfSchema = schema,
-          checks0 = checks0, batchId = batchId, appId = appId, committed = committed)
+        return publishAppend(base0, None, 0L, Seq.empty, schema, Some(batchId), appId)
       }
       if (staged.isEmpty || mapping0.nonEmpty || clusterCols0.nonEmpty) {
         val df =
@@ -2378,61 +2337,58 @@ object SnapshotTable {
           require(f.rename(sp, new Path(dir, sp.getName)), s"failed to adopt staged file ${s.path} into $rel")
           s.copy(path = rel + "/" + sp.getName)
         }
-        try reproveChecks(spark, root, Seq(rel), schema, checks0.toSet)
+        try reproveChecks(spark, root, Seq(rel), schema, base0.m.constraints.toSet)
         catch {
           case e: ConstraintViolationException =>
             f.delete(dir, true) // abort pre-publish: no orphan lingers
             throw e
         }
-        publishEpochAppend(spark, root, Some(rel), stats.map(_.rows).sum, stats, schema, checks0, batchId, appId, committed)
+        publishAppend(base0, Some(rel), stats.map(_.rows).sum, stats, schema, Some(batchId), appId)
       }
     }
   }
 
-  /** The epoch-append publish loop both exactly-once append surfaces
-    * share: retry on publish races, re-proving any constraint that raced
-    * in against the already-written dir; a replayed epoch that lost to
-    * itself returns the winner's version. */
-  private def publishEpochAppend(
-      spark: SparkSession,
-      root: String,
-      rel: Option[String], // None = a marker-only empty epoch (no new dir)
+  /** The publish loop of every commuting append — batch, epoch and
+    * staged epoch: `rel` (None for a marker-only empty epoch) is written
+    * and proved against the CHECKs of `base`, the version the write
+    * opened, which the first attempt commits over. A lost publish race
+    * re-opens the latest version and retries, at most 50 times (the dir
+    * of an abandoned attempt vacuums away): the schema re-evolves over
+    * the new base, and a CHECK a racing commit added or re-worded — as a
+    * (name, sql) pair — is re-proved over the written dir before the
+    * commit claims it, so enforcement can never be skipped by racing it.
+    * A replayed epoch that lost to itself returns the winner's version. */
+  private def publishAppend(
+      base: Base,
+      rel: Option[String],
       n: Long,
       stats: Seq[FileStat],
       dfSchema: org.apache.spark.sql.types.StructType,
-      checks0: Map[String, String],
-      batchId: Long,
-      appId: Option[String],
-      committed: () => Option[Int]): Int = {
-    {
-      var result = -1
-      var enforced = checks0
-      var attempts = 0
-      while (result < 0) {
-        val base = openBaseOrEmpty(spark, root)
-        val schema = evolvedSchema(base.schema, dfSchema)
-        val checksNow = base.m.constraints
-        if (checksNow != enforced) {
-          // a constraint raced in since the dir was validated: re-prove the
-          // already-written data before claiming the new constraint set
-          // (marker-only epochs carry no new data — nothing to re-prove)
-          reproveChecks(spark, root, rel.toSeq, schemaFromJson(schema), checksNow.toSet -- enforced.toSet)
-          enforced = checksNow
-        }
-        try result = publish(spark, root, base.commit(
-          "append", base.m.dirs, rel.toSeq, stats, n, Nil, Some(schema), Some(batchId), appId, None))
-        catch {
-          case e: ConcurrentCommitException =>
-            committed().foreach(v => return v) // replayed epoch lost the race: done
-            // else: interleaved OTHER writer took the slot; loop re-reads
-            // latest — with the same livelock cap as plain append (the data
-            // dir of an abandoned attempt vacuums away)
-            attempts += 1
-            if (attempts >= 50) throw e
-        }
+      batchId: Option[Long],
+      appId: Option[String]): Int = {
+    val Base(spark, root, _, _) = base
+    var at = base
+    var enforced = base.m.constraints
+    var attempts = 0
+    while (true) {
+      val schema = evolvedSchema(at.schema, dfSchema)
+      val checks = at.m.constraints
+      if (checks != enforced) {
+        reproveChecks(spark, root, rel.toSeq, schemaFromJson(schema), checks.toSet -- enforced.toSet)
+        enforced = checks
       }
-      result
+      try
+        return publish(spark, root, at.commit(
+          "append", at.m.dirs, rel.toSeq, stats, n, Nil, Some(schema), batchId, appId, None))
+      catch {
+        case e: ConcurrentCommitException =>
+          batchId.flatMap(epochCommitted(spark, root, _, appId)).foreach(v => return v)
+          attempts += 1
+          if (attempts >= 50) throw e
+      }
+      at = openBaseOrEmpty(spark, root)
     }
+    -1 // unreachable
   }
 
   /** The stable streaming query id, when running on a stream-execution
@@ -3780,7 +3736,7 @@ object SnapshotTable {
   }
 
   /** Exact touched-file discovery — the Delta MERGE find-touched-files
-    * join shared by [[mergeUpsert]] and [[mergeInto]]: the files of
+    * join of [[mergeInto]]: the files of
     * `candidates` that CONTAIN a key of `srcKeys`, found by a key-only
     * columnar scan (plus the file name) semi-joined to the source keys.
     * The scan reads THROUGH pending merge-on-read masks: a masked-out row
@@ -3808,101 +3764,72 @@ object SnapshotTable {
         .toSet
     }
 
-  /** Upsert `source` by `keyCols` — the MERGE core (whenMatched update-all,
-    * whenNotMatched insert-all): target rows whose key appears in `source`
-    * are replaced wholesale by the source row; all other source rows
-    * insert. The rewrite set is found in two stages, both bounded:
-    * (1) envelope prune — one model-sized aggregate computes source's
-    * per-key-column [min,max] and the manifest stats rule out every file
-    * whose key range can't intersect it, with zero I/O; (2) exact
-    * touched-file discovery — a key-column-ONLY scan of the surviving
-    * candidates semi-joined against the source keys names the files that
-    * actually CONTAIN a matched key (the Delta MERGE find-touched-files
-    * join), so a source whose new keys widen the envelope (the typical
-    * "new ids above the current max" batch) still rewrites only the files
-    * with real matches. Only those files pay the full-width anti-join
-    * rewrite; an incremental upsert against a key-clustered 100-TB table
-    * touches the few files its matched keys live in, and AQE broadcasts a
-    * small source. `source` should be key-unique (duplicate-key source
-    * rows all land, the caveat Delta raises as an error); null-keyed
-    * source rows never match (equi-join semantics) and simply insert;
-    * columns `source` omits read as null on replaced rows; new source
-    * columns evolve the schema like append ([[mergeSchemas]]). Returns the
-    * new version (or the current one for an empty source — a no-op). */
-  def mergeUpsert(
-      spark: SparkSession,
-      root: String,
+  /** A keyed statement's source as [[writeSource]] landed it: the data
+    * dir, its rows and per-file stats, the dir read back in logical names,
+    * and the per-key envelope [min, max] that prunes candidate files. */
+  private final case class KeyedSource(
+      rel: String,
+      rows: Long,
+      stats: Seq[FileStat],
+      df: DataFrame,
+      bounds: Seq[Bound]) {
+
+    /** Every key is null in every row (or there is no row): the source
+      * matches nothing. */
+    def keyless: Boolean = bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)
+  }
+
+  /** Write the source of a keyed statement ([[mergeInto]],
+    * [[mergeUpsertMor]], [[deleteMatchedMor]]) ONCE, as a fresh data dir
+    * under `schema`'s types and physical names with `constraints` proved,
+    * and read it back: every later stage — envelope, touched-file probe,
+    * joins, key sidecar — sees the written files, so a non-deterministic
+    * source (ORDER BY rand() LIMIT n, a subquery over a changing table) is
+    * evaluated once and every stage agrees on its keys. The envelope comes
+    * from the write's own stats ([[statsEnvelope]]); only a key whose
+    * stats lack a [min, max] costs the aggregate [[keyEnvelope]] over the
+    * written dir. The dir is referenced by no manifest until a commit adds
+    * it ([[vacuum]] reclaims it otherwise). */
+  private def writeSource(
+      base: Base,
       source: DataFrame,
       keyCols: Seq[String],
-      batchId: Option[Long] = None,
-      appId: Option[String] = None): Int = {
-    import org.apache.spark.sql.functions.col
-    require(keyCols.nonEmpty, "mergeUpsert needs at least one key column")
-    val base = openBase(spark, root)
-    val m = base.m
-    val priorSchema = base.schema
-    val evolved = evolvedSchema(priorSchema, source.schema)
-    val evolvedMapping = mappingOf(schemaFromJson(evolved))
-    val (srcRel, nSrc, srcStats) = writeData(spark, root, source, m.constraints, evolvedMapping)
-    if (nSrc == 0) return base.version // empty upsert: no-op; the orphan dir vacuums away
-    // read the written source back in LOGICAL names (the dir carries only
-    // the source's own columns; restrict the projection to those)
-    val srcSchema = org.apache.spark.sql.types.StructType(
-      schemaFromJson(evolved).fields.filter(f => source.columns.contains(f.name)))
-    val srcDf = readTablePaths(spark, Some(srcSchema), Seq(new Path(dataRoot(root), srcRel).toString))
-    val srcKeys = srcDf.select(keyCols.map(k => col("`" + k + "`")): _*)
-    // stage 1: envelope prune (zero I/O; min/max ignore null keys)
-    val bounds = statsEnvelope(srcSchema, evolvedMapping, srcStats, keyCols).getOrElse(keyEnvelope(srcDf, keyCols))
-    val allKeysNull = bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)
-    // all-null source keys match nothing, but pre-stats dirs must still be
-    // CARRIED (an invented empty uncovered set would silently drop them
-    // from the manifest): run the real prune with no bounds — the
-    // touched-file discovery then finds zero matches and only stat-less
-    // dirs pay an identity rewrite
-    val plan = prunePlanOf(m, if (allKeysNull) Seq.empty else bounds)
-    // stage 2: exact touched-file discovery over the candidates
-    val touched = touchedFiles(spark, root, m, priorSchema, plan.keep, keyCols, srcKeys)
-    val untouched = m.files.filterNot(f => touched.contains(f.path))
-    val rewritePaths = touched.toSeq.sorted ++ plan.uncoveredDirs
-    // write-time CDC ([[Cdc]]): the source dir IS the commit's insert set
-    // (wholesale-replace — every source row lands), so inserts cost
-    // nothing to capture; delete pre-images (replaced target rows) are
-    // the semi-join complement of the survivors the rewrite computes
-    // anyway — one extra key-pruned scan of only the touched files.
-    var cdcRec: Option[Cdc] =
-      if (cdcOnWrite(spark)) Some(Cdc(rewritePaths, None, Seq(srcRel)))
-      else None
-    val (survDirs, survStats, replaced) =
-      if (rewritePaths.isEmpty) (Seq.empty[String], Seq.empty[FileStat], 0L)
-      else {
-        val tgt = base.read(rewritePaths)
-        val before = base.liveRows(rewritePaths, tgt)
-        cdcRec = cdcRec.map(_.copy(chDir = Some(writeCdcSidecar(
-          spark, root,
-          tgt.join(srcKeys, keyCols, "left_semi")
-            .withColumn(CdcTypeCol, org.apache.spark.sql.functions.lit("delete")),
-          base.mapping))))
-        val survivors = tgt.join(srcKeys, keyCols, "left_anti")
-        val (rel, n, stats) = writeData(spark, root, survivors, m.constraints, evolvedMapping)
-        if (n == 0) (Seq.empty[String], Seq.empty[FileStat], before)
-        else (Seq(rel), stats, before - n)
-      }
-    // masks carry on untouched files only; rewritten entries leave theirs
-    publish(spark, root, base.commit(
-      "merge", untouched.map(_.path), survDirs :+ srcRel, survStats ++ srcStats, nSrc - replaced, Nil,
-      Some(evolved), batchId, appId, cdcRec))
+      schema: org.apache.spark.sql.types.StructType,
+      constraints: Map[String, String]): KeyedSource = {
+    val Base(spark, root, _, _) = base
+    val mapping = mappingOf(schema)
+    val (rel, n, stats) = writeData(spark, root, source, constraints, mapping)
+    val written =
+      org.apache.spark.sql.types.StructType(schema.fields.filter(f => source.columns.contains(f.name)))
+    val df = readTablePaths(spark, Some(written), Seq(new Path(dataRoot(root), rel).toString))
+    val bounds =
+      if (n == 0) keyCols.map(Bound(_, None, None))
+      else statsEnvelope(written, mapping, stats, keyCols).getOrElse(keyEnvelope(df, keyCols))
+    KeyedSource(rel, n, stats, df, bounds)
   }
+
+  /** Upsert `source` by `keyCols` — [[mergeInto]] with the canonical
+    * clause set ([[isUpsert]]): target rows whose key appears in `source`
+    * are replaced wholesale by the source row; all other source rows
+    * insert. `source` should be key-unique (duplicate-key source rows all
+    * land, the caveat Delta raises as an error); null-keyed source rows
+    * never match (equi-join semantics) and simply insert; columns
+    * `source` omits read as null on replaced rows; new source columns
+    * evolve the schema like append ([[mergeSchemas]]). Returns the new
+    * version (or the current one for an empty source — a no-op). */
+  def mergeUpsert(spark: SparkSession, root: String, source: DataFrame, keyCols: Seq[String]): Int =
+    mergeInto(spark, root, source, keyCols, UpsertMatched, UpsertNotMatched)
 
   /** EXACTLY-ONCE streaming UPSERT — the `foreachBatch` CDC-apply
     * contract, [[appendBatchExactlyOnce]]'s MERGE sibling: the micro-batch
     * id rides the merge commit's manifest, so a replayed epoch (restart,
     * retry, speculative driver) finds its batchId already committed and
     * becomes a no-op — each epoch's upsert applies exactly once however
-    * many times the batch reruns. A lost publish race re-checks the log
-    * (our own commit won ⇒ done) and otherwise RERUNS the whole merge
-    * against the new latest version — the rewrite set must be re-derived,
-    * a stale one could resurrect rows a concurrent commit replaced.
-    * Orphaned dirs of lost attempts are reclaimed by [[vacuum]]. */
+    * many times the batch reruns. A lost publish race RERUNS the whole
+    * merge against the new latest version ([[upsertEpoch]]) — the rewrite
+    * set must be re-derived, a stale one could resurrect rows a concurrent
+    * commit replaced. Orphaned dirs of lost attempts are reclaimed by
+    * [[vacuum]]. */
   def upsertBatchExactlyOnce(
       spark: SparkSession,
       root: String,
@@ -3910,31 +3837,25 @@ object SnapshotTable {
       keyCols: Seq[String],
       batchId: Long,
       appId: Option[String] = None): Int =
-    upsertEpoch(spark, root, batchId, appId)(
-      mergeUpsert(spark, root, source, keyCols, Some(batchId), appId))
+    upsertEpoch(
+      mergeInto(spark, root, source, keyCols, UpsertMatched, UpsertNotMatched, batchId = Some(batchId), appId = appId))
 
-  /** The exactly-once retry loop of both keyed epoch upserts: a replayed
-    * epoch returns its committed version; a lost publish race re-checks
-    * the log (our own commit won ⇒ done) and otherwise re-runs `merge`
-    * against the new latest version, capped at 20 attempts (the orphaned
-    * dirs of lost attempts vacuum away). */
-  private def upsertEpoch(spark: SparkSession, root: String, batchId: Long, appId: Option[String])(
-      merge: => Int): Int = {
-    def committed(): Option[Int] = epochCommitted(spark, root, batchId, appId)
-    committed().getOrElse {
-      var result = -1
-      var attempts = 0
-      while (result < 0) {
-        try result = merge
-        catch {
-          case e: ConcurrentCommitException =>
-            committed().foreach(v => return v) // replayed epoch lost to itself: done
-            attempts += 1
-            if (attempts >= 20) throw e
-        }
+  /** The retry loop of both keyed epoch upserts: `merge` checks its own
+    * epoch first (a replayed epoch, or one whose earlier attempt won a
+    * race it saw as lost, returns the committed version); a lost publish
+    * race re-runs it against the new latest version, capped at 20
+    * attempts (the orphaned dirs of lost attempts vacuum away). */
+  private def upsertEpoch(merge: => Int): Int = {
+    var attempts = 0
+    while (true) {
+      try return merge
+      catch {
+        case e: ConcurrentCommitException =>
+          attempts += 1
+          if (attempts >= 20) throw e
       }
-      result
     }
+    -1 // unreachable
   }
 
   /** `foreachBatch` adapter for streaming upsert: `stream.writeStream
@@ -3958,8 +3879,9 @@ object SnapshotTable {
   /** `WHEN MATCHED [AND condition] THEN UPDATE SET ...`. `set = None` is
     * `SET *`: every column the SOURCE carries assigns from the source
     * row; columns the source omits keep their target value (Delta's
-    * star-expansion — note [[mergeUpsert]]'s wholesale-replace form nulls
-    * them instead, its documented contract). */
+    * star-expansion) — except in the canonical upsert ([[isUpsert]]),
+    * whose unconditional `SET *` replaces the whole row, so omitted
+    * columns read null. */
   final case class MatchedUpdate(condition: Option[String], set: Option[Map[String, String]])
       extends MergeClause
 
@@ -3973,8 +3895,23 @@ object SnapshotTable {
   final case class NotMatchedInsert(condition: Option[String], values: Option[Map[String, String]])
       extends MergeClause
 
-  /** General MERGE — the full Delta-shaped statement ([[mergeUpsert]] is
-    * the canonical-upsert fast path): matched target rows walk the
+  /** The canonical upsert's clauses: `WHEN MATCHED THEN UPDATE SET *`
+    * and `WHEN NOT MATCHED THEN INSERT *`. */
+  private[sinks] val UpsertMatched: Seq[MergeClause] = Seq(MatchedUpdate(None, None))
+  private[sinks] val UpsertNotMatched: Seq[NotMatchedInsert] = Seq(NotMatchedInsert(None, None))
+
+  /** True iff a clause set is the canonical upsert — [[UpsertMatched]],
+    * [[UpsertNotMatched]] and no BY SOURCE clause: every source row lands
+    * as is and replaces the target row of its key. The one test of that
+    * shape; the DML router ([[SnapshotDml]]) and [[mergeInto]] both ask
+    * it. */
+  private[sinks] def isUpsert(
+      matched: Seq[MergeClause],
+      notMatched: Seq[NotMatchedInsert],
+      notMatchedBySource: Seq[MergeClause]): Boolean =
+    matched == UpsertMatched && notMatched == UpsertNotMatched && notMatchedBySource.isEmpty
+
+  /** MERGE — the full Delta-shaped statement: matched target rows walk the
     * `matched` clauses IN ORDER and the first clause whose condition
     * holds applies (update or delete; none → the row carries unchanged);
     * source rows matching NO target key walk `notMatched` the same way
@@ -3983,12 +3920,26 @@ object SnapshotTable {
     * list, or DELETE — conditions see the target row only; `SET *` is
     * meaningless without a source row and refused).
     *
-    * Economics are [[mergeUpsert]]'s: the zero-I/O envelope prune plus
-    * the key-only touched-file probe bound the rewrite to the files that
-    * actually CONTAIN a matched key, so a conditional merge against a
-    * key-clustered 100-TB table rewrites only those files; the
-    * not-matched anti-join reads key columns of the candidate files
-    * only. `notMatchedBySource` clauses are the expensive shape by
+    * The source is written once ([[writeSource]]). The rewrite set is
+    * found in two stages, both bounded: (1) envelope prune — the
+    * source's per-key [min, max], from its write's stats, rules out with
+    * zero I/O every file whose key range can't intersect it; (2) exact
+    * touched-file discovery — a key-column-ONLY scan of the surviving
+    * candidates semi-joined to the source keys ([[touchedFiles]]) names
+    * the files that actually CONTAIN a matched key, so a source whose new
+    * keys widen the envelope still rewrites only the files with real
+    * matches, and a merge against a key-clustered 100-TB table rewrites
+    * only those; the not-matched anti-join reads key columns of the
+    * candidate files only.
+    *
+    * The canonical upsert ([[isUpsert]], what [[mergeUpsert]] calls)
+    * lands its source dir AS IS — the source write proves the CHECKs —
+    * and rewrites each touched file as its unmatched rows; its change
+    * capture is a sidecar of the replaced rows' pre-images plus the
+    * source dir as the insert set. Every other clause set writes one new
+    * dir of survivors and inserts.
+    *
+    * `notMatchedBySource` clauses are the expensive shape by
     * NATURE (any file may hold unmatched rows): their rewrite set is
     * every file that can possibly satisfy a clause condition —
     * `nmbsPruneBounds` carries each clause's widened range skeleton for
@@ -4003,7 +3954,8 @@ object SnapshotTable {
     * source no-ops unless `notMatchedBySource` is present (then every
     * target row is by definition unmatched — `WHEN NOT MATCHED BY SOURCE
     * THEN DELETE` against an empty source clears the table, the SQL
-    * semantics). Returns the new version (or the current one when
+    * semantics). `batchId` makes the merge an exactly-once epoch of
+    * writer `appId`. Returns the new version (or the current one when
     * nothing changed). */
   def mergeInto(
       spark: SparkSession,
@@ -4016,19 +3968,20 @@ object SnapshotTable {
       sourceAlias: String = "s",
       notMatchedBySource: Seq[MergeClause] = Seq.empty,
       nmbsPruneBounds: Seq[Seq[Bound]] = Seq.empty,
-      batchId: Option[Long] = None): Int = {
+      batchId: Option[Long] = None,
+      appId: Option[String] = None): Int = {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
     require(keyCols.nonEmpty, "mergeInto needs at least one key column")
     // exactly-once epochs (the appendBatchExactlyOnce contract): a replayed
-    // batch finds its id already committed and no-ops — the incremental
-    // MV refresh ([[SnapshotMv]]) rides this to make crash-replays safe.
-    // STRICT identity like every dedup site ([[epochCommitted]]): an
-    // appId-carrying STREAM epoch that happens to share this number must
-    // not swallow the merge (an adopted skip here would silently lose the
-    // MV refresh while carrySync advances).
+    // batch finds its id already committed and no-ops — the streaming
+    // upsert and the incremental MV refresh ([[SnapshotMv]]) ride this to
+    // make crash-replays safe. STRICT identity like every dedup site
+    // ([[epochCommitted]]): another writer's epoch that happens to share
+    // this number must not swallow the merge (an adopted skip would
+    // silently lose the MV refresh while carrySync advances).
     batchId.foreach { b =>
-      epochCommitted(spark, root, b, None).foreach(v => return v)
+      epochCommitted(spark, root, b, appId).foreach(v => return v)
     }
     require(
       matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
@@ -4087,40 +4040,58 @@ object SnapshotTable {
     }
     def q(n: String) = col("`" + n + "`")
     val srcColumns = source.columns.toSet
-    // materialize the source ONCE (mergeUpsert's move: a fresh data dir,
-    // never referenced by any manifest, reclaimed by vacuum): every stage
-    // below — envelope agg, touched-file probe, survivors join, insert
-    // anti-join, final write — re-evaluates its input frame, so an
-    // unmaterialized NON-DETERMINISTIC source (ORDER BY rand() LIMIT n, a
-    // subquery over a concurrently-changing table) could hand the
-    // envelope a different key set than the joins see: matched rows
-    // silently missed, unmatched duplicates inserted. Reading the written
-    // files back makes every stage see one immutable snapshot.
-    val (srcRel, nSrc, _) = writeData(spark, root, source, Map.empty, evolvedMapping)
+    val upsert = isUpsert(matched, notMatched, notMatchedBySource)
+    // the canonical upsert lands its source dir as is, so that write
+    // proves the CHECKs; any other clause set proves them on its output
+    val src = writeSource(base, source, keyCols, evolvedStruct, if (upsert) m.constraints else Map.empty)
     // an empty source matches and inserts nothing — but with BY SOURCE
     // clauses every target row is unmatched, so the merge must still run
-    if (nSrc == 0 && notMatchedBySource.isEmpty) return base.version
-    val srcStored = readTablePaths(
-      spark,
-      Some(org.apache.spark.sql.types.StructType(
-        evolvedStruct.fields.filter(f => srcColumns(f.name)))),
-      Seq(new Path(dataRoot(root), srcRel).toString))
+    if (src.rows == 0 && notMatchedBySource.isEmpty) return base.version
     // source aligned to the evolved width (missing columns null) — the
     // single source frame every stage (probe, join, insert) reuses
-    val srcNorm = srcStored.select(evolvedStruct.fields.map { f =>
+    val srcNorm = src.df.select(evolvedStruct.fields.map { f =>
       if (srcColumns(f.name)) q(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }.toSeq: _*)
     val srcKeys = srcNorm.select(keyCols.map(q): _*)
-    // stage 1: zero-I/O envelope prune on the source's key ranges
-    val bounds = keyEnvelope(srcNorm, keyCols)
-    val allKeysNull = bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)
-    val plan = prunePlanOf(m, if (allKeysNull) Seq.empty else bounds)
+    // stage 1: zero-I/O envelope prune on the source's key ranges. All-null
+    // source keys match nothing, but pre-stats dirs must still be CARRIED
+    // (an invented empty uncovered set would silently drop them from the
+    // manifest): the real prune runs with no bounds
+    val plan = prunePlanOf(m, if (src.keyless) Seq.empty else src.bounds)
     val candidates = plan.keep ++ plan.uncoveredDirs
     // stage 2: exact touched-file discovery (matched clauses only)
     val touched =
-      if (matched.isEmpty || nSrc == 0) Set.empty[String]
+      if (matched.isEmpty || src.rows == 0) Set.empty[String]
       else touchedFiles(spark, root, m, priorSchema, plan.keep, keyCols, srcKeys)
+    if (upsert) {
+      // touched files rewrite as their unmatched rows; stat-less dirs pay
+      // an identity rewrite. Write-time CDC ([[Cdc]]): the source dir IS
+      // the insert set (every source row lands), and the delete
+      // pre-images (replaced target rows) are the semi-join complement of
+      // the survivors — one extra key-pruned scan of only the touched files
+      val rewritePaths = touched.toSeq.sorted ++ plan.uncoveredDirs
+      var cdcRec: Option[Cdc] =
+        if (cdcOnWrite(spark)) Some(Cdc(rewritePaths, None, Seq(src.rel)))
+        else None
+      val (survDirs, survStats, replaced) =
+        if (rewritePaths.isEmpty) (Seq.empty[String], Seq.empty[FileStat], 0L)
+        else {
+          val tgt = base.read(rewritePaths)
+          val before = base.liveRows(rewritePaths, tgt)
+          cdcRec = cdcRec.map(_.copy(chDir = Some(writeCdcSidecar(
+            spark, root, tgt.join(srcKeys, keyCols, "left_semi").withColumn(CdcTypeCol, lit("delete")),
+            base.mapping))))
+          val (rel, n, stats) =
+            writeData(spark, root, tgt.join(srcKeys, keyCols, "left_anti"), m.constraints, evolvedMapping)
+          if (n == 0) (Seq.empty[String], Seq.empty[FileStat], before)
+          else (Seq(rel), stats, before - n)
+        }
+      // masks carry on untouched files only; rewritten entries leave theirs
+      return publish(spark, root, base.commit(
+        "merge", m.files.map(_.path).filterNot(touched), survDirs :+ src.rel, survStats ++ src.stats,
+        src.rows - replaced, Nil, Some(evolved), batchId, appId, cdcRec))
+    }
     // BY SOURCE rewrite set: every file that can possibly hold a row
     // satisfying some clause condition — pruned through each clause's
     // widened range skeleton when one exists, the whole table otherwise
@@ -4319,7 +4290,7 @@ object SnapshotTable {
       // an empty source provably inserts nothing: skip the candidate
       // key-column scan entirely (a recurring empty batch must not pay a
       // full-table key scan per arrival)
-      if (notMatched.isEmpty || nSrc == 0) None
+      if (notMatched.isEmpty || src.rows == 0) None
       else {
         // a source row is matched iff its key appears in a candidate file
         // (provably: the envelope prune only skips files whose key range
@@ -4381,19 +4352,20 @@ object SnapshotTable {
       else m.files.map(_.path).filterNot(rewriteSet)
     publish(spark, root, base.commit(
       "merge", kept, if (n > 0) Seq(rel) else Nil, stats, n - before, Nil, Some(evolved),
-      batchId, None, cdcRec))
+      batchId, appId, cdcRec))
   }
 
   /** Merge-on-read MATCHED-DELETE — `WHEN MATCHED THEN DELETE` with zero
     * data I/O at any table size: the source's DISTINCT complete key
-    * tuples land as a key-tombstone sidecar and every candidate file
-    * from the zero-I/O envelope prune gains a `keys` [[Mask]]; no source
-    * rows are added and no target file is read or rewritten. Same key
-    * semantics as [[mergeUpsertMor]] (null keys match nothing); reads
-    * pay the anti-join on masked files until [[compact]] reconciles.
-    * `addedRows` records the NEGATED count of live rows the new mask
-    * hides — one bounded key-only counting read of only the masked
-    * candidates at write time ([[keysMask]]). */
+    * tuples are written once ([[writeSource]]) and that dir IS the
+    * key-tombstone sidecar; every candidate file from the zero-I/O
+    * envelope prune gains a `keys` [[Mask]]; no source rows are added and
+    * no target file is read or rewritten. Same key semantics as
+    * [[mergeUpsertMor]] (null keys match nothing); reads pay the
+    * anti-join on masked files until [[compact]] reconciles. `addedRows`
+    * records the NEGATED count of live rows the new mask hides — one
+    * bounded key-only counting read of only the masked candidates at
+    * write time ([[keysMask]]). */
   def deleteMatchedMor(spark: SparkSession, root: String, source: DataFrame, keyCols: Seq[String]): Int = {
     import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "deleteMatchedMor needs at least one key column")
@@ -4401,11 +4373,18 @@ object SnapshotTable {
     val schema = morSchema(base)
     keyCols.foreach(k =>
       require(schema.fieldNames.contains(k), s"no key column '$k' in table schema"))
-    val srcKeys = source.select(keyCols.map(k => col("`" + k + "`")): _*).na.drop("any").distinct()
-    val bounds = keyEnvelope(srcKeys, keyCols)
-    if (bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)) return base.version // no usable keys
-    val mask = keysMask(base, Some(schema), keyCols, bounds, srcKeys, None)
-    if (mask.isEmpty) return base.version // stats prove no file can hold a matched key
+    val keys = source.select(keyCols.map(k => col("`" + k + "`")): _*).na.drop("any").distinct()
+    // the sidecar holds LOGICAL key names (readers join it by them): no
+    // physical mapping, the source's own key types
+    val logical = org.apache.spark.sql.types.StructType(
+      keys.schema.map(_.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
+    val src = writeSource(base, keys, keyCols, logical, Map.empty)
+    val mask = if (src.keyless) None else keysMask(base, Some(schema), keyCols, src.bounds, src.df, Some(src.rel))
+    if (mask.isEmpty) {
+      // no usable key, or stats prove no file can hold one: nothing to commit
+      fs(spark, root).delete(new Path(dataRoot(root), src.rel), true)
+      return base.version
+    }
     publish(spark, root, base.commit(
       "mor-delete", base.m.dirs, Nil, Nil, -mask.flatMap(_.maskedRows).sum, mask.toSeq, base.m.schemaJson,
       None, None, None))
@@ -4420,11 +4399,13 @@ object SnapshotTable {
     * ([[deleteMatchedMor]], [[mergeUpsertMor]], and [[rebase]]'s replay
     * of both): prune the base's files through the key envelope `bounds`; when
     * a candidate survives, land `keys` — DISTINCT complete key tuples in
-    * logical names — as the key-tombstone sidecar (or re-reference the
-    * recorded `keyDir`, whose frame `keys` then is), and count the live
-    * candidate rows it hides with one key-only semi-join, read through
-    * any earlier masks so overlapping masks never double-count. The
-    * prune runs first, so a commit with no candidate writes nothing.
+    * logical names — as the key-tombstone sidecar (or reference
+    * `keyDir`, an already-written sidecar whose frame `keys` then is: a
+    * recorded one on replay, [[deleteMatchedMor]]'s source write), and
+    * count the live candidate rows it hides with one key-only semi-join,
+    * read through any earlier masks so overlapping masks never
+    * double-count. The prune runs first, so a commit with no candidate
+    * writes no sidecar.
     * A key column `schema` lacks is brand new: no row carries it, so the
     * mask provably hides nothing — exact without a read. */
   private def keysMask(
@@ -4592,27 +4573,23 @@ object SnapshotTable {
       appId: Option[String] = None): Int = {
     import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "mergeUpsertMor needs at least one key column")
+    batchId.foreach(b => epochCommitted(spark, root, b, appId).foreach(v => return v)) // a replayed epoch
     val base = openBase(spark, root)
     val evolved = evolvedSchema(Some(morSchema(base)), source.schema)
-    val evolvedMapping = mappingOf(schemaFromJson(evolved))
-    val (srcRel, nSrc, srcStats) = writeData(spark, root, source, base.m.constraints, evolvedMapping)
-    if (nSrc == 0) return base.version // empty upsert: no-op; the orphan dir vacuums away
-    val srcSchema = org.apache.spark.sql.types.StructType(
-      schemaFromJson(evolved).fields.filter(f => source.columns.contains(f.name)))
-    val srcDf = readTablePaths(spark, Some(srcSchema), Seq(new Path(dataRoot(root), srcRel).toString))
+    val src = writeSource(base, source, keyCols, schemaFromJson(evolved), base.m.constraints)
+    if (src.rows == 0) return base.version // empty upsert: no-op; the orphan dir vacuums away
     // envelope prune: the only target-side work, and it is zero-I/O;
     // all-null keys match nothing — a pure insert. The matched-row count
     // is one key-only semi-join over the masked candidates (columnar key
     // read, no rewrite): addedRows = inserts − replaced
-    val bounds = statsEnvelope(srcSchema, evolvedMapping, srcStats, keyCols).getOrElse(keyEnvelope(srcDf, keyCols))
     val newMask =
-      if (bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)) None
+      if (src.keyless) None
       else
         keysMask(
-          base, base.schema, keyCols, bounds,
-          srcDf.select(keyCols.map(k => col("`" + k + "`")): _*).na.drop("any").distinct(), None)
+          base, base.schema, keyCols, src.bounds,
+          src.df.select(keyCols.map(k => col("`" + k + "`")): _*).na.drop("any").distinct(), None)
     publish(spark, root, base.commit(
-      "mor-merge", base.m.dirs, Seq(srcRel), srcStats, nSrc - newMask.flatMap(_.maskedRows).sum,
+      "mor-merge", base.m.dirs, Seq(src.rel), src.stats, src.rows - newMask.flatMap(_.maskedRows).sum,
       newMask.toSeq, Some(evolved), batchId, appId, None))
   }
 
@@ -4630,8 +4607,7 @@ object SnapshotTable {
       keyCols: Seq[String],
       batchId: Long,
       appId: Option[String] = None): Int =
-    upsertEpoch(spark, root, batchId, appId)(
-      mergeUpsertMor(spark, root, source, keyCols, Some(batchId), appId))
+    upsertEpoch(mergeUpsertMor(spark, root, source, keyCols, Some(batchId), appId))
 
   // ─────────────────── change-data-capture between versions ───────────────────
 

@@ -310,6 +310,19 @@ class SnapshotBranchSpec extends SparkSuite {
       SnapshotTable.history(spark, root).last.version == v)
   }
 
+  test("cherry-pick re-proves a CHECK on a column main added after the fork; the picked rows read it as null") {
+    val root = freshRoot()
+    SnapshotTable.create(spark, root, fixture(0, 50)) // v1
+    val stage = SnapshotTable.createBranch(spark, root, "stage")
+    SnapshotTable.append(spark, stage, fixture(50, 10)) // written without `note`
+    SnapshotTable.addColumn(spark, root, "note", org.apache.spark.sql.types.StringType)
+    SnapshotTable.addCheck(spark, root, "short_note", "note IS NULL OR length(note) < 10")
+    SnapshotTable.cherryPick(spark, root, "stage")
+    val got = SnapshotTable.read(spark, root)
+    assert(got.count() == 60)
+    assert(got.filter("k >= 50 AND note IS NULL").count() == 10)
+  }
+
   test("rebase replays a diverged branch onto current main; fastForward then lands") {
     val root = freshRoot()
     SnapshotTable.create(spark, root, fixture(0, 100)) // v1

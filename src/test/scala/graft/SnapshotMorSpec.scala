@@ -380,6 +380,21 @@ class SnapshotMorSpec extends SparkSuite {
     assert(SnapshotTable.read(spark, root).count() == 200)
   }
 
+  test("deleteMatchedMor evaluates its source once: the keys it prunes with are the keys it masks") {
+    import org.apache.spark.sql.functions.udf
+    val root = freshRoot()
+    SnapshotTable.create(spark, root, fixture().repartitionByRange(4, col("k")).sortWithinPartitions("k"))
+    val calls = spark.sparkContext.longAccumulator("deleteMatchedMor source key calls")
+    val key = udf { (k: Long) => calls.add(1); k }.asNondeterministic()
+    val src = spark.range(0, 1000, 35).select(key(col("id")).as("k")) // 29 keys
+    SnapshotTable.deleteMatchedMor(spark, root, src, Seq("k"))
+    assert(calls.value == 29L, "the source key was evaluated more than once per row")
+    val got = SnapshotTable.read(spark, root)
+    val masked = (0L until 1000L).toSet -- got.select("k").as[Long].collect().toSet
+    assert(masked == (0L until 1000L by 35).toSet)
+    assert(SnapshotTable.history(spark, root).last.masks.exists(_.kind == "keys"))
+  }
+
   test("mor DML racing concurrent appends: lost publishes surface loudly, retries stay exact") {
     val root = freshRoot()
     val src = fixture()

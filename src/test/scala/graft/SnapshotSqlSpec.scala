@@ -124,6 +124,27 @@ class SnapshotSqlSpec extends SparkSuite {
     assert(sorted(SnapshotTable.read(spark, morRoot)) == sorted(SnapshotTable.read(spark, cowRoot)))
   }
 
+  test("the canonical upsert of a narrow source lands the same rows from the API, SQL text and merge-on-read") {
+    val Seq(apiRoot, sqlRoot, morRoot) = Seq.fill(3)(freshRoot())
+    for (r <- Seq(apiRoot, sqlRoot, morRoot)) SnapshotTable.create(spark, r, fixture(500))
+    // no `d`: the 10 matched keys and the 2 new ones (507, 557) read it as null
+    val narrow = fixture(600).filter("k % 50 = 7").selectExpr("k", "price_c + 1 AS price_c")
+    narrow.createOrReplaceTempView("narrow_src")
+    SnapshotTable.mergeUpsert(spark, apiRoot, narrow, Seq("k"))
+    SnapshotSql.register(spark, "narrow_sql", sqlRoot)
+    SnapshotSql.execute(spark,
+      "MERGE INTO narrow_sql AS t USING narrow_src AS s ON t.k = s.k " +
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    SnapshotTable.mergeUpsertMor(spark, morRoot, narrow, Seq("k"))
+    val got = SnapshotTable.read(spark, apiRoot)
+    assert(got.count() == 502)
+    assert(got.filter("d IS NULL").select("k").as[Long].collect().sorted.toSeq == (7L until 600L by 50))
+    assert(got.filter("k = 57").select("price_c").as[Long].head() == (57 * 7) % 1000 + 1)
+    val want = sorted(got)
+    assert(sorted(SnapshotTable.read(spark, sqlRoot)) == want)
+    assert(sorted(SnapshotTable.read(spark, morRoot)) == want)
+  }
+
   test("MERGE WHEN MATCHED THEN DELETE: COW rewrite and MOR keys-mask give identical results") {
     val cowRoot = freshRoot()
     val morRoot = freshRoot()
