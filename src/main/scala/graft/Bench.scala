@@ -1,18 +1,24 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.json4s.{JDouble, JInt, JObject, JString}
+import org.json4s.{JArray, JDouble, JInt, JObject, JString}
 import org.json4s.jackson.JsonMethods
 object Bench {
   /** Per-query seconds of a prior bench record, or None when it is not
     * comparable: taken on another data dir, or (`cpus` given) at another
-    * core count. Compact and pretty-printed records read alike. */
+    * core count. Compact and pretty-printed records read alike. A query
+    * the record lists as `failed` gives no prior: its time is that of a
+    * throw, not of the query. */
   def priors(record: String, sfDir: String, cpus: Option[String]): Option[Map[String, Double]] =
     JsonMethods.parseOpt(record).flatMap { rec =>
       val same = (rec \ "sf") == JString(sfDir) && cpus.forall(c => (rec \ "cpus").values.toString == c)
+      val failed = (rec \ "failed") match {
+        case JArray(ns) => ns.collect { case JString(n) => n }.toSet
+        case _ => Set.empty[String]
+      }
       (rec \ "queries") match {
         case JObject(qs) if same =>
-          Some(qs.collect { case (n, JDouble(t)) => n -> t; case (n, JInt(t)) => n -> t.toDouble }.toMap)
+          Some(qs.collect { case (n, JDouble(t)) => n -> t; case (n, JInt(t)) => n -> t.toDouble }.toMap -- failed)
         case _ => None
       }
     }
@@ -204,8 +210,9 @@ object Bench {
     val memoHitJson = memoHits.map("\"" + _ + "\"").mkString("[", ",", "]")
     val memoPaidJson = memoPaid.map("\"" + _ + "\"").mkString("[", ",", "]")
     val loadJson = s""""cpus":$cpus,"load_avg_start":${fmt(loadStart)},"load_avg_end":${fmt(loadEnd)},"common67_sec":${fmt(common67)},"memo_honest_reruns":true,"memo_hit":$memoHitJson,"memo_paid":$memoPaidJson,"rerun_slowest":$rerunJson,"rerun_outliers":$outliersJson"""
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullLine =
-      s"""{"metric":"bench_total_sec","value":${fmt(total)},"unit":"sec",$loadJson,"queries":$allQueries,"sf":"$sfDir"}"""
+      s"""{"metric":"bench_total_sec","value":${fmt(total)},"unit":"sec",$loadJson,"failed":$failedJson,"queries":$allQueries,"sf":"$sfDir"}"""
     println(fullLine)
     // Belt-and-braces: stdout capture windows have bitten every round, so
     // the complete JSON also lands in a file any reader can open. FULL-SUITE

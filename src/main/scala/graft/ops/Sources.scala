@@ -93,13 +93,11 @@ object Sources {
     // so the hash-match proves atomic-visibility arithmetic (each version
     // sees exactly its committed slices), time travel across commits, and
     // that compaction is data-identical (v4 ≡ v3). Deterministic: exact
-    // integer cents, fixed modulus slices; the /tmp working table is
-    // rebuilt idempotently per (fixture dir) on every run.
+    // integer cents, fixed modulus slices; the working table
+    // ([[FixtureRoot]]) is rebuilt from scratch on every run.
     "q_snapshot_timetravel" -> { (s, dir) =>
       import graft.sinks.SnapshotTable
-      val root = "/tmp/graft-snaptt/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val root = FixtureRoot(s, "snaptt", dir)
       val o = Fixtures
         .table(s, dir, "orders")
         .select(col("o_orderkey").as("k"), cents(col("o_totalprice")).as("price_c"))
@@ -127,9 +125,7 @@ object Sources {
     // engages is asserted in SnapshotTableSpec's prunePlan cases.
     "q_snapshot_pruned" -> { (s, dir) =>
       import graft.sinks.SnapshotTable
-      val root = "/tmp/graft-snapdp/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val root = FixtureRoot(s, "snapdp", dir)
       val o = Fixtures
         .table(s, dir, "orders")
         .select(
@@ -180,9 +176,7 @@ object Sources {
     "q_snapshot_dv" -> { (s, dir) =>
       import graft.sinks.SnapshotTable
       import graft.sinks.SnapshotTable.Bound
-      val root = "/tmp/graft-snapdv/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val root = FixtureRoot(s, "snapdv", dir)
       val o = Fixtures
         .table(s, dir, "orders")
         .select(
@@ -240,9 +234,7 @@ object Sources {
     // would have destroyed it (GraftCatalogSpec pins the commit shapes).
     "q_catalog_replace" -> { (s, dir) =>
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val wh = "/tmp/graft-snapreplace/" + safe
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true) // idempotent rebuild
+      val wh = FixtureRoot(s, "snapreplace", dir)
       val cat = "grepl_" + safe
       s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sinks.GraftCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -301,9 +293,7 @@ object Sources {
     // executor's first-match-wins/insert-condition semantics end-to-end.
     "q_snapshot_merge_cond" -> { (s, dir) =>
       import graft.sinks.{SnapshotSql, SnapshotTable}
-      val root = "/tmp/graft-snapmc/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val root = FixtureRoot(s, "snapmc", dir)
       val o = Fixtures
         .table(s, dir, "orders")
         .select(
@@ -350,9 +340,7 @@ object Sources {
     // projection) end-to-end.
     "q_snapshot_merge_nbs" -> { (s, dir) =>
       import graft.sinks.{SnapshotSql, SnapshotTable}
-      val root = "/tmp/graft-snapnbs/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val root = FixtureRoot(s, "snapnbs", dir)
       val o = Fixtures
         .table(s, dir, "orders")
         .select(
@@ -393,9 +381,7 @@ object Sources {
     "q_snapshot_branch" -> { (s, dir) =>
       import graft.sinks.SnapshotTable
       import graft.sinks.SnapshotTable.Bound
-      val root = "/tmp/graft-snapbr/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val root = FixtureRoot(s, "snapbr", dir)
       val o = Fixtures
         .table(s, dir, "orders")
         .select(
@@ -436,9 +422,7 @@ object Sources {
     "q_snapshot_rebase" -> { (s, dir) =>
       import graft.sinks.SnapshotTable
       import graft.sinks.SnapshotTable.Bound
-      val root = "/tmp/graft-snaprb/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val root = FixtureRoot(s, "snaprb", dir)
       val o = Fixtures
         .table(s, dir, "orders")
         .select(
@@ -483,9 +467,7 @@ object Sources {
     "q_snapshot_widen" -> { (s, dir) =>
       import graft.sinks.SnapshotTable
       import org.apache.spark.sql.types.{DoubleType, LongType, TimestampNTZType}
-      val root = "/tmp/graft-snapwd/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val root = FixtureRoot(s, "snapwd", dir)
       val o = Fixtures.table(s, dir, "orders")
       SnapshotTable.create(
         s, root,
@@ -584,9 +566,7 @@ object Sources {
     "q_mv_refresh" -> { (s, dir) =>
       import graft.sinks.SnapshotMv
       val base = SnapshotCycle.root(s, dir) // memo-shared 4-commit cycle
-      val mv = "/tmp/graft-snapmv/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val p = new org.apache.hadoop.fs.Path(mv)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val mv = FixtureRoot(s, "snapmv", dir)
       SnapshotMv.create(s, base, mv, keys = Seq("d"), sums = Seq("price_c"), asOfVersion = Some(1))
       SnapshotMv.refresh(s, mv) // applies the v2..v4 CDC delta
       SnapshotMv.read(s, mv).orderBy("d")
@@ -620,9 +600,7 @@ object Sources {
     "q_snapshot_ddl" -> { (s, dir) =>
       import graft.sinks.SnapshotTable
       import graft.sinks.SnapshotTable.Bound
-      val root = "/tmp/graft-snapddl/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val root = FixtureRoot(s, "snapddl", dir)
       val o = Fixtures
         .table(s, dir, "orders")
         .select(
@@ -658,9 +636,7 @@ object Sources {
     "q_snapshot_eq" -> { (s, dir) =>
       import graft.sinks.SnapshotTable
       import graft.sinks.SnapshotTable.Bound
-      val root = "/tmp/graft-snapeq/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val root = FixtureRoot(s, "snapeq", dir)
       val o = Fixtures
         .table(s, dir, "orders")
         .select(col("o_orderkey").as("k"), cents(col("o_totalprice")).as("price_c"))
@@ -926,8 +902,6 @@ object SnapshotCycle {
   // unclustered full-rewrite worst case (which SCALING.md measures
   // separately)
   private def createClustered(s: SparkSession, root: String, o: DataFrame): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
     val par = s.sparkContext.defaultParallelism
     SnapshotTable.create(
       s,
@@ -937,7 +911,7 @@ object SnapshotCycle {
 
   def root(s: SparkSession, dir: String): String =
     memo((s, dir)) {
-      val root = "/tmp/graft-snapcycle/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val root = FixtureRoot(s, "snapcycle", dir)
       val o = ordersOf(s, dir)
       createClustered(s, root, o)
       SnapshotTable.deleteWhere(s, root, Seq(Bound("d", Some("1995-01-01"), Some("1995-12-31")))) // v2
@@ -962,9 +936,7 @@ object SnapshotCycle {
     * with the one-time fixture labeled `memo_paid` in the sweep. */
   def rebaseCowRoot(s: SparkSession, dir: String): String =
     memo((s, dir + "#rbc")) {
-      val root = "/tmp/graft-snaprbc/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val root = FixtureRoot(s, "snaprbc", dir)
       val o = ordersOf(s, dir)
       SnapshotTable.create(s, root, o.filter(col("k") % 2 === 0)) // main v1: even keys
       val cow = SnapshotTable.createBranch(s, root, "cow") // forks at v1
@@ -994,9 +966,7 @@ object SnapshotCycle {
     memo((s, dir + "#ssink")) {
       import org.apache.spark.sql.streaming.Trigger
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val wh = "/tmp/graft-streamsink/" + safe
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val wh = FixtureRoot(s, "streamsink", dir)
       val cat = "gssink_" + safe // per-dir name: catalog instances cache their warehouse
       s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sinks.GraftCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -1027,7 +997,7 @@ object SnapshotCycle {
     * own full cycle, not read the programmatic one's result. */
   def sqlRoot(s: SparkSession, dir: String): String =
     memo((s, dir + "#sql")) {
-      val root = "/tmp/graft-snapcyclesql/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val root = FixtureRoot(s, "snapcyclesql", dir)
       val o = ordersOf(s, dir)
       createClustered(s, root, o)
       val table = "snap_dml_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
@@ -1059,7 +1029,7 @@ object SnapshotCycle {
     * programmatic API. Separate root + memo key — pays its own cycle. */
   def catalogRoot(s: SparkSession, dir: String): String =
     memo((s, dir + "#cat")) {
-      val wh = "/tmp/graft-snapcyclecat/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val wh = FixtureRoot(s, "snapcyclecat", dir)
       val root = wh + "/c/orders"
       val o = ordersOf(s, dir)
       createClustered(s, root, o)

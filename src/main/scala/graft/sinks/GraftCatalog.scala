@@ -125,7 +125,7 @@ final class GraftCatalog
 
   private def tableAt(ident: Identifier, v: Int, writable: Boolean): Table = {
     val root = rootOf(ident)
-    new GraftTable(spark, root, v, GraftTableProvider.schemaAt(spark, root, v), writable)
+    new GraftTable(spark, root, v, SnapshotTable.schemaAt(spark, root, v), writable)
   }
 
   override def loadTable(ident: Identifier): Table = {
@@ -160,7 +160,7 @@ final class GraftCatalog
           val (bRoot, fork) = branch.getOrElse(sys.error(s"no tag or branch '$version' at $root"))
           // a branch resolves to its TIP through its own manifest log
           val bv = SnapshotTable.latestVersion(spark, bRoot).getOrElse(fork)
-          new GraftTable(spark, bRoot, bv, GraftTableProvider.schemaAt(spark, bRoot, bv), writable = false)
+          new GraftTable(spark, bRoot, bv, SnapshotTable.schemaAt(spark, bRoot, bv), writable = false)
       }
   }
 

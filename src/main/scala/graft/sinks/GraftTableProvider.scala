@@ -84,7 +84,7 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister {
     val p = params(options)
     val root = SnapshotReadOptions.root(p)
     val v = SnapshotReadOptions.timeTravelVersion(spark, root, p)
-    GraftTableProvider.schemaAt(spark, root, v)
+    SnapshotTable.schemaAt(spark, root, v)
   }
 
   override def getTable(
@@ -99,15 +99,6 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister {
     val pinned = Seq("versionAsOf", "timestampAsOf", "tag").exists(p.contains)
     new GraftTable(spark, root, v, schema, writable = !pinned)
   }
-}
-
-private[sinks] object GraftTableProvider {
-  def schemaAt(spark: SparkSession, root: String, v: Int): StructType =
-    SnapshotTable
-      .readManifest(spark, root, v)
-      .schemaJson
-      .map(SnapshotTable.schemaFromJson)
-      .getOrElse(SnapshotTable.readVersion(spark, root, v).schema)
 }
 
 private[sinks] final class GraftTable(

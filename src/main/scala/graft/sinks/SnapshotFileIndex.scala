@@ -26,7 +26,8 @@ import org.json4s.JValue
   * Plan-time cost is one manifest read: `FileStatus` rows are built from
   * the manifest's recorded byte sizes — no listing, no per-file namenode
   * probes at 100-TB file counts (pre-bytes manifests fall back to one
-  * stat call per file). */
+  * stat call per file). Stat-less entries (pre-stats dirs, key and change
+  * sidecars) are listed once, here. */
 private[graft] final class SnapshotFileIndex(
     spark: SparkSession,
     root: String,
@@ -48,19 +49,25 @@ private[graft] final class SnapshotFileIndex(
 
   override def refresh(): Unit = ()
 
-  override def sizeInBytes: Long = {
-    // ANY unsized live entry (bytes = -1 pre-bytes manifest, or a stat-less
-    // dir) makes the total unknown: summing only the known files would
-    // under-report and could auto-broadcast a huge table. Never fake a
-    // broadcastable size.
-    if (uncoveredEntries.nonEmpty || m.files.exists(_.bytes < 0) || m.files.isEmpty) Long.MaxValue
-    else m.files.map(_.bytes).sum
+  /** The stat-less entries' data files, listed once per index (data dirs
+    * are immutable): hidden and `_`-prefixed names (`_SUCCESS`, checksum
+    * sidecars) are not data, as for any parquet directory read. */
+  private lazy val uncoveredFiles: Seq[FileStatus] = uncoveredEntries.flatMap { d =>
+    fs.listStatus(new Path(root, d)).filter { s =>
+      val n = s.getPath.getName
+      s.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
   }
 
+  override def sizeInBytes: Long =
+    // a pre-bytes file (bytes = -1) makes the total unknown: summing only
+    // the known files would under-report and could auto-broadcast a huge
+    // table. Never fake a broadcastable size.
+    if (m.files.exists(_.bytes < 0)) Long.MaxValue
+    else m.files.map(_.bytes).sum + uncoveredFiles.map(_.getLen).sum
+
   override def inputFiles: Array[String] =
-    (m.files.map(f => new Path(root, f.path).toString) ++
-      uncoveredEntries.flatMap(d =>
-        fs.listStatus(new Path(root, d)).filter(_.isFile).map(_.getPath.toString))).toArray
+    (m.files.map(f => new Path(root, f.path).toString) ++ uncoveredFiles.map(_.getPath.toString)).toArray
 
   override def listFiles(
       partitionFilters: Seq[Expression],
@@ -76,10 +83,7 @@ private[graft] final class SnapshotFileIndex(
         new FileStatus(fst.bytes, false, 1, 134217728L, 0L, new Path(root, fst.path))
       else fs.getFileStatus(new Path(root, fst.path))
     }
-    val uncovered = uncoveredEntries.flatMap { d =>
-      fs.listStatus(new Path(root, d)).filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-    }
-    Seq(PartitionDirectory(InternalRow.empty, (kept ++ uncovered).toArray))
+    Seq(PartitionDirectory(InternalRow.empty, (kept ++ uncoveredFiles).toArray))
   }
 
   // ---- conservative per-file annihilation proofs ----

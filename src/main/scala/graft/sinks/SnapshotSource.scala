@@ -73,14 +73,8 @@ final class SnapshotSource(
 
   // the stream serves the schema recorded when it started; later evolved
   // files read by-name (missing columns null), like readVersion
-  private val tableSchema: StructType = {
-    val v = SnapshotTable.latestOrFail(spark, root)
-    SnapshotTable
-      .readManifest(spark, root, v)
-      .schemaJson
-      .map(SnapshotTable.schemaFromJson)
-      .getOrElse(SnapshotTable.readVersion(spark, root, v).schema)
-  }
+  private val tableSchema: StructType =
+    SnapshotTable.schemaAt(spark, root, SnapshotTable.latestOrFail(spark, root))
 
   override val schema: StructType =
     if (!cdc) tableSchema
@@ -438,14 +432,8 @@ final class SnapshotSource(
     val startV1 = start.map(v1).filter(o => parsePosition(o).v >= 0)
     val entries = appendEntries(startV1, endV1, endPos)
     pos = Some(endPos)
-    val endManifest = manifest(endPos.v)
-    val entrySet = entries.toSet
-    val synthetic = endManifest.copy(
-      dirs = entries,
-      files = endManifest.files.filter(f => entrySet.contains(f.path)),
-      masks = Seq.empty)
-    val phys = SnapshotTable.physicalSchemaOf(schema)
-    new SnapshotFileIndex(spark, SnapshotTable.dataRoot(root), synthetic, phys)
+    val synthetic = SnapshotTable.subManifest(manifest(endPos.v), entries)
+    new SnapshotFileIndex(spark, SnapshotTable.dataRoot(root), synthetic, SnapshotTable.physicalSchemaOf(schema))
       .listFiles(Nil, Nil)
       .flatMap(_.files)
       .map(st => (st.getPath.toString, st.getLen))
@@ -478,35 +466,16 @@ final class SnapshotSource(
     }
 
   private def frameFor(entries: Seq[String], endV: Int): DataFrame = {
-    val endManifest = manifest(endV)
-    val entrySet = entries.toSet
     // masks are deliberately NOT applied to streamed batches: the append
     // stream emits each file's rows as of the commit that ADDED it, and a
     // later merge-on-read mask never retracts already-emitted rows — the
     // same contract as COW DML re-emission (ignoreChanges): the CDC
-    // reader (changesBetween / readChangeFeed) is the mutation-stream tool
-    val synthetic = endManifest.copy(
-      dirs = entries,
-      files = endManifest.files.filter(f => entrySet.contains(f.path)),
-      masks = Seq.empty)
-    // scan PHYSICAL columns, surface logical (renamed tables; see
-    // SnapshotTable's column mapping) — the stream's output schema stays
-    // the logical one the source declared
-    val phys = SnapshotTable.physicalSchemaOf(schema)
-    val idx = new SnapshotFileIndex(spark, SnapshotTable.dataRoot(root), synthetic, phys)
-    val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      idx,
-      new StructType(),
-      phys,
-      None,
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-      Map.empty)(spark)
-    val base =
-      org.apache.spark.sql.GraftSqlBridge.ofRows(spark, LogicalRelation(rel, isStreaming = true))
-    if (phys.fieldNames.sameElements(schema.fieldNames)) base
-    else
-      base.select(schema.fields.map(f =>
-        org.apache.spark.sql.functions.col("`" + SnapshotTable.physName(f) + "`").as(f.name)).toSeq: _*)
+    // reader (changesBetween / readChangeFeed) is the mutation-stream tool.
+    // The scan is PHYSICAL, the batch surfaces the source's logical schema
+    val rel = SnapshotTable.hadoopFsRelation(
+      spark, root, SnapshotTable.subManifest(manifest(endV), entries), SnapshotTable.physicalSchemaOf(schema))
+    SnapshotTable.asLogical(
+      org.apache.spark.sql.GraftSqlBridge.ofRows(spark, LogicalRelation(rel, isStreaming = true)), schema)
   }
 
   // ───────────────────────── change-data feed ─────────────────────────
@@ -826,12 +795,7 @@ final class SnapshotSourceProvider
       parameters: Map[String, String]): (String, StructType) = {
     val r = root(parameters)
     val spark = ctx.sparkSession
-    val v = SnapshotTable.latestOrFail(spark, r)
-    val s = SnapshotTable
-      .readManifest(spark, r, v)
-      .schemaJson
-      .map(SnapshotTable.schemaFromJson)
-      .getOrElse(SnapshotTable.readVersion(spark, r, v).schema)
+    val s = SnapshotTable.schemaAt(spark, r, SnapshotTable.latestOrFail(spark, r))
     val out = if (isCdc(parameters)) SnapshotSource.cdcSchema(s) else s
     (shortName(), schema.getOrElse(out))
   }

@@ -669,12 +669,7 @@ object SnapshotSql {
             // metadata read, never the full relation construction (which
             // for a MOR-masked table would build the whole mask-group
             // union plan just to be discarded)
-            val v = SnapshotTable.latestOrFail(spark, reg.root)
-            val target = SnapshotTable
-              .readManifest(spark, reg.root, v)
-              .schemaJson
-              .map(SnapshotTable.schemaFromJson)
-              .getOrElse(SnapshotTable.readVersion(spark, reg.root, v).schema)
+            val target = SnapshotTable.schemaAt(spark, reg.root, SnapshotTable.latestOrFail(spark, reg.root))
             require(data.schema.length == target.length,
               s"INSERT query has ${data.schema.length} columns, table has ${target.length}")
             data.toDF(target.fieldNames.toSeq: _*)

@@ -79,7 +79,8 @@ object SnapshotTable {
     * parquet footers, is the source of truth, so an old version reads with
     * exactly the schema it committed and a widened table reads old files
     * with the new columns null. Absent only in pre-schema manifests
-    * (read-compat: those fall back to footer mergeSchema). `files` carries
+    * (read-compat: [[schemaOf]] merges their footers once, when a read
+    * opens the manifest). `files` carries
     * [[FileStat]] rows for every live file the manifest's writer could
     * attribute stats to — like `dirs` it is a SELF-CONTAINED snapshot
     * (carried forward across appends), so data skipping needs exactly one
@@ -1076,9 +1077,9 @@ object SnapshotTable {
                 // dir re-references zero-copy (all refs share the data
                 // root), and the hidden rows re-count against the new base
                 // exactly like the mor-merge replay arm
-                val keyDf = spark.read.parquet(new Path(dataRoot(root), mk.keyDir.get).toString)
+                val keyDf = keySidecar(spark, root, merged, mk)
                 val replayMask =
-                  keysMask(tipBase, Some(merged), mk.keyCols, keyEnvelope(keyDf, mk.keyCols), keyDf, mk.keyDir)
+                  keysMask(tipBase, merged, mk.keyCols, keyEnvelope(keyDf, mk.keyCols), keyDf, mk.keyDir)
                 // zero candidates on the new base AND no epoch marker to
                 // carry → the replay is a pure no-op and publishes nothing.
                 // With a marker to carry the maskless publish below keeps
@@ -1113,8 +1114,8 @@ object SnapshotTable {
             // source dir (epoch markers survive exactly like the append arm)
             val replayMask =
               newMasks(c, p).find(mk0 => mk0.kind == "keys" && mk0.keyDir.isDefined).flatMap { mk =>
-                val keyDf = spark.read.parquet(new Path(dataRoot(root), mk.keyDir.get).toString)
-                keysMask(tipBase, Some(merged), mk.keyCols, keyEnvelope(keyDf, mk.keyCols), keyDf, mk.keyDir)
+                val keyDf = keySidecar(spark, root, merged, mk)
+                keysMask(tipBase, merged, mk.keyCols, keyEnvelope(keyDf, mk.keyCols), keyDf, mk.keyDir)
               }
             publish(spark, sRoot, tipBase.commit(
               "mor-merge", tip.dirs, Seq(srcRel), deltaStats,
@@ -1233,13 +1234,7 @@ object SnapshotTable {
     val Base(spark, sRoot, _, tip) = tipBase
     val f = fs(spark, root)
     val mapping = mappingOf(merged)
-    val withType = cdcTagged(merged, withVersion = false)
-    val side: Option[DataFrame] = cc.chDir.flatMap { rel =>
-      val files = publishedFiles(f, new Path(dataRoot(root), rel)).getOrElse(
-        sys.error(s"CDC sidecar $rel has no complete publish — torn commit or over-eager vacuum"))
-      if (files.isEmpty) None
-      else Some(readTablePaths(spark, Some(withType), files.map(_.toString)))
-    }
+    val side: Option[DataFrame] = cc.chDir.flatMap(cdcSidecar(spark, root, _, merged))
     val colsOnly = merged.fields.map(fd => col("`" + fd.name + "`")).toSeq
     def typed(df: DataFrame, t: String) = df.filter(col(CdcTypeCol) === t).select(colsOnly: _*)
 
@@ -1289,7 +1284,7 @@ object SnapshotTable {
 
     val dropRows: Option[DataFrame] =
       if (contentDrops.isEmpty) None
-      else Some(readEntries(spark, root, p, Some(merged), contentDrops))
+      else Some(readEntries(spark, root, p, merged, contentDrops))
     val d0: Option[DataFrame] =
       (side.map(typed(_, "delete")).toSeq ++ dropRows.toSeq).reduceOption(_ unionByName _).map(_.persist())
     val iSide: Option[DataFrame] = side.map(typed(_, "insert"))
@@ -1343,7 +1338,7 @@ object SnapshotTable {
           plan.uncoveredDirs.filterNot(dropSet)
       val src: Option[DataFrame] =
         if (candPaths.isEmpty) None
-        else Some(readEntries(spark, sRoot, tip, Some(merged), candPaths))
+        else Some(readEntries(spark, sRoot, tip, merged, candPaths))
       // candidate row count: when every candidate is a clean stat-covered
       // file, the manifest already knows it — zero I/O (r22; the count()
       // job re-read every candidate file the rewrite was about to read
@@ -1439,22 +1434,12 @@ object SnapshotTable {
   private def mappingOf(s: org.apache.spark.sql.types.StructType): Map[String, String] =
     s.fields.collect { case f if physName(f) != f.name => f.name -> physName(f) }.toMap
 
-  /** Read `paths` under the table schema: parquet columns are PHYSICAL
-    * names, the returned frame is LOGICAL. The single read path every
-    * consumer (readVersion/Where, DML, CDC, streaming batches) goes
-    * through. */
-  private def readTablePaths(
-      spark: SparkSession,
-      schema: Option[org.apache.spark.sql.types.StructType],
-      paths: Seq[String]): DataFrame = {
+  /** `df`, a scan of PHYSICAL columns, with the LOGICAL names of `schema`
+    * projected on top (identity for an unmapped table). */
+  private[sinks] def asLogical(df: DataFrame, schema: org.apache.spark.sql.types.StructType): DataFrame = {
     import org.apache.spark.sql.functions.col
-    schema match {
-      case Some(s) =>
-        val base = spark.read.schema(toPhysical(s)).parquet(paths: _*)
-        if (!hasMapping(s)) base
-        else base.select(s.fields.map(f => col("`" + physName(f) + "`").as(f.name)).toSeq: _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
+    if (!hasMapping(schema)) df
+    else df.select(schema.fields.map(f => col("`" + physName(f) + "`").as(f.name)).toSeq: _*)
   }
 
   /** Containing data dir of a live entry — identity for dir entries,
@@ -1724,8 +1709,8 @@ object SnapshotTable {
 
   /** Write a change-capture sidecar ([[Cdc]]): `df` (LOGICAL names) lands
     * under `_cdc/w-<uuid>` in PHYSICAL column names — immutable across
-    * renames, so the standard [[readTablePaths]] mapping reads it back
-    * under any later schema — published object-store-safe
+    * renames, so [[cdcSidecar]] reads it back under any later schema
+    * — published object-store-safe
     * ([[publishDerivedDir]]). Returns the root-relative dir. */
   private def writeCdcSidecar(
       spark: SparkSession,
@@ -1741,6 +1726,23 @@ object SnapshotTable {
     physDf.write.parquet(tmp.toString)
     publishDerivedDir(f, tmp, new Path(dataRoot(root), rel))
     rel
+  }
+
+  /** The change rows of CDC sidecar `rel` ([[writeCdcSidecar]]) under
+    * `schema` plus `_change_type`: exactly the files its complete publish
+    * names (loud on a torn one); None when the capture holds no file. */
+  private def cdcSidecar(
+      spark: SparkSession,
+      root: String,
+      rel: String,
+      schema: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
+    val files = publishedFiles(fs(spark, root), new Path(dataRoot(root), rel)).getOrElse(
+      sys.error(s"CDC sidecar $rel has no complete publish — torn commit or over-eager vacuum"))
+    if (files.isEmpty) None
+    else
+      Some(relationOfManifest(
+        spark, root, subManifest(EmptyVersion, files.map(p => rel + "/" + p.getName)),
+        cdcTagged(schema, withVersion = false)))
   }
 
   /** One-scan pre/post CDC pair of UPDATE-matched rows: each row explodes
@@ -1897,8 +1899,8 @@ object SnapshotTable {
     * schema: carried commits (append, merge) evolve it via
     * [[mergeSchemas]]; replacing commits (create/overwrite) pass None and
     * take `dfSchema`. A prior manifest without a recorded schema
-    * contributes nothing (the pre-schema files still read via the
-    * mergeSchema fallback). */
+    * contributes nothing (the pre-schema files still read under the
+    * footer schema [[schemaOf]] merges). */
   private def evolvedSchema(
       prior: Option[org.apache.spark.sql.types.StructType],
       dfSchema: org.apache.spark.sql.types.StructType): String = {
@@ -2046,11 +2048,17 @@ object SnapshotTable {
   private[sinks] final case class Base(spark: SparkSession, root: String, version: Int, m: Commit) {
     lazy val schema: Option[org.apache.spark.sql.types.StructType] = m.schemaJson.map(schemaFromJson)
 
+    /** The schema the base's rows read under ([[schemaOf]]). */
+    lazy val rowSchema: org.apache.spark.sql.types.StructType = schemaOf(spark, root, m)
+
     /** logical → physical column names of the base schema. */
     def mapping: Map[String, String] = schema.map(mappingOf).getOrElse(Map.empty)
 
     /** The live rows of base `entries`, through any pending masks. */
-    def read(entries: Seq[String]): DataFrame = readEntries(spark, root, m, schema, entries)
+    def read(entries: Seq[String]): DataFrame = readEntries(spark, root, m, rowSchema, entries)
+
+    /** Every live row of the base. */
+    def readAll: DataFrame = read(fileEntries(m))
 
     /** Live rows of base `entries`, whose [[read]] frame is `rows` (a
       * caller about to scan them passes the frame it already built, so
@@ -2206,7 +2214,7 @@ object SnapshotTable {
       import org.apache.spark.sql.functions.{coalesce, count, expr, lit, when}
       val ordered = checks.toSeq.sortBy(_._1)
       val counts = ordered.map { case (_, check) => count(when(!coalesce(expr(check), lit(false)), 1)) }
-      val bad = readTablePaths(spark, Some(schema), dirs.map(d => new Path(dataRoot(root), d).toString))
+      val bad = relationOfManifest(spark, root, subManifest(EmptyVersion, dirs), schema)
         .agg(counts.head, counts.tail: _*)
         .head()
       ordered.zipWithIndex.foreach { case ((name, _), i) =>
@@ -2412,20 +2420,30 @@ object SnapshotTable {
     commit(spark, root, df, "overwrite")
 
   /** Read a specific committed snapshot (time travel) with exactly the
-    * schema recorded at that version: columns a later commit added do not
-    * exist here, columns some older files lack read as null. Pre-schema
-    * manifests (no recorded schema) fall back to footer mergeSchema. */
-  def readVersion(spark: SparkSession, root: String, v: Int): DataFrame =
-    readOf(spark, root, readManifest(spark, root, v))
+    * schema recorded at that version ([[schemaOf]]): columns a later
+    * commit added do not exist here, columns some older files lack read
+    * as null. The frame is the manifest-backed relation ([[readEntries]]
+    * of every live entry), so the pushed-down filters of any query over
+    * it skip files through the manifest stats and Blooms at planning
+    * time, pending merge-on-read masks applied on top. */
+  def readVersion(spark: SparkSession, root: String, v: Int): DataFrame = {
+    val m = readManifest(spark, root, v)
+    readEntries(spark, root, m, schemaOf(spark, root, m), fileEntries(m))
+  }
 
-  /** [[readVersion]] of an already-parsed manifest. */
-  private def readOf(spark: SparkSession, root: String, m: Commit): DataFrame =
-    if (m.masks.isEmpty) {
+  /** The table schema of manifest `m`: the recorded one, or — on a
+    * pre-schema manifest — its live files' footers merged, the one
+    * schema inference left on the read path (paid once per opened
+    * manifest; every scan then reads under the known schema). */
+  private def schemaOf(spark: SparkSession, root: String, m: Commit): org.apache.spark.sql.types.StructType =
+    m.schemaJson.map(schemaFromJson).getOrElse {
       val paths = m.dirs.map(d => new Path(dataRoot(root), d).toString)
-      readTablePaths(spark, m.schemaJson.map(schemaFromJson), paths)
-    } else
-      // merge-on-read: apply the pending deletion masks at scan time
-      readEntries(spark, root, m, m.schemaJson.map(schemaFromJson), fileEntries(m))
+      spark.read.option("mergeSchema", "true").parquet(paths: _*).schema
+    }
+
+  /** [[schemaOf]] the manifest of version `v`. */
+  private[sinks] def schemaAt(spark: SparkSession, root: String, v: Int): org.apache.spark.sql.types.StructType =
+    schemaOf(spark, root, readManifest(spark, root, v))
 
   /** ROLL BACK the table to the content of committed version `toVersion`
     * — as a NEW commit (Delta's RESTORE): the restore manifest re-lists
@@ -2616,58 +2634,76 @@ object SnapshotTable {
       root: String,
       schema: org.apache.spark.sql.types.StructType,
       masks: Seq[Mask],
-      df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.col
+      df: DataFrame): DataFrame =
     masks.foldLeft(df) { (d, mk) =>
       mk.kind match {
         case "pred" => d.filter(!matchCol(decodeMaskBounds(schema, mk.predBounds)))
-        case "keys" =>
-          val keys = spark.read
-            .parquet(new Path(dataRoot(root), mk.keyDir.getOrElse(sys.error("keys mask without keyDir"))).toString)
-            .select(mk.keyCols.map(k => col("`" + k + "`")): _*)
-          d.join(keys, mk.keyCols, "left_anti")
+        case "keys" => d.join(keySidecar(spark, root, schema, mk), mk.keyCols, "left_anti")
         case other => sys.error(s"unknown mask kind '$other'")
       }
     }
+
+  /** The key-tombstone sidecar of keys mask `mk`: its key columns in
+    * LOGICAL names at `schema`'s types, the types every sidecar is written
+    * at ([[keysMask]], [[deleteMatchedMor]]), so the read infers nothing. */
+  private def keySidecar(
+      spark: SparkSession,
+      root: String,
+      schema: org.apache.spark.sql.types.StructType,
+      mk: Mask): DataFrame = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val dir = mk.keyDir.getOrElse(sys.error("keys mask without keyDir"))
+    val keys = StructType(mk.keyCols.map(k => StructField(k, schema(k).dataType)))
+    relationOfManifest(spark, root, subManifest(EmptyVersion, Seq(dir)), keys)
   }
 
-  /** Read live `entries` of manifest `m` — the one live-entry read. With
-    * no pending mask it is the plain [[readTablePaths]] scan of the
-    * entries, in order (`schema = None` merges footer schemas). Otherwise
-    * every applicable mask is applied — the merge-on-read read kernel:
-    * entries group by their mask set, unmasked entries scan in ONE plan,
-    * each masked group pays exactly its own masks. `withFileName` adds a
-    * `__file` column captured AT THE SCAN (before any mask join) for
-    * callers needing file attribution (the merge probe). */
-  private[graft] def readEntries(
+  /** Read live `entries` of manifest `m` under `schema` — the one
+    * live-entry read behind every version read, relation, DML rewrite and
+    * CDC step. Each scan is the manifest-backed relation over the
+    * [[subManifest]] of its entries ([[relationOfManifest]]: stat-covered
+    * files are never listed, no schema is inferred). With pending masks —
+    * the merge-on-read read kernel — entries group by their mask set:
+    * unmasked entries scan in ONE relation, each masked group pays exactly
+    * its own masks, and query predicates push through the mask
+    * filter/anti-join into the group's scan, so a masked file a predicate
+    * provably annihilates is pruned at plan time too (sound: masks only
+    * remove rows). `withFileName` adds a `__file` column captured AT THE
+    * SCAN (before any mask join) for callers needing file attribution
+    * (the merge probe). */
+  private def readEntries(
       spark: SparkSession,
       root: String,
       m: Commit,
-      schema: Option[org.apache.spark.sql.types.StructType],
+      schema: org.apache.spark.sql.types.StructType,
       entries: Seq[String],
       withFileName: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.input_file_name
     def scan(es: Seq[String]): DataFrame = {
-      val base = readTablePaths(spark, schema, es.map(p => new Path(dataRoot(root), p).toString))
+      val base = relationOfManifest(spark, root, subManifest(m, es), schema)
       if (withFileName) base.withColumn("__file", input_file_name()) else base
     }
-    if (m.masks.isEmpty) return scan(entries)
-    val s = schema.getOrElse(sys.error("merge-on-read tables always record a schema"))
-    if (entries.isEmpty) {
-      val base = org.apache.spark.sql.types.StructType(
-        if (withFileName) s.fields :+ org.apache.spark.sql.types.StructField("__file", org.apache.spark.sql.types.StringType)
-        else s.fields)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], base)
-    }
+    if (m.masks.isEmpty || entries.isEmpty) return scan(entries)
     // per-mask entry SETS: membership per (entry, mask) — linear scans
     // here would be O(entries² · masks) at 10⁵ masked files
     val maskSets = m.masks.map(_.entries.toSet)
-    val groups = entries
+    entries
       .groupBy(e => maskSets.zipWithIndex.collect { case (s, i) if s(e) => i })
       .toSeq
-      .sortBy(_._1.mkString(",")) // deterministic union order
-    groups.map { case (idxs, es) => applyMasks(spark, root, s, idxs.map(m.masks), scan(es)) }
+      .sortBy(_._1.mkString(",")) // deterministic union order, unmasked first
+      .map { case (idxs, es) => applyMasks(spark, root, schema, idxs.map(m.masks), scan(es)) }
       .reduce(_ unionByName _)
+  }
+
+  /** `m` narrowed to the live `entries` and stripped of its masks: the
+    * manifest a scan of part of a version builds its relation over. A
+    * file entry keeps its stat, a dir entry the stats of its files, in
+    * entry order; stat-less entries stay for the index to list. */
+  private[sinks] def subManifest(m: Commit, entries: Seq[String]): Commit = {
+    val es = entries.toSet
+    val byEntry = m.files
+      .filter(f => es(f.path) || es(dataDirOf(f.path)))
+      .groupBy(f => if (es(f.path)) f.path else dataDirOf(f.path))
+    m.copy(dirs = entries, files = entries.flatMap(e => byEntry.getOrElse(e, Nil)), masks = Seq.empty)
   }
 
   /** The masked-entry set of a manifest (files whose physical rows are a
@@ -3123,15 +3159,7 @@ object SnapshotTable {
       m: Commit,
       plan: PrunePlan,
       bounds: Seq[Bound]): DataFrame = {
-    val keepEntries = plan.keep ++ plan.uncoveredDirs
-    val schema = m.schemaJson.map(schemaFromJson)
-    val base =
-      if (keepEntries.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          schema.getOrElse(sys.error("empty prune result on a pre-schema manifest")))
-      else readEntries(spark, root, m, schema, keepEntries)
-    applyBounds(base, bounds)
+    applyBounds(readEntries(spark, root, m, schemaOf(spark, root, m), plan.keep ++ plan.uncoveredDirs), bounds)
   }
 
   // accessors for [[SnapshotFileIndex]] (same package-private surface the
@@ -3146,60 +3174,20 @@ object SnapshotTable {
   private[graft] def encodeBloom(positions: Seq[Int]): String =
     WriteStats.bloomEncode(scala.collection.immutable.BitSet(positions: _*))
 
-  /** The snapshot table as a CATALYST-INTEGRATED relation: a
-    * `HadoopFsRelation` whose [[SnapshotFileIndex]] is the manifest, so
+  /** The snapshot table as a CATALYST-INTEGRATED relation — the name the
+    * catalog, the SQL surface and the indexes call [[readVersion]] by:
     * the pushed-down filters of ANY query over the returned frame —
     * `.filter`, a SQL view, a join predicate — skip files through the
     * manifest stats and Blooms at planning time, with no dedicated
-    * `readWhere` call. `readVersion` semantics otherwise: the recorded
-    * schema of version `v`, evolved columns null in old files. */
-  def relationVersion(spark: SparkSession, root: String, v: Int): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val m = readManifest(spark, root, v)
-    val schema = m.schemaJson
-      .map(schemaFromJson)
-      .getOrElse(readVersion(spark, root, v).schema) // pre-schema: footer merge
-    if (m.masks.isEmpty) relationOfManifest(spark, root, m, schema)
-    else {
-      // merge-on-read: EVERY branch plans through the manifest FileIndex.
-      // The unmasked majority gets full pushdown pruning as before; each
-      // masked entry GROUP (entries sharing a mask set) is itself a
-      // FileIndex-backed relation with its masks applied on top — query
-      // predicates push through the mask filter/anti-join into the scan,
-      // so a masked file a predicate provably annihilates is pruned at
-      // PLAN time too (sound: masks only remove rows — a file dead under
-      // the stats is dead under any mask). Spark still re-applies every
-      // filter row-level, so correctness never depends on the pruning.
-      val masked = maskedEntrySet(m)
-      val (mEntries, uEntries) = fileEntries(m).partition(masked)
-      val uSet = uEntries.toSet
-      val synth = m.copy(
-        dirs = uEntries,
-        files = m.files.filter(f => uSet.contains(f.path)),
-        masks = Seq.empty)
-      val unmaskedRel = relationOfManifest(spark, root, synth, schema)
-      val maskSets = m.masks.map(_.entries.toSet)
-      val groups = mEntries
-        .groupBy(e => maskSets.zipWithIndex.collect { case (s, i) if s(e) => i })
-        .toSeq
-        .sortBy(_._1.mkString(","))
-      val maskedRels = groups.map { case (idxs, es) =>
-        val esSet = es.toSet
-        val gSynth = m.copy(
-          dirs = es,
-          files = m.files.filter(f => esSet.contains(f.path)),
-          masks = Seq.empty)
-        applyMasks(spark, root, schema, idxs.map(m.masks), relationOfManifest(spark, root, gSynth, schema))
-      }
-      (unmaskedRel +: maskedRels).reduce(_ unionByName _)
-    }
-  }
+    * `readWhere` call. */
+  def relationVersion(spark: SparkSession, root: String, v: Int): DataFrame =
+    readVersion(spark, root, v)
 
   /** The manifest as a `HadoopFsRelation` over [[SnapshotFileIndex]] —
     * the Catalyst-pluggable scan every relation surface builds on. Scans
     * PHYSICAL columns (what the files and the manifest stats actually
     * carry); callers with column mapping project logical names on top. */
-  private def hadoopFsRelation(
+  private[sinks] def hadoopFsRelation(
       spark: SparkSession,
       root: String,
       m: Commit,
@@ -3215,19 +3203,16 @@ object SnapshotTable {
       Map.empty)(spark)
   }
 
+  /** Every entry of `m` (masks ignored) as a LOGICAL frame: the relation
+    * scans PHYSICAL columns, renamed columns surface through the logical
+    * projection, and pushed filters rewrite through the aliases back to
+    * physical attributes before they reach the FileIndex. */
   private def relationOfManifest(
       spark: SparkSession,
       root: String,
       m: Commit,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    // the relation scans PHYSICAL columns; renamed columns surface through
-    // the logical projection, and pushed filters rewrite through the
-    // aliases back to physical attributes before they reach the FileIndex
-    val base = spark.baseRelationToDataFrame(hadoopFsRelation(spark, root, m, toPhysical(schema)))
-    if (!hasMapping(schema)) base
-    else base.select(schema.fields.map(f => col("`" + physName(f) + "`").as(f.name)).toSeq: _*)
-  }
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    asLogical(spark.baseRelationToDataFrame(hadoopFsRelation(spark, root, m, toPhysical(schema))), schema)
 
   /** The snapshot as a V1 [[org.apache.spark.sql.sources.BaseRelation]] —
     * what `spark.read.format("snapshot-table")` resolves to (the batch
@@ -3244,9 +3229,7 @@ object SnapshotTable {
       root: String,
       v: Int): org.apache.spark.sql.sources.BaseRelation = {
     val m = readManifest(spark, root, v)
-    val schema = m.schemaJson
-      .map(schemaFromJson)
-      .getOrElse(readVersion(spark, root, v).schema)
+    val schema = schemaOf(spark, root, m)
     if (m.masks.isEmpty && !hasMapping(schema)) hadoopFsRelation(spark, root, m, schema)
     else new SnapshotBatchRelation(spark, root, v, schema)
   }
@@ -3337,8 +3320,7 @@ object SnapshotTable {
     val scanned =
       if (plan.scanPaths.isEmpty) 0L
       else {
-        val schema = m.schemaJson.map(schemaFromJson)
-        applyBounds(readEntries(spark, root, m, schema, plan.scanPaths), bounds).count()
+        applyBounds(readEntries(spark, root, m, schemaOf(spark, root, m), plan.scanPaths), bounds).count()
       }
     plan.metaRows + scanned
   }
@@ -3356,7 +3338,7 @@ object SnapshotTable {
     // Range-clustering on keyCol is what makes the per-file stats
     // SELECTIVE: disjoint key ranges per file turn a key predicate into
     // near-perfect file skipping.
-    val cur = readOf(spark, root, base.m)
+    val cur = base.readAll
     rewriteAll(base, cur.repartitionByRange(nFiles, col(keyCol)).sortWithinPartitions(keyCol))
   }
 
@@ -3367,14 +3349,14 @@ object SnapshotTable {
   private def rewriteAll(base: Base, df: DataFrame): Int = {
     val (rel, _, stats) = writeData(base.spark, base.root, df, physicalOf = base.mapping)
     publish(base.spark, base.root, base.commit(
-      "compact", Nil, Seq(rel), stats, 0L, Nil, Some(schemaJsonOf(base, df)), None, None, None))
+      "compact", Nil, Seq(rel), stats, 0L, Nil, Some(schemaJsonOf(base)), None, None, None))
   }
 
   /** The base's recorded schema, or — on a pre-schema manifest — the
-    * nullable schema of its rows as read (`df`). */
-  private def schemaJsonOf(base: Base, df: => DataFrame): String =
+    * nullable schema of its rows as read. */
+  private def schemaJsonOf(base: Base): String =
     base.m.schemaJson.getOrElse(
-      org.apache.spark.sql.types.StructType(df.schema.map(_.copy(nullable = true))).json)
+      org.apache.spark.sql.types.StructType(base.rowSchema.map(_.copy(nullable = true))).json)
 
   /** PARTIAL compaction — `OPTIMIZE ... WHERE`: re-cluster ONLY the files
     * whose stats intersect `bounds` (plus stat-less dirs, conservatively),
@@ -3459,7 +3441,7 @@ object SnapshotTable {
     // the packed files) — computing it would cost a second scan.
     publish(spark, root, base.commit(
       "compact", big.map(_.path) ++ uncovered, if (n > 0) Seq(rel) else Nil, stats, 0L, Nil,
-      Some(schemaJsonOf(base, readOf(spark, root, m))), None, None, None))
+      Some(schemaJsonOf(base)), None, None, None))
   }
 
   /** Multi-column clustering compaction — the OPTIMIZE ZORDER core. A
@@ -3497,7 +3479,7 @@ object SnapshotTable {
     import org.apache.spark.sql.types._
     require(cols.nonEmpty && cols.size <= 8, s"z-order over 1..8 columns, got ${cols.size}")
     val base = openBase(spark, root)
-    val cur = readOf(spark, root, base.m)
+    val cur = base.readAll
     val bits = math.min(8, 63 / cols.size)
     val nCuts = (1 << bits) - 1
     def axis(name: String): org.apache.spark.sql.Column = {
@@ -3625,7 +3607,7 @@ object SnapshotTable {
     // their sidecars become vacuumable
     publish(spark, root, base.commit(
       action, untouched.map(_.path), newDirs, newStats, delta - base.droppedRows(dropped), Nil,
-      Some(schemaJsonOf(base, readOf(spark, root, m))), None, None, cdcRec))
+      Some(schemaJsonOf(base)), None, None, cdcRec))
   }
 
   /** Delete the rows matching `bounds` — Delta-style copy-on-write DML with
@@ -3746,7 +3728,7 @@ object SnapshotTable {
       spark: SparkSession,
       root: String,
       m: Commit,
-      schema: Option[org.apache.spark.sql.types.StructType],
+      schema: org.apache.spark.sql.types.StructType,
       candidates: Seq[String],
       keyCols: Seq[String],
       srcKeys: DataFrame): Set[String] =
@@ -3801,7 +3783,7 @@ object SnapshotTable {
     val (rel, n, stats) = writeData(spark, root, source, constraints, mapping)
     val written =
       org.apache.spark.sql.types.StructType(schema.fields.filter(f => source.columns.contains(f.name)))
-    val df = readTablePaths(spark, Some(written), Seq(new Path(dataRoot(root), rel).toString))
+    val df = relationOfManifest(spark, root, EmptyVersion.copy(dirs = Seq(rel), files = stats), written)
     val bounds =
       if (n == 0) keyCols.map(Bound(_, None, None))
       else statsEnvelope(written, mapping, stats, keyCols).getOrElse(keyEnvelope(df, keyCols))
@@ -4063,7 +4045,7 @@ object SnapshotTable {
     // stage 2: exact touched-file discovery (matched clauses only)
     val touched =
       if (matched.isEmpty || src.rows == 0) Set.empty[String]
-      else touchedFiles(spark, root, m, priorSchema, plan.keep, keyCols, srcKeys)
+      else touchedFiles(spark, root, m, base.rowSchema, plan.keep, keyCols, srcKeys)
     if (upsert) {
       // touched files rewrite as their unmatched rows; stat-less dirs pay
       // an identity rewrite. Write-time CDC ([[Cdc]]): the source dir IS
@@ -4367,19 +4349,26 @@ object SnapshotTable {
     * bounded key-only counting read of only the masked candidates at
     * write time ([[keysMask]]). */
   def deleteMatchedMor(spark: SparkSession, root: String, source: DataFrame, keyCols: Seq[String]): Int = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, when}
     require(keyCols.nonEmpty, "deleteMatchedMor needs at least one key column")
     val base = openBase(spark, root)
     val schema = morSchema(base)
     keyCols.foreach(k =>
       require(schema.fieldNames.contains(k), s"no key column '$k' in table schema"))
-    val keys = source.select(keyCols.map(k => col("`" + k + "`")): _*).na.drop("any").distinct()
-    // the sidecar holds LOGICAL key names (readers join it by them): no
-    // physical mapping, the source's own key types
+    // the sidecar holds LOGICAL key names (readers join it by them) at the
+    // TABLE's key types, the schema [[keySidecar]] reads it with: no
+    // physical mapping; a source key the cast does not round-trip equals
+    // no table value, matches nothing and is dropped
+    val raw = source.select(keyCols.map(k => col("`" + k + "`")): _*)
+    val keys = raw.select(raw.schema.fields.toSeq.zip(keyCols).map { case (f, k) =>
+      val c = col("`" + f.name + "`")
+      val t = schema(k).dataType
+      (if (f.dataType == t) c else when(c.try_cast(t).cast(f.dataType) === c, c.try_cast(t))).as(k)
+    }: _*).na.drop("any").distinct()
     val logical = org.apache.spark.sql.types.StructType(
-      keys.schema.map(_.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
+      keyCols.map(k => org.apache.spark.sql.types.StructField(k, schema(k).dataType)))
     val src = writeSource(base, keys, keyCols, logical, Map.empty)
-    val mask = if (src.keyless) None else keysMask(base, Some(schema), keyCols, src.bounds, src.df, Some(src.rel))
+    val mask = if (src.keyless) None else keysMask(base, schema, keyCols, src.bounds, src.df, Some(src.rel))
     if (mask.isEmpty) {
       // no usable key, or stats prove no file can hold one: nothing to commit
       fs(spark, root).delete(new Path(dataRoot(root), src.rel), true)
@@ -4410,7 +4399,7 @@ object SnapshotTable {
     * mask provably hides nothing — exact without a read. */
   private def keysMask(
       base: Base,
-      schema: Option[org.apache.spark.sql.types.StructType],
+      schema: org.apache.spark.sql.types.StructType,
       keyCols: Seq[String],
       bounds: Seq[Bound],
       keys: DataFrame,
@@ -4421,21 +4410,22 @@ object SnapshotTable {
     val entries = plan.keep ++ plan.uncoveredDirs
     if (entries.isEmpty) None
     else {
-      val (rel, sidecar) = keyDir match {
-        case Some(d) => (d, keys)
-        case None =>
-          val d = "data/" + java.util.UUID.randomUUID().toString
-          keys.write.parquet(new Path(dataRoot(root), d).toString)
-          (d, spark.read.parquet(new Path(dataRoot(root), d).toString))
+      val rel = keyDir.getOrElse {
+        val d = "data/" + java.util.UUID.randomUUID().toString
+        keys.write.parquet(new Path(dataRoot(root), d).toString)
+        d
       }
+      val mask = Mask("keys", entries, keyCols = keyCols, keyDir = Some(rel))
+      // a fresh sidecar reads back at the types it was written at
+      val sidecar = if (keyDir.isDefined) keys else keySidecar(spark, root, keys.schema, mask)
       val hidden =
-        if (!schema.exists(s => keyCols.forall(s.fieldNames.contains))) 0L
+        if (!keyCols.forall(schema.fieldNames.contains)) 0L
         else
           readEntries(spark, root, m, schema, entries)
             .select(keyCols.map(k => col("`" + k + "`")): _*)
             .join(sidecar, keyCols, "left_semi")
             .count()
-      Some(Mask("keys", entries, keyCols = keyCols, keyDir = Some(rel), maskedRows = Some(hidden)))
+      Some(mask.copy(maskedRows = Some(hidden)))
     }
   }
 
@@ -4586,7 +4576,7 @@ object SnapshotTable {
       if (src.keyless) None
       else
         keysMask(
-          base, base.schema, keyCols, src.bounds,
+          base, morSchema(base), keyCols, src.bounds,
           src.df.select(keyCols.map(k => col("`" + k + "`")): _*).na.drop("any").distinct(), None)
     publish(spark, root, base.commit(
       "mor-merge", base.m.dirs, Seq(src.rel), src.stats, src.rows - newMask.flatMap(_.maskedRows).sum,
@@ -4638,7 +4628,7 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.{col, lit}
     require(fromV <= toV, s"changesBetween needs fromV <= toV, got $fromV > $toV")
     require(fromV >= 0, s"changesBetween fromV must be >= 0 (0 = include the creation as inserts)")
-    val schema = readManifest(spark, root, toV).schemaJson.map(schemaFromJson)
+    val schema = schemaAt(spark, root, toV)
     // every file read applies ITS manifest's masks: removed files read as
     // they stood at v-1 (prior masks applied — already-masked rows were
     // deleted earlier, they must not re-delete), added files as they
@@ -4687,19 +4677,10 @@ object SnapshotTable {
           // capture of its own, so an inherited record (a defect, not a
           // state) must fall through to the file diff, never re-emit.
           case Some(cc) if Set("delete", "update", "merge")(cur.action) =>
-            def sidecar(rel: String): Option[DataFrame] = {
-              val files = publishedFiles(fs(spark, root), new Path(dataRoot(root), rel))
-                .getOrElse(sys.error(
-                  s"CDC sidecar $rel has no complete publish — torn commit or over-eager vacuum"))
-              val withType = schema.map(cdcTagged(_, withVersion = false))
-              if (files.isEmpty) None
-              else Some(readTablePaths(spark, withType, files.map(_.toString))
-                .withColumn("_commit_version", lit(v)))
-            }
             val covered = cc.covered.toSet
             val wholeDrops = prevEntries.filterNot(curEntries.toSet).filterNot(covered)
             Seq(
-              cc.chDir.flatMap(sidecar),
+              cc.chDir.flatMap(cdcSidecar(spark, root, _, schema)).map(_.withColumn("_commit_version", lit(v))),
               readPaths(prevM, wholeDrops).map(tag(_, "delete", v)),
               readPaths(cur, cc.insEntries).map(tag(_, "insert", v))).flatten
           // pre-capture manifests (or capture disabled at write time):
@@ -4724,15 +4705,10 @@ object SnapshotTable {
           if (mk.id.nonEmpty) mk.id else (mk.kind, mk.predBounds, mk.keyCols, mk.keyDir)
         val prevIds = prevM.masks.map(maskId).toSet
         val maskSteps = cur.masks.filterNot(mk => prevIds(maskId(mk))).map { mk =>
-          val s = schema.getOrElse(sys.error("merge-on-read CDC needs a recorded schema"))
           val base = readEntries(spark, root, prevM, schema, mk.entries)
           val matchedRows = mk.kind match {
-            case "pred" => base.filter(matchCol(decodeMaskBounds(s, mk.predBounds)))
-            case "keys" =>
-              val keys = spark.read
-                .parquet(new Path(dataRoot(root), mk.keyDir.getOrElse(sys.error("keys mask without keyDir"))).toString)
-                .select(mk.keyCols.map(k => col("`" + k + "`")): _*)
-              base.join(keys, mk.keyCols, "left_semi")
+            case "pred" => base.filter(matchCol(decodeMaskBounds(schema, mk.predBounds)))
+            case "keys" => base.join(keySidecar(spark, root, schema, mk), mk.keyCols, "left_semi")
             case other => sys.error(s"unknown mask kind '$other'")
           }
           tag(matchedRows, "delete", v)
@@ -4740,11 +4716,8 @@ object SnapshotTable {
         fileSteps ++ maskSteps
       }
     }
-    steps.reduceOption(_ unionByName _).getOrElse {
-      val s = schema.getOrElse(sys.error("changesBetween over pre-schema manifests needs at least one changed file"))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cdcTagged(s, withVersion = true))
-    }
+    steps.reduceOption(_ unionByName _).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cdcTagged(schema, withVersion = true)))
   }
 
   /** Materialize the row-level changes of `(fromV, toV]` as parquet under
@@ -4811,12 +4784,8 @@ object SnapshotTable {
 
   /** The change-feed schema of this table as of version `v`: its recorded
     * columns plus `_change_type` / `_commit_version`. */
-  private def cdcSchemaAt(spark: SparkSession, root: String, v: Int): org.apache.spark.sql.types.StructType = {
-    val table = readManifestLite(spark, root, v).schemaJson
-      .map(schemaFromJson)
-      .getOrElse(sys.error("CDC over pre-schema manifests needs a recorded schema"))
-    cdcTagged(table, withVersion = true)
-  }
+  private def cdcSchemaAt(spark: SparkSession, root: String, v: Int): org.apache.spark.sql.types.StructType =
+    cdcTagged(schemaOf(spark, root, readManifestLite(spark, root, v)), withVersion = true)
 
   /** [[changesBetween]] through the materialized per-range cache: first
     * call for a range computes + publishes the diff ([[materializeChanges]]),
@@ -5304,7 +5273,7 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.{coalesce, expr, lit}
     val base = openBase(spark, root)
     require(!base.m.constraints.contains(name), s"constraint '$name' already exists")
-    val rows = readOf(spark, root, base.m)
+    val rows = base.readAll
     // every later write binds the CHECK into its stats fold: refuse one it cannot evaluate
     WriteStats.Spec(spark, rows.schema, Map(name -> checkSql), Map.empty)
     val bad = rows.filter(!coalesce(expr(checkSql), lit(false))).count()

@@ -46,4 +46,10 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.priors(pretty, sf, Some("32")).isEmpty)
     assert(Bench.priors("not json", sf, None).isEmpty)
   }
+
+  test("priors: a query the record lists as failed gives no prior") {
+    val withFailed = compact.replace(""""queries":""", """"failed":["q_x"],"queries":""")
+      .replace(""""q_b":2.250}""", """"q_b":2.250,"q_x":0.010}""")
+    assert(Bench.priors(withFailed, sf, None) == expected)
+  }
 }

@@ -1322,4 +1322,77 @@ class SnapshotTableSpec extends SparkSuite {
       } finally spark.conf.unset("spark.graft.cdc.onWrite")
     }
   }
+
+  /** The descriptions of the Spark jobs `body` runs. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.toArray(Array.empty[String]).toSeq
+  }
+
+  test("reads plan from the manifest: no listing job past 32 files, no schema inference over a keys mask") {
+    // a copy-on-write delete whose bound touches all 64 files: its rewrite
+    // and change capture read 64 entries, and none of them is listed
+    val root = freshRoot()
+    SnapshotTable.create(spark, root, spark.range(0, 6400, 1, 64).selectExpr("id AS k", "id % 10 AS x"))
+    assert(SnapshotTable.history(spark, root).last.files.count(_.rows > 0) == 64)
+    val listings = jobsOf(SnapshotTable.deleteWhere(spark, root, Seq(SnapshotTable.Bound("x", Some(0L), Some(4L)))))
+      .filter(_.contains("Listing leaf files"))
+    assert(listings.isEmpty, s"listing jobs: $listings")
+    assert(SnapshotTable.read(spark, root).count() == 3200)
+
+    // a version with a keys mask: building its reads runs no job at all
+    // (the key sidecar is read with its known schema, nothing is inferred)
+    val mor = freshRoot()
+    SnapshotTable.create(spark, mor, spark.range(0, 100, 1, 4).selectExpr("id AS k", "id * 2 AS v"))
+    val v = SnapshotTable.mergeUpsertMor(
+      spark, mor, spark.range(0, 100, 10).selectExpr("id AS k", "-id AS v"), Seq("k"))
+    assert(SnapshotTable.history(spark, mor).last.masks.exists(_.kind == "keys"))
+    val bound = Seq(SnapshotTable.Bound("k", Some(0L), Some(49L)))
+    var frames = Seq.empty[DataFrame]
+    val built = jobsOf {
+      frames = Seq(
+        SnapshotTable.readVersion(spark, mor, v),
+        SnapshotTable.relationVersion(spark, mor, v),
+        SnapshotTable.readVersionWhere(spark, mor, v, bound),
+        SnapshotTable.changesBetween(spark, mor, v - 1, v))
+    }
+    assert(built.isEmpty, s"jobs while building keys-masked reads: $built")
+    val Seq(all, rel, where, changes) = frames
+    assert(all.count() == 100 && rel.count() == 100 && where.count() == 50)
+    assert(all.filter("v < 0 OR k = 0").count() == 10)
+    assert(changes.groupBy("_change_type").count().as[(String, Long)].collect().toMap ==
+      Map("insert" -> 10L, "delete" -> 10L))
+  }
+
+  test("a pre-schema manifest over dirs whose footers differ reads null-padded on every surface") {
+    // the read-compat path: a manifest with no recorded schema (and no
+    // per-file stats) over one dir of (k, x) and one of (k, x, extra)
+    val root = freshRoot()
+    spark.range(0, 5).selectExpr("id AS k", "id * 10 AS x").write.parquet(root + "/data/a")
+    spark.range(5, 10).selectExpr("id AS k", "id * 10 AS x", "id * 100 AS extra").write.parquet(root + "/data/b")
+    SnapshotTable.publish(spark, root, SnapshotTable.Commit(1, "append", Seq("data/a", "data/b"), 10L))
+    def rowsOf(df: DataFrame): Seq[(Long, Long, Option[Long])] =
+      df.select("k", "x", "extra").as[(Long, Long, Option[Long])].collect().toSeq.sortBy(_._1)
+    val want = (0L until 10L).map(k => (k, k * 10, if (k >= 5) Some(k * 100) else None))
+    assert(rowsOf(SnapshotTable.readVersion(spark, root, 1)) == want)
+    assert(rowsOf(SnapshotTable.relationVersion(spark, root, 1)) == want)
+    assert(rowsOf(SnapshotTable.readVersionWhere(
+      spark, root, 1, Seq(SnapshotTable.Bound("k", Some(3L), Some(6L))))) == want.filter(r => r._1 >= 3 && r._1 <= 6))
+    val changes = SnapshotTable.changesBetween(spark, root, 0, 1)
+    assert(changes.select("_change_type").distinct().as[String].collect().toSeq == Seq("insert"))
+    assert(rowsOf(changes) == want)
+  }
 }
