@@ -506,21 +506,9 @@ final class SnapshotSource(
     // and this reader scans EXACTLY the files the complete publish named
     // (a racer's orphan parts are invisible), so no atomic directory
     // rename is assumed on the table root's store.
-    val files = SnapshotTable.materializedChangeFiles(spark, root, fromV, endV)
-    val idx = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      files,
-      Map.empty,
-      Some(schema))
-    val rel2 = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      idx,
-      new StructType(),
-      schema,
-      None,
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-      Map.empty)(spark)
+    val rel = SnapshotTable.changeFeedRelation(spark, root, fromV, endV, schema)
     pos = Some(Position(endV, Int.MaxValue, snap = false))
-    org.apache.spark.sql.GraftSqlBridge.ofRows(spark, LogicalRelation(rel2, isStreaming = true))
+    org.apache.spark.sql.GraftSqlBridge.ofRows(spark, LogicalRelation(rel, isStreaming = true))
   }
 
   override def commit(end: V1Offset): Unit =

@@ -135,18 +135,23 @@ object SnapshotTable {
     *    rows — table columns (PHYSICAL names, immutable across renames)
     *    plus a `_change_type` column ('delete' pre-images / 'insert'
     *    post-images), published object-store-safe via the `_SUCCESS`
-    *    named-set protocol. One dir = ONE capture job: an update emits
-    *    its pre/post pair from a single scan of the matched rows
-    *    (struct-pair explode), never two passes.
+    *    named-set protocol. The change rows leave in the rewrite's OWN
+    *    write job ([[writeRewrite]]), routed from the data rows by their
+    *    tag (the role of Delta's `__is_cdc` partition column): one scan
+    *    of the rewrite set yields the survivors and the change rows (an
+    *    update's post-image as a survivor plus its pre/post pair, a
+    *    struct-array generator).
     *  - `insEntries`: added DATA entries that are wholly inserts (e.g. a
     *    merge's source dir) — read directly, no sidecar copy.
     *
-    * Capture cost: one extra predicate-pushed scan of only the rewritten
-    * files at COMMIT time plus an O(changed rows) sidecar write — paid
-    * once, where the old diff cost ~2× the rewritten bytes on EVERY
-    * uncached CDC range read. Disable per-session with
+    * Capture cost: the O(changed rows) change files the rewrite's own
+    * write job adds — no extra scan, job or count: the commit's net row
+    * delta is the inserts minus the deletes that write counted. Paid once at COMMIT time,
+    * where the old diff cost ~2× the rewritten bytes on EVERY uncached
+    * CDC range read. Disable per-session with
     * `spark.graft.cdc.onWrite=false` (readers honor whatever each
-    * manifest recorded).
+    * manifest recorded); the rewrite then writes its data rows alone and
+    * counts the live rows it replaced.
     *
     * One deliberate semantic refinement vs the diff path: an UPDATE that
     * rewrites a row to IDENTICAL values emits its delete+insert pair
@@ -1361,20 +1366,40 @@ object SnapshotTable {
         // kept.count() job of its own — the rewrite's own writeData pass
         // (whose write stats count rows anyway) supplies it.
         val iCount = iSide.map(_.count()).getOrElse(0L)
-        val out = (kept.toSeq ++ iSide.toSeq).reduceOption(_ unionByName _)
-        val (newDirs, newStats, written, writtenRel) = out match {
-          case None => (Seq.empty[String], Seq.empty[FileStat], 0L, None)
+        // with capture on, content-applied drops make the replay's delta
+        // differ from the original sidecar: its delete leg and its insert
+        // leg ride the rewrite's own write ([[writeRewrite]])
+        val capturing = cdcOnWrite(spark) && contentDrops.nonEmpty
+        val out =
+          if (!capturing) (kept.toSeq ++ iSide.toSeq).reduceOption(_ unionByName _)
+          else {
+            import org.apache.spark.sql.functions.{array, inline}
+            (kept.map(_.withColumn(CdcTypeCol, lit(null).cast("string"))).toSeq ++
+              d.map(_.withColumn(CdcTypeCol, lit("delete"))).toSeq ++
+              iSide.map(i => i.select(inline(array(fate(colsOnly, None), fate(colsOnly, Some("insert")))))).toSeq)
+              .reduceOption(_ unionByName _)
+          }
+        val (newDirs, newStats, written, writtenRel, chDir) = out match {
+          case None => (Seq.empty[String], Seq.empty[FileStat], 0L, None, None)
           case Some(o) =>
-            val (rel, n, stats) = writeData(spark, sRoot, o, tip.constraints, mapping)
-            if (n == 0) (Seq.empty[String], Seq.empty[FileStat], 0L, Some(rel))
-            else (Seq(rel), stats, n, Some(rel))
+            val (rel, n, stats, chDir) =
+              if (capturing) {
+                val w = writeRewrite(spark, sRoot, o, tip.constraints, mapping)
+                (w.rel, w.rows, w.stats, Some(w.chDir))
+              } else {
+                val (rel, n, stats) = writeData(spark, sRoot, o, tip.constraints, mapping)
+                (rel, n, stats, None)
+              }
+            if (n == 0) (Seq.empty[String], Seq.empty[FileStat], 0L, Some(rel), chDir)
+            else (Seq(rel), stats, n, Some(rel), chDir)
         }
         val keptCount = written - iCount
         val matched = candRows - keptCount
         if (matched != dCount) {
-          // abort PRE-PUBLISH: the doomed rewrite dir is deleted here (the
-          // same orphan-sweep contract as writeData's constraint abort)
-          writtenRel.foreach(rel => f.delete(new Path(dataRoot(root), rel), true))
+          // abort PRE-PUBLISH: the doomed rewrite dir and sidecar are
+          // deleted here (the same orphan-sweep contract as writeData's
+          // constraint abort)
+          (writtenRel.toSeq ++ chDir).foreach(rel => f.delete(new Path(dataRoot(root), rel), true))
           require(
             false,
             s"rebase conflict replaying v${c.version} ('${c.action}'): ${dCount - matched} of " +
@@ -1389,12 +1414,7 @@ object SnapshotTable {
         val cdcRec =
           if (!cdcOnWrite(spark)) None
           else if (contentDrops.isEmpty) Some(Cdc(candPaths, cc.chDir, cc.insEntries))
-          else {
-            val delTag = d.map(_.withColumn(CdcTypeCol, lit("delete")))
-            val insTag = iSide.map(_.withColumn(CdcTypeCol, lit("insert")))
-            val all = (delTag.toSeq ++ insTag.toSeq).reduce(_ unionByName _)
-            Some(Cdc(candPaths, Some(writeCdcSidecar(spark, sRoot, all, mapping)), cc.insEntries))
-          }
+          else Some(Cdc(candPaths, chDir, cc.insEntries))
         // masks keep their entries for everything this commit carries
         // VERBATIM: untouched covered files AND carried uncovered DIRS
         publish(spark, sRoot, tipBase.commit(
@@ -1687,6 +1707,56 @@ object SnapshotTable {
       df: DataFrame,
       constraints: Map[String, String] = Map.empty,
       physicalOf: Map[String, String] = Map.empty): (String, Long, Seq[FileStat]) = {
+    val (rel, stats, _) = writeDir(spark, root, df, constraints, physicalOf, split = false)
+    (rel, stats.map(_.rows).sum, stats)
+  }
+
+  /** What a capturing copy-on-write rewrite wrote ([[writeRewrite]]): its
+    * data dir, data rows and file stats, its change sidecar, and the
+    * commit's net row delta. */
+  private final case class Rewritten(rel: String, rows: Long, stats: Seq[FileStat], chDir: String, net: Long)
+
+  /** The ONE write of a capturing copy-on-write rewrite ([[Cdc]]):
+    * `tagged` is the rewrite's output plus a trailing `_change_type`
+    * column — null on a data row, 'delete' (a pre-image) or 'insert' (a
+    * post-image) on a change row. Both leave in one Spark job
+    * ([[WriteStats.writeParquet]]'s split): the data rows land as
+    * [[writeData]] lands them, stats and CHECKs folded over them alone;
+    * the change rows publish as the commit's `_cdc/w-<uuid>` sidecar in
+    * PHYSICAL column names (immutable across renames, so [[cdcSidecar]]
+    * reads them under any later schema) through [[publishDerivedDir]].
+    *
+    * The net row delta needs no count of the rewrite set: a rewritten row
+    * that stays is one data row, a deleted one one delete, an updated one
+    * a delete and an insert, and an inserted one an insert — so the rows
+    * the rewrite read are the data rows plus the deletes minus the
+    * inserts, and the delta is inserts minus deletes. */
+  private def writeRewrite(
+      spark: SparkSession,
+      root: String,
+      tagged: DataFrame,
+      constraints: Map[String, String],
+      physicalOf: Map[String, String]): Rewritten = {
+    val (rel, stats, changes) = writeDir(spark, root, tagged, constraints, physicalOf, split = true)
+    val chDir = s"_cdc/w-${java.util.UUID.randomUUID().toString}"
+    val side = new Path(new Path(dataRoot(root), rel), WriteStats.ChangeSide)
+    val f = fs(spark, root)
+    publishDerivedDir(f, side, new Path(dataRoot(root), chDir))
+    f.delete(side, true)
+    Rewritten(
+      rel, stats.map(_.rows).sum, stats, chDir,
+      changes.getOrElse("insert", 0L) - changes.getOrElse("delete", 0L))
+  }
+
+  /** The body of [[writeData]] and [[writeRewrite]]: (relative dir, file
+    * stats, change rows per type). */
+  private def writeDir(
+      spark: SparkSession,
+      root: String,
+      df: DataFrame,
+      constraints: Map[String, String],
+      physicalOf: Map[String, String],
+      split: Boolean): (String, Seq[FileStat], Map[String, Long]) = {
     val rel = "data/" + java.util.UUID.randomUUID().toString
     val abs = new Path(dataRoot(root), rel).toString
     // renamed columns write under their immutable physical parquet names
@@ -1695,40 +1765,20 @@ object SnapshotTable {
     val physDf = physicalOf.foldLeft(df) { case (d, (logical, physical)) =>
       if (d.columns.contains(logical)) d.withColumnRenamed(logical, physical) else d
     }
-    val written = WriteStats.writeParquet(physDf, abs, WriteStats.Spec(spark, physDf.schema, constraints, physicalOf))
+    val dataSchema = if (split) org.apache.spark.sql.types.StructType(physDf.schema.fields.init) else physDf.schema
+    val written =
+      WriteStats.writeParquet(physDf, abs, WriteStats.Spec(spark, dataSchema, constraints, physicalOf), split)
     constraints.keys.toSeq.sorted.zipWithIndex.foreach { case (name, i) =>
-      val bad = written.map(_.violations(i)).sum
+      val bad = written.files.map(_.violations(i)).sum
       if (bad > 0) {
         fs(spark, root).delete(new Path(abs), true) // abort pre-publish: no orphan lingers
         throw new ConstraintViolationException(name, bad)
       }
     }
-    val stats = written.map(w => w.stat.copy(path = rel + "/" + w.stat.path))
-    (rel, stats.map(_.rows).sum, stats)
+    (rel, written.files.map(w => w.stat.copy(path = rel + "/" + w.stat.path)), written.changes)
   }
 
-  /** Write a change-capture sidecar ([[Cdc]]): `df` (LOGICAL names) lands
-    * under `_cdc/w-<uuid>` in PHYSICAL column names — immutable across
-    * renames, so [[cdcSidecar]] reads it back under any later schema
-    * — published object-store-safe
-    * ([[publishDerivedDir]]). Returns the root-relative dir. */
-  private def writeCdcSidecar(
-      spark: SparkSession,
-      root: String,
-      df: DataFrame,
-      physicalOf: Map[String, String]): String = {
-    val f = fs(spark, root)
-    val rel = s"_cdc/w-${java.util.UUID.randomUUID().toString}"
-    val tmp = new Path(dataRoot(root), s"_cdc/.tmp-${java.util.UUID.randomUUID()}")
-    val physDf = physicalOf.foldLeft(df) { case (d, (logical, physical)) =>
-      if (d.columns.contains(logical)) d.withColumnRenamed(logical, physical) else d
-    }
-    physDf.write.parquet(tmp.toString)
-    publishDerivedDir(f, tmp, new Path(dataRoot(root), rel))
-    rel
-  }
-
-  /** The change rows of CDC sidecar `rel` ([[writeCdcSidecar]]) under
+  /** The change rows of CDC sidecar `rel` ([[writeRewrite]]) under
     * `schema` plus `_change_type`: exactly the files its complete publish
     * names (loud on a torn one); None when the capture holds no file. */
   private def cdcSidecar(
@@ -1745,24 +1795,26 @@ object SnapshotTable {
         cdcTagged(schema, withVersion = false)))
   }
 
-  /** One-scan pre/post CDC pair of UPDATE-matched rows: each row explodes
-    * into its delete pre-image and insert post-image (every SET applied
-    * against the OLD values — the rewrite's own single-projection
-    * semantics), so the capture never scans the matched rows twice. */
-  private def updatePairCapture(
-      matched: DataFrame,
-      set: Map[String, org.apache.spark.sql.Column]): DataFrame = {
-    import org.apache.spark.sql.functions.{array, col, explode, lit, struct}
-    val fields = matched.schema.fields
-    val delS = struct(
-      fields.map(f => col("`" + f.name + "`").as(f.name)) :+ lit("delete").as(CdcTypeCol): _*)
-    val insS = struct(
-      fields.map(f =>
-        set.get(f.name)
-          .map(_.cast(f.dataType).as(f.name))
-          .getOrElse(col("`" + f.name + "`").as(f.name)))
-        :+ lit("insert").as(CdcTypeCol): _*)
-    matched.select(explode(array(delS, insS)).as("__ch")).select(col("__ch.*"))
+  /** One output row of a capturing rewrite ([[writeRewrite]]): `cols`
+    * tagged with change type `tpe` — None for a data row. */
+  private def fate(cols: Seq[org.apache.spark.sql.Column], tpe: Option[String]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{lit, struct}
+    struct(cols :+ tpe.fold(lit(null).cast("string"))(lit).as(CdcTypeCol): _*)
+  }
+
+  /** `tgt` plus a boolean column `flag`: whether its key tuple appears in
+    * `keys`. An existence join, so a key `keys` holds twice still yields
+    * its target row once, and a null key never matches. */
+  private def flagMatched(tgt: DataFrame, keys: DataFrame, keyCols: Seq[String], flag: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression}
+    import org.apache.spark.sql.catalyst.plans.ExistenceJoin
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan}
+    val (l, r) = (tgt.queryExecution.analyzed, keys.queryExecution.analyzed)
+    def attr(p: LogicalPlan, k: String) = p.output.find(_.name == k).getOrElse(sys.error(s"no key column '$k'"))
+    val cond = keyCols.map(k => EqualTo(attr(l, k), attr(r, k)): Expression).reduce(And(_, _))
+    val exists = AttributeReference(flag, org.apache.spark.sql.types.BooleanType, nullable = false)()
+    org.apache.spark.sql.GraftSqlBridge.ofRows(
+      tgt.sparkSession, Join(l, r, ExistenceJoin(exists), Some(cond), JoinHint.NONE))
   }
 
   /** Atomic publish: create-if-absent the next manifest. Package-private so
@@ -3547,7 +3599,14 @@ object SnapshotTable {
     * optionally DROP the provably-all-matching files with zero I/O
     * (`dropWholly`, the delete fast path), and rewrite only the rest
     * through `transform`. Publishes one atomic commit whose `addedRows` is
-    * the commit's NET row delta (negative for deletes). */
+    * the commit's NET row delta (negative for deletes).
+    *
+    * With write-time CDC on ([[Cdc]]), a DML caller's `capture` turns the
+    * rewrite's source frame into the tagged frame of [[writeRewrite]] —
+    * its data rows and change rows from one scan — and that ONE write
+    * also yields the delta; otherwise `transform` yields the data rows
+    * and the delta counts the rewrite set's live rows ([[Base.liveRows]]:
+    * their recorded stats, or a count when a scanned file is masked). */
   private def dmlRewrite(
       spark: SparkSession,
       root: String,
@@ -3556,9 +3615,8 @@ object SnapshotTable {
       dropWholly: Boolean,
       skipIfNoWork: Boolean = false,
       // write-time CDC capture ([[Cdc]]): given the rewrite's (masked)
-      // source frame, the commit's change rows WITH the `_change_type`
-      // column — None for maintenance callers whose commits are
-      // data-identical
+      // source frame, its tagged frame ([[writeRewrite]]) — None for
+      // maintenance callers whose commits are data-identical
       capture: Option[DataFrame => DataFrame] = None)(
       transform: (DataFrame, Seq[FileStat]) => DataFrame): Int = {
     val base = openBase(spark, root)
@@ -3595,12 +3653,19 @@ object SnapshotTable {
         // a merge-on-read table must not resurrect masked rows (the
         // rewritten files' masks are thereby satisfied and cleared below)
         val src = base.read(scanPaths)
-        val before = base.liveRows(scanPaths, src)
-        cdcRec = cdcRec.map(_.copy(chDir = Some(writeCdcSidecar(spark, root, capture.get(src), base.mapping))))
-        val (rel, n, stats) = writeData(spark, root, transform(src, rewrite), m.constraints, base.mapping)
+        val (rel, n, stats, delta) = capture.filter(_ => cdcRec.isDefined) match {
+          case Some(tag) =>
+            val w = writeRewrite(spark, root, tag(src), m.constraints, base.mapping)
+            cdcRec = cdcRec.map(_.copy(chDir = Some(w.chDir)))
+            (w.rel, w.rows, w.stats, w.net)
+          case None =>
+            val before = base.liveRows(scanPaths, src)
+            val (rel, n, stats) = writeData(spark, root, transform(src, rewrite), m.constraints, base.mapping)
+            (rel, n, stats, n - before)
+        }
         // an all-rows-deleted rewrite leaves no dir (the empty orphan vacuums away)
-        if (n == 0) (Seq.empty[String], Seq.empty[FileStat], -before)
-        else (Seq(rel), stats, n - before)
+        if (n == 0) (Seq.empty[String], Seq.empty[FileStat], delta)
+        else (Seq(rel), stats, delta)
       }
     // masks survive only on the carried-forward files; rewritten/dropped
     // entries leave their masks (satisfied), emptied masks disappear and
@@ -3682,10 +3747,11 @@ object SnapshotTable {
       pruneBounds: Seq[Bound],
       matches: org.apache.spark.sql.Column,
       dropWholly: Boolean): Int = {
-    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.functions.{lit, when}
+    // captured: a matching row is its delete, any other row a data row
     dmlRewrite(
       spark, root, pruneBounds, "delete", dropWholly,
-      capture = Some(src => src.filter(matches).withColumn(CdcTypeCol, lit("delete"))))(
+      capture = Some(src => src.withColumn(CdcTypeCol, when(matches, lit("delete")))))(
       (df, _) => df.filter(!matches))
   }
 
@@ -3697,18 +3763,32 @@ object SnapshotTable {
       pruneBounds: Seq[Bound],
       matches: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column]): Int = {
-    import org.apache.spark.sql.functions.{col, when}
-    dmlRewrite(
-      spark, root, pruneBounds, "update", dropWholly = false,
-      capture = Some(src => updatePairCapture(src.filter(matches), set))) { (df, _) =>
+    import org.apache.spark.sql.functions.{array, col, inline, when}
+    def checked(df: DataFrame): DataFrame = {
       set.foreach { case (name, _) =>
         require(df.columns.contains(name), s"UPDATE SET column '$name' is not in the table schema")
       }
-      // ONE projection: every SET expression evaluates against the OLD
-      // row (SQL UPDATE semantics) — sequential withColumn would feed
-      // later SETs already-updated values, making a column swap silently
-      // wrong and the outcome Map-iteration-order-dependent
-      df.select(df.schema.fields.map { f =>
+      df
+    }
+    // ONE projection: every SET expression evaluates against the OLD row
+    // (SQL UPDATE semantics) — sequential withColumn would feed later
+    // SETs already-updated values, making a column swap silently wrong
+    // and the outcome Map-iteration-order-dependent
+    def pre(df: DataFrame) = df.schema.fields.map(f => col("`" + f.name + "`").as(f.name)).toSeq
+    def post(df: DataFrame) = df.schema.fields.map(f =>
+      set.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(col("`" + f.name + "`").as(f.name))).toSeq
+    // captured: a matched row yields its post-image as a data row plus
+    // its delete/insert pair, any other row itself — one generator over
+    // one scan of the rewrite set
+    dmlRewrite(
+      spark, root, pruneBounds, "update", dropWholly = false,
+      capture = Some { src =>
+        val s = checked(src)
+        s.select(inline(
+          when(matches, array(fate(post(s), None), fate(pre(s), Some("delete")), fate(post(s), Some("insert"))))
+            .otherwise(array(fate(pre(s), None)))))
+      }) { (df, _) =>
+      checked(df).select(df.schema.fields.map { f =>
         set.get(f.name) match {
           case Some(e) => when(matches, e.cast(f.dataType)).otherwise(col("`" + f.name + "`")).as(f.name)
           case None => col("`" + f.name + "`")
@@ -3917,9 +3997,11 @@ object SnapshotTable {
     * The canonical upsert ([[isUpsert]], what [[mergeUpsert]] calls)
     * lands its source dir AS IS — the source write proves the CHECKs —
     * and rewrites each touched file as its unmatched rows; its change
-    * capture is a sidecar of the replaced rows' pre-images plus the
-    * source dir as the insert set. Every other clause set writes one new
-    * dir of survivors and inserts.
+    * capture is the source dir as the insert set plus the replaced rows'
+    * pre-images, which leave in the rewrite's own write: one existence
+    * join flags each target row matched or not ([[flagMatched]]). Every
+    * other clause set writes one new dir of survivors and inserts, its
+    * per-clause change rows riding the same write ([[writeRewrite]]).
     *
     * `notMatchedBySource` clauses are the expensive shape by
     * NATURE (any file may hold unmatched rows): their rewrite set is
@@ -4050,8 +4132,9 @@ object SnapshotTable {
       // touched files rewrite as their unmatched rows; stat-less dirs pay
       // an identity rewrite. Write-time CDC ([[Cdc]]): the source dir IS
       // the insert set (every source row lands), and the delete
-      // pre-images (replaced target rows) are the semi-join complement of
-      // the survivors — one extra key-pruned scan of only the touched files
+      // pre-images (replaced target rows) ride the rewrite's own write —
+      // each target row is flagged matched or not in one pass, a matched
+      // one leaves as its delete, the rest as survivors
       val rewritePaths = touched.toSeq.sorted ++ plan.uncoveredDirs
       var cdcRec: Option[Cdc] =
         if (cdcOnWrite(spark)) Some(Cdc(rewritePaths, None, Seq(src.rel)))
@@ -4060,14 +4143,24 @@ object SnapshotTable {
         if (rewritePaths.isEmpty) (Seq.empty[String], Seq.empty[FileStat], 0L)
         else {
           val tgt = base.read(rewritePaths)
-          val before = base.liveRows(rewritePaths, tgt)
-          cdcRec = cdcRec.map(_.copy(chDir = Some(writeCdcSidecar(
-            spark, root, tgt.join(srcKeys, keyCols, "left_semi").withColumn(CdcTypeCol, lit("delete")),
-            base.mapping))))
-          val (rel, n, stats) =
-            writeData(spark, root, tgt.join(srcKeys, keyCols, "left_anti"), m.constraints, evolvedMapping)
-          if (n == 0) (Seq.empty[String], Seq.empty[FileStat], before)
-          else (Seq(rel), stats, before - n)
+          val (rel, n, stats, replaced) =
+            if (cdcRec.isDefined) {
+              // survivor columns in the order the anti-join path writes them
+              val cols = (keyCols ++ tgt.columns.filterNot(keyCols.contains)).map(q)
+              val flag = "__graft_matched"
+              val tagged = flagMatched(tgt, srcKeys, keyCols, flag)
+                .select(cols :+ when(col(flag), lit("delete")).as(CdcTypeCol): _*)
+              val w = writeRewrite(spark, root, tagged, m.constraints, evolvedMapping)
+              cdcRec = cdcRec.map(_.copy(chDir = Some(w.chDir)))
+              (w.rel, w.rows, w.stats, -w.net)
+            } else {
+              val before = base.liveRows(rewritePaths, tgt)
+              val (rel, n, stats) =
+                writeData(spark, root, tgt.join(srcKeys, keyCols, "left_anti"), m.constraints, evolvedMapping)
+              (rel, n, stats, before - n)
+            }
+          if (n == 0) (Seq.empty[String], Seq.empty[FileStat], replaced)
+          else (Seq(rel), stats, replaced)
         }
       // masks carry on untouched files only; rewritten entries leave theirs
       return publish(spark, root, base.commit(
@@ -4201,14 +4294,14 @@ object SnapshotTable {
       if (df.columns.contains(f.name)) q(f.name) else lit(null).cast(f.dataType).as(f.name)
     }.toSeq: _*)
     val matchedTag = "__graft_matched"
-    // write-time CDC capture ([[Cdc]]): the clause gates are mutually
-    // exclusive (first-match-wins), so the joined frame yields the exact
-    // per-row outcome — a fired delete emits its pre-image, a fired
-    // update explodes into its pre/post pair (conditional struct-array,
-    // ONE scan). Re-evaluating the join for the capture costs one extra
-    // scan of only the rewritten files + source, paid once at commit
-    // where the except-all diff cost ~2× per uncached range read.
-    var captureChanged: Option[DataFrame] = None
+    // write-time CDC capture ([[Cdc]]) of a rewriting merge: the clause
+    // gates are mutually exclusive (first-match-wins), so the joined frame
+    // yields the exact per-row outcome — a fired delete leaves as its
+    // pre-image, a fired update as its post-image plus its pre/post pair,
+    // an inserted row as itself plus its insert (conditional
+    // struct-arrays, ONE scan) — and the rewrite's one write carries them
+    // ([[writeRewrite]]); an insert-only merge's new dir is the insert set
+    val capturing = cdcOnWrite(spark) && rewritePaths.nonEmpty
     val survivorsOpt: Option[DataFrame] =
       if (rewritePaths.isEmpty) None
       else {
@@ -4250,23 +4343,19 @@ object SnapshotTable {
             }
           updates.foldRight(tCol) { case ((ap, v), rest) => when(ap, v).otherwise(rest) }.as(f.name)
         }
-        if (cdcOnWrite(spark)) {
-          import org.apache.spark.sql.functions.{array, explode, struct}
+        if (capturing) {
+          import org.apache.spark.sql.functions.{array, inline}
           val anyUpdate = clauseRows
             .collect { case (_: MatchedUpdate, ap, _) => ap }
             .reduceOption(_ || _)
             .getOrElse(lit(false))
-          val delS = struct(
-            evolvedStruct.fields.map(f => col(s"$targetAlias.`${f.name}`").as(f.name)).toSeq
-              :+ lit("delete").as(CdcTypeCol): _*)
-          val insS = struct(outCols.toSeq :+ lit("insert").as(CdcTypeCol): _*)
-          captureChanged = Some(
-            joined
-              .filter(deleted || anyUpdate)
-              .select(explode(when(deleted, array(delS)).otherwise(array(delS, insS))).as("__ch"))
-              .select(col("__ch.*")))
-        }
-        Some(joined.filter(!deleted).select(outCols.toSeq: _*))
+          val pre = evolvedStruct.fields.map(f => col(s"$targetAlias.`${f.name}`").as(f.name)).toSeq
+          val out = outCols.toSeq
+          Some(joined.select(inline(
+            when(deleted, array(fate(pre, Some("delete"))))
+              .when(anyUpdate, array(fate(out, None), fate(pre, Some("delete")), fate(out, Some("insert"))))
+              .otherwise(array(fate(out, None))))))
+        } else Some(joined.filter(!deleted).select(outCols.toSeq: _*))
       }
     val insertsOpt: Option[DataFrame] =
       // an empty source provably inserts nothing: skip the candidate
@@ -4300,32 +4389,32 @@ object SnapshotTable {
           }
           values.foldRight(nullV: Column) { case ((ap, v), rest) => when(ap, v).otherwise(rest) }.as(f.name)
         }
-        Some(unmatched.filter(anyApplies).select(outCols.toSeq: _*))
+        val inserted = unmatched.filter(anyApplies)
+        if (capturing) {
+          import org.apache.spark.sql.functions.{array, inline}
+          Some(inserted.select(inline(array(fate(outCols.toSeq, None), fate(outCols.toSeq, Some("insert"))))))
+        } else Some(inserted.select(outCols.toSeq: _*))
       }
     val pieces = survivorsOpt.toSeq ++ insertsOpt.toSeq
     if (pieces.isEmpty) return base.version // no rewrite, no insert clause output: no-op
     val outDf = pieces.reduce(_ unionByName _)
-    val before = base.liveRows(rewritePaths, base.read(rewritePaths))
-    val (rel, n, stats) = writeData(spark, root, outDf, m.constraints, evolvedMapping)
-    if (rewritePaths.isEmpty && n == 0) return base.version // nothing matched a clause: no-op
     // write-time CDC ([[Cdc]]): an insert-only merge's new dir is PURE
-    // inserts (referenced, not copied); a rewriting merge captures its
-    // per-clause delta in ONE sidecar — fired deletes as pre-images,
-    // fired updates as pre/post pairs, plus the insert rows (the new dir
-    // mixes carried survivors in, so it can never be referenced directly)
-    val cdcRec: Option[Cdc] =
-      if (!cdcOnWrite(spark)) None
-      else if (rewritePaths.isEmpty)
-        Some(Cdc(Seq.empty, None, if (n > 0) Seq(rel) else Seq.empty))
-      else {
-        import org.apache.spark.sql.functions.lit
-        val tagged = captureChanged.toSeq ++
-          insertsOpt.map(_.withColumn(CdcTypeCol, lit("insert"))).toSeq
-        Some(Cdc(
-          rewritePaths,
-          tagged.reduceOption(_ unionByName _).map(writeCdcSidecar(spark, root, _, evolvedMapping)),
-          Seq.empty))
+    // inserts (referenced, not copied); a rewriting merge's per-clause
+    // delta — fired deletes as pre-images, fired updates as pre/post
+    // pairs, plus the insert rows (the new dir mixes carried survivors
+    // in, so it can never be referenced directly) — is the ONE sidecar
+    // its write publishes
+    val (rel, n, stats, delta, cdcRec) =
+      if (capturing) {
+        val w = writeRewrite(spark, root, outDf, m.constraints, evolvedMapping)
+        (w.rel, w.rows, w.stats, w.net, Some(Cdc(rewritePaths, Some(w.chDir), Seq.empty)))
+      } else {
+        val before = base.liveRows(rewritePaths, base.read(rewritePaths))
+        val (rel, n, stats) = writeData(spark, root, outDf, m.constraints, evolvedMapping)
+        val insertOnly = Option.when(cdcOnWrite(spark))(Cdc(Seq.empty, None, if (n > 0) Seq(rel) else Seq.empty))
+        (rel, n, stats, n - before, insertOnly)
       }
+    if (rewritePaths.isEmpty && n == 0) return base.version // nothing matched a clause: no-op
     // no rewrite (insert-only merge): every entry — stat-less dirs too —
     // carries with its masks; a rewrite covers the uncovered dirs, whose
     // (satisfied) mask entries then drop
@@ -4333,7 +4422,7 @@ object SnapshotTable {
       if (rewritePaths.isEmpty) m.files.map(_.path) ++ plan.uncoveredDirs
       else m.files.map(_.path).filterNot(rewriteSet)
     publish(spark, root, base.commit(
-      "merge", kept, if (n > 0) Seq(rel) else Nil, stats, n - before, Nil, Some(evolved),
+      "merge", kept, if (n > 0) Seq(rel) else Nil, stats, delta, Nil, Some(evolved),
       batchId, appId, cdcRec))
   }
 
@@ -4754,17 +4843,23 @@ object SnapshotTable {
     rel
   }
 
-  /** The exact parquet files the COMPLETE publish of range `(fromV, toV]`
-    * names — the only set CDC readers may consume (see
-    * [[publishDerivedDir]]). Empty when the range's diff had no rows. */
-  private[sinks] def materializedChangeFiles(
+  /** The materialized feed of `(fromV, toV]` ([[materializeChanges]])
+    * under the feed schema `schema`: the manifest-backed relation every
+    * read builds ([[hadoopFsRelation]] over a stat-less [[subManifest]]),
+    * over exactly the files the range's COMPLETE publish names (see
+    * [[publishDerivedDir]]), scanning the LOGICAL columns
+    * [[changesBetween]] wrote. Empty when the range's diff had no rows. */
+  private[sinks] def changeFeedRelation(
       spark: SparkSession,
       root: String,
       fromV: Int,
-      toV: Int): Seq[Path] = {
+      toV: Int,
+      schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.execution.datasources.HadoopFsRelation = {
     val rel = materializeChanges(spark, root, fromV, toV)
-    publishedFiles(fs(spark, root), new Path(dataRoot(root), rel))
+    val files = publishedFiles(fs(spark, root), new Path(dataRoot(root), rel))
       .getOrElse(sys.error(s"$rel published without _SUCCESS")) // unreachable post-publish
+    hadoopFsRelation(spark, root, subManifest(EmptyVersion, files.map(p => rel + "/" + p.getName)), schema)
   }
 
   /** `s` plus the CDC tag columns — the ONE construction of "table schema
@@ -4793,13 +4888,8 @@ object SnapshotTable {
     * reads the bytes. Result ≡ [[changesBetween]] by construction
     * (deterministic ranges). The schema comes from the lite manifest, so
     * a cache hit parses no per-file stats and runs no diff. */
-  def changesBetweenCached(spark: SparkSession, root: String, fromV: Int, toV: Int): DataFrame = {
-    val schema = cdcSchemaAt(spark, root, toV)
-    val files = materializedChangeFiles(spark, root, fromV, toV)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(files.map(_.toString): _*)
-  }
+  def changesBetweenCached(spark: SparkSession, root: String, fromV: Int, toV: Int): DataFrame =
+    spark.baseRelationToDataFrame(changeFeedRelation(spark, root, fromV, toV, cdcSchemaAt(spark, root, toV)))
 
   /** Drop history: delete manifests older than the `keepLast` most recent,
     * then delete every data dir no RETAINED manifest references — reclaims

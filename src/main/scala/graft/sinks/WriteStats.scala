@@ -4,10 +4,12 @@ import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
 import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.expressions.{
   Alias, BasePredicate, BindReferences, BoundReference, Coalesce, CommonExpressionRef, Expression, Literal,
   Murmur3Hash, Not, Predicate, Unevaluable, UnsafeProjection, With, XxHash64}
@@ -17,8 +19,9 @@ import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{
-  BasicWriteJobStatsTracker, FileFormatWriter, WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+  BasicWriteJobStatsTracker, FileFormatWriter, OutputWriter, OutputWriterFactory, WriteJobStatsTracker, WriteTaskStats,
+  WriteTaskStatsTracker}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOutputWriter, ParquetWriteSupport}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
@@ -167,6 +170,8 @@ private[sinks] object WriteStats {
         private val bits = Array.fill(bloomOrds.length)(new Array[Byte](BloomBits / 8))
         private val bad = new Array[Long](violated.length)
 
+        def isEmpty: Boolean = rows == 0
+
         def add(row: InternalRow): Unit = {
           rows += 1
           var i = 0
@@ -312,31 +317,108 @@ private[sinks] object WriteStats {
     def hi: Any = external(max)
   }
 
+  /** The subdir of a split write's dir ([[writeParquet]]) that holds its
+    * change files. Its name starts with `_`, so no listing of the data
+    * dir reads it. */
+  val ChangeSide = "__graft_change"
+
   /** The per-task tracker. A single-directory write has one file open at
-    * a time; a closed file records its byte length. */
-  private final class TaskTracker(spec: Spec, conf: SerializableConfiguration) extends WriteTaskStatsTracker {
+    * a time; a closed file records its byte length. In a `split` write
+    * only a row whose trailing `_change_type` is null folds into the file
+    * stats (so a deleted row's pre-image never meets a CHECK), a change
+    * row counts under its type, and a data file that received no row was
+    * never opened ([[SplitParquet]]) and records nothing. */
+  private final class TaskTracker(spec: Spec, conf: SerializableConfiguration, split: Boolean)
+      extends WriteTaskStatsTracker {
     private val binding = spec.bind()
     private val done = mutable.ArrayBuffer.empty[Folded]
+    private val changes = mutable.HashMap.empty[String, Long]
+    private var changeFiles, curChanges = 0
     private var cur: binding.FileFold = _
 
     override def newPartition(partitionValues: InternalRow): Unit = ()
-    override def newFile(filePath: String): Unit = cur = binding.newFile()
-    override def newRow(filePath: String, row: InternalRow): Unit = cur.add(row)
-    override def closeFile(filePath: String): Unit = {
-      val p = new Path(filePath)
-      done += cur.result(p.getName, fileBytes(p, conf.value))
+    override def newFile(filePath: String): Unit = { cur = binding.newFile(); curChanges = 0 }
+    override def newRow(filePath: String, row: InternalRow): Unit =
+      if (!split || row.isNullAt(row.numFields - 1)) cur.add(row)
+      else {
+        val tpe = row.getUTF8String(row.numFields - 1).toString
+        changes(tpe) = changes.getOrElse(tpe, 0L) + 1
+        if (curChanges == 0) changeFiles += 1
+        curChanges += 1
+      }
+    override def closeFile(filePath: String): Unit =
+      if (!split || !cur.isEmpty) {
+        val p = new Path(filePath)
+        done += cur.result(p.getName, fileBytes(p, conf.value))
+      }
+    override def getFinalStats(taskCommitTime: Long): WriteTaskStats =
+      TaskFiles(done.toSeq, changes.toMap, changeFiles)
+  }
+
+  private final case class TaskFiles(files: Seq[Folded], changes: Map[String, Long], changeFiles: Int)
+      extends WriteTaskStats
+
+  private final class JobTracker(spec: Spec, conf: SerializableConfiguration, split: Boolean)
+      extends WriteJobStatsTracker {
+    @transient var written: Written = Written(Seq.empty, Map.empty)
+    @transient var changeFiles = 0
+    override def newTaskInstance(): WriteTaskStatsTracker = new TaskTracker(spec, conf, split)
+    override def processStats(stats: Seq[WriteTaskStats], jobCommitTime: Long): Unit = {
+      val tasks = stats.collect { case t: TaskFiles => t }
+      written = Written(
+        tasks.flatMap(_.files),
+        tasks.flatMap(_.changes).groupMapReduce(_._1)(_._2)(_ + _))
+      changeFiles = tasks.map(_.changeFiles).sum
     }
-    override def getFinalStats(taskCommitTime: Long): WriteTaskStats = TaskFiles(done.toSeq)
   }
 
-  private final case class TaskFiles(files: Seq[Folded]) extends WriteTaskStats
-
-  private final class JobTracker(spec: Spec, conf: SerializableConfiguration) extends WriteJobStatsTracker {
-    @transient var files: Seq[Folded] = Seq.empty
-    override def newTaskInstance(): WriteTaskStatsTracker = new TaskTracker(spec, conf)
-    override def processStats(stats: Seq[WriteTaskStats], jobCommitTime: Long): Unit =
-      files = stats.flatMap { case TaskFiles(fs) => fs }
+  /** Parquet whose writer routes each row by its trailing `_change_type`:
+    * a data row (null tag) goes, without the tag, to the file the task
+    * opened, which therefore holds exactly the table's columns; a change
+    * row, tag included, goes to the same-named file under [[ChangeSide]]
+    * beside it. Both live in the task's attempt dir, so the job's commit
+    * moves them together, and each opens at its first row. */
+  private final class SplitParquet extends ParquetFileFormat {
+    override def prepareWrite(
+        spark: SparkSession,
+        job: Job,
+        options: Map[String, String],
+        dataSchema: StructType): OutputWriterFactory = {
+      val inner = super.prepareWrite(spark, job, options, dataSchema)
+      val data = StructType(dataSchema.fields.init)
+      new OutputWriterFactory {
+        override def getFileExtension(ctx: TaskAttemptContext): String = inner.getFileExtension(ctx)
+        override def newInstance(file: String, schema: StructType, ctx: TaskAttemptContext): OutputWriter =
+          new OutputWriter {
+            private val view = ProjectingInternalRow(data, data.indices)
+            private var dataOut, changeOut: OutputWriter = _
+            override def write(row: InternalRow): Unit =
+              if (row.isNullAt(row.numFields - 1)) {
+                if (dataOut == null) {
+                  val conf = new Configuration(ctx.getConfiguration)
+                  ParquetWriteSupport.setSchema(data, conf)
+                  dataOut = new ParquetOutputWriter(file, new TaskAttemptContextImpl(conf, ctx.getTaskAttemptID))
+                }
+                view.project(row)
+                dataOut.write(view)
+              } else {
+                if (changeOut == null) {
+                  val p = new Path(file)
+                  val side = new Path(new Path(p.getParent, ChangeSide), p.getName)
+                  changeOut = inner.newInstance(side.toString, schema, ctx)
+                }
+                changeOut.write(row)
+              }
+            override def close(): Unit = Seq(dataOut, changeOut).filter(_ != null).foreach(_.close())
+            override def path(): String = file
+          }
+      }
+    }
   }
+
+  /** What one write produced: each data file's fold, and the number of
+    * change rows of each `_change_type` a split write wrote. */
+  final case class Written(files: Seq[Folded], changes: Map[String, Long])
 
   /** Write `df` as parquet to the new dir `abs` and return each file's
     * fold. This is `df.write.parquet(abs)` — Spark's `FileFormatWriter`
@@ -345,29 +427,54 @@ private[sinks] object WriteStats {
     * files, part names, the one file an empty write leaves, `_SUCCESS`
     * and bytes are exactly what that call writes; the fold rides along
     * as one more stats tracker. A file whose size its task could not see
-    * takes it from one listing of the committed dir. */
-  def writeParquet(df: DataFrame, abs: String, spec: Spec): Seq[Folded] = {
+    * takes it from one listing of the committed dir.
+    *
+    * A `split` write takes a frame whose last column is `_change_type`:
+    * null on a data row, the change type on a change row. Both sides
+    * leave in the same job ([[SplitParquet]]; Delta splits them the same
+    * way with its `__is_cdc` partition column, whose sort of the rows by
+    * the tag this routing writer does not need): the data files land in
+    * `abs` without the tag,
+    * as the plain write puts them (minus the empty file of a task that
+    * kept no row), stats and CHECKs folded over them alone; the change
+    * files, tag included, land under `abs/`[[ChangeSide]] for the caller
+    * to publish. */
+  def writeParquet(df: DataFrame, abs: String, spec: Spec, split: Boolean): Written = {
     val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val qe = df.queryExecution
     val hadoopConf: Configuration = spark.sessionState.newHadoopConf()
     val conf = new SerializableConfiguration(hadoopConf)
     val committer = FileCommitProtocol.instantiate(
       spark.sessionState.conf.fileCommitProtocolClass, java.util.UUID.randomUUID().toString, abs)
-    val tracker = new JobTracker(spec, conf)
+    val tracker = new JobTracker(spec, conf, split)
     SQLExecution.withNewExecutionId(qe, Some("save")) {
       val plan = qe.executedPlan
       FileFormatWriter.write(
-        spark, plan, new ParquetFileFormat, committer,
+        spark, plan, if (split) new SplitParquet else new ParquetFileFormat, committer,
         FileFormatWriter.OutputSpec(abs, Map.empty, plan.output), hadoopConf,
         partitionColumns = Seq.empty, bucketSpec = None,
         statsTrackers = Seq(new BasicWriteJobStatsTracker(conf, BasicWriteJobStatsTracker.metrics), tracker),
         options = Map.empty)
     }
-    if (tracker.files.forall(_.stat.bytes >= 0)) tracker.files
+    val dir = new Path(abs)
+    val fs = dir.getFileSystem(hadoopConf)
+    if (split) {
+      // the change files ride the commit of the task's attempt dir; a
+      // commit protocol that moves only the files it handed out would
+      // drop them, so the count must match
+      val side = new Path(dir, ChangeSide)
+      fs.mkdirs(side)
+      val landed = fs.listStatus(side).map(_.getPath.getName).count(n => !n.startsWith(".") && !n.startsWith("_"))
+      require(
+        landed == tracker.changeFiles,
+        s"${tracker.changeFiles} change files written, $landed committed under $side: the commit " +
+          s"protocol ${spark.sessionState.conf.fileCommitProtocolClass} does not commit a task's attempt dir whole")
+    }
+    val w = tracker.written
+    if (w.files.forall(_.stat.bytes >= 0)) w
     else {
-      val dir = new Path(abs)
-      val sizes = dir.getFileSystem(hadoopConf).listStatus(dir).map(s => s.getPath.getName -> s.getLen).toMap
-      tracker.files.map(f => f.copy(stat = f.stat.copy(bytes = sizes.getOrElse(f.stat.path, -1L))))
+      val sizes = fs.listStatus(dir).map(s => s.getPath.getName -> s.getLen).toMap
+      w.copy(files = w.files.map(f => f.copy(stat = f.stat.copy(bytes = sizes.getOrElse(f.stat.path, -1L)))))
     }
   }
 }

@@ -1323,6 +1323,79 @@ class SnapshotTableSpec extends SparkSuite {
     }
   }
 
+  test("cap_cdc_onwrite: addedRows is every commit's live-row delta over a masked DML history, and the feed folds back, capture on and off") {
+    import org.apache.spark.sql.functions.{concat, lit}
+    import SnapshotTable.{Bound, MatchedDelete, MatchedUpdate, NotMatchedInsert}
+    def frame(from: Long, n: Long) =
+      spark.range(from, from + n).selectExpr("id AS k", "concat('v', id) AS s")
+    for (captureOn <- Seq(true, false)) {
+      spark.conf.set("spark.graft.cdc.onWrite", captureOn.toString)
+      try {
+        val rnd = new scala.util.Random(2929) // same seed → same history
+        val root = freshRoot() + "/t"
+        SnapshotTable.create(
+          spark, root,
+          frame(0, 400).repartitionByRange(4, col("k")).sortWithinPartitions("k"))
+        var live = 400L
+        var nextK = 1000L
+        // every op twice, in a fixed cycle over random ranges: masks from
+        // the merge-on-read ops sit on the files the copy-on-write ones
+        // rewrite, whose row counts then come from their write alone
+        (0 until 14).foreach { i =>
+          val lo = rnd.nextInt(380).toLong
+          i % 7 match {
+            case 0 => SnapshotTable.deleteWhereMor(spark, root, Seq(Bound("k", Some(lo), Some(lo + 15))))
+            case 1 =>
+              SnapshotTable.updateWhereMor(
+                spark, root, Seq(Bound("k", Some(lo), Some(lo + 15))),
+                Map("s" -> concat(col("s"), lit("um" + i))))
+            case 2 =>
+              SnapshotTable.mergeUpsertMor(
+                spark, root, frame(lo, 10).withColumn("s", lit("mor" + i)), Seq("k"))
+            case 3 => SnapshotTable.deleteWhere(spark, root, Seq(Bound("k", Some(lo), Some(lo + 30))))
+            case 4 =>
+              SnapshotTable.updateWhere(
+                spark, root, Seq(Bound("k", Some(lo), Some(lo + 30))),
+                Map("s" -> concat(col("s"), lit("u" + i))))
+            case 5 => // a duplicate-key source: both rows of each repeated key land
+              SnapshotTable.mergeUpsert(
+                spark, root,
+                frame(lo, 10).union(frame(lo, 3)).union(frame(nextK, 2)).withColumn("s", lit("m" + i)),
+                Seq("k"))
+              nextK += 2
+            case 6 => // the general clause set: update, delete, insert
+              SnapshotTable.mergeInto(
+                spark, root,
+                frame(lo, 20).union(frame(nextK, 3)).withColumn("s", lit("g" + i)),
+                Seq("k"),
+                matched = Seq(
+                  MatchedUpdate(Some("__s.k % 3 = 0"), Some(Map("s" -> "__s.s"))),
+                  MatchedDelete(Some("__s.k % 3 = 1"))),
+                notMatched = Seq(NotMatchedInsert(None, None)),
+                targetAlias = "__t",
+                sourceAlias = "__s")
+              nextK += 3
+          }
+          val m = SnapshotTable.history(spark, root).last
+          val now = SnapshotTable.read(spark, root).count()
+          assert(
+            m.addedRows == now - live,
+            s"captureOn=$captureOn v${m.version} (${m.action}): addedRows ${m.addedRows}, live rows $live -> $now")
+          live = now
+        }
+        val latest = SnapshotTable.latestVersion(spark, root).get
+        val ch = SnapshotTable.changesBetween(spark, root, 0, latest)
+        val ins = ch.filter(col("_change_type") === "insert").select("k", "s")
+        val del = ch.filter(col("_change_type") === "delete").select("k", "s")
+        val folded = ins.exceptAll(del).orderBy("k", "s").collect().toSeq
+        val table = SnapshotTable.read(spark, root).orderBy("k", "s").collect().toSeq
+        assert(
+          folded == table,
+          s"captureOn=$captureOn: CDC fold (${folded.size} rows) != table (${table.size} rows) after $latest versions")
+      } finally spark.conf.unset("spark.graft.cdc.onWrite")
+    }
+  }
+
   /** The descriptions of the Spark jobs `body` runs. */
   private def jobsOf(body: => Unit): Seq[String] = {
     import org.apache.spark.ListenerBusDrain
@@ -1340,6 +1413,84 @@ class SnapshotTableSpec extends SparkSuite {
       ListenerBusDrain.drain(sc)
     } finally sc.removeSparkListener(listener)
     jobs.toArray(Array.empty[String]).toSeq
+  }
+
+  /** The SQL executions `body` runs, each as the `SnapshotTable` methods
+    * on the stack that started it, innermost first. */
+  private def executionsOf(body: => Unit): Seq[Seq[String]] = {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val execs = new java.util.concurrent.CopyOnWriteArrayList[Seq[String]]()
+    val Frame = """graft\.sinks\.SnapshotTable\$(?:Base)?\.([A-Za-z]+)\(""".r
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          execs.add(Frame.findAllMatchIn(s.details).map(_.group(1)).toSeq)
+        case _ => ()
+      }
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    execs.toArray(Array.empty[Seq[String]]).toSeq
+  }
+
+  test("cap_cdc_onwrite: a copy-on-write commit over masked files is ONE write: no count, no second write, the capture-off feed") {
+    import org.apache.spark.sql.functions.{concat, lit}
+    import SnapshotTable.{Bound, MatchedDelete, MatchedUpdate, NotMatchedInsert}
+    def frame(from: Long, n: Long) =
+      spark.range(from, from + n).selectExpr("id AS k", "concat('v', id) AS s")
+    // four range files; a keys mask on the first two, a pred mask on the
+    // last two — every commit below rewrites masked files, whose live
+    // rows the stats cannot give
+    def setUp(root: String): Unit = {
+      SnapshotTable.create(spark, root, frame(0, 400).repartitionByRange(4, col("k")).sortWithinPartitions("k"))
+      SnapshotTable.mergeUpsertMor(spark, root, frame(50, 1).union(frame(150, 1)).withColumn("s", lit("mor")), Seq("k"))
+      SnapshotTable.deleteWhereMor(spark, root, Seq(Bound("k", Some(250L), Some(260L))))
+      SnapshotTable.deleteWhereMor(spark, root, Seq(Bound("k", Some(350L), Some(360L))))
+    }
+    val ops: Seq[(String, String => Unit)] = Seq(
+      "deleteWhere" -> (r => SnapshotTable.deleteWhere(spark, r, Seq(Bound("k", Some(10L), Some(20L))))),
+      "updateWhere" -> (r => SnapshotTable.updateWhere(
+        spark, r, Seq(Bound("k", Some(270L), Some(280L))), Map("s" -> concat(col("s"), lit("!"))))),
+      "mergeUpsert" -> (r => SnapshotTable.mergeUpsert(
+        spark, r, frame(140, 3).union(frame(141, 1)).union(frame(2100, 2)).withColumn("s", lit("m")), Seq("k"))),
+      "mergeInto" -> (r => SnapshotTable.mergeInto(
+        spark, r, frame(380, 10).union(frame(2000, 2)).withColumn("s", lit("g")), Seq("k"),
+        matched = Seq(MatchedUpdate(Some("__s.k % 2 = 0"), Some(Map("s" -> "__s.s"))), MatchedDelete(None)),
+        notMatched = Seq(NotMatchedInsert(None, None)),
+        targetAlias = "__t",
+        sourceAlias = "__s")))
+    val root = freshRoot()
+    val (on, off) = (root + "/on", root + "/off")
+    setUp(on)
+    spark.conf.set("spark.graft.cdc.onWrite", "false")
+    try {
+      setUp(off)
+      ops.foreach(_._2(off))
+    } finally spark.conf.unset("spark.graft.cdc.onWrite")
+    val base = SnapshotTable.latestVersion(spark, on).get
+    ops.zipWithIndex.foreach { case ((name, op), i) =>
+      val execs = executionsOf(op(on))
+      // a write of the table's files; a merge's first one lands its source
+      val writes = execs.filter(e => e.exists(_.startsWith("write")) && !e.contains("writeSource"))
+      val counts = execs.filter(_.contains("liveRows"))
+      val merge = name.startsWith("merge")
+      assert(writes.size == 1 && counts.isEmpty, s"$name: ${writes.size} rewrite writes, ${counts.size} counts: $execs")
+      // nothing else runs: a delete or update is its write alone, a merge
+      // adds its source write and its touched-file probe
+      assert(execs.size == (if (merge) 3 else 1), s"$name: $execs")
+      val v = base + i + 1
+      def feed(r: String) = SnapshotTable.changesBetween(spark, r, v - 1, v)
+        .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      assert(feed(on) == feed(off), s"$name: the captured feed differs from the capture-off twin's")
+      assert(SnapshotTable.readManifest(spark, on, v).addedRows == SnapshotTable.readManifest(spark, off, v).addedRows)
+    }
   }
 
   test("reads plan from the manifest: no listing job past 32 files, no schema inference over a keys mask") {
