@@ -146,12 +146,12 @@ object SnapshotTable {
     *
     * Capture cost: the O(changed rows) change files the rewrite's own
     * write job adds — no extra scan, job or count: the commit's net row
-    * delta is the inserts minus the deletes that write counted. Paid once at COMMIT time,
-    * where the old diff cost ~2× the rewritten bytes on EVERY uncached
-    * CDC range read. Disable per-session with
-    * `spark.graft.cdc.onWrite=false` (readers honor whatever each
-    * manifest recorded); the rewrite then writes its data rows alone and
-    * counts the live rows it replaced.
+    * delta is the inserts minus the deletes that write counted, whether
+    * or not it keeps them. Paid once at COMMIT time, where the old diff
+    * cost ~2× the rewritten bytes on EVERY uncached CDC range read.
+    * Disable per-session with `spark.graft.cdc.onWrite=false` (readers
+    * honor whatever each manifest recorded); the rewrite then counts its
+    * change rows and writes its data rows alone.
     *
     * One deliberate semantic refinement vs the diff path: an UPDATE that
     * rewrites a row to IDENTICAL values emits its delete+insert pair
@@ -1366,32 +1366,24 @@ object SnapshotTable {
         // kept.count() job of its own — the rewrite's own writeData pass
         // (whose write stats count rows anyway) supplies it.
         val iCount = iSide.map(_.count()).getOrElse(0L)
-        // with capture on, content-applied drops make the replay's delta
-        // differ from the original sidecar: its delete leg and its insert
-        // leg ride the rewrite's own write ([[writeRewrite]])
+        // the replay's one write carries its delete leg and its insert leg
+        // as change rows ([[writeRewrite]]); they publish only when
+        // content-applied drops make its delta differ from the original
+        // sidecar, with capture on
         val capturing = cdcOnWrite(spark) && contentDrops.nonEmpty
-        val out =
-          if (!capturing) (kept.toSeq ++ iSide.toSeq).reduceOption(_ unionByName _)
-          else {
-            import org.apache.spark.sql.functions.{array, inline}
-            (kept.map(_.withColumn(CdcTypeCol, lit(null).cast("string"))).toSeq ++
-              d.map(_.withColumn(CdcTypeCol, lit("delete"))).toSeq ++
-              iSide.map(i => i.select(inline(array(fate(colsOnly, None), fate(colsOnly, Some("insert")))))).toSeq)
-              .reduceOption(_ unionByName _)
-          }
+        val out = {
+          import org.apache.spark.sql.functions.{array, inline}
+          (kept.map(_.withColumn(CdcTypeCol, lit(null).cast("string"))).toSeq ++
+            d.map(_.withColumn(CdcTypeCol, lit("delete"))).toSeq ++
+            iSide.map(i => i.select(inline(array(fate(colsOnly, None), fate(colsOnly, Some("insert")))))).toSeq)
+            .reduceOption(_ unionByName _)
+        }
         val (newDirs, newStats, written, writtenRel, chDir) = out match {
           case None => (Seq.empty[String], Seq.empty[FileStat], 0L, None, None)
           case Some(o) =>
-            val (rel, n, stats, chDir) =
-              if (capturing) {
-                val w = writeRewrite(spark, sRoot, o, tip.constraints, mapping)
-                (w.rel, w.rows, w.stats, Some(w.chDir))
-              } else {
-                val (rel, n, stats) = writeData(spark, sRoot, o, tip.constraints, mapping)
-                (rel, n, stats, None)
-              }
-            if (n == 0) (Seq.empty[String], Seq.empty[FileStat], 0L, Some(rel), chDir)
-            else (Seq(rel), stats, n, Some(rel), chDir)
+            val w = writeRewrite(spark, sRoot, o, tip.constraints, mapping, capturing)
+            if (w.rows == 0) (Seq.empty[String], Seq.empty[FileStat], 0L, Some(w.rel), w.chDir)
+            else (Seq(w.rel), w.stats, w.rows, Some(w.rel), w.chDir)
         }
         val keptCount = written - iCount
         val matched = candRows - keptCount
@@ -1707,24 +1699,30 @@ object SnapshotTable {
       df: DataFrame,
       constraints: Map[String, String] = Map.empty,
       physicalOf: Map[String, String] = Map.empty): (String, Long, Seq[FileStat]) = {
-    val (rel, stats, _) = writeDir(spark, root, df, constraints, physicalOf, split = false)
+    val (rel, stats, _) = writeDir(spark, root, df, constraints, physicalOf, WriteStats.Changes.Untagged)
     (rel, stats.map(_.rows).sum, stats)
   }
 
-  /** What a capturing copy-on-write rewrite wrote ([[writeRewrite]]): its
-    * data dir, data rows and file stats, its change sidecar, and the
-    * commit's net row delta. */
-  private final case class Rewritten(rel: String, rows: Long, stats: Seq[FileStat], chDir: String, net: Long)
+  /** What a copy-on-write rewrite wrote ([[writeRewrite]]): its data dir,
+    * data rows and file stats, its change sidecar (when captured), and
+    * the commit's net row delta. */
+  private final case class Rewritten(
+      rel: String,
+      rows: Long,
+      stats: Seq[FileStat],
+      chDir: Option[String],
+      net: Long)
 
-  /** The ONE write of a capturing copy-on-write rewrite ([[Cdc]]):
-    * `tagged` is the rewrite's output plus a trailing `_change_type`
-    * column — null on a data row, 'delete' (a pre-image) or 'insert' (a
-    * post-image) on a change row. Both leave in one Spark job
-    * ([[WriteStats.writeParquet]]'s split): the data rows land as
-    * [[writeData]] lands them, stats and CHECKs folded over them alone;
-    * the change rows publish as the commit's `_cdc/w-<uuid>` sidecar in
-    * PHYSICAL column names (immutable across renames, so [[cdcSidecar]]
-    * reads them under any later schema) through [[publishDerivedDir]].
+  /** The ONE write of a copy-on-write DML rewrite: `tagged` is the
+    * rewrite's output plus a trailing `_change_type` column — null on a
+    * data row, 'delete' (a pre-image) or 'insert' (a post-image) on a
+    * change row. The data rows land as [[writeData]] lands them, stats
+    * and CHECKs folded over them alone ([[WriteStats.writeParquet]]).
+    * With `capture` ([[Cdc]]) the change rows leave in the same Spark job
+    * and publish as the commit's `_cdc/w-<uuid>` sidecar in PHYSICAL
+    * column names (immutable across renames, so [[cdcSidecar]] reads them
+    * under any later schema) through [[publishDerivedDir]]; without it
+    * they are only counted.
     *
     * The net row delta needs no count of the rewrite set: a rewritten row
     * that stays is one data row, a deleted one one delete, an updated one
@@ -1736,13 +1734,17 @@ object SnapshotTable {
       root: String,
       tagged: DataFrame,
       constraints: Map[String, String],
-      physicalOf: Map[String, String]): Rewritten = {
-    val (rel, stats, changes) = writeDir(spark, root, tagged, constraints, physicalOf, split = true)
-    val chDir = s"_cdc/w-${java.util.UUID.randomUUID().toString}"
-    val side = new Path(new Path(dataRoot(root), rel), WriteStats.ChangeSide)
-    val f = fs(spark, root)
-    publishDerivedDir(f, side, new Path(dataRoot(root), chDir))
-    f.delete(side, true)
+      physicalOf: Map[String, String],
+      capture: Boolean): Rewritten = {
+    val (rel, stats, changes) = writeDir(
+      spark, root, tagged, constraints, physicalOf,
+      if (capture) WriteStats.Changes.Kept else WriteStats.Changes.Counted)
+    val chDir = Option.when(capture) {
+      val ch = s"_cdc/w-${java.util.UUID.randomUUID().toString}"
+      publishDerivedDir(
+        fs(spark, root), new Path(new Path(dataRoot(root), rel), WriteStats.ChangeSide), new Path(dataRoot(root), ch))
+      ch
+    }
     Rewritten(
       rel, stats.map(_.rows).sum, stats, chDir,
       changes.getOrElse("insert", 0L) - changes.getOrElse("delete", 0L))
@@ -1756,7 +1758,7 @@ object SnapshotTable {
       df: DataFrame,
       constraints: Map[String, String],
       physicalOf: Map[String, String],
-      split: Boolean): (String, Seq[FileStat], Map[String, Long]) = {
+      changes: WriteStats.Changes): (String, Seq[FileStat], Map[String, Long]) = {
     val rel = "data/" + java.util.UUID.randomUUID().toString
     val abs = new Path(dataRoot(root), rel).toString
     // renamed columns write under their immutable physical parquet names
@@ -1765,9 +1767,11 @@ object SnapshotTable {
     val physDf = physicalOf.foldLeft(df) { case (d, (logical, physical)) =>
       if (d.columns.contains(logical)) d.withColumnRenamed(logical, physical) else d
     }
-    val dataSchema = if (split) org.apache.spark.sql.types.StructType(physDf.schema.fields.init) else physDf.schema
+    val dataSchema =
+      if (changes == WriteStats.Changes.Untagged) physDf.schema
+      else org.apache.spark.sql.types.StructType(physDf.schema.fields.init)
     val written =
-      WriteStats.writeParquet(physDf, abs, WriteStats.Spec(spark, dataSchema, constraints, physicalOf), split)
+      WriteStats.writeParquet(physDf, abs, WriteStats.Spec(spark, dataSchema, constraints, physicalOf), changes)
     constraints.keys.toSeq.sorted.zipWithIndex.foreach { case (name, i) =>
       val bad = written.files.map(_.violations(i)).sum
       if (bad > 0) {
@@ -1795,8 +1799,8 @@ object SnapshotTable {
         cdcTagged(schema, withVersion = false)))
   }
 
-  /** One output row of a capturing rewrite ([[writeRewrite]]): `cols`
-    * tagged with change type `tpe` — None for a data row. */
+  /** One output row of a copy-on-write rewrite ([[writeRewrite]]):
+    * `cols` tagged with change type `tpe` — None for a data row. */
   private def fate(cols: Seq[org.apache.spark.sql.Column], tpe: Option[String]): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{lit, struct}
     struct(cols :+ tpe.fold(lit(null).cast("string"))(lit).as(CdcTypeCol): _*)
@@ -1804,7 +1808,9 @@ object SnapshotTable {
 
   /** `tgt` plus a boolean column `flag`: whether its key tuple appears in
     * `keys`. An existence join, so a key `keys` holds twice still yields
-    * its target row once, and a null key never matches. */
+    * its target row once, and a null key never matches — with no
+    * aggregate over `keys`, which an outer join against its distinct
+    * tuples would add (one more shuffle stage and job). */
   private def flagMatched(tgt: DataFrame, keys: DataFrame, keyCols: Seq[String], flag: String): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression}
     import org.apache.spark.sql.catalyst.plans.ExistenceJoin
@@ -3601,12 +3607,13 @@ object SnapshotTable {
     * through `transform`. Publishes one atomic commit whose `addedRows` is
     * the commit's NET row delta (negative for deletes).
     *
-    * With write-time CDC on ([[Cdc]]), a DML caller's `capture` turns the
-    * rewrite's source frame into the tagged frame of [[writeRewrite]] —
-    * its data rows and change rows from one scan — and that ONE write
-    * also yields the delta; otherwise `transform` yields the data rows
-    * and the delta counts the rewrite set's live rows ([[Base.liveRows]]:
-    * their recorded stats, or a count when a scanned file is masked). */
+    * A DML caller (`tagged`) makes `transform` return the tagged frame of
+    * [[writeRewrite]] — its data rows and change rows from one scan — and
+    * that ONE write yields the delta and, with write-time CDC on
+    * ([[Cdc]]), the commit's change sidecar. A maintenance caller's
+    * `transform` returns the data rows alone, and the delta counts the
+    * rewrite set's live rows ([[Base.liveRows]]: their recorded stats, or
+    * a count when a scanned file is masked). */
   private def dmlRewrite(
       spark: SparkSession,
       root: String,
@@ -3614,10 +3621,9 @@ object SnapshotTable {
       action: String,
       dropWholly: Boolean,
       skipIfNoWork: Boolean = false,
-      // write-time CDC capture ([[Cdc]]): given the rewrite's (masked)
-      // source frame, its tagged frame ([[writeRewrite]]) — None for
+      // `transform` tags its change rows ([[writeRewrite]]) — false for
       // maintenance callers whose commits are data-identical
-      capture: Option[DataFrame => DataFrame] = None)(
+      tagged: Boolean = false)(
       transform: (DataFrame, Seq[FileStat]) => DataFrame): Int = {
     val base = openBase(spark, root)
     val m = base.m
@@ -3644,7 +3650,7 @@ object SnapshotTable {
     // UNCAPTURED by design (zero-I/O drop preserved — every live row is
     // a delete, the reader reads them directly)
     var cdcRec: Option[Cdc] =
-      if (capture.isDefined && cdcOnWrite(spark)) Some(Cdc(scanPaths, None, Seq.empty))
+      if (tagged && cdcOnWrite(spark)) Some(Cdc(scanPaths, None, Seq.empty))
       else None
     val (newDirs, newStats, delta) =
       if (scanPaths.isEmpty) (Seq.empty[String], Seq.empty[FileStat], 0L)
@@ -3653,16 +3659,16 @@ object SnapshotTable {
         // a merge-on-read table must not resurrect masked rows (the
         // rewritten files' masks are thereby satisfied and cleared below)
         val src = base.read(scanPaths)
-        val (rel, n, stats, delta) = capture.filter(_ => cdcRec.isDefined) match {
-          case Some(tag) =>
-            val w = writeRewrite(spark, root, tag(src), m.constraints, base.mapping)
-            cdcRec = cdcRec.map(_.copy(chDir = Some(w.chDir)))
+        val (rel, n, stats, delta) =
+          if (tagged) {
+            val w = writeRewrite(spark, root, transform(src, rewrite), m.constraints, base.mapping, cdcRec.isDefined)
+            cdcRec = cdcRec.map(_.copy(chDir = w.chDir))
             (w.rel, w.rows, w.stats, w.net)
-          case None =>
+          } else {
             val before = base.liveRows(scanPaths, src)
             val (rel, n, stats) = writeData(spark, root, transform(src, rewrite), m.constraints, base.mapping)
             (rel, n, stats, n - before)
-        }
+          }
         // an all-rows-deleted rewrite leaves no dir (the empty orphan vacuums away)
         if (n == 0) (Seq.empty[String], Seq.empty[FileStat], delta)
         else (Seq(rel), stats, delta)
@@ -3748,11 +3754,9 @@ object SnapshotTable {
       matches: org.apache.spark.sql.Column,
       dropWholly: Boolean): Int = {
     import org.apache.spark.sql.functions.{lit, when}
-    // captured: a matching row is its delete, any other row a data row
-    dmlRewrite(
-      spark, root, pruneBounds, "delete", dropWholly,
-      capture = Some(src => src.withColumn(CdcTypeCol, when(matches, lit("delete")))))(
-      (df, _) => df.filter(!matches))
+    // a matching row is its delete, any other row a data row
+    dmlRewrite(spark, root, pruneBounds, "delete", dropWholly, tagged = true)(
+      (src, _) => src.withColumn(CdcTypeCol, when(matches, lit("delete"))))
   }
 
   /** The copy-on-write UPDATE body of [[updateWhere]] and [[updateExpr]]
@@ -3764,36 +3768,23 @@ object SnapshotTable {
       matches: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column]): Int = {
     import org.apache.spark.sql.functions.{array, col, inline, when}
-    def checked(df: DataFrame): DataFrame = {
+    // a matched row yields its post-image as a data row plus its
+    // delete/insert pair, any other row itself — one generator over one
+    // scan of the rewrite set
+    dmlRewrite(spark, root, pruneBounds, "update", dropWholly = false, tagged = true) { (src, _) =>
       set.foreach { case (name, _) =>
-        require(df.columns.contains(name), s"UPDATE SET column '$name' is not in the table schema")
+        require(src.columns.contains(name), s"UPDATE SET column '$name' is not in the table schema")
       }
-      df
-    }
-    // ONE projection: every SET expression evaluates against the OLD row
-    // (SQL UPDATE semantics) — sequential withColumn would feed later
-    // SETs already-updated values, making a column swap silently wrong
-    // and the outcome Map-iteration-order-dependent
-    def pre(df: DataFrame) = df.schema.fields.map(f => col("`" + f.name + "`").as(f.name)).toSeq
-    def post(df: DataFrame) = df.schema.fields.map(f =>
-      set.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(col("`" + f.name + "`").as(f.name))).toSeq
-    // captured: a matched row yields its post-image as a data row plus
-    // its delete/insert pair, any other row itself — one generator over
-    // one scan of the rewrite set
-    dmlRewrite(
-      spark, root, pruneBounds, "update", dropWholly = false,
-      capture = Some { src =>
-        val s = checked(src)
-        s.select(inline(
-          when(matches, array(fate(post(s), None), fate(pre(s), Some("delete")), fate(post(s), Some("insert"))))
-            .otherwise(array(fate(pre(s), None)))))
-      }) { (df, _) =>
-      checked(df).select(df.schema.fields.map { f =>
-        set.get(f.name) match {
-          case Some(e) => when(matches, e.cast(f.dataType)).otherwise(col("`" + f.name + "`")).as(f.name)
-          case None => col("`" + f.name + "`")
-        }
-      }.toSeq: _*)
+      val pre = src.schema.fields.map(f => col("`" + f.name + "`").as(f.name)).toSeq
+      // ONE projection: every SET expression evaluates against the OLD row
+      // (SQL UPDATE semantics) — sequential withColumn would feed later
+      // SETs already-updated values, making a column swap silently wrong
+      // and the outcome Map-iteration-order-dependent
+      val post = src.schema.fields.map(f =>
+        set.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(col("`" + f.name + "`").as(f.name))).toSeq
+      src.select(inline(
+        when(matches, array(fate(post, None), fate(pre, Some("delete")), fate(post, Some("insert"))))
+          .otherwise(array(fate(pre, None)))))
     }
   }
 
@@ -4143,24 +4134,15 @@ object SnapshotTable {
         if (rewritePaths.isEmpty) (Seq.empty[String], Seq.empty[FileStat], 0L)
         else {
           val tgt = base.read(rewritePaths)
-          val (rel, n, stats, replaced) =
-            if (cdcRec.isDefined) {
-              // survivor columns in the order the anti-join path writes them
-              val cols = (keyCols ++ tgt.columns.filterNot(keyCols.contains)).map(q)
-              val flag = "__graft_matched"
-              val tagged = flagMatched(tgt, srcKeys, keyCols, flag)
-                .select(cols :+ when(col(flag), lit("delete")).as(CdcTypeCol): _*)
-              val w = writeRewrite(spark, root, tagged, m.constraints, evolvedMapping)
-              cdcRec = cdcRec.map(_.copy(chDir = Some(w.chDir)))
-              (w.rel, w.rows, w.stats, -w.net)
-            } else {
-              val before = base.liveRows(rewritePaths, tgt)
-              val (rel, n, stats) =
-                writeData(spark, root, tgt.join(srcKeys, keyCols, "left_anti"), m.constraints, evolvedMapping)
-              (rel, n, stats, before - n)
-            }
-          if (n == 0) (Seq.empty[String], Seq.empty[FileStat], replaced)
-          else (Seq(rel), stats, replaced)
+          // survivor columns keys first, as the source dir writes them
+          val cols = (keyCols ++ tgt.columns.filterNot(keyCols.contains)).map(q)
+          val flag = "__graft_matched"
+          val tagged = flagMatched(tgt, srcKeys, keyCols, flag)
+            .select(cols :+ when(col(flag), lit("delete")).as(CdcTypeCol): _*)
+          val w = writeRewrite(spark, root, tagged, m.constraints, evolvedMapping, cdcRec.isDefined)
+          cdcRec = cdcRec.map(_.copy(chDir = w.chDir))
+          if (w.rows == 0) (Seq.empty[String], Seq.empty[FileStat], -w.net)
+          else (Seq(w.rel), w.stats, -w.net)
         }
       // masks carry on untouched files only; rewritten entries leave theirs
       return publish(spark, root, base.commit(
@@ -4294,14 +4276,12 @@ object SnapshotTable {
       if (df.columns.contains(f.name)) q(f.name) else lit(null).cast(f.dataType).as(f.name)
     }.toSeq: _*)
     val matchedTag = "__graft_matched"
-    // write-time CDC capture ([[Cdc]]) of a rewriting merge: the clause
-    // gates are mutually exclusive (first-match-wins), so the joined frame
-    // yields the exact per-row outcome — a fired delete leaves as its
-    // pre-image, a fired update as its post-image plus its pre/post pair,
-    // an inserted row as itself plus its insert (conditional
-    // struct-arrays, ONE scan) — and the rewrite's one write carries them
-    // ([[writeRewrite]]); an insert-only merge's new dir is the insert set
-    val capturing = cdcOnWrite(spark) && rewritePaths.nonEmpty
+    // the clause gates are mutually exclusive (first-match-wins), so the
+    // joined frame yields the exact per-row outcome — a fired delete
+    // leaves as its pre-image, a fired update as its post-image plus its
+    // pre/post pair, an inserted row as itself plus its insert
+    // (conditional struct-arrays, ONE scan) — and the one write carries
+    // them ([[writeRewrite]])
     val survivorsOpt: Option[DataFrame] =
       if (rewritePaths.isEmpty) None
       else {
@@ -4343,19 +4323,17 @@ object SnapshotTable {
             }
           updates.foldRight(tCol) { case ((ap, v), rest) => when(ap, v).otherwise(rest) }.as(f.name)
         }
-        if (capturing) {
-          import org.apache.spark.sql.functions.{array, inline}
-          val anyUpdate = clauseRows
-            .collect { case (_: MatchedUpdate, ap, _) => ap }
-            .reduceOption(_ || _)
-            .getOrElse(lit(false))
-          val pre = evolvedStruct.fields.map(f => col(s"$targetAlias.`${f.name}`").as(f.name)).toSeq
-          val out = outCols.toSeq
-          Some(joined.select(inline(
-            when(deleted, array(fate(pre, Some("delete"))))
-              .when(anyUpdate, array(fate(out, None), fate(pre, Some("delete")), fate(out, Some("insert"))))
-              .otherwise(array(fate(out, None))))))
-        } else Some(joined.filter(!deleted).select(outCols.toSeq: _*))
+        import org.apache.spark.sql.functions.{array, inline}
+        val anyUpdate = clauseRows
+          .collect { case (_: MatchedUpdate, ap, _) => ap }
+          .reduceOption(_ || _)
+          .getOrElse(lit(false))
+        val pre = evolvedStruct.fields.map(f => col(s"$targetAlias.`${f.name}`").as(f.name)).toSeq
+        val out = outCols.toSeq
+        Some(joined.select(inline(
+          when(deleted, array(fate(pre, Some("delete"))))
+            .when(anyUpdate, array(fate(out, None), fate(pre, Some("delete")), fate(out, Some("insert"))))
+            .otherwise(array(fate(out, None))))))
       }
     val insertsOpt: Option[DataFrame] =
       // an empty source provably inserts nothing: skip the candidate
@@ -4389,11 +4367,9 @@ object SnapshotTable {
           }
           values.foldRight(nullV: Column) { case ((ap, v), rest) => when(ap, v).otherwise(rest) }.as(f.name)
         }
-        val inserted = unmatched.filter(anyApplies)
-        if (capturing) {
-          import org.apache.spark.sql.functions.{array, inline}
-          Some(inserted.select(inline(array(fate(outCols.toSeq, None), fate(outCols.toSeq, Some("insert"))))))
-        } else Some(inserted.select(outCols.toSeq: _*))
+        import org.apache.spark.sql.functions.{array, inline}
+        Some(unmatched.filter(anyApplies)
+          .select(inline(array(fate(outCols.toSeq, None), fate(outCols.toSeq, Some("insert"))))))
       }
     val pieces = survivorsOpt.toSeq ++ insertsOpt.toSeq
     if (pieces.isEmpty) return base.version // no rewrite, no insert clause output: no-op
@@ -4404,17 +4380,13 @@ object SnapshotTable {
     // pairs, plus the insert rows (the new dir mixes carried survivors
     // in, so it can never be referenced directly) — is the ONE sidecar
     // its write publishes
-    val (rel, n, stats, delta, cdcRec) =
-      if (capturing) {
-        val w = writeRewrite(spark, root, outDf, m.constraints, evolvedMapping)
-        (w.rel, w.rows, w.stats, w.net, Some(Cdc(rewritePaths, Some(w.chDir), Seq.empty)))
-      } else {
-        val before = base.liveRows(rewritePaths, base.read(rewritePaths))
-        val (rel, n, stats) = writeData(spark, root, outDf, m.constraints, evolvedMapping)
-        val insertOnly = Option.when(cdcOnWrite(spark))(Cdc(Seq.empty, None, if (n > 0) Seq(rel) else Seq.empty))
-        (rel, n, stats, n - before, insertOnly)
-      }
+    val w = writeRewrite(spark, root, outDf, m.constraints, evolvedMapping, cdcOnWrite(spark) && rewritePaths.nonEmpty)
+    val (rel, n) = (w.rel, w.rows)
     if (rewritePaths.isEmpty && n == 0) return base.version // nothing matched a clause: no-op
+    val cdcRec: Option[Cdc] =
+      if (!cdcOnWrite(spark)) None
+      else if (rewritePaths.isEmpty) Some(Cdc(Seq.empty, None, Seq(rel)))
+      else Some(Cdc(rewritePaths, w.chDir, Seq.empty))
     // no rewrite (insert-only merge): every entry — stat-less dirs too —
     // carries with its masks; a rewrite covers the uncovered dirs, whose
     // (satisfied) mask entries then drop
@@ -4422,7 +4394,7 @@ object SnapshotTable {
       if (rewritePaths.isEmpty) m.files.map(_.path) ++ plan.uncoveredDirs
       else m.files.map(_.path).filterNot(rewriteSet)
     publish(spark, root, base.commit(
-      "merge", kept, if (n > 0) Seq(rel) else Nil, stats, delta, Nil, Some(evolved),
+      "merge", kept, if (n > 0) Seq(rel) else Nil, w.stats, w.net, Nil, Some(evolved),
       batchId, appId, cdcRec))
   }
 

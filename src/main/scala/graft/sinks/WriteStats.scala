@@ -322,6 +322,22 @@ private[sinks] object WriteStats {
     * dir reads it. */
   val ChangeSide = "__graft_change"
 
+  /** What [[writeParquet]] does with the rows of its frame. */
+  sealed trait Changes
+  object Changes {
+
+    /** No tag column: every row is a data row. */
+    case object Untagged extends Changes
+
+    /** A trailing `_change_type` tags each change row: change rows are
+      * counted by type and not written. */
+    case object Counted extends Changes
+
+    /** As [[Counted]], and the change rows are written under
+      * [[ChangeSide]]. */
+    case object Kept extends Changes
+  }
+
   /** The per-task tracker. A single-directory write has one file open at
     * a time; a closed file records its byte length. In a `split` write
     * only a row whose trailing `_change_type` is null folds into the file
@@ -376,9 +392,10 @@ private[sinks] object WriteStats {
     * a data row (null tag) goes, without the tag, to the file the task
     * opened, which therefore holds exactly the table's columns; a change
     * row, tag included, goes to the same-named file under [[ChangeSide]]
-    * beside it. Both live in the task's attempt dir, so the job's commit
-    * moves them together, and each opens at its first row. */
-  private final class SplitParquet extends ParquetFileFormat {
+    * beside it when `keep`, and nowhere otherwise. Both live in the
+    * task's attempt dir, so the job's commit moves them together, and
+    * each opens at its first row. */
+  private final class SplitParquet(keep: Boolean) extends ParquetFileFormat {
     override def prepareWrite(
         spark: SparkSession,
         job: Job,
@@ -401,7 +418,7 @@ private[sinks] object WriteStats {
                 }
                 view.project(row)
                 dataOut.write(view)
-              } else {
+              } else if (keep) {
                 if (changeOut == null) {
                   val p = new Path(file)
                   val side = new Path(new Path(p.getParent, ChangeSide), p.getName)
@@ -417,7 +434,7 @@ private[sinks] object WriteStats {
   }
 
   /** What one write produced: each data file's fold, and the number of
-    * change rows of each `_change_type` a split write wrote. */
+    * change rows of each `_change_type` a tagged write counted. */
   final case class Written(files: Seq[Folded], changes: Map[String, Long])
 
   /** Write `df` as parquet to the new dir `abs` and return each file's
@@ -429,28 +446,28 @@ private[sinks] object WriteStats {
     * as one more stats tracker. A file whose size its task could not see
     * takes it from one listing of the committed dir.
     *
-    * A `split` write takes a frame whose last column is `_change_type`:
-    * null on a data row, the change type on a change row. Both sides
-    * leave in the same job ([[SplitParquet]]; Delta splits them the same
-    * way with its `__is_cdc` partition column, whose sort of the rows by
-    * the tag this routing writer does not need): the data files land in
-    * `abs` without the tag,
+    * A tagged write ([[Changes.Counted]], [[Changes.Kept]]) takes a frame
+    * whose last column is `_change_type`: null on a data row, the change
+    * type on a change row. The data files land in `abs` without the tag,
     * as the plain write puts them (minus the empty file of a task that
-    * kept no row), stats and CHECKs folded over them alone; the change
-    * files, tag included, land under `abs/`[[ChangeSide]] for the caller
-    * to publish. */
-  def writeParquet(df: DataFrame, abs: String, spec: Spec, split: Boolean): Written = {
+    * kept no row), stats and CHECKs folded over them alone. A kept write's
+    * change files, tag included, leave in the same job ([[SplitParquet]];
+    * Delta splits them the same way with its `__is_cdc` partition column,
+    * whose sort of the rows by the tag this routing writer does not need)
+    * and land under `abs/`[[ChangeSide]] for the caller to publish. */
+  def writeParquet(df: DataFrame, abs: String, spec: Spec, changes: Changes): Written = {
     val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val qe = df.queryExecution
     val hadoopConf: Configuration = spark.sessionState.newHadoopConf()
     val conf = new SerializableConfiguration(hadoopConf)
     val committer = FileCommitProtocol.instantiate(
       spark.sessionState.conf.fileCommitProtocolClass, java.util.UUID.randomUUID().toString, abs)
+    val split = changes != Changes.Untagged
     val tracker = new JobTracker(spec, conf, split)
     SQLExecution.withNewExecutionId(qe, Some("save")) {
       val plan = qe.executedPlan
       FileFormatWriter.write(
-        spark, plan, if (split) new SplitParquet else new ParquetFileFormat, committer,
+        spark, plan, if (split) new SplitParquet(changes == Changes.Kept) else new ParquetFileFormat, committer,
         FileFormatWriter.OutputSpec(abs, Map.empty, plan.output), hadoopConf,
         partitionColumns = Seq.empty, bucketSpec = None,
         statsTrackers = Seq(new BasicWriteJobStatsTracker(conf, BasicWriteJobStatsTracker.metrics), tracker),
@@ -458,17 +475,19 @@ private[sinks] object WriteStats {
     }
     val dir = new Path(abs)
     val fs = dir.getFileSystem(hadoopConf)
-    if (split) {
+    if (changes == Changes.Kept) {
       // the change files ride the commit of the task's attempt dir; a
       // commit protocol that moves only the files it handed out would
       // drop them, so the count must match
       val side = new Path(dir, ChangeSide)
       fs.mkdirs(side)
       val landed = fs.listStatus(side).map(_.getPath.getName).count(n => !n.startsWith(".") && !n.startsWith("_"))
-      require(
-        landed == tracker.changeFiles,
-        s"${tracker.changeFiles} change files written, $landed committed under $side: the commit " +
-          s"protocol ${spark.sessionState.conf.fileCommitProtocolClass} does not commit a task's attempt dir whole")
+      if (landed != tracker.changeFiles) {
+        fs.delete(dir, true) // abort pre-publish: no orphan lingers
+        throw new IllegalStateException(
+          s"${tracker.changeFiles} change files written, $landed committed under $side: the commit " +
+            s"protocol ${spark.sessionState.conf.fileCommitProtocolClass} does not commit a task's attempt dir whole")
+      }
     }
     val w = tracker.written
     if (w.files.forall(_.stat.bytes >= 0)) w

@@ -1440,7 +1440,7 @@ class SnapshotTableSpec extends SparkSuite {
     execs.toArray(Array.empty[Seq[String]]).toSeq
   }
 
-  test("cap_cdc_onwrite: a copy-on-write commit over masked files is ONE write: no count, no second write, the capture-off feed") {
+  test("cap_cdc_onwrite: a copy-on-write commit over masked files is ONE write: no count, no second write, the capture-off feed and files") {
     import org.apache.spark.sql.functions.{concat, lit}
     import SnapshotTable.{Bound, MatchedDelete, MatchedUpdate, NotMatchedInsert}
     def frame(from: Long, n: Long) =
@@ -1470,26 +1470,35 @@ class SnapshotTableSpec extends SparkSuite {
     val (on, off) = (root + "/on", root + "/off")
     setUp(on)
     spark.conf.set("spark.graft.cdc.onWrite", "false")
-    try {
-      setUp(off)
-      ops.foreach(_._2(off))
-    } finally spark.conf.unset("spark.graft.cdc.onWrite")
+    val offExecs =
+      try {
+        setUp(off)
+        ops.map(o => executionsOf(o._2(off)))
+      } finally spark.conf.unset("spark.graft.cdc.onWrite")
     val base = SnapshotTable.latestVersion(spark, on).get
-    ops.zipWithIndex.foreach { case ((name, op), i) =>
-      val execs = executionsOf(op(on))
-      // a write of the table's files; a merge's first one lands its source
-      val writes = execs.filter(e => e.exists(_.startsWith("write")) && !e.contains("writeSource"))
-      val counts = execs.filter(_.contains("liveRows"))
-      val merge = name.startsWith("merge")
-      assert(writes.size == 1 && counts.isEmpty, s"$name: ${writes.size} rewrite writes, ${counts.size} counts: $execs")
-      // nothing else runs: a delete or update is its write alone, a merge
-      // adds its source write and its touched-file probe
-      assert(execs.size == (if (merge) 3 else 1), s"$name: $execs")
+    ops.zip(offExecs).zipWithIndex.foreach { case (((name, op), offEx), i) =>
+      for ((side, execs) <- Seq("on" -> executionsOf(op(on)), "off" -> offEx)) {
+        // a write of the table's files; a merge's first one lands its source
+        val writes = execs.filter(e => e.exists(_.startsWith("write")) && !e.contains("writeSource"))
+        val counts = execs.filter(_.contains("liveRows"))
+        val merge = name.startsWith("merge")
+        assert(
+          writes.size == 1 && counts.isEmpty,
+          s"$name (capture $side): ${writes.size} rewrite writes, ${counts.size} counts: $execs")
+        // nothing else runs: a delete or update is its write alone, a merge
+        // adds its source write and its touched-file probe
+        assert(execs.size == (if (merge) 3 else 1), s"$name (capture $side): $execs")
+      }
       val v = base + i + 1
       def feed(r: String) = SnapshotTable.changesBetween(spark, r, v - 1, v)
         .collect().map(_.toSeq.mkString("|")).sorted.toSeq
       assert(feed(on) == feed(off), s"$name: the captured feed differs from the capture-off twin's")
-      assert(SnapshotTable.readManifest(spark, on, v).addedRows == SnapshotTable.readManifest(spark, off, v).addedRows)
+      val (mOn, mOff) = (SnapshotTable.readManifest(spark, on, v), SnapshotTable.readManifest(spark, off, v))
+      assert(mOn.addedRows == mOff.addedRows)
+      // capture adds the sidecar only: the data files are the same bytes
+      def files(c: SnapshotTable.Commit) =
+        c.files.map(f => (f.rows, f.bytes, f.min.toSeq.sortBy(_._1).toString, f.max.toSeq.sortBy(_._1).toString)).sorted
+      assert(files(mOn) == files(mOff), s"$name: the capture-off twin wrote other data files")
     }
   }
 
