@@ -3,27 +3,9 @@ package graft.sinks
 import java.util
 
 import scala.jdk.CollectionConverters._
-import scala.util.Try
 
 import org.apache.spark.sql.{sources, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{
-  AttributeReference,
-  EqualNullSafe,
-  EqualTo,
-  Expression,
-  GreaterThan,
-  GreaterThanOrEqual,
-  In,
-  IsNotNull,
-  IsNull,
-  LessThan,
-  LessThanOrEqual,
-  Literal,
-  StartsWith,
-  And => CAnd,
-  Or => COr
-}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{
@@ -250,7 +232,7 @@ private[sinks] final class GraftScanBuilder(
   }
 
   override def pushedFilters(): Array[sources.Filter] =
-    allFilters.filter(f => GraftScanBuilder.toCatalyst(f, tableSchema).isDefined)
+    allFilters.filter(f => StatsProver.conjuncts(f, tableSchema).nonEmpty)
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     // preserve the TABLE's field order and metadata; Spark's required set
@@ -265,7 +247,9 @@ private[sinks] final class GraftScanBuilder(
     if (m.masks.isEmpty)
       new GraftBatchScan(spark, root, m, tableSchema, required, allFilters.toSeq, options, streamable)
     else
-      new GraftV1FallbackScan(spark, root, v, required, allFilters.toSeq, options, streamable)
+      new GraftV1FallbackScan(
+        spark, root, new SnapshotBatchRelation(spark, root, v, tableSchema), required, allFilters.toSeq, options,
+        streamable)
   }
 }
 
@@ -334,48 +318,6 @@ private[sinks] object GraftScanBuilder {
       case _ => None
     }
   }
-
-  /** A pushed V1 filter as the catalyst shape [[SnapshotFileIndex]]'s
-    * stat prover understands — `None` = untranslatable (the file is kept;
-    * Spark re-applies the filter row-level regardless). `And` translates
-    * per-branch (partial pruning is sound); `Or` needs both. */
-  def toCatalyst(f: sources.Filter, schema: StructType): Option[Expression] = {
-    def field(n: String) = schema.fields.find(_.name == n)
-    def attr(n: String) =
-      field(n).map(sf => AttributeReference(sf.name, sf.dataType, sf.nullable)())
-    def lit(n: String, v: Any) =
-      field(n).flatMap(sf => Try(Literal.create(v, sf.dataType)).toOption)
-    f match {
-      case sources.EqualTo(a, value) =>
-        for { x <- attr(a); l <- lit(a, value) } yield EqualTo(x, l)
-      case sources.EqualNullSafe(a, value) =>
-        for { x <- attr(a); l <- lit(a, value) } yield EqualNullSafe(x, l)
-      case sources.GreaterThan(a, value) =>
-        for { x <- attr(a); l <- lit(a, value) } yield GreaterThan(x, l)
-      case sources.GreaterThanOrEqual(a, value) =>
-        for { x <- attr(a); l <- lit(a, value) } yield GreaterThanOrEqual(x, l)
-      case sources.LessThan(a, value) =>
-        for { x <- attr(a); l <- lit(a, value) } yield LessThan(x, l)
-      case sources.LessThanOrEqual(a, value) =>
-        for { x <- attr(a); l <- lit(a, value) } yield LessThanOrEqual(x, l)
-      case sources.In(a, values) =>
-        val lits = values.toSeq.map(v => lit(a, v))
-        if (lits.exists(_.isEmpty)) None
-        else attr(a).map(x => In(x, lits.flatten))
-      case sources.IsNull(a) => attr(a).map(IsNull)
-      case sources.IsNotNull(a) => attr(a).map(IsNotNull)
-      case sources.StringStartsWith(a, p) =>
-        for { x <- attr(a); l <- lit(a, p) } yield StartsWith(x, l)
-      case sources.And(l, r) =>
-        (toCatalyst(l, schema), toCatalyst(r, schema)) match {
-          case (Some(a), Some(b)) => Some(CAnd(a, b))
-          case (one, other) => one.orElse(other) // partial conjunction prunes soundly
-        }
-      case sources.Or(l, r) =>
-        for { a <- toCatalyst(l, schema); b <- toCatalyst(r, schema) } yield COr(a, b)
-      case _ => None
-    }
-  }
 }
 
 /** Native DSv2 batch over the manifest: partitions ARE the pruned live
@@ -439,7 +381,7 @@ private[sinks] final class GraftBatchScan(
   override def planInputPartitions(): Array[InputPartition] = {
     val idx = new SnapshotFileIndex(spark, SnapshotTable.dataRoot(root), m, physSchema)
     val dataFilters =
-      physFilters(filters ++ runtimeFilters).flatMap(GraftScanBuilder.toCatalyst(_, physSchema))
+      physFilters(filters ++ runtimeFilters).flatMap(StatsProver.conjuncts(_, physSchema))
     idx
       .listFiles(Nil, dataFilters)
       .flatMap(_.files)
@@ -521,14 +463,16 @@ private[sinks] final case class GraftReaderFactory(
 }
 
 /** Masked / column-mapped snapshots through the DSv2 API: a [[V1Scan]]
-  * whose relation replays [[SnapshotTable.relationVersion]] (mask
-  * anti-joins, logical projections) with the translatable conjuncts baked
-  * in — per-mask-group FileIndex pruning engages underneath, and Spark
-  * re-applies every filter row-level above (the V1Scan contract). */
+  * over the V1 [[SnapshotBatchRelation]], asked for the scan's required
+  * columns and pushed filters — its replay of
+  * [[SnapshotTable.relationVersion]] (mask anti-joins, logical
+  * projections) bakes the translatable conjuncts in, per-mask-group
+  * FileIndex pruning engages underneath, and Spark re-applies every filter
+  * row-level above (the V1Scan contract). */
 private[sinks] final class GraftV1FallbackScan(
     spark: SparkSession,
     root: String,
-    v: Int,
+    relation: SnapshotBatchRelation,
     required: StructType,
     filters: Seq[sources.Filter],
     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
@@ -549,17 +493,7 @@ private[sinks] final class GraftV1FallbackScan(
       override def sqlContext: SQLContext = context
       override def schema: StructType = required
       override def needConversion: Boolean = false
-      override def buildScan(): org.apache.spark.rdd.RDD[Row] = {
-        import org.apache.spark.sql.functions.col
-        val base = SnapshotTable.relationVersion(spark, root, v)
-        val filtered = filters
-          .flatMap(SnapshotBatchRelation.conjuncts)
-          .foldLeft(base)(_ filter _)
-        filtered
-          .select(required.fieldNames.map(c => col("`" + c + "`")).toSeq: _*)
-          .queryExecution
-          .toRdd
-          .asInstanceOf[org.apache.spark.rdd.RDD[Row]]
-      }
+      override def buildScan(): org.apache.spark.rdd.RDD[Row] =
+        relation.buildScan(required.fieldNames, filters.toArray)
     }.asInstanceOf[T]
 }

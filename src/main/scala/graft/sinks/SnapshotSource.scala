@@ -850,8 +850,8 @@ final class SnapshotBatchRelation(
     import org.apache.spark.sql.functions.col
     val base = SnapshotTable.relationVersion(spark, root, v)
     val filtered = filters
-      .flatMap(SnapshotBatchRelation.conjuncts)
-      .foldLeft(base)(_ filter _)
+      .flatMap(StatsProver.conjuncts(_, schema))
+      .foldLeft(base)((df, p) => df.filter(SnapshotBatchRelation.replay(p)))
     // empty requiredColumns = a count-style scan: project to zero columns
     // (the frame still carries one InternalRow per surviving row)
     val projected = filtered.select(requiredColumns.map(c => col("`" + c + "`")).toSeq: _*)
@@ -860,39 +860,14 @@ final class SnapshotBatchRelation(
 }
 
 object SnapshotBatchRelation {
-  import org.apache.spark.sql.functions.{col, lit}
-  import org.apache.spark.sql.{sources => s}
 
-  private def c(attr: String): Column = col("`" + attr + "`")
-
-  /** Split a pushed V1 filter into the Column conjuncts we can replay
-    * EXACTLY. `And` may translate partially (pruning by a subset of
-    * conjuncts is sound); `Or`/`Not` require exact children (a partial
-    * disjunct/negation would over-filter). Untranslatable shapes drop —
-    * Spark re-applies the full filter row-level above the scan. */
-  private[sinks] def conjuncts(f: s.Filter): Seq[Column] = f match {
-    case s.And(l, r) => conjuncts(l) ++ conjuncts(r)
-    case other => exact(other).toSeq
-  }
-
-  private def exact(f: s.Filter): Option[Column] = f match {
-    case s.EqualTo(a, v) => Some(c(a) === lit(v))
-    case s.EqualNullSafe(a, v) => Some(c(a) <=> lit(v))
-    case s.GreaterThan(a, v) => Some(c(a) > lit(v))
-    case s.GreaterThanOrEqual(a, v) => Some(c(a) >= lit(v))
-    case s.LessThan(a, v) => Some(c(a) < lit(v))
-    case s.LessThanOrEqual(a, v) => Some(c(a) <= lit(v))
-    case s.In(a, vs) => Some(c(a).isInCollection(vs.toSeq.map(lit)))
-    case s.IsNull(a) => Some(c(a).isNull)
-    case s.IsNotNull(a) => Some(c(a).isNotNull)
-    case s.StringStartsWith(a, p) => Some(c(a).startsWith(p))
-    case s.StringEndsWith(a, p) => Some(c(a).endsWith(p))
-    case s.StringContains(a, p) => Some(c(a).contains(p))
-    case s.And(l, r) => for { lc <- exact(l); rc <- exact(r) } yield lc && rc
-    case s.Or(l, r) => for { lc <- exact(l); rc <- exact(r) } yield lc || rc
-    case s.Not(inner) => exact(inner).map(!_)
-    case _ => None
-  }
+  /** A pushed filter's conjunct ([[StatsProver.conjuncts]]) as a row
+    * filter over the relation's frame, its columns resolved by name. */
+  private def replay(p: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    org.apache.spark.sql.GraftSqlBridge.column(p.transform {
+      case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
+        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute.quoted(a.name)
+    })
 }
 
 /** The snapshot APPEND STREAM behind `spark.readStream.table("graft.ns.t")`

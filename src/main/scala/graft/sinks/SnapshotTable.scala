@@ -1324,17 +1324,12 @@ object SnapshotTable {
       // rewrite the whole table; an empty delete delta must take the
       // verbatim-carry path instead (decided by the same aggregation)
       val d: Option[DataFrame] = d0.filter(_ => dCount > 0)
-      val tipUncovered = {
-        val coveredFiles = tip.files.map(_.path).toSet
-        val coveredDirs = tip.files.map(fst => fst.path.take(fst.path.lastIndexOf('/'))).toSet
-        tip.dirs.filterNot(e => coveredDirs(e) || coveredFiles(e))
-      }
       // no delete delta → nothing scans; uncovered dirs carry VERBATIM
       val plan = d match {
         case Some(_) => prunePlanOf(tip, bounds)
         case None => PrunePlan(Seq.empty, tip.files.map(_.path), Seq.empty)
       }
-      val carryUncovered = if (d.isEmpty) tipUncovered else Seq.empty[String]
+      val carryUncovered = if (d.isEmpty) uncoveredOf(tip) else Seq.empty[String]
       val skippedSet = plan.skipped.toSet
       val untouched = tip.files.filter(fst =>
         skippedSet(fst.path) && !dropSet(fst.path) && !dropSet(dataDirOf(fst.path)))
@@ -1645,11 +1640,11 @@ object SnapshotTable {
   private def historyLite(spark: SparkSession, root: String): Iterator[Commit] =
     versions(spark, root).iterator.map(readManifestLite(spark, root, _))
 
-  /** The k probe positions of one literal, read side — evaluates the same
-    * murmur3(seed 42) / xxhash64(seed 42) Spark uses for `hash()` on the
-    * column-typed value. None when the value can't be represented in the
-    * column's type (never prune). */
-  private def probePositions(dt: org.apache.spark.sql.types.DataType, v: Any): Option[Seq[Int]] = {
+  /** The k Bloom probe positions of one value, read side — evaluates the
+    * same murmur3(seed 42) / xxhash64(seed 42) Spark uses for `hash()` on
+    * the column-typed value. None when the value can't be represented in
+    * the column's type (never prune). */
+  private[graft] def probeBloom(dt: org.apache.spark.sql.types.DataType, v: Any): Option[Seq[Int]] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, XxHash64}
     import org.apache.spark.sql.types._
     val typedOpt: Option[Any] = (dt, v) match {
@@ -1669,11 +1664,6 @@ object SnapshotTable {
       val h2raw = new XxHash64(Seq(lit)).eval(null).asInstanceOf[Long]
       (0 until WriteStats.BloomK).map(WriteStats.bloomPosition(h1raw, h2raw, _))
     }
-  }
-
-  private def bloomHas(b64: String, pos: Int): Boolean = {
-    val bytes = java.util.Base64.getDecoder.decode(b64)
-    (bytes(pos >> 3) & (1 << (pos & 7))) != 0
   }
 
   final class ConstraintViolationException(val name: String, val violations: Long)
@@ -2566,7 +2556,7 @@ object SnapshotTable {
     * column type: BigDecimal for numerics/timestamps/bools, String for
     * strings/dates (ISO dates compare lexicographically). None = not
     * comparable → never prune. */
-  private def normJ(dt: org.apache.spark.sql.types.DataType, j: JValue): Option[Either[BigDecimal, String]] = {
+  private[sinks] def normJ(dt: org.apache.spark.sql.types.DataType, j: JValue): Option[Either[BigDecimal, String]] = {
     import org.apache.spark.sql.types._
     (dt, j) match {
       case (StringType | DateType, JString(s)) => Some(Right(s))
@@ -2591,7 +2581,7 @@ object SnapshotTable {
     }
   }
 
-  private def lt(a: Either[BigDecimal, String], b: Either[BigDecimal, String]): Boolean =
+  private[sinks] def lt(a: Either[BigDecimal, String], b: Either[BigDecimal, String]): Boolean =
     (a, b) match {
       case (Left(x), Left(y)) => x < y
       case (Right(x), Right(y)) => x < y
@@ -2776,90 +2766,87 @@ object SnapshotTable {
     * can assert skipping actually engages. */
   private[graft] final case class PrunePlan(keep: Seq[String], skipped: Seq[String], uncoveredDirs: Seq[String])
 
-  /** One bound fully resolved against the schema for file-deadness
-    * checks: normalized comparison axes plus precomputed Bloom probe
-    * positions for equality bounds. Serializable, so the SAME deadness
-    * logic evaluates driver-side over a parsed manifest AND distributed
-    * over a parquet checkpoint frame ([[prunePlanCheckpointed]]). */
-  private[graft] final case class TypedBound(
-      key: String, // PHYSICAL column name (stats/blooms key)
-      lo: Option[Either[BigDecimal, String]],
-      hi: Option[Either[BigDecimal, String]],
-      probes: Option[Seq[Int]]) // equality bounds only
-      extends Serializable
-
-  private def typedBoundsOf(
-      schema: Option[org.apache.spark.sql.types.StructType],
-      bounds: Seq[Bound]): Seq[TypedBound] =
-    bounds.flatMap { b =>
-      schema.flatMap(_.fields.find(_.name == b.column)).map { f =>
-        val dt = f.dataType
-        val lo = b.lower.flatMap(normBound(dt, _))
-        val hi = b.upper.flatMap(normBound(dt, _))
-        val isEquality = lo.isDefined && lo == hi
-        TypedBound(
-          physName(f),
-          lo,
-          hi,
-          if (isEquality) b.lower.flatMap(probePositions(dt, _)) else None)
-      }
-    }
-
-  /** Stat JSON → comparison axis WITHOUT the schema: strings → the string
-    * axis, numbers → the decimal axis. Faithful to [[normJ]] because
-    * [[statJson]] writes strings only for string/date columns and numbers
-    * for everything else; a mismatched axis pair simply never orders
-    * (`lt` returns false) — exactly normJ's None behavior. */
-  private def jAxis(j: JValue): Option[Either[BigDecimal, String]] = j match {
-    case JString(s) => Some(Right(s))
-    case JInt(v) => Some(Left(BigDecimal(v)))
-    case JLong(v) => Some(Left(BigDecimal(v)))
-    case JDouble(v) => Some(Left(BigDecimal(v)))
-    case JDecimal(v) => Some(Left(v))
-    case _ => None
+  /** `bounds` lowered onto the one prover ([[StatsProver]]) and compiled
+    * once per plan against the physical twin of `schema`:
+    *  - `skips` proves a file holds no row inside every bound
+    *    (`lower <= c <= upper`, an `EqualTo` where the two sides meet, so
+    *    the column's Bloom applies);
+    *  - `wholly` proves every row of a file is inside every bound, as "no
+    *    row fails": `c IS NULL OR c < lower OR c > upper` matches no row.
+    * Stats are keyed by PHYSICAL name; bounds arrive in logical names. A
+    * bound on a column the schema lacks, or with a value the column's
+    * axis cannot order, proves nothing; a pre-schema manifest (`None`)
+    * therefore prunes nothing. */
+  private final case class BoundsProof(skips: StatsProver.Proof, fails: Option[StatsProver.Proof]) {
+    def wholly(f: FileStat): Boolean = fails.forall(_.empty(f))
   }
 
-  /** A file is provably dead iff SOME bound excludes its whole [min,max] —
-    * or, for an EQUALITY bound, its Bloom filter proves the value absent
-    * (an unset probe bit; false negatives are impossible). The single
-    * deadness kernel shared by the driver-side and checkpointed planners. */
-  private def deadFile(
-      typed: Seq[TypedBound],
-      min: Map[String, JValue],
-      max: Map[String, JValue],
-      bloom: Map[String, String]): Boolean =
-    typed.exists { tb =>
-      val mi = min.get(tb.key).flatMap(jAxis)
-      val ma = max.get(tb.key).flatMap(jAxis)
-      val belowLower = (tb.lo, ma) match {
-        case (Some(l), Some(mx)) => lt(mx, l)
-        case _ => false
+  private def boundsProof(
+      schema: Option[org.apache.spark.sql.types.StructType],
+      bounds: Seq[Bound]): BoundsProof = {
+    import org.apache.spark.sql.catalyst.expressions._
+    val lowered = bounds.map { b =>
+      schema.flatMap(_.fields.find(_.name == b.column)).map { f =>
+        val c = AttributeReference(physName(f), f.dataType)()
+        (c, b.lower.map(boundLiteral(f.dataType, _)), b.upper.map(boundLiteral(f.dataType, _)))
       }
-      val aboveUpper = (tb.hi, mi) match {
-        case (Some(h), Some(mnv)) => lt(h, mnv)
-        case _ => false
-      }
-      val bloomDead = tb.probes.exists(ps =>
-        bloom.get(tb.key).exists(b64 => ps.exists(p => !bloomHas(b64, p))))
-      belowLower || aboveUpper || bloomDead
     }
+    val matches = lowered.flatten.flatMap {
+      case (c, Some(Some(lo)), Some(Some(hi))) if StatsProver.sameValue(c.dataType, lo, hi) =>
+        // the optimizer hands a scan a boolean equality as `c` or `NOT c`,
+        // which no stat proves: planning proves no more than that scan
+        if (c.dataType == org.apache.spark.sql.types.BooleanType) Nil else Seq(EqualTo(c, lo))
+      case (c, lo, hi) => lo.flatten.map(GreaterThanOrEqual(c, _)).toSeq ++ hi.flatten.map(LessThanOrEqual(c, _))
+    }
+    val fails = lowered.map {
+      case Some((c, lo, hi)) if lo.forall(_.isDefined) && hi.forall(_.isDefined) =>
+        (IsNull(c) +: (lo.flatten.map(LessThan(c, _)).toSeq ++ hi.flatten.map(GreaterThan(c, _)))).reduce(Or)
+      case _ => Literal.TrueLiteral
+    }
+    val phys = schema.fold(new org.apache.spark.sql.types.StructType())(toPhysical)
+    BoundsProof(StatsProver.compile(phys, matches), fails.reduceOption(Or).map(StatsProver.compile(phys, _)))
+  }
+
+  /** One [[Bound]] value as a literal the prover orders on column type
+    * `dt`'s stat axis, as [[normBound]] places it; None = not comparable. */
+  private def boundLiteral(
+      dt: org.apache.spark.sql.types.DataType,
+      v: Any): Option[org.apache.spark.sql.catalyst.expressions.Literal] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types._
+    (dt, v) match {
+      case (StringType | DateType, s: String) => Some(Literal(s))
+      case (DateType, d: java.sql.Date) => Some(Literal(d))
+      case (TimestampType | TimestampNTZType, t: java.sql.Timestamp) =>
+        Some(Literal(Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000, dt))
+      case (BooleanType, b: Boolean) => Some(Literal(b))
+      case (StringType | DateType, _) => None
+      case (_, n: Number) =>
+        scala.util.Try(Literal(n)).orElse(scala.util.Try(Literal(BigDecimal(n.toString)))).toOption
+      case _ => None
+    }
+  }
+
+  /** The live entries no stat-bearing file of `files` covers (pre-stats
+    * dirs): a planner reads them in full. An entry is covered if it is a
+    * stat-bearing file itself (DML commits list untouched files
+    * individually) or a dir whose files all carry stats. */
+  private def uncovered(dirs: Seq[String], files: Seq[String]): Seq[String] = {
+    val covered = files.toSet ++ files.map(p => p.take(p.lastIndexOf('/')))
+    dirs.filterNot(covered)
+  }
+
+  private[sinks] def uncoveredOf(m: Commit): Seq[String] = uncovered(m.dirs, m.files.map(_.path))
 
   private[graft] def prunePlan(spark: SparkSession, root: String, v: Int, bounds: Seq[Bound]): PrunePlan =
     prunePlanOf(readManifest(spark, root, v), bounds)
 
-  private[graft] def prunePlanOf(m: Commit, bounds: Seq[Bound]): PrunePlan = {
-    val schema = m.schemaJson.map(schemaFromJson)
-    // stats/blooms are keyed by the PHYSICAL column name; bounds arrive in
-    // logical names
-    val typed = typedBoundsOf(schema, bounds)
-    // a dirs entry is covered if it is a stat-bearing file itself (DML
-    // commits list untouched files individually) or a dir whose files all
-    // carry stats
-    val coveredFiles = m.files.map(_.path).toSet
-    val coveredDirs = m.files.map(f => f.path.take(f.path.lastIndexOf('/'))).toSet
-    val uncovered = m.dirs.filterNot(e => coveredDirs.contains(e) || coveredFiles.contains(e))
-    val (skipped, keep) = m.files.partition(f => deadFile(typed, f.min, f.max, f.bloom))
-    PrunePlan(keep.map(_.path), skipped.map(_.path), uncovered)
+  private[graft] def prunePlanOf(m: Commit, bounds: Seq[Bound]): PrunePlan =
+    planOf(m, boundsProof(m.schemaJson.map(schemaFromJson), bounds))
+
+  private def planOf(m: Commit, proof: BoundsProof): PrunePlan = {
+    val (skipped, keep) = m.files.partition(proof.skips.empty)
+    PrunePlan(keep.map(_.path), skipped.map(_.path), uncoveredOf(m))
   }
 
   // ───────── parquet checkpoint manifests: the 10⁵–10⁶-file scale path ─────────
@@ -2867,11 +2854,12 @@ object SnapshotTable {
   // The JSON manifest is ONE driver-parsed document — past ~10⁴ files its
   // parse time and driver heap become the planning bound. A CHECKPOINT
   // materializes a version's per-file statistics as parquet (one row per
-  // file), so planning becomes a DataFrame job: the deadness kernel
-  // ([[deadFile]] — bit-identical to the driver path) runs DISTRIBUTED
-  // over the checkpoint frame and the driver receives only the verdict
-  // lists. The JSON manifest stays the commit-protocol source of truth
-  // (atomic publish needs one document); [[readManifestLite]] opens it
+  // file), so planning becomes a DataFrame job: the bounds' compiled
+  // proof ([[boundsProof]] — the one prover every planner and scan asks,
+  // so verdicts equal the driver path's) runs DISTRIBUTED over the
+  // checkpoint frame and the driver receives only the verdict lists. The
+  // JSON manifest stays the commit-protocol source of truth (atomic
+  // publish needs one document); [[readManifestLite]] opens it
   // with a streaming parser that SKIPS the files array, so the
   // checkpointed planner never materializes per-file stats driver-side.
 
@@ -3111,11 +3099,11 @@ object SnapshotTable {
   }
 
   /** [[prunePlan]] computed DISTRIBUTED from the parquet checkpoint of
-    * version `v`: the driver never parses per-file stats — the shared
-    * deadness kernel runs as a UDF over the checkpoint frame (typed
-    * bounds broadcast in its closure) and only the path verdicts return.
-    * Results are IDENTICAL to the JSON path by construction (same
-    * [[deadFile]], same serde). The dirs/schema metadata comes from
+    * version `v`: the driver never parses per-file stats — the bounds'
+    * compiled proof runs as a UDF over the checkpoint frame (shipped in
+    * its closure) and only the path verdicts return. Results are
+    * IDENTICAL to the JSON path by construction (same [[boundsProof]],
+    * same serde). The dirs/schema metadata comes from
     * [[readManifestLite]]. Requires a checkpoint at exactly `v`
     * ([[checkpoint]] after committing, or plan at [[latestCheckpoint]]). */
   private[graft] def prunePlanCheckpointed(
@@ -3134,8 +3122,9 @@ object SnapshotTable {
       .getOrElse(
         sys.error(s"checkpoint at version $v is incomplete (no _SUCCESS); re-run checkpoint()"))
     val lite = readManifestLite(spark, root, v)
-    val schema = lite.schemaJson.map(schemaFromJson)
-    val typed = typedBoundsOf(schema, bounds)
+    val skips = boundsProof(lite.schemaJson.map(schemaFromJson), bounds).skips
+    // a bounds proof reads min/max and Blooms only, so the frame's
+    // non-null counts stay unparsed
     val deadFn = udf { (minJ: String, maxJ: String, bloomJ: String) =>
       def m(s: String): Map[String, JValue] =
         JsonMethods.parse(s, useBigDecimalForDouble = true) match {
@@ -3143,7 +3132,7 @@ object SnapshotTable {
           case _ => Map.empty[String, JValue]
         }
       val blooms = m(bloomJ).collect { case (k, JString(b)) => k -> b }
-      deadFile(typed, m(minJ), m(maxJ), blooms)
+      skips.empty(FileStat("", 0L, m(minJ), m(maxJ), bloom = blooms))
     }
     val verdicts =
       if (ckptFiles.isEmpty) Array.empty[org.apache.spark.sql.Row] // checkpoint of a 0-file manifest
@@ -3152,12 +3141,8 @@ object SnapshotTable {
           .parquet(ckptFiles.map(_.toString): _*)
           .select(col("path"), deadFn(col("min"), col("max"), col("bloom")).as("dead"))
           .collect()
-    val keep = verdicts.filter(!_.getBoolean(1)).map(_.getString(0)).toSeq
-    val skipped = verdicts.filter(_.getBoolean(1)).map(_.getString(0)).toSeq
-    val coveredFiles = (keep ++ skipped).toSet
-    val coveredDirs = coveredFiles.map(p => p.take(p.lastIndexOf('/')))
-    val uncovered = lite.dirs.filterNot(e => coveredDirs.contains(e) || coveredFiles.contains(e))
-    PrunePlan(keep, skipped, uncovered)
+    val (skipped, keep) = verdicts.toSeq.map(r => (r.getString(0), r.getBoolean(1))).partition(_._2)
+    PrunePlan(keep.map(_._1), skipped.map(_._1), uncovered(lite.dirs, verdicts.map(_.getString(0))))
   }
 
   /** [[readWhere]] planned THROUGH the parquet checkpoint — the read
@@ -3220,15 +3205,7 @@ object SnapshotTable {
     applyBounds(readEntries(spark, root, m, schemaOf(spark, root, m), plan.keep ++ plan.uncoveredDirs), bounds)
   }
 
-  // accessors for [[SnapshotFileIndex]] (same package-private surface the
-  // specs use)
-  private[graft] def normJValue(
-      dt: org.apache.spark.sql.types.DataType,
-      j: JValue): Option[Either[BigDecimal, String]] = normJ(dt, j)
-  private[graft] def probeBloom(
-      dt: org.apache.spark.sql.types.DataType,
-      v: Any): Option[Seq[Int]] = probePositions(dt, v)
-  private[graft] def bloomBit(b64: String, pos: Int): Boolean = bloomHas(b64, pos)
+  /** A Bloom holding exactly `positions`, encoded as the manifest records it. */
   private[graft] def encodeBloom(positions: Seq[Int]): String =
     WriteStats.bloomEncode(scala.collection.immutable.BitSet(positions: _*))
 
@@ -3319,48 +3296,17 @@ object SnapshotTable {
     * Package-private so the spec can assert the scan set is empty/small. */
   private[graft] final case class CountPlan(metaRows: Long, scanPaths: Seq[String])
 
-  /** A file WHOLLY matches iff every bound provably matches ALL its rows:
-    * the bound column has no nulls in the file (min/max ignore nulls) and
-    * the file's [min,max] sits inside [lower,upper]. */
-  private def whollyMatches(
-      schema: Option[org.apache.spark.sql.types.StructType],
-      bounds: Seq[Bound])(fst: FileStat): Boolean = {
-    val typed = bounds.map { b =>
-      b -> schema.flatMap(_.fields.find(_.name == b.column)).map(f => (f.dataType, physName(f)))
-    }
-    typed.forall {
-      case (b, Some((dt, key))) =>
-        val mi = fst.min.get(key).flatMap(normJ(dt, _))
-        val ma = fst.max.get(key).flatMap(normJ(dt, _))
-        val noNulls = fst.nonNull.get(key).contains(fst.rows)
-        val loOk = b.lower.fold(true)(lo =>
-          (normBound(dt, lo), mi) match {
-            case (Some(l), Some(mn)) => !lt(mn, l)
-            case _ => false
-          })
-        val hiOk = b.upper.fold(true)(hi =>
-          (normBound(dt, hi), ma) match {
-            case (Some(h), Some(mx)) => !lt(h, mx)
-            case _ => false
-          })
-        noNulls && loOk && hiOk
-      case (_, None) => false // bound on a column the schema can't type: must scan
-    }
-  }
-
   private[graft] def countPlan(spark: SparkSession, root: String, v: Int, bounds: Seq[Bound]): CountPlan =
     countPlanOf(readManifest(spark, root, v), bounds)
 
   private def countPlanOf(m: Commit, bounds: Seq[Bound]): CountPlan = {
-    val schema = m.schemaJson.map(schemaFromJson)
-    val plan = prunePlanOf(m, bounds)
-    val keep = m.files.filter(f => plan.keep.contains(f.path))
+    val proof = boundsProof(m.schemaJson.map(schemaFromJson), bounds)
+    val keep = m.files.filterNot(proof.skips.empty)
     // a MASKED file's recorded row count exceeds its live rows: it can
     // never contribute a metadata-only count — route it to the scan side
     val masked = maskedEntrySet(m)
-    val (whole, boundary) =
-      keep.partition(f => !masked(f.path) && whollyMatches(schema, bounds)(f))
-    CountPlan(whole.map(_.rows).sum, boundary.map(_.path) ++ plan.uncoveredDirs)
+    val (whole, boundary) = keep.partition(f => !masked(f.path) && proof.wholly(f))
+    CountPlan(whole.map(_.rows).sum, boundary.map(_.path) ++ uncoveredOf(m))
   }
 
   /** Count rows matching `bounds` with the manifest as the first-class
@@ -3485,7 +3431,7 @@ object SnapshotTable {
     require(minFiles >= 2, "compacting fewer than 2 files cannot shrink the file count")
     val base = openBase(spark, root)
     val m = base.m
-    val uncovered = prunePlanOf(m, Seq.empty).uncoveredDirs
+    val uncovered = uncoveredOf(m)
     // unsized entries (bytes < 0, pre-size manifests) are NOT small —
     // size unknown means carry, the same conservatism the planner applies
     val (small, big) = m.files.partition(f => f.bytes >= 0 && f.bytes < smallBytes)
@@ -3628,23 +3574,21 @@ object SnapshotTable {
     val base = openBase(spark, root)
     val m = base.m
     val schema = base.schema
-    val plan = prunePlanOf(m, bounds)
-    val skippedSet = plan.skipped.toSet
-    val keepSet = plan.keep.toSet
-    val untouched = m.files.filter(f => skippedSet.contains(f.path))
-    val candidates = m.files.filter(f => keepSet.contains(f.path))
+    val proof = boundsProof(schema, bounds)
+    val (untouched, candidates) = m.files.partition(proof.skips.empty)
+    val uncovered = uncoveredOf(m)
     // a MASKED file may still be dropped wholly: its physical rows are a
     // superset of its live rows, so "stats prove every physical row
     // matches" proves every LIVE row matches too
     val (dropped, rewrite) =
-      if (dropWholly) candidates.partition(whollyMatches(schema, bounds))
+      if (dropWholly) candidates.partition(proof.wholly)
       else (Seq.empty[FileStat], candidates)
     // maintenance callers (compactWhere): a selection touching nothing is
     // a no-op, not an empty version bump — decided HERE, on the same plan
     // the rewrite uses (no separate pre-check, no TOCTOU window)
-    if (skipIfNoWork && rewrite.isEmpty && dropped.isEmpty && plan.uncoveredDirs.isEmpty)
+    if (skipIfNoWork && rewrite.isEmpty && dropped.isEmpty && uncovered.isEmpty)
       return base.version
-    val scanPaths = rewrite.map(_.path) ++ plan.uncoveredDirs
+    val scanPaths = rewrite.map(_.path) ++ uncovered
     // write-time CDC ([[Cdc]]): with capture on, the commit records the
     // delta of exactly the files it scans; wholly-dropped files stay
     // UNCAPTURED by design (zero-I/O drop preserved — every live row is
@@ -4499,16 +4443,12 @@ object SnapshotTable {
     * none), and every other entry — listed file by file — is kept. */
   private final case class MorPlan(droppedWhole: Seq[FileStat], kept: Seq[String], maskEntries: Seq[String])
 
-  private def morMaskPlan(
-      m: Commit,
-      schema: org.apache.spark.sql.types.StructType,
-      bounds: Seq[Bound],
-      plan: PrunePlan): MorPlan = {
+  private def morMaskPlan(m: Commit, proof: BoundsProof, plan: PrunePlan): MorPlan = {
     val keepSet = plan.keep.toSet
     val candidates = m.files.filter(f => keepSet(f.path))
     // physical all-match proves live all-match even on already-masked
     // files (live rows ⊆ physical rows): still droppable with zero I/O
-    val (droppedWhole, toMask) = candidates.partition(whollyMatches(Some(schema), bounds))
+    val (droppedWhole, toMask) = candidates.partition(proof.wholly)
     val droppedSet = droppedWhole.map(_.path).toSet
     MorPlan(
       droppedWhole,
@@ -4537,7 +4477,8 @@ object SnapshotTable {
     val m = base.m
     val schema = morSchema(base)
     val encoded = encodeMaskBounds(schema, bounds) // loud BEFORE any state change
-    val mp = morMaskPlan(m, schema, bounds, prunePlanOf(m, bounds))
+    val proof = boundsProof(Some(schema), bounds)
+    val mp = morMaskPlan(m, proof, planOf(m, proof))
     // exact accounting: the new mask records the live rows it hides and
     // addedRows becomes the exact delta — one bounded counting read of
     // only the BOUNDARY candidates (whole-drops stay stat-only, and a
@@ -4579,7 +4520,8 @@ object SnapshotTable {
       require(schema.fieldNames.contains(name), s"updateWhereMor SET column '$name' is not in the table schema")
     }
     // ONE manifest parse serves the read, the prune, and the mask plan
-    val plan = prunePlanOf(m, bounds)
+    val proof = boundsProof(Some(schema), bounds)
+    val plan = planOf(m, proof)
     // the matched rows, read through pruning and any pending masks
     val matched = readWhereOf(spark, root, m, plan, bounds)
     val updated = matched.select(schema.fields.map { f =>
@@ -4590,7 +4532,7 @@ object SnapshotTable {
     }.toSeq: _*)
     val (rel, n, stats) = writeData(spark, root, updated, m.constraints, mappingOf(schema))
     if (n == 0) return base.version // nothing matched: no-op (the empty orphan dir vacuums away)
-    val mp = morMaskPlan(m, schema, bounds, plan)
+    val mp = morMaskPlan(m, proof, plan)
     // the writer already counted the matched rows (it wrote them): the new
     // mask hides exactly those minus the whole-dropped files' live rows —
     // free exactness (only a masked whole-drop needs a counting read)

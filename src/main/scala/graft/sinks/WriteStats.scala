@@ -388,6 +388,31 @@ private[sinks] object WriteStats {
     }
   }
 
+  /** Spark's basic write tracker (the write node's SQL metrics) in a split
+    * write, where a task's data file opens at its first data row
+    * ([[SplitParquet]]): the file is submitted to the basic tracker at
+    * that row, so a task whose rows were all change rows submits none,
+    * instead of one file that never appears (which the basic tracker logs
+    * as "Expected 1 files, but only saw 0"). Every row still counts. */
+  private final class SplitBasicTracker(conf: SerializableConfiguration)
+      extends BasicWriteJobStatsTracker(conf, BasicWriteJobStatsTracker.metrics) {
+    override def newTaskInstance(): WriteTaskStatsTracker = new WriteTaskStatsTracker {
+      private val task = SplitBasicTracker.super.newTaskInstance()
+      private var opened = false
+      override def newPartition(partitionValues: InternalRow): Unit = task.newPartition(partitionValues)
+      override def newFile(filePath: String): Unit = opened = false
+      override def newRow(filePath: String, row: InternalRow): Unit = {
+        if (!opened && row.isNullAt(row.numFields - 1)) {
+          opened = true
+          task.newFile(filePath)
+        }
+        task.newRow(filePath, row)
+      }
+      override def closeFile(filePath: String): Unit = if (opened) task.closeFile(filePath)
+      override def getFinalStats(taskCommitTime: Long): WriteTaskStats = task.getFinalStats(taskCommitTime)
+    }
+  }
+
   /** Parquet whose writer routes each row by its trailing `_change_type`:
     * a data row (null tag) goes, without the tag, to the file the task
     * opened, which therefore holds exactly the table's columns; a change
@@ -464,13 +489,15 @@ private[sinks] object WriteStats {
       spark.sessionState.conf.fileCommitProtocolClass, java.util.UUID.randomUUID().toString, abs)
     val split = changes != Changes.Untagged
     val tracker = new JobTracker(spec, conf, split)
+    val basic =
+      if (split) new SplitBasicTracker(conf) else new BasicWriteJobStatsTracker(conf, BasicWriteJobStatsTracker.metrics)
     SQLExecution.withNewExecutionId(qe, Some("save")) {
       val plan = qe.executedPlan
       FileFormatWriter.write(
         spark, plan, if (split) new SplitParquet(changes == Changes.Kept) else new ParquetFileFormat, committer,
         FileFormatWriter.OutputSpec(abs, Map.empty, plan.output), hadoopConf,
         partitionColumns = Seq.empty, bucketSpec = None,
-        statsTrackers = Seq(new BasicWriteJobStatsTracker(conf, BasicWriteJobStatsTracker.metrics), tracker),
+        statsTrackers = Seq(basic, tracker),
         options = Map.empty)
     }
     val dir = new Path(abs)
