@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.ops.Checkpoints
 import graft.sinks.SnapshotTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -24,10 +25,11 @@ import org.apache.spark.sql.functions._
   * then the candidate join probes the POSTINGS table with the batch side
   * BROADCAST — a broadcast-hash equi-join on (b, v) streams the index in
   * one map-side pass with ZERO shuffle of the index (spec-asserted on the
-  * plan), and the exact-Jaccard verification joins only the candidate
-  * ids' token sets. Per-batch cost is therefore one corpus-scan-without-
-  * shuffle + work ∝ candidates — never a corpus re-signature, never an
-  * all-pairs stage.
+  * plan), and the verification joins only the candidate ids' token sets,
+  * hashes them ([[MinHash.tokenHashes]]) and counts each pair's overlap
+  * with one sorted merge at the session's width. Per-batch cost is
+  * therefore one corpus-scan-without-shuffle + work ∝ candidates — never
+  * a corpus re-signature, never an all-pairs stage.
   *
   * Ingest appends accepted documents' token sets FIRST and band postings
   * SECOND (two snapshot commits): a posting without its token set would
@@ -35,7 +37,7 @@ import org.apache.spark.sql.functions._
   * duplicate), while a token set without postings is merely invisible to
   * dedup until the second commit lands — the safe failure direction.
   *
-  * The hot-bucket cap (the [[MinHash]] guard: a band value shared by
+  * The hot-bucket cap (the [[HotBuckets]] guard: a band value shared by
   * thousands of documents is non-discriminative and contributes
   * O(bucket²) candidates) is applied at [[build]]; ingested postings can
   * re-crowd a bucket over time, so [[rebuildBands]] is the maintenance
@@ -64,18 +66,9 @@ object DedupIndex {
   private def bandRows(docs: DataFrame, p: Params): DataFrame =
     MinHash.bandedSignatureRows(docs, p.bands, p.rows)
 
-  /** Drop postings of overcrowded (b, v) buckets — census is a map-side
-    * combinable groupBy, hot buckets are few, the guard broadcasts. */
+  /** Drop postings of overcrowded (b, v) buckets ([[HotBuckets]]). */
   private def capHot(bandRows: DataFrame, maxBucket: Int): DataFrame =
-    if (maxBucket <= 0) bandRows
-    else {
-      val hot = bandRows
-        .groupBy("b", "v")
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n") > maxBucket)
-        .select("b", "v")
-      bandRows.join(broadcast(hot), Seq("b", "v"), "left_anti")
-    }
+    HotBuckets.drop(bandRows, maxBucket, "b", "v")
 
   private def normalized(docs: DataFrame, idCol: String, tokensCol: String): DataFrame =
     docs
@@ -106,11 +99,13 @@ object DedupIndex {
   }
 
   /** Near-duplicate matches of `batch` documents AGAINST THE INDEX:
-    * (new_id, dup_of, jac_e6) for every indexed document whose exact
-    * Jaccard with the batch document reaches `minJaccard`. Candidates
-    * come from the broadcast band probe; only candidates pay the exact
-    * verification, so false band collisions cost compute, never appear
-    * in the output. */
+    * (new_id, dup_of, jac_e6) for every indexed document whose Jaccard
+    * with the batch document reaches `minJaccard`. Candidates come from
+    * the broadcast band probe; only candidates pay the verification, the
+    * exact Jaccard of the two token-hash sets (the [[MinHash]] caveat: it
+    * differs from the string-set Jaccard only when two distinct tokens of
+    * the pair share an `xxhash64`). False band collisions cost a merge,
+    * never appear in the output. */
   def checkBatch(
       spark: SparkSession,
       root: String,
@@ -119,24 +114,32 @@ object DedupIndex {
       tokensCol: String,
       minJaccard: Double): DataFrame = {
     val p = readParams(spark, root)
-    val newToks = normalized(batch, idCol, tokensCol)
-    val newBands = bandRows(newToks, p)
+    val newHashed = normalized(batch, idCol, tokensCol)
+      .select(col("id"), MinHash.tokenHashes(col("toks")).as("h"))
+    val newBands = MinHash.bandRows(newHashed, p.bands, p.rows)
     val idx = SnapshotTable
       .read(spark, bandsRoot(root))
       .select(col("id").as("dup_of"), col("b"), col("v"))
-    // batch side broadcast: the index streams map-side, no index shuffle
-    val cand = idx
-      .join(broadcast(newBands.select(col("id").as("new_id"), col("b"), col("v"))), Seq("b", "v"))
-      .select("new_id", "dup_of")
+    // batch side broadcast: the index streams map-side, no index shuffle;
+    // the candidates are pinned so the verify runs at the session's width
+    val cand = Checkpoints
+      .fanOutBy(
+        idx
+          .join(broadcast(newBands.select(col("id").as("new_id"), col("b"), col("v"))), Seq("b", "v"))
+          .select("new_id", "dup_of"),
+        col("new_id"),
+        col("dup_of"))
       .distinct()
+    // the token table keeps the strings; only candidates hash theirs
     val oldToks = SnapshotTable
       .read(spark, tokensRoot(root))
       .select(col("id").as("dup_of"), col("toks").as("old_toks"))
-    cand
+    val pairs = cand
       .join(oldToks, Seq("dup_of"))
-      .join(newToks.select(col("id").as("new_id"), col("toks").as("new_toks")), Seq("new_id"))
-      .withColumn("inter", size(array_intersect(col("new_toks"), col("old_toks"))))
-      .withColumn("uni", size(col("new_toks")) + size(col("old_toks")) - col("inter"))
+      .join(newHashed.select(col("id").as("new_id"), col("h").as("new_h")), Seq("new_id"))
+      .withColumn("old_h", MinHash.tokenHashes(col("old_toks")))
+    MinHash
+      .withJaccard(pairs, "new_h", "old_h")
       .filter(col("inter") >= col("uni") * lit(minJaccard))
       .select(
         col("new_id"),

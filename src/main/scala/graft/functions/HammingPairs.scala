@@ -19,14 +19,11 @@ import org.apache.spark.sql.functions._
 object HammingPairs {
   /** Pairs (a_id, b_id, dist) with dist <= maxHamming, from `sigs` rows
     * (`idCol`, `sigCol`: long). `maxBucket` (0 = off) drops band buckets
-    * holding more than that many signatures before the self-join — the
-    * standard LSH guard against non-discriminative bands, which otherwise
-    * go quadratic in candidate pairs. At 100 TB a single hot 16-bit bucket
-    * can hold millions of items; capping trades completeness on exactly
-    * those pairs that agree *only* on an overcrowded band (the
-    * least-similar candidates) for a bounded join. The bucket census is a
-    * map-side-combinable groupBy and the guard a broadcast anti-join (hot
-    * buckets are few). */
+    * holding more than that many signatures before the self-join
+    * ([[HotBuckets]]). At 100 TB a single hot 16-bit bucket can hold
+    * millions of items; capping trades completeness on exactly those pairs
+    * that agree *only* on an overcrowded band (the least-similar
+    * candidates) for a bounded join. */
   def pairs(sigs: DataFrame, idCol: String, sigCol: String, maxHamming: Int, maxBucket: Int = 0): DataFrame = {
     val base = sigs.select(col(idCol).as("id"), col(sigCol).as("sig"))
     def band(sig: Column, b: Int): Column = shiftrightunsigned(sig, b * 16).bitwiseAND(lit(0xffffL))
@@ -35,12 +32,7 @@ object HammingPairs {
       col("sig"),
       explode(array((0 until 4).map(b => struct(lit(b).as("b"), band(col("sig"), b).as("v"))): _*))
         .as("band"))
-    val banded =
-      if (maxBucket <= 0) bandedAll
-      else {
-        val hot = bandedAll.groupBy("band").agg(count(lit(1)).as("n")).filter(col("n") > maxBucket)
-        bandedAll.join(broadcast(hot), Seq("band"), "left_anti")
-      }
+    val banded = HotBuckets.drop(bandedAll, maxBucket, "band")
     val a = banded.select(col("id").as("a_id"), col("sig").as("a_sig"), col("band").as("ab"))
     val b = banded.select(col("id").as("b_id"), col("sig").as("b_sig"), col("band").as("bb"))
     a.join(b, col("ab") === col("bb") && col("a_id") < col("b_id"))

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.ops.Checkpoints
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** Banded MinHash near-duplicate detection (shingle → minhash → band →
@@ -15,75 +16,81 @@ import org.apache.spark.sql.functions._
   * rate to J^r (0.1^3 = 1e-3) while a true near-dup at J=0.95 still
   * collides on some band with probability 1-(1-0.95^r)^b ≈ 1.
   *
-  * Everything here is pure Spark SQL and stays inside whole-stage codegen:
-  * the k seeded hashes are `xxhash64(seed_i, tok)` folded with `array_min`
-  * (no UDF), bands are `xxhash64` over r signature slots, candidates come
-  * from a band-keyed equi-join, and each candidate is verified with the
-  * EXACT Jaccard via array_intersect — so false positives cost a little
-  * compute but never appear in the output, and the only approximation is
-  * (quantified, tested) recall.
+  * Each document is reduced once to its sorted, distinct token hashes
+  * (`xxhash64(tok)`, [[TokenHashes]]). Two codegen expressions read that
+  * array: [[MinHashBands]] folds it into the band values in one pass (a
+  * map-only projection, no signature shuffle), and [[SortedIntersectSize]]
+  * verifies each candidate pair with one merge of the two arrays. The
+  * verify is the exact Jaccard of the two token-hash sets. It differs from
+  * the Jaccard of the token strings only when two distinct tokens of one
+  * pair share an `xxhash64` (about 2^-64 per token pair) — tokens the
+  * signature could not tell apart either. Band collisions that are not
+  * near-duplicates therefore cost a merge each and do not reach the
+  * output; the approximation is (quantified, tested) recall.
   *
-  * At 100 TB: signature computation is map-only over one scan, the banded
-  * self-join shuffles on 64-bit band keys (uniform by construction — the
-  * band value is itself a hash), and verification joins candidates back to
-  * shingle sets by id. No all-pairs stage anywhere.
+  * At 100 TB: the signature is a map-only projection over one scan, the
+  * banded self-join shuffles on 64-bit band keys (uniform by construction —
+  * the band value is itself a hash), and verification joins candidates back
+  * to the hash arrays by id at a pinned width. No all-pairs stage anywhere.
   */
 object MinHash {
   /** k seeded minhashes of a token array: slot i = min over tokens of
-    * xxhash64(i, xxhash64(tok)) — the token STRING is hashed once and the k
-    * seeded hashes fold the resulting 8-byte long, so the per-occurrence
-    * cost is one variable-length hash plus k fixed-cost long hashes instead
-    * of k string scans (the round-13 sf10 tail finding: at 18 hashes over
-    * ~15-byte shingles the string form spent ~3x longer in the signature
-    * stage). Fine for ad-hoc use; `nearDuplicatePairs` uses the
-    * explode+groupBy formulation instead — each array_min(transform(...))
-    * re-evaluates its input array expression, so k nested lambdas cost k
-    * passes over every token, while the aggregate form is one pass with
-    * map-side partial mins. Values are kept identical between the two
-    * formulations (MinHashSpec's candidate-count test reconstructs the
-    * banding from this helper). */
+    * xxhash64(i, xxhash64(tok)). Fine for ad-hoc use; each
+    * array_min(transform(...)) re-evaluates its input, so k slots cost k
+    * passes over every token. [[bandedSignatureRows]] and
+    * [[nearDuplicatePairs]] use [[MinHashBands]], one pass with the same
+    * values (MinHashSpec rebuilds the banding from this helper). */
   def signature(toks: Column, k: Int): Column =
     array((0 until k).map(i => array_min(transform(toks, t => xxhash64(lit(i), xxhash64(t))))): _*)
 
-  /** The banded signature rows (id, b, v) of a (id, toks) frame — the
-    * one-pass explode/groupBy formulation (hash each token string once,
-    * fold k seeded long-mixes with map-side partial mins, band r slots
-    * per xxhash64). THE single banding implementation: both the one-shot
+  /** `graft_token_hashes`: the sorted, distinct `xxhash64` of a string
+    * array's elements (a null token hashes to the seed, 42). */
+  def tokenHashes(toks: Column): Column =
+    GraftSqlBridge.column(TokenHashes(GraftSqlBridge.expression(toks)))
+
+  /** `graft_minhash_bands`: the `bands` band values of a token-hash
+    * array's `bands * rows` slot MinHash signature. */
+  def bandValues(hashes: Column, bands: Int, rows: Int): Column =
+    GraftSqlBridge.column(MinHashBands(GraftSqlBridge.expression(hashes), bands, rows))
+
+  /** `graft_intersect_size`: |a ∩ b| of two sorted, distinct long arrays. */
+  def intersectSize(a: Column, b: Column): Column =
+    GraftSqlBridge.column(SortedIntersectSize(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+
+  /** (id, b, v) band rows of an (id, h) token-hash frame. */
+  private[functions] def bandRows(hashed: DataFrame, bands: Int, rows: Int): DataFrame =
+    hashed.select(col("id"), posexplode(bandValues(col("h"), bands, rows)).as(Seq("b", "v")))
+
+  /** The banded signature rows (id, b, v) of an (id, toks) frame. THE
+    * single banding implementation: both the one-shot
     * [[nearDuplicatePairs]] and the persisted [[DedupIndex]] postings
     * derive from it, so their candidate spaces can never silently
-    * diverge. Values identical to [[signature]] by construction. */
-  def bandedSignatureRows(docs: DataFrame, bands: Int, rows: Int): DataFrame = {
-    val k = bands * rows
-    val aggs = (0 until k).map(i => min(xxhash64(lit(i), col("h"))).as(s"mh$i"))
-    docs
-      .select(col("id"), explode(col("toks")).as("tok"))
-      .select(col("id"), xxhash64(col("tok")).as("h"))
-      .groupBy("id")
-      .agg(aggs.head, aggs.tail: _*)
-      .select(
-        col("id"),
-        explode(array((0 until bands).map { j =>
-          struct(
-            lit(j).as("b"),
-            xxhash64((0 until rows).map(r => col(s"mh${j * rows + r}")): _*).as("v"))
-        }: _*)).as("band"))
-      .select(col("id"), col("band.b").as("b"), col("band.v").as("v"))
-  }
+    * diverge. Values identical to [[signature]] banded with `xxhash64`
+    * over each band's `rows` slots. */
+  def bandedSignatureRows(docs: DataFrame, bands: Int, rows: Int): DataFrame =
+    bandRows(docs.select(col("id"), tokenHashes(col("toks")).as("h")), bands, rows)
+
+  /** Candidate pairs (`left`, `right`) with the Jaccard of their token-hash
+    * sets (`lh`, `rh`): inter and union sizes from one merge per pair. */
+  private[functions] def withJaccard(pairs: DataFrame, lh: String, rh: String): DataFrame =
+    pairs
+      .withColumn("inter", intersectSize(col(lh), col(rh)))
+      .withColumn("uni", size(col(lh)) + size(col(rh)) - col("inter"))
 
   /** Near-duplicate pairs (exact Jaccard >= minJaccard) among (id, tokens)
     * rows, candidates generated by `bands` bands of `rows` minhash rows.
     *
     * `maxBucket` (0 = off) drops band buckets holding more than that many
-    * documents before the self-join — the same guard HammingPairs carries:
-    * a band value shared by thousands of documents is non-discriminative
-    * (on small-vocabulary corpora the minhash value space itself
-    * saturates), and its bucket alone contributes O(bucket²) candidate
-    * pairs. The sf0.1→sf3 scaling study measured exactly this going
-    * quadratic (150 s at 150k docs). Capping trades recall ONLY on pairs
-    * whose every colliding band is overcrowded — at J ≥ 0.8 a true pair
-    * collides on ~all bands, so the planted-recall spec stays at 1.0. The
-    * census is a map-side-combinable groupBy; hot buckets are few, so the
-    * guard is a broadcast anti-join. */
+    * documents before the self-join ([[HotBuckets]]): on small-vocabulary
+    * corpora the minhash value space itself saturates, and the sf0.1→sf3
+    * scaling study measured the unguarded join going quadratic (150 s at
+    * 150k docs). At J ≥ 0.8 a true pair collides on ~all bands, so the
+    * planted-recall spec stays at 1.0.
+    *
+    * The banded rows and the verify's candidates are each pinned with
+    * [[Checkpoints.fanOutBy]] on their key: both stages are CPU-dense over
+    * a few MB of shuffle, which AQE's byte-based coalescing would otherwise
+    * run in one task. */
   def nearDuplicatePairs(
       docs: DataFrame,
       idCol: String,
@@ -92,39 +99,23 @@ object MinHash {
       bands: Int = 6,
       rows: Int = 3,
       maxBucket: Int = 64): DataFrame = {
-    val base = docs
-      .select(col(idCol).as("id"), col(tokensCol).as("toks"))
-      .filter(size(col("toks")) > 0)
-    // One-pass signature: explode tokens once, take k partial-aggregated
-    // mins (see [[bandedSignatureRows]] — the shared formulation; minhash
-    // is duplicate-invariant, so no array_distinct before the explode,
-    // which also keeps the generator input a bare attribute: explode over
-    // a *computed* array re-evaluates that expression per output element
-    // under codegen).
-    val bandedAll = bandedSignatureRows(base, bands, rows)
-      .select(col("id"), struct(col("b"), col("v")).as("band"))
-    val banded =
-      if (maxBucket <= 0) bandedAll
-      else {
-        val hot = bandedAll
-          .groupBy("band")
-          .agg(count(lit(1)).as("n"))
-          .filter(col("n") > maxBucket)
-          .select("band")
-        bandedAll.join(broadcast(hot), Seq("band"), "left_anti")
-      }
-    val a = banded.select(col("id").as("a_id"), col("band").as("ab"))
-    val b = banded.select(col("id").as("b_id"), col("band").as("bb"))
-    val cand = a
-      .join(b, col("ab") === col("bb") && col("a_id") < col("b_id"))
-      .select("a_id", "b_id")
+    val hashed = docs
+      .select(col(idCol).as("id"), tokenHashes(col(tokensCol)).as("h"))
+      .filter(size(col("h")) > 0)
+    val banded = HotBuckets.drop(
+      Checkpoints.fanOutBy(bandRows(hashed, bands, rows), col("b"), col("v")), maxBucket, "b", "v")
+    val a = banded.select(col("id").as("a_id"), col("b"), col("v"))
+    val b = banded.select(col("id").as("b_id"), col("b"), col("v"))
+    val cand = Checkpoints
+      .fanOutBy(
+        a.join(b, Seq("b", "v")).filter(col("a_id") < col("b_id")).select("a_id", "b_id"),
+        col("a_id"),
+        col("b_id"))
       .distinct()
-    val sets = base.select(col("id"), array_distinct(col("toks")).as("toks"))
-    cand
-      .join(sets.select(col("id").as("a_id"), col("toks").as("a_toks")), "a_id")
-      .join(sets.select(col("id").as("b_id"), col("toks").as("b_toks")), "b_id")
-      .withColumn("inter", size(array_intersect(col("a_toks"), col("b_toks"))))
-      .withColumn("uni", size(col("a_toks")) + size(col("b_toks")) - col("inter"))
+    val pairs = cand
+      .join(hashed.select(col("id").as("a_id"), col("h").as("a_h")), "a_id")
+      .join(hashed.select(col("id").as("b_id"), col("h").as("b_h")), "b_id")
+    withJaccard(pairs, "a_h", "b_h")
       .withColumn("jacc", col("inter").cast("double") / col("uni"))
       .filter(col("jacc") >= minJaccard)
       .select(col("a_id"), col("b_id"), floor(col("jacc") * 1e6 + lit(0.5)).cast("long").as("jacc_e6"))

@@ -43,14 +43,13 @@ object Checkpoints {
     * shuffle — that is the point, not a leak); callers project to the
     * needed columns first so the one-time shuffle moves narrow rows.
     *
-    * Apply ONLY to exchange-free scan/projection frames: the partition
-    * probe goes through `df.rdd`, which forces physical planning and,
-    * under AQE, eagerly executes any shuffle stages already in the plan.
-    * For a frame whose widening must survive a DOWNSTREAM exchange, use
-    * [[fanOutBy]] instead. */
+    * The partition probe goes through `df.rdd`, which, under AQE, executes
+    * every shuffle and broadcast already in the plan. So a frame whose
+    * physical plan holds an exchange is not probed: it goes to
+    * [[fanOutBy]] on the same row hash, planned but not run. For a frame
+    * whose widening must survive a DOWNSTREAM exchange, use [[fanOutBy]]
+    * on the stage's key instead. */
   def fanOut(df: DataFrame): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= par) return df
     // HASH on the full row, not round-robin repartition(n): a keyless
     // round-robin exchange LOCAL-SORTS its input by every column for
     // retry determinism (SPARK-23207), and fanOut's callers carry long
@@ -62,8 +61,23 @@ object Checkpoints {
     // uniformly as round-robin; callers pass id/text rows, not hot
     // duplicate keys.
     import org.apache.spark.sql.functions.{col, xxhash64}
-    df.repartition(par, xxhash64(df.columns.map(c => col("`" + c + "`")): _*))
+    val rowHash = xxhash64(df.columns.toSeq.map(c => col("`" + c + "`")): _*)
+    if (hasExchange(df)) return fanOutBy(df, rowHash)
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions >= par) return df
+    df.repartition(par, rowHash)
   }
+
+  private object PlanSearch extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** Whether `df`'s physical plan, subqueries included, holds a shuffle or
+    * broadcast exchange. Plans the frame; runs nothing. */
+  private[graft] def hasExchange(df: DataFrame): Boolean =
+    PlanSearch
+      .collectWithSubqueries(df.queryExecution.executedPlan) {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+      }
+      .nonEmpty
 
   /** Pin the partitioning a CPU-DENSE post-shuffle stage will run at:
     * hash-repartition on `cols` — the join/groupBy key of the stage —

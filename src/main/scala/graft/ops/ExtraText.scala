@@ -602,9 +602,11 @@ object ExtraText {
     // ascending range partitions ⇒ globally order-preserving, no driver
     // pass, EXACT — no hash-collision caveat). The strings then never
     // leave the vocab frame: the per-doc groupBy, the array sort, the
-    // candidate join key, and the verification array_intersect all move
-    // 8-byte longs, ~4× fewer shuffle bytes on every corpus-sized stage.
-    // The id assignment rides the df join the plan already required.
+    // candidate join key, and the verification all move 8-byte longs, ~4×
+    // fewer shuffle bytes on every corpus-sized stage. The id assignment
+    // rides the df join the plan already required. Each doc's ids are
+    // sorted and distinct, so the verify is one sorted merge per pair
+    // (`graft_intersect_size`), exact with no hash caveat.
     "q_simjoin_prefix" -> { (s, dir) =>
       val t = 0.6
       val feats = Checkpoints
@@ -643,7 +645,7 @@ object ExtraText {
       cands
         .join(docFeats.select(col("doc_id").as("a_id"), col("toks").as("ta"), col("n").as("na")), Seq("a_id"))
         .join(docFeats.select(col("doc_id").as("b_id"), col("toks").as("tb"), col("n").as("nb")), Seq("b_id"))
-        .withColumn("i", size(array_intersect(col("ta"), col("tb"))))
+        .withColumn("i", graft.functions.MinHash.intersectSize(col("ta"), col("tb")))
         .withColumn("jacc", col("i").cast("double") / (col("na") + col("nb") - col("i")))
         .filter(col("jacc") >= t)
         .select(col("a_id"), col("b_id"), e6(col("jacc")).as("jacc_e6"))

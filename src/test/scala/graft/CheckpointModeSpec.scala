@@ -72,4 +72,54 @@ class CheckpointModeSpec extends SparkSuite {
     assert(local == reliable)
     assert(local.contains(1L)) // doc 1 shares 5-grams with eval doc 3
   }
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      ListenerBusDrain.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("fanOut runs no job for a frame with an exchange: it pins it unprobed, and runs it once") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    val agg = spark
+      .range(0, 5000, 1, 3)
+      .select((col("id") % 7).as("k"), col("id"))
+      .groupBy("k")
+      .agg(count(lit(1)).as("n"), sum("id").as("s"))
+    assert(Checkpoints.hasExchange(agg))
+    val (out, probeJobs) = withJobCount(Checkpoints.fanOut(agg))
+    assert(probeJobs == 0, s"fanOut executed $probeJobs job(s) of its input")
+    val width = math.max(spark.sparkContext.defaultParallelism, spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    out.queryExecution.analyzed match {
+      case r: RepartitionByExpression => assert(r.optNumPartitions.contains(width))
+      case other => fail(s"not pinned with fanOutBy:\n$other")
+    }
+    val (got, runJobs) = withJobCount(out.as[(Long, Long, Long)].collect().sorted.toSeq)
+    val (ref, refJobs) = withJobCount(agg.as[(Long, Long, Long)].collect().sorted.toSeq)
+    assert(got == ref)
+    // the pinned frame adds one exchange (one job) and repeats none
+    assert(runJobs <= refJobs + 1, s"fanOut's frame ran $runJobs jobs, its input alone $refJobs")
+
+    // an exchange-free scan keeps the probe and the plan it always had
+    val scan = Fixtures.table(spark, sf001, "documents").select("doc_id", "text")
+    assert(!Checkpoints.hasExchange(scan))
+    val par = spark.sparkContext.defaultParallelism
+    val widened = Checkpoints.fanOut(scan)
+    val expected =
+      if (scan.rdd.getNumPartitions >= par) scan
+      else scan.repartition(par, xxhash64(col("doc_id"), col("text")))
+    assert(widened.queryExecution.analyzed.sameResult(expected.queryExecution.analyzed))
+  }
 }

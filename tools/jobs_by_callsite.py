@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Print the SQL executions of a Spark event log by call site.
 
-    python3 tools/jobs_by_callsite.py EVENTLOG [--spans SPANS.json] [--ops NAME,...]
+    python3 tools/jobs_by_callsite.py EVENTLOG [--stages] [--spans SPANS.json] [--ops NAME,...]
 
 EVENTLOG is one application's event log: a file of JSON lines (plain, or
 `.zstd` / `.zst`, decoded with the `zstd` binary) or a rolling log's
@@ -11,6 +11,12 @@ its call stack, innermost first, joined by `<`), its Spark job count, its
 wall time and the gap before it: the time since the previous execution of
 the same op ended, or since the op began for its first one (driver-only
 time: planning, code generation, the driver's own file-system work).
+
+With --stages, each execution is followed by its jobs and each job by its
+stages: task count, summed task run time and CPU time, shuffle bytes read
+and written, and the stage's wall time. A stage a job skipped (its shuffle
+output reused) prints as skipped. A CPU-dense stage that runs in one task
+shows here as `tasks=1` beside a large run time.
 
 With --spans (perfbench's `perfbench/.traces/<workload>.spans.json`, from
 a `--trace 1` run) executions are grouped under the `op` span whose time
@@ -64,7 +70,7 @@ def call_site(details):
 
 
 def executions(lines):
-    execs, jobs = {}, {}
+    execs, jobs, stages = {}, {}, {}
     for line in lines:
         if not line.strip():
             continue
@@ -73,25 +79,67 @@ def executions(lines):
         if kind == EXEC_START:
             execs[e["executionId"]] = {
                 "id": e["executionId"], "site": call_site(e.get("details")),
-                "start": e["time"], "end": None, "jobs": 0}
+                "start": e["time"], "end": None, "jobs": []}
         elif kind == EXEC_END and e["executionId"] in execs:
             execs[e["executionId"]]["end"] = e["time"]
         elif kind == "SparkListenerJobStart":
             props = e.get("Properties") or {}
             xid = props.get("spark.sql.execution.id")
             if xid is not None:
-                jobs[e["Job ID"]] = int(xid)
-    for xid in jobs.values():
-        if xid in execs:
-            execs[xid]["jobs"] += 1
-    return sorted(execs.values(), key=lambda x: (x["start"], x["id"]))
+                jobs[e["Job ID"]] = {"id": e["Job ID"], "exec": int(xid), "start": e.get("Submission Time"),
+                                     "end": None, "stages": sorted(e.get("Stage IDs") or [])}
+        elif kind == "SparkListenerJobEnd" and e["Job ID"] in jobs:
+            jobs[e["Job ID"]]["end"] = e.get("Completion Time")
+        elif kind == "SparkListenerTaskEnd":
+            m = e.get("Task Metrics") or {}
+            sr = m.get("Shuffle Read Metrics") or {}
+            sw = m.get("Shuffle Write Metrics") or {}
+            st = stages.setdefault(e["Stage ID"], new_stage())
+            st["tasks"] += 1
+            st["run_ms"] += m.get("Executor Run Time", 0)
+            st["cpu_ns"] += m.get("Executor CPU Time", 0)
+            st["read"] += sr.get("Remote Bytes Read", 0) + sr.get("Local Bytes Read", 0)
+            st["written"] += sw.get("Shuffle Bytes Written", 0)
+        elif kind == "SparkListenerStageCompleted":
+            info = e.get("Stage Info") or {}
+            st = stages.setdefault(info["Stage ID"], new_stage())
+            st["wall_ms"] = (info.get("Completion Time") or 0) - (info.get("Submission Time") or 0)
+    for job in sorted(jobs.values(), key=lambda j: j["id"]):
+        if job["exec"] in execs:
+            execs[job["exec"]]["jobs"].append(job)
+    return sorted(execs.values(), key=lambda x: (x["start"], x["id"])), stages
 
 
-def show(rows, since):
+def new_stage():
+    return {"tasks": 0, "run_ms": 0, "cpu_ns": 0, "read": 0, "written": 0, "wall_ms": None}
+
+
+def mb(n):
+    return f"{n / 1e6:8.2f} MB"
+
+
+def show_stages(jobs, stages):
+    for job in jobs:
+        wall = (job["end"] - job["start"]) if job["end"] and job["start"] else float("nan")
+        print(f"        job {job['id']:5}  {wall:7.0f} ms")
+        for sid in job["stages"]:
+            st = stages.get(sid)
+            if st is None or st["tasks"] == 0:
+                print(f"          stage {sid:5}  skipped")
+                continue
+            wall = st["wall_ms"] if st["wall_ms"] is not None else float("nan")
+            print(f"          stage {sid:5}  tasks={st['tasks']:4}  {wall:7.0f} ms  "
+                  f"run {st['run_ms']:7.0f} ms  cpu {st['cpu_ns'] / 1e6:7.0f} ms  "
+                  f"shuffle read {mb(st['read'])}  write {mb(st['written'])}")
+
+
+def show(rows, since, stages=None):
     for x in rows:
         wall = (x["end"] - x["start"]) if x["end"] is not None else float("nan")
         gap = x["start"] - since
-        print(f"    exec {x['id']:5}  jobs={x['jobs']:2}  {wall:7.0f} ms  gap {gap:5.0f} ms  {x['site']}")
+        print(f"    exec {x['id']:5}  jobs={len(x['jobs']):2}  {wall:7.0f} ms  gap {gap:5.0f} ms  {x['site']}")
+        if stages is not None:
+            show_stages(x["jobs"], stages)
         if x["end"] is not None:
             since = x["end"]
 
@@ -101,10 +149,13 @@ def main():
     ap.add_argument("eventlog")
     ap.add_argument("--spans")
     ap.add_argument("--ops", help="comma-separated op names to keep (with --spans)")
+    ap.add_argument("--stages", action="store_true",
+                    help="print each job's stages: tasks, run and CPU time, shuffle bytes")
     args = ap.parse_args()
-    xs = executions(read_lines(args.eventlog))
+    xs, stages = executions(read_lines(args.eventlog))
+    stages = stages if args.stages else None
     if not args.spans:
-        show(xs, xs[0]["start"] if xs else 0)
+        show(xs, xs[0]["start"] if xs else 0, stages)
         return 0
     with open(args.spans, encoding="utf-8") as fh:
         spans = json.load(fh)
@@ -117,12 +168,12 @@ def main():
         lo, hi = op["start_ns"] / 1e6, op["end_ns"] / 1e6
         mine = [x for x in xs if lo <= x["start"] <= hi]
         print(f"{op['name']} (op {op['id']}, {hi - lo:.0f} ms): "
-              f"{len(mine)} executions, {sum(x['jobs'] for x in mine)} jobs")
-        show(mine, lo)
+              f"{len(mine)} executions, {sum(len(x['jobs']) for x in mine)} jobs")
+        show(mine, lo, stages)
         agg = summary[op["name"]]
         agg[0] += 1
         agg[1] += len(mine)
-        agg[2] += sum(x["jobs"] for x in mine)
+        agg[2] += sum(len(x["jobs"]) for x in mine)
     print()
     for name, (n, ex, jb) in sorted(summary.items()):
         print(f"{name:14} ops={n:3}  executions/op={ex / n:5.2f}  jobs/op={jb / n:5.2f}")
