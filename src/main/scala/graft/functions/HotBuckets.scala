@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The hot-bucket guard of every banded candidate join (MinHash, the
@@ -11,19 +10,20 @@ import org.apache.spark.sql.functions._
   * `maxBucket` rows are dropped before the self-join. Capping trades recall
   * only on pairs whose every colliding band is overcrowded.
   *
-  * The census is a window count over the bucket key, so the banded rows
-  * are computed and shuffled once: the self-join that follows is keyed on
-  * the same columns and reads the window's partitioning with no exchange
-  * of its own. A hot bucket's rows still travel to one task before they
-  * are dropped (linear in its size, and the window buffer spills). */
+  * The census is a map-side-combinable groupBy (a hot bucket crosses the
+  * shuffle as one partial count per task, never as its rows) and the guard
+  * a broadcast anti-join (hot buckets are few). */
 object HotBuckets {
   /** `rows` without the rows of buckets (`keys`) holding more than
     * `maxBucket` rows; `maxBucket <= 0` turns the guard off. */
   def drop(rows: DataFrame, maxBucket: Int, keys: String*): DataFrame =
     if (maxBucket <= 0) rows
-    else
-      rows
-        .withColumn("__bucket_n", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
-        .filter(col("__bucket_n") <= maxBucket)
-        .drop("__bucket_n")
+    else {
+      val hot = rows
+        .groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("n"))
+        .filter(col("n") > maxBucket)
+        .select(keys.map(col): _*)
+      rows.join(broadcast(hot), keys, "left_anti")
+    }
 }

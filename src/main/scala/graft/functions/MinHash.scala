@@ -87,10 +87,11 @@ object MinHash {
     * 150k docs). At J ≥ 0.8 a true pair collides on ~all bands, so the
     * planted-recall spec stays at 1.0.
     *
-    * The banded rows and the verify's candidates are each pinned with
-    * [[Checkpoints.fanOutBy]] on their key: both stages are CPU-dense over
-    * a few MB of shuffle, which AQE's byte-based coalescing would otherwise
-    * run in one task. */
+    * The verify's candidates are pinned with [[Checkpoints.fanOutBy]] on
+    * (a_id, b_id): one merge per pair over a few MB of shuffle, which AQE's
+    * byte-based coalescing would otherwise run in one task. The band rows
+    * are not pinned: a hot (b, v) bucket is the one unbounded key here,
+    * and its exchange keeps AQE's skew handling. */
   def nearDuplicatePairs(
       docs: DataFrame,
       idCol: String,
@@ -102,8 +103,7 @@ object MinHash {
     val hashed = docs
       .select(col(idCol).as("id"), tokenHashes(col(tokensCol)).as("h"))
       .filter(size(col("h")) > 0)
-    val banded = HotBuckets.drop(
-      Checkpoints.fanOutBy(bandRows(hashed, bands, rows), col("b"), col("v")), maxBucket, "b", "v")
+    val banded = HotBuckets.drop(bandRows(hashed, bands, rows), maxBucket, "b", "v")
     val a = banded.select(col("id").as("a_id"), col("b"), col("v"))
     val b = banded.select(col("id").as("b_id"), col("b"), col("v"))
     val cand = Checkpoints

@@ -42,7 +42,8 @@ object MinHashKernel {
   /** The `bands` band values of a token-hash array's `bands * rows` slot
     * signature, in one pass over the hashes. An empty array has no
     * signature and gives no bands. Duplicates do not change a minimum,
-    * so the hashes need not be distinct here. */
+    * so the hashes need not be sorted or distinct here; a null element
+    * throws. */
   def bands(hashes: ArrayData, bands: Int, rows: Int): ArrayData = {
     val n = hashes.numElements()
     if (n == 0) return UnsafeArrayData.fromPrimitiveArray(new Array[Long](0))
@@ -57,7 +58,7 @@ object MinHashKernel {
     }
     var t = 0
     while (t < n) {
-      val h = hashes.getLong(t)
+      val h = element(hashes, t, "graft_minhash_bands")
       i = 0
       while (i < k) {
         val v = XXH64.hashLong(h, slotSeed(i))
@@ -81,21 +82,52 @@ object MinHashKernel {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
+  /** Element `k` of a long array; a null element is an error, not a 0
+    * (an `UnsafeArrayData` reads a null slot as 0). */
+  private def element(arr: ArrayData, k: Int, fn: String): Long = {
+    if (arr.isNullAt(k)) throw new IllegalArgumentException(s"$fn: null element at index $k")
+    arr.getLong(k)
+  }
+
+  /** Element `k` of a sorted, distinct long array, checked against the
+    * element before it. */
+  private def next(arr: ArrayData, k: Int, prev: Long): Long = {
+    val v = element(arr, k, "graft_intersect_size")
+    if (v <= prev)
+      throw new IllegalArgumentException(
+        s"graft_intersect_size: input is not sorted and distinct ($v at index $k follows $prev)")
+    v
+  }
+
   /** The size of the intersection of two sorted, distinct long arrays,
-    * from one merge. Unsorted or repeating input gives a wrong count. */
+    * from one merge. Each element is checked against the one before it,
+    * the tail the merge does not reach too (a disorder there could hide a
+    * match), so unsorted, repeating or null-holding input throws instead
+    * of returning a wrong count. */
   def intersectSize(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements()
     val nb = b.numElements()
     var i = 0
     var j = 0
     var n = 0
+    var x = if (na > 0) element(a, 0, "graft_intersect_size") else 0L
+    var y = if (nb > 0) element(b, 0, "graft_intersect_size") else 0L
     while (i < na && j < nb) {
-      val x = a.getLong(i)
-      val y = b.getLong(j)
-      if (x < y) i += 1
-      else if (y < x) j += 1
-      else { n += 1; i += 1; j += 1 }
+      if (x <= y) {
+        if (x == y) {
+          n += 1
+          j += 1
+          if (j < nb) y = next(b, j, y)
+        }
+        i += 1
+        if (i < na) x = next(a, i, x)
+      } else {
+        j += 1
+        if (j < nb) y = next(b, j, y)
+      }
     }
+    while (i + 1 < na) { i += 1; x = next(a, i, x) }
+    while (j + 1 < nb) { j += 1; y = next(b, j, y) }
     n
   }
 }
@@ -125,7 +157,8 @@ case class TokenHashes(child: Expression) extends UnaryExpression with ExpectsIn
 
 /** `graft_minhash_bands(hashes, bands, rows)`: the band values of a
   * token-hash array's MinHash signature (see [[MinHashKernel]]). A
-  * map-only projection: the signature's slots never leave the row. */
+  * map-only projection: the signature's slots never leave the row. A
+  * null element throws. */
 case class MinHashBands(child: Expression, bands: Int, rows: Int)
     extends UnaryExpression
     with ExpectsInputTypes {
@@ -148,7 +181,8 @@ case class MinHashBands(child: Expression, bands: Int, rows: Int)
 }
 
 /** `graft_intersect_size(a, b)`: |a ∩ b| for two sorted, distinct long
-  * arrays, by one merge with no hash set built. A null array gives null. */
+  * arrays, by one merge with no hash set built. A null array gives null;
+  * an unsorted or repeating array, or a null element, throws. */
 case class SortedIntersectSize(left: Expression, right: Expression)
     extends BinaryExpression
     with ExpectsInputTypes {

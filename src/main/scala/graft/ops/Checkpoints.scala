@@ -46,7 +46,10 @@ object Checkpoints {
     * The partition probe goes through `df.rdd`, which, under AQE, executes
     * every shuffle and broadcast already in the plan. So a frame whose
     * physical plan holds an exchange is not probed: it goes to
-    * [[fanOutBy]] on the same row hash, planned but not run. For a frame
+    * [[fanOutBy]] on the same row hash, planned but not run (the public
+    * `KMeansIvf.fit` and `ProductQuantizer.fit` fan out a caller's frame,
+    * which may end in an exchange; their specs pass repartitioned ones).
+    * Such a frame pays that one added full-row shuffle. For a frame
     * whose widening must survive a DOWNSTREAM exchange, use [[fanOutBy]]
     * on the stage's key instead. */
   def fanOut(df: DataFrame): DataFrame = {

@@ -163,6 +163,35 @@ class MinHashExprSpec extends SparkSuite {
     }
   }
 
+  /** The message of the error `df`'s collect raises, its causes included. */
+  private def failure(df: DataFrame): String = {
+    val e = intercept[Exception](df.collect())
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(String.valueOf(_)).mkString(" <- ")
+  }
+
+  test("graft_intersect_size and graft_minhash_bands throw on malformed input") {
+    val arrays = Seq[(Long, Seq[java.lang.Long], Seq[java.lang.Long])](
+      (0L, Seq(3L, 1L, 2L), Seq(1L, 2L, 3L)), // unsorted, would count 1
+      (1L, Seq(1L, 2L, 3L), Seq(1L, 2L, 2L)), // a repeat
+      (2L, Seq(1L, 2L), Seq(9L, 1L, 2L)), // disorder in the tail the merge never reaches
+      (3L, Seq(1L, null, 3L), Seq(1L, 2L, 3L)), // a null element
+      (4L, Seq(1L, 2L, 3L), Seq(1L, 2L, 3L))).toDF("i", "a", "b").repartition(2)
+    onEveryPath { path =>
+      for ((i, why) <- Seq(0L -> "not sorted", 1L -> "not sorted", 2L -> "not sorted", 3L -> "null element")) {
+        val msg = failure(arrays.filter(col("i") === i).select(MinHash.intersectSize(col("a"), col("b"))))
+        assert(msg.contains("graft_intersect_size") && msg.contains(why), s"$path, row $i: $msg")
+      }
+      val ok = arrays.filter(col("i") === 4L).select(MinHash.intersectSize(col("a"), col("b"))).head()
+      assert(ok.getInt(0) == 3, path)
+      val msg = failure(arrays.filter(col("i") === 3L).select(MinHash.bandValues(col("a"), 6, 3)))
+      assert(msg.contains("graft_minhash_bands") && msg.contains("null element"), s"$path: $msg")
+    }
+    // the literal case the SQL surface folds at planning time
+    val s2 = SparkSuite.sessionWithExtensions(new GraftExtensions()(_))
+    val msg = failure(s2.sql("SELECT graft_intersect_size(array(3L, 1L, 2L), array(1L, 2L, 3L))"))
+    assert(msg.contains("not sorted"), msg)
+  }
+
   /** The near-duplicate pairs of the string-set formulation: the SQL
     * banding, a broadcast hot-bucket anti-join and the
     * `size(array_intersect(...))` verify over the distinct token strings. */
